@@ -11,9 +11,16 @@ import graft.core.crs.CRS
  * Self-contained single-band GeoTIFF codec (no GDAL/imageio dependency —
  * SURVEY.md §7.0). Writes baseline little-endian TIFF 6.0 with strip
  * layout + GeoTIFF tags (ModelPixelScale 33550, ModelTiepoint 33922,
- * GeoKeyDirectory 34735); reads back both strip and tile layouts,
- * uncompressed, with windowed reads that touch only the strips/tiles
- * intersecting the requested grid bounds (the COG access pattern).
+ * GeoKeyDirectory 34735); reads back both strip and tile layouts in
+ * either byte order, uncompressed.
+ *
+ * Reads go through [[GeoTiff.readSpan]]: one ranged read per strip or
+ * TIFF tile crossing a band of raster rows, covering only those rows
+ * (the COG access pattern). A scan reads one such span per tile row of
+ * its key grid and cuts every window and band of the row from it, so
+ * each payload byte is read once (halo rows twice); a single window is
+ * the one-window, one-band case. A span holds the row band's samples of
+ * all bands at full raster width.
  *
  * Supported cell types: uint8/int8 (8-bit), uint16/int16 (16), int32 /
  * float32 (32), float64 (64) with SampleFormat disambiguation.
@@ -236,8 +243,8 @@ object GeoTiff {
 
   final class ArrayByteReader(bytes: Array[Byte]) extends ByteReader {
     def read(offset: Long, length: Int): Array[Byte] = {
-      val end = math.min(bytes.length.toLong, offset + length).toInt
-      java.util.Arrays.copyOfRange(bytes, offset.toInt, end)
+      checkRange("in-memory TIFF", offset, length, size)
+      java.util.Arrays.copyOfRange(bytes, offset.toInt, offset.toInt + length)
     }
     def size: Long = bytes.length.toLong
   }
@@ -247,20 +254,28 @@ object GeoTiff {
     private val ch = java.nio.channels.FileChannel.open(
       Paths.get(path), java.nio.file.StandardOpenOption.READ)
     def read(offset: Long, length: Int): Array[Byte] = {
-      val cap = math.min(length.toLong, math.max(0L, ch.size() - offset)).toInt
-      val bb = ByteBuffer.allocate(cap)
+      checkRange(path, offset, length, ch.size())
+      val bb = ByteBuffer.allocate(length)
       var pos = offset
       while (bb.hasRemaining) {
         val n = ch.read(bb, pos)
         if (n < 0) throw new java.io.EOFException(s"$path @$pos")
         pos += n
       }
-      GeoTiff.recordBytesRead(cap)
+      GeoTiff.recordBytesRead(length)
       bb.array()
     }
     def size: Long = ch.size()
     override def close(): Unit = ch.close()
   }
+
+  /** A TIFF whose offsets point past its end is truncated or corrupt:
+    * fail naming the source instead of decoding a short buffer. */
+  private def checkRange(source: String, offset: Long, length: Int, size: Long): Unit =
+    if (offset < 0 || length < 0 || offset + length > size)
+      throw new java.io.EOFException(
+        s"$source: wanted $length bytes at offset $offset but only " +
+          s"${math.max(0L, size - math.max(0L, offset))} are available (file size $size; truncated TIFF?)")
 
   // Telemetry for specs: prove bytes-read ∝ windows touched, not file size.
   private val globalBytesRead = new java.util.concurrent.atomic.AtomicLong
@@ -386,7 +401,7 @@ object GeoTiff {
     if (epsg > 0) CRS(s"epsg:$epsg") else CRS.wgs84
   }
 
-  /** Read the full raster (ranged; still only touches needed segments). */
+  /** Read the full raster: the whole-raster window, band 0. */
   def read(path: String): (Tile, Extent, CRS) = {
     val r = new FileRangeReader(path)
     try {
@@ -409,91 +424,170 @@ object GeoTiff {
   }
 
   /**
-   * Windowed read: fetch ONLY the byte ranges of strips/tiles that
-   * intersect `win` (for strips, only the intersecting row span), then
-   * decode. Read amplification is ∝ window size, not file size.
+   * One window of one band: the one-window case of [[readSpan]] — fetch
+   * just the rows of `win` from each strip (full raster width) or TIFF
+   * tile (tile width) crossing it, then cut the window from those bytes.
+   * Bytes read are ∝ the window's rows, not the file size.
    */
-  def readWindow(reader: ByteReader, info: Info, win: GridBounds, band: Int = 0): Tile = {
-    require(band >= 0 && band < info.samplesPerPixel,
-      s"band $band out of range (SamplesPerPixel=${info.samplesPerPixel})")
-    val order = if (info.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-    val ct = info.cellType
-    val bytesPer = info.bitsPerSample / 8
+  def readWindow(reader: ByteReader, info: Info, win: GridBounds, band: Int = 0): Tile =
+    readSpan(reader, info, win).window(win, band)
+
+  /**
+   * Raw cell bytes of the raster rows `bounds.rowMin..rowMax`, over the
+   * strip or tile columns crossing `bounds.colMin..colMax`. Each strip or
+   * TIFF tile crossing the bounds is read exactly once, and only its rows
+   * inside the bounds: a strip contributes full-width rows, a tile
+   * tile-width rows. Every window inside the bounds, of every band, is
+   * then cut from these bytes with no further read ([[Span.window]]).
+   * A span holds (rows in bounds) × (the bounds' width widened to whole
+   * strips or tiles) × SamplesPerPixel samples; for a scan, one tile row.
+   */
+  def readSpan(reader: ByteReader, info: Info, bounds: GridBounds): Span = {
+    requireInside(bounds, GridBounds(0, 0, info.cols - 1, info.rows - 1),
+      s"the ${info.cols}x${info.rows} raster")
+    new Span(reader, info, bounds)
+  }
+
+  /** The bytes [[readSpan]] fetched; see there. */
+  final class Span private[GeoTiff] (reader: ByteReader, info: Info, val bounds: GridBounds) {
+    // strips are one segment column of raster width, rowsPerStrip high
+    private val segW = if (info.tileWidth > 0) info.tileWidth else info.cols
+    private val segH = if (info.tileWidth > 0) info.tileLength else info.rowsPerStrip
+    private val bytesPer = info.bitsPerSample / 8
     // chunky interleave: pixel stride spans all bands, band offset selects one
-    val pixBytes = bytesPer * info.samplesPerPixel
-    val bandOff = band * bytesPer
-    val out = Tile.empty(ct, win.width, win.height)
-    @inline def putCell(seg: ByteBuffer, localPos: Int, outC: Int, outR: Int): Unit = {
-      val v: Double = info.bitsPerSample match {
-        case 8 =>
-          val b = seg.get(localPos)
-          if (info.sampleFormat == 2) b.toDouble else (b & 0xff).toDouble
-        case 16 =>
-          val s = seg.getShort(localPos)
-          if (info.sampleFormat == 2) s.toDouble else (s & 0xffff).toDouble
-        case 32 =>
-          if (info.sampleFormat == 3) seg.getFloat(localPos).toDouble
-          else seg.getInt(localPos).toDouble
-        case 64 => seg.getDouble(localPos)
-      }
-      // raw storage value: route through interpretAs semantics by direct set
-      out.setDouble(outR * win.width + outC, if (ct.isNoData(v)) Double.NaN else v)
-    }
-    if (info.tileWidth > 0) {
-      val tilesAcross = (info.cols + info.tileWidth - 1) / info.tileWidth
-      val t0c = win.colMin / info.tileWidth; val t1c = win.colMax / info.tileWidth
-      val t0r = win.rowMin / info.tileLength; val t1r = win.rowMax / info.tileLength
-      val segLen = info.tileWidth * info.tileLength * pixBytes
-      var tr = t0r
-      while (tr <= t1r) {
-        var tc = t0c
-        while (tc <= t1c) {
-          val tIdx = tr * tilesAcross + tc
-          val len =
-            if (tIdx < info.byteCounts.length && info.byteCounts(tIdx) > 0)
-              math.min(segLen.toLong, info.byteCounts(tIdx)).toInt
-            else segLen
-          val seg = ByteBuffer.wrap(reader.read(info.offsets(tIdx), len)).order(order)
-          var r = math.max(win.rowMin, tr * info.tileLength)
-          val rEnd = math.min(win.rowMax, (tr + 1) * info.tileLength - 1)
-          while (r <= rEnd) {
-            var c = math.max(win.colMin, tc * info.tileWidth)
-            val cEnd = math.min(win.colMax, (tc + 1) * info.tileWidth - 1)
-            while (c <= cEnd) {
-              val inTileIdx = (r - tr * info.tileLength) * info.tileWidth + (c - tc * info.tileWidth)
-              putCell(seg, inTileIdx * pixBytes + bandOff, c - win.colMin, r - win.rowMin)
-              c += 1
-            }
-            r += 1
-          }
-          tc += 1
-        }
-        tr += 1
-      }
-    } else {
-      val s0 = win.rowMin / info.rowsPerStrip; val s1 = win.rowMax / info.rowsPerStrip
-      val bytesPerRow = info.cols * pixBytes
-      var s = s0
-      while (s <= s1) {
-        val stripRow0 = s * info.rowsPerStrip
-        val r0 = math.max(win.rowMin, stripRow0)
-        val rEnd = math.min(win.rowMax, (s + 1) * info.rowsPerStrip - 1)
-        // only the intersecting row span of the strip, never the whole strip
-        val segOff = info.offsets(s) + (r0 - stripRow0).toLong * bytesPerRow
-        val seg = ByteBuffer.wrap(
-          reader.read(segOff, (rEnd - r0 + 1) * bytesPerRow)).order(order)
-        var r = r0
-        while (r <= rEnd) {
-          var c = win.colMin
-          while (c <= win.colMax) {
-            putCell(seg, (r - r0) * bytesPerRow + c * pixBytes + bandOff, c - win.colMin, r - win.rowMin)
-            c += 1
-          }
-          r += 1
-        }
-        s += 1
+    private val pixBytes = bytesPer * info.samplesPerPixel
+    private val sr0 = bounds.rowMin / segH
+    private val sc0 = bounds.colMin / segW
+    private val across = bounds.colMax / segW - sc0 + 1
+    private val segs: Array[ByteBuffer] = {
+      val order = if (info.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+      val fileAcross = (info.cols + segW - 1) / segW
+      val rowBytes = segW * pixBytes
+      Array.tabulate((bounds.rowMax / segH - sr0 + 1) * across) { i =>
+        val sr = sr0 + i / across
+        val first = math.max(bounds.rowMin, sr * segH)
+        val last = math.min(bounds.rowMax, sr * segH + segH - 1)
+        val off = info.offsets(sr * fileAcross + sc0 + i % across) + (first - sr * segH).toLong * rowBytes
+        ByteBuffer.wrap(reader.read(off, (last - first + 1) * rowBytes)).order(order)
       }
     }
-    out
+
+    /** Decode band `band` of `win`, which must lie inside the span. */
+    def window(win: GridBounds, band: Int): Tile = {
+      require(band >= 0 && band < info.samplesPerPixel,
+        s"band $band out of range (SamplesPerPixel=${info.samplesPerPixel})")
+      requireInside(win, bounds, s"the span $bounds")
+      val dec = CellDecoder(info.cellType, win.width, win.height)
+      val bandOff = band * bytesPer
+      var r = win.rowMin
+      while (r <= win.rowMax) {
+        val sr = r / segH
+        val segRow = (sr - sr0) * across - sc0
+        val rowPos = (r - math.max(bounds.rowMin, sr * segH)) * segW
+        val dst = (r - win.rowMin) * win.width - win.colMin
+        var c = win.colMin
+        while (c <= win.colMax) {
+          val sc = c / segW
+          val end = math.min(win.colMax, sc * segW + segW - 1)
+          dec.copy(segs(segRow + sc), (rowPos + c - sc * segW) * pixBytes + bandOff,
+            pixBytes, end - c + 1, dst + c)
+          c = end + 1
+        }
+        r += 1
+      }
+      dec.tile
+    }
+  }
+
+  private def requireInside(win: GridBounds, outer: GridBounds, what: => String): Unit =
+    if (win.colMin < outer.colMin || win.rowMin < outer.rowMin ||
+        win.colMax > outer.colMax || win.rowMax > outer.rowMax ||
+        win.colMin > win.colMax || win.rowMin > win.rowMax)
+      throw new IllegalArgumentException(s"window $win is outside $what")
+
+  /**
+   * The cell decoder: copies `n` samples, `stride` bytes apart from
+   * `pos` in `src`, into cells `dst until dst + n` of a new tile's
+   * storage array. One subclass per storage type. Integer samples keep
+   * their bits; a float sample that is NaN or equals the NoData value
+   * is stored as the cell type's canonical NoData (NaN for raw and
+   * default float types).
+   */
+  private sealed abstract class CellDecoder {
+    def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit
+    def tile: Tile
+  }
+
+  private object CellDecoder {
+    def apply(ct: CellType, cols: Int, rows: Int): CellDecoder = ct.base match {
+      case CellBase.Int8 | CellBase.UInt8 => new Bytes(ct, cols, rows)
+      case CellBase.Int16 | CellBase.UInt16 => new Shorts(ct, cols, rows)
+      case CellBase.Int32 => new Ints(ct, cols, rows)
+      case CellBase.Float32 => new Floats(ct, cols, rows)
+      case CellBase.Float64 => new Doubles(ct, cols, rows)
+      case b => throw new IllegalArgumentException(s"No TIFF sample decoder for $b cells")
+    }
+
+    /** NoData value of a float cell type that is not NaN, else NaN. */
+    private def sentinel(ct: CellType): Double =
+      if (ct.hasNoData) ct.noDataValue else Double.NaN
+
+    final class Bytes(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
+      private val a = new Array[Byte](cols * rows)
+      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit =
+        if (stride == 1) System.arraycopy(src.array(), pos, a, dst, n)
+        else {
+          var i = 0
+          while (i < n) { a(dst + i) = src.get(pos + i * stride); i += 1 }
+        }
+      def tile: Tile = new ByteArrayTile(a, cols, rows, ct)
+    }
+
+    final class Shorts(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
+      private val a = new Array[Short](cols * rows)
+      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
+        var i = 0
+        while (i < n) { a(dst + i) = src.getShort(pos + i * stride); i += 1 }
+      }
+      def tile: Tile = new ShortArrayTile(a, cols, rows, ct)
+    }
+
+    final class Ints(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
+      private val a = new Array[Int](cols * rows)
+      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
+        var i = 0
+        while (i < n) { a(dst + i) = src.getInt(pos + i * stride); i += 1 }
+      }
+      def tile: Tile = new IntArrayTile(a, cols, rows, ct)
+    }
+
+    final class Floats(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
+      private val a = new Array[Float](cols * rows)
+      private val nd = sentinel(ct)
+      private val ndOut = nd.toFloat
+      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
+        var i = 0
+        while (i < n) {
+          val v = src.getFloat(pos + i * stride)
+          a(dst + i) = if (v != v || v.toDouble == nd) ndOut else v
+          i += 1
+        }
+      }
+      def tile: Tile = new FloatArrayTile(a, cols, rows, ct)
+    }
+
+    final class Doubles(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
+      private val a = new Array[Double](cols * rows)
+      private val nd = sentinel(ct)
+      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
+        var i = 0
+        while (i < n) {
+          val v = src.getDouble(pos + i * stride)
+          a(dst + i) = if (v != v || v == nd) nd else v
+          i += 1
+        }
+      }
+      def tile: Tile = new DoubleArrayTile(a, cols, rows, ct)
+    }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.{Map => JMap}
 
 import graft.core._
+import graft.core.geotiff.GeoTiff
 import graft.udt.TileUDT
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -186,21 +187,37 @@ class GeoTiffReaderFactory(required: StructType) extends PartitionReaderFactory 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val part = partition.asInstanceOf[GeoTiffFilePartition]
     new PartitionReader[InternalRow] {
-      // Executor-side: one ranged metadata read per file, then iterate
-      // its windows; cell bytes are fetched per-window with byte-range
-      // reads. Files of the partition's run are consumed sequentially.
+      // Executor-side, per file: one open channel and one ranged metadata
+      // read (cached); then, per tile row of keys, one GeoTiff.readSpan of
+      // the row's rows (halo included) from which every window and band
+      // of that row is cut, so each strip or TIFF tile is read once per
+      // row. Memory: one row span (every band, full raster width) plus
+      // the window being emitted. Files of the partition's run are
+      // consumed sequentially; lazy and metadata-only scans read no cells.
+      private val bands: Array[Int] = required.fields.map(_.name match {
+        case "path" | "spatial_key" | "extent" | "crs" | "spatial_index" => -1
+        case "tile" => 0
+        case tileName => tileName.stripPrefix("tile_b").toInt
+      })
+      private val readsCells = !part.lazyTiles && bands.exists(_ >= 0)
       private val files = part.paths.iterator
       private var path: String = _
-      private var info: graft.core.geotiff.GeoTiff.Info = _
+      private var info: GeoTiff.Info = _
+      private var reader: GeoTiff.ByteReader = _
+      private var span: GeoTiff.Span = _
       private var keysAcross = 0
       private var keysDown = 0
       private var idx = -1
       override def next(): Boolean = {
         idx += 1
         while (info == null || idx >= keysAcross * keysDown) {
+          close()
           if (!files.hasNext) return false
           path = files.next()
-          info = graft.udt.RefTile.info(path)
+          if (readsCells) {
+            reader = new GeoTiff.FileRangeReader(path)
+            info = graft.udt.RefTile.info(path, reader)
+          } else info = graft.udt.RefTile.info(path)
           keysAcross = (info.cols + part.tileCols - 1) / part.tileCols
           keysDown = (info.rows + part.tileRows - 1) / part.tileRows
           idx = 0
@@ -216,14 +233,17 @@ class GeoTiffReaderFactory(required: StructType) extends PartitionReaderFactory 
           math.max(0, kr * part.tileRows - part.buffer),
           math.min(info.cols - 1, (kc + 1) * part.tileCols - 1 + part.buffer),
           math.min(info.rows - 1, (kr + 1) * part.tileRows - 1 + part.buffer))
+        if (readsCells && (span == null || span.bounds.rowMin != win.rowMin))
+          span = GeoTiff.readSpan(reader, info,
+            GridBounds(0, win.rowMin, info.cols - 1, win.rowMax))
         val extent = Extent(
           info.extent.xmin + win.colMin * re.cellWidth,
           info.extent.ymax - (win.rowMax + 1) * re.cellHeight,
           info.extent.xmin + (win.colMax + 1) * re.cellWidth,
           info.extent.ymax - win.rowMin * re.cellHeight)
         // column pruning: decode cells only if the tile column is required
-        val values = required.fields.map { f =>
-          f.name match {
+        val values = Array.tabulate[Any](required.fields.length) { f =>
+          if (bands(f) < 0) required.fields(f).name match {
             case "path" => UTF8String.fromString(path)
             case "spatial_key" => InternalRow(kc, kr)
             case "extent" =>
@@ -235,21 +255,18 @@ class GeoTiffReaderFactory(required: StructType) extends PartitionReaderFactory 
               java.lang.Long.valueOf(GeoTiffReaderFactory.z2Of(
                 (extent.xmin + extent.xmax) / 2, (extent.ymin + extent.ymax) / 2,
                 info.crs))
-            case tileName =>
-              val band =
-                if (tileName == "tile") 0
-                else tileName.stripPrefix("tile_b").toInt
-              if (part.lazyTiles)
-                TileUDT.encode(new graft.udt.RefTile(path, win,
-                  info.cellType, win.width, win.height, band))
-              else
-                TileUDT.encode(graft.udt.RefTile.readWindow(path, win, band))
           }
+          else if (part.lazyTiles)
+            TileUDT.encode(new graft.udt.RefTile(path, win,
+              info.cellType, win.width, win.height, bands(f)))
+          else TileUDT.encode(span.window(win, bands(f)))
         }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          values.asInstanceOf[Array[Any]])
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
       }
-      override def close(): Unit = ()
+      override def close(): Unit = {
+        span = null
+        if (reader != null) { reader.close(); reader = null }
+      }
     }
   }
 }

@@ -38,7 +38,10 @@ final class RefTile(
 object RefTile {
   // path -> parsed Info ONLY (a few KB each — never the cell payload;
   // caching whole COGs would pin tens of GB per executor at 100 TB).
-  // Cell bytes are fetched per-window with byte-range reads.
+  // A lazy tile fetches its cells on realization as the one-window case
+  // of GeoTiff.readSpan: the rows of its window from each strip or tile
+  // crossing it, so it holds one window's rows at full raster width
+  // while it decodes, then just its own cells.
   private final val MaxCached = 4096
   private val cache =
     java.util.Collections.synchronizedMap(
@@ -49,10 +52,16 @@ object RefTile {
       })
 
   /** Cached metadata for a source file (executor-side, ranged reads). */
-  def info(path: String): GeoTiff.Info = {
+  def info(path: String): GeoTiff.Info = cached(path, GeoTiff.readInfo(path))
+
+  /** As [[info]], parsing through the already open `reader` of `path` on a miss. */
+  def info(path: String, reader: GeoTiff.ByteReader): GeoTiff.Info =
+    cached(path, GeoTiff.parseInfo(reader))
+
+  private def cached(path: String, parse: => GeoTiff.Info): GeoTiff.Info = {
     var i = cache.get(path)
     if (i == null) {
-      i = GeoTiff.readInfo(path)
+      i = parse
       cache.put(path, i)
     }
     i

@@ -16,7 +16,7 @@ class GeoTiffSpec extends AnyFunSuite {
   def tmpDir: String = Files.createTempDirectory("graft-tiff").toString
 
   test("codec round-trip across cell types") {
-    for (ctName <- Seq("uint8", "int16", "uint16", "int32", "float32", "float64")) {
+    for (ctName <- Seq("uint8", "int8", "int16", "uint16", "int32", "float32", "float64")) {
       val ct = CellType.fromName(ctName)
       val t = Tile.empty(ct, 100, 80)
       var i = 0
@@ -31,7 +31,8 @@ class GeoTiffSpec extends AnyFunSuite {
       assert(rt.cellType.base == ct.base, s"$ctName base")
       i = 0
       while (i < t.size) {
-        assert(rt.getDouble(i) == t.getDouble(i), s"$ctName cell $i")
+        // compare, not ==: int8's wrapped 128 is its NoData, NaN on both sides
+        assert(java.lang.Double.compare(rt.getDouble(i), t.getDouble(i)) == 0, s"$ctName cell $i")
         i += 1
       }
     }
@@ -149,5 +150,134 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(extent == Extent(0, 0, 2, 1))
     assert(t.cols == 64 && t.rows == 32)
     assert(t.getDouble(10, 10) == 5.0 && t.getDouble(50, 10) == 5.0)
+  }
+
+  /** Band `b` of a `cols`×`rows` test raster: signed and unsigned
+    * values past each type's range (they wrap), fractions for floats,
+    * and NoData every 11th cell. */
+  private def band(ct: CellType, cols: Int, rows: Int, b: Int): Tile = {
+    val t = Tile.empty(ct, cols, rows)
+    var i = 0
+    while (i < t.size) {
+      t.setDouble(i,
+        if (i % 11 == 5) Double.NaN
+        else if (ct.isFloating) (i * 37 % 1000 - 500) * 0.25 + b
+        else (i * 7919 % 70001 - 35000 + b * 13).toDouble)
+      i += 1
+    }
+    t
+  }
+
+  test("format(raster) equals GeoTiff.readWindow across layouts, byte orders, cell types and bands") {
+    import TiffBytes.{Strips, Tiles}
+    val (cols, rows, tile) = (37, 29, 16)
+    val cellTypes = Seq("uint8", "int8", "int16", "uint16", "int32", "float32", "float64",
+      "float32ud-9999")
+    // strip heights that do not divide the 16-row key tiles, one strip
+    // taller than the raster, and TIFF tiles aligned and not aligned with them
+    val layouts = Seq(Strips(7), Strips(64), Tiles(16, 16), Tiles(32, 48))
+    // (bands in the file, band_indexes option)
+    for ((nBands, bandOpt) <- Seq((1, scala.None), (2, Some("0,1")), (3, Some("2,0")))) {
+      val dir = tmpDir
+      val files = (for {
+        (ctName, ci) <- cellTypes.zipWithIndex
+        (layout, li) <- layouts.zipWithIndex
+        le <- Seq(true, false)
+      } yield {
+        val ct = CellType.fromName(ctName)
+        val bands = (0 until nBands).map(b => band(ct, cols, rows, b + ci))
+        val bytes = TiffBytes(bands, Extent(0, 0, cols, rows), layout, le)
+        val path = s"$dir/f${ci}_${li}_$le.tif"
+        Files.write(java.nio.file.Paths.get(path), bytes)
+        // the codec decodes every band of the whole raster bit for bit
+        val info = GeoTiff.parseInfo(bytes)
+        assert(info.littleEndian == le && info.samplesPerPixel == nBands)
+        for (b <- 0 until nBands)
+          assert(GeoTiff.readWindow(bytes, info, GridBounds(0, 0, cols - 1, rows - 1), b) == bands(b),
+            s"$path band $b")
+        path -> (bytes, info, bands)
+      }).toMap
+      val readBands = bandOpt.map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(0))
+      val tileCols = bandOpt.fold(Seq("tile"))(_ => readBands.map(b => s"tile_b$b"))
+      for (buffer <- Seq(0, 1)) {
+        val reader = spark.read.format("raster").option("path", dir)
+          .option("tile_dimensions", s"$tile,$tile").option("buffer_size", buffer.toString)
+        val rowsOut = bandOpt.fold(reader)(reader.option("band_indexes", _)).load()
+          .select(($"path" +: $"spatial_key.col" +: $"spatial_key.row" +: tileCols.map(col)): _*)
+          .collect()
+        assert(rowsOut.length == files.size * 6, s"buffer $buffer")
+        for (r <- rowsOut) {
+          val (bytes, info, bands) = files(r.getString(0))
+          val (kc, kr) = (r.getInt(1), r.getInt(2))
+          val win = GridBounds(math.max(0, kc * tile - buffer), math.max(0, kr * tile - buffer),
+            math.min(cols - 1, (kc + 1) * tile - 1 + buffer), math.min(rows - 1, (kr + 1) * tile - 1 + buffer))
+          for ((b, i) <- readBands.zipWithIndex) {
+            val expected = GeoTiff.readWindow(bytes, info, win, b)
+            assert(r.getAs[Tile](3 + i) == expected, s"${r.getString(0)} ($kc,$kr) band $b buffer $buffer")
+            // and the window holds the source cells
+            for (y <- 0 until win.height; x <- 0 until win.width)
+              assert(java.lang.Double.compare(expected.getRawDouble(y * win.width + x),
+                bands(b).getRawDouble((win.rowMin + y) * cols + win.colMin + x)) == 0)
+          }
+        }
+      }
+    }
+  }
+
+  test("a GeoTIFF cut off mid-payload fails loudly, naming the file") {
+    val dir = tmpDir
+    val t = band(CellType.int16, 64, 64, 0)
+    val bytes = GeoTiff.writeBytes(t, Extent(0, 0, 64, 64), CRS.wgs84)
+    val path = s"$dir/cut.tif"
+    Files.write(java.nio.file.Paths.get(path), bytes.take(bytes.length - 1000))
+    val e = intercept[Exception] {
+      spark.read.format("raster").option("path", path)
+        .option("tile_dimensions", "32,32").load()
+        .select(rf_tile_sum($"tile")).collect()
+    }
+    assert(e.getMessage.contains(path) && e.getMessage.contains("wanted"), e.getMessage)
+    // the in-memory reader is as strict
+    val info = GeoTiff.parseInfo(bytes)
+    val e2 = intercept[java.io.EOFException] {
+      GeoTiff.readWindow(bytes.take(bytes.length - 1000), info, GridBounds(0, 0, 63, 63))
+    }
+    assert(e2.getMessage.contains("wanted"))
+  }
+
+  test("windows outside the raster are rejected") {
+    val bytes = GeoTiff.writeBytes(band(CellType.int32, 30, 20, 0), Extent(0, 0, 30, 20), CRS.wgs84)
+    val info = GeoTiff.parseInfo(bytes)
+    for (win <- Seq(GridBounds(0, 0, 30, 19), GridBounds(0, 0, 29, 20),
+        GridBounds(-1, 0, 5, 5), GridBounds(5, 5, 4, 5))) {
+      val e = intercept[IllegalArgumentException](GeoTiff.readWindow(bytes, info, win))
+      assert(e.getMessage.contains("outside the 30x20 raster"), e.getMessage)
+    }
+  }
+
+  test("rf_raster_source_to_tiles rejects band files unlike the first, and eager equals lazy") {
+    val dir = tmpDir
+    def write(name: String, ct: String, cols: Int, rows: Int): String = {
+      val path = s"$dir/$name.tif"
+      GeoTiff.write(path, band(CellType.fromName(ct), cols, rows, name.length),
+        Extent(0, 0, 1, 1), CRS.wgs84)
+      path
+    }
+    val b1 = write("b1", "uint16", 40, 30)
+    val b2 = write("b2x", "uint16", 40, 30)
+    val wide = write("wide", "uint16", 41, 30)
+    val float = write("float", "float32", 40, 30)
+    def expand(lazyTiles: Boolean, other: String) =
+      Seq((b1, other)).toDF("b1", "b2")
+        .select(rf_raster_source_to_tiles((16, 16), lazyTiles, col("b1"), col("b2")))
+    for (other <- Seq(wide, float); lazyTiles <- Seq(true, false)) {
+      val e = intercept[Exception](expand(lazyTiles, other).collect())
+      assert(e.getMessage.contains(b1) && e.getMessage.contains(other), e.getMessage)
+    }
+    def tiles(lazyTiles: Boolean) = expand(lazyTiles, b2)
+      .select(rf_tile($"b1"), rf_tile($"b2")).collect()
+      .map(r => (r.getAs[Tile](0), r.getAs[Tile](1)))
+    val eager = tiles(lazyTiles = false)
+    assert(eager.length == 6)
+    assert(eager.toSeq == tiles(lazyTiles = true).toSeq)
   }
 }

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
  *    objects, no driver-side file I/O);
  *  - metadata reads are ranged (header+IFD only, not the whole file);
  *  - window reads fetch only the intersecting strip/tile byte ranges, so
- *    bytes-read is proportional to windows touched, not file size.
+ *    bytes-read is proportional to windows touched, not file size;
+ *  - an eager scan reads each payload byte once, whatever its windows
+ *    and bands.
  */
 class ReadPathScaleSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -69,6 +71,29 @@ class ReadPathScaleSpec extends AnyFunSuite {
     // vs a 4 MiB file; assert well under half the file was touched.
     assert(winBytes <= 130L * 1024 * 4 + 4096, s"window read $winBytes")
     assert(winBytes < fileSize / 4, s"window read $winBytes vs file $fileSize")
+  }
+
+  test("a full eager scan of a two-band chunky strip file reads each payload byte once") {
+    val dir = Files.createTempDirectory("graft-scale").toString
+    val bands = (0 until 2).map { b =>
+      val t = Tile.empty(CellType.uint16, 512, 384)
+      var i = 0
+      while (i < t.size) { t.setDouble(i, (i % 5000 + b).toDouble); i += 1 }
+      t
+    }
+    val path = s"$dir/two.tif"
+    GeoTiff.writeMultiband(path, bands, Extent(0, 0, 512, 384), CRS.wgs84)
+    val payload = 512L * 384 * 2 * 2
+    val header = new java.io.File(path).length() - payload
+    val before = GeoTiff.bytesReadTotal
+    // 128-row key rows over 64-row strips, four 128-wide windows per row
+    val sums = spark.read.format("raster").option("path", path)
+      .option("tile_dimensions", "128,128").option("band_indexes", "0,1").load()
+      .select(rf_tile_sum($"tile_b0").as("s0"), rf_tile_sum($"tile_b1").as("s1"))
+      .agg(sum($"s0"), sum($"s1")).first()
+    val read = GeoTiff.bytesReadTotal - before
+    assert(sums.getDouble(1) - sums.getDouble(0) == 512.0 * 384)
+    assert(read >= payload && read <= payload + header, s"read $read for payload $payload + header $header")
   }
 
   test("spatial_index option emits a Z2 column; range partitioning clusters it") {
