@@ -94,146 +94,6 @@ object SparkEntry {
       |dcell AS (SELECT c.bucket, c.tid, j % 8 AS c, j // 8 AS r, q
       |          FROM chunk c JOIN fullt USING (bucket, tid))""".stripMargin
 
-  /**
-   * Global sort with the expensive child materialized ONCE. `orderBy`'s
-   * RangePartitioner samples its bounds by RE-EXECUTING the child (a
-   * full reservoir-sample scan), so every query whose pre-sort pipeline
-   * is non-trivial — DP tokenizers, PNG codecs, per-cell raster math,
-   * tile assembly aggregates — pays that pipeline twice per run.
-   *
-   * r19 fixed this for 13 queries by hashing the rows through one
-   * exchange first (`repartition(keys) + orderBy`); r20 re-probed the
-   * whole orderBy family and found (a) the repartition silently
-   * COLLAPSES to a plan no-op whenever the sort key equals the child's
-   * existing partitioning key (the q_terrain/q_masking/q_tile_* class —
-   * the aggregate already hash-partitioned by l_orderkey), and (b) a
-   * lazy `localCheckpoint` of the pre-sort child beats the extra
-   * exchange everywhere it was probed: the sampler pass computes AND
-   * stores the rows (one job, MEMORY_AND_DISK, spills gracefully), the
-   * sort pass re-reads blocks instead of recomputing the pipeline, and
-   * no shuffle is added. At scale the trade is one materialization of
-   * the query OUTPUT (already small for aggregate-shaped queries, at
-   * most data-sized for cell explodes) vs one full recompute of the
-   * pipeline over the corpus. Applied opt-in via [[sortOnce]], each
-   * name backed by an isolated A/B; rows and order are bit-identical
-   * (same Sort over the same child).
-   *
-   * This is an intra-query materialization, rebuilt from the parquet
-   * inputs on every invocation (the bench re-invokes the builder inside
-   * the timed region each rep and releases leftover blocks between
-   * reps) — nothing persists across runs.
-   */
-  private def ckptSort(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.Sort
-    df.queryExecution.analyzed match {
-      case s: Sort if s.global =>
-        val sp = df.sparkSession
-        val child = org.apache.spark.sql.graft.shims.ofRows(sp, s.child)
-          .localCheckpoint(eager = false)
-        org.apache.spark.sql.graft.shims.ofRows(sp,
-          Sort(s.order, global = true, child.queryExecution.analyzed))
-      case _ => df
-    }
-  }
-
-  /** r19's repartition-before-sort shape, applied centrally: one hash
-    * exchange materializes the pre-sort rows so the range sampler
-    * re-reads shuffle data. Wins over [[ckptSort]] exactly where the
-    * pre-sort rows are heavy to hold (resampled tile blobs): the shuffle
-    * streams and compresses them instead of parking them in the block
-    * manager. Same rows, same order — Sort over the same child. */
-  private def repartSort(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{RepartitionByExpression, Sort}
-    df.queryExecution.analyzed match {
-      case s: Sort if s.global =>
-        org.apache.spark.sql.graft.shims.ofRows(df.sparkSession,
-          Sort(s.order, global = true,
-            RepartitionByExpression(s.order.map(_.child), s.child, None)))
-      case _ => df
-    }
-  }
-
-  /** Queries routed through [[ckptSort]] — opt-in, one isolated A/B per
-    * name (see OPTIMIZATION_r20.md); supersedes r19's orderedOnce. */
-  private val sortOnce: Set[String] = Set(
-    // tile/raster aggregate family (sampler was re-running tile assembly
-    // + kernels; sort key == child partitioning so r19's repartition
-    // collapsed and never helped here)
-    "q_tile_minmax", "q_local_arith", "q_comparisons", "q_tile_histogram",
-    "q_tile_mean", "q_tile_stats", "q_masking2", "q_convert", "q_agg_local",
-    "q_with_no_data", "q_metadata", "q_rgb_composite", "q_agg_quantiles",
-    "q_terrain", "q_focal", "q_local_algebra", "q_standardize",
-    "q_local_divide", "q_clamp_where", "q_masking",
-    // ML explode pipelines
-    "q_ml_nodata", "q_ml_exploder",
-    // text/stats pipelines
-    "q_acf", "q_ljung_box",
-    // r19 orderedOnce class, re-probed per query: ckpt beat the
-    // repartition on these (resample/resample_aggs stay on repartSort)
-    "q_math", "q_math_rows", "q_bpe_apply", "q_pii", "q_lang_id",
-    "q_image_resize", "q_image_decode",
-    // full-suite paired sweep (r20): every remaining >=0.25 s query timed
-    // in both modes, same chunk layout, same JVM structure; these 177
-    // cleared ratio <= 0.88 AND >= 0.08 s absolute. The 9 losers
-    // (q_label_separation x1.43, q_knn_brute x1.31, q_dedup_pipeline
-    // x1.20, q_also_viewed, q_kcore, q_agg_histogram, q_mrr, q_pagerank,
-    // q_bh_fdr) and 95 neutrals stay on the plain sort.
-    "q_dedup_within", "q_icc", "q_geotiff_focal", "q_cochran_q",
-    "q_strip_html", "q_layer_roundtrip", "q_durbin_watson", "q_bloom_join",
-    "q_raster_join_bucketed", "q_asof_forward", "q_render_png", "q_rouge",
-    "q_wordpiece", "q_tcloseness", "q_heaps", "q_gopher_rules",
-    "q_autocorr", "q_kruskal", "q_readability", "q_asof_tolerance",
-    "q_journeys", "q_clean_lines", "q_bpe_pairs", "q_gap_regularity",
-    "q_salted_join", "q_theil", "q_anomaly", "q_psi",
-    "q_rolling", "q_edit_dedup", "q_knn_lsh", "q_st_geohash",
-    "q_page_hinkley", "q_embed_drift", "q_gaps", "q_percentiles",
-    "q_brown_forsythe", "q_runs_test", "q_asof", "q_domain_quota",
-    "q_geotiff_read", "q_minhash_pairs", "q_diversity", "q_tiles_roundtrip",
-    "q_bpe_learn", "q_crawl_schedule", "q_raster_join_bilinear", "q_cube",
-    "q_profile", "q_colloc", "q_text_stats", "q_token_label_mi",
-    "q_link_predict", "q_ohlc", "q_render_ramp", "q_dedup_keep_best",
-    "q_trending", "q_bm25", "q_inventory", "q_did",
-    "q_theil_sen", "q_sessions", "q_source_overlap", "q_render_matrix",
-    "q_lm_score", "q_sprt", "q_warc_read", "q_quality",
-    "q_quantile_filter", "q_contamination", "q_fleiss", "q_json_extract",
-    "q_debounce", "q_modularity", "q_kendall", "q_trimmed_mean",
-    "q_hard_negatives", "q_blocklist", "q_layer_hilbert", "q_geojson_read",
-    "q_mask_bits", "q_cuped", "q_st_sphere", "q_growth_curve",
-    "q_resample_avg", "q_token_entropy", "q_winnow", "q_repetition",
-    "q_neyman", "q_sequences", "q_unigram_learn", "q_overlap_join",
-    "q_sample_quota", "q_hll", "q_geotiff_read_buffered", "q_winnow_pairs",
-    "q_local_scalar", "q_assemble_roundtrip", "q_rasterize", "q_dsir",
-    "q_rollup", "q_normalized_difference", "q_calibration_monitor", "q_path_block",
-    "q_gap_fill", "q_st_utm", "q_transitions", "q_events_daily",
-    "q_rescale", "q_st_setops", "q_ngram_jaccard", "q_cohens_d",
-    "q_brier", "q_containment_join", "q_rmst", "q_interval_union",
-    "q_make_tiles", "q_cidr_join", "q_corr_compare", "q_resample_lanczos",
-    "q_normalize", "q_attribution", "q_pr_auc", "q_twap",
-    "q_jarque_bera", "q_st_distance", "q_funnel", "q_anova_f",
-    "q_cosine_join", "q_seasonal_anomaly", "q_band_join", "q_multimodal_decode",
-    "q_winsorize", "q_extract_bits", "q_vad", "q_nelson_aalen",
-    "q_fuzzy_join", "q_tile_sum", "q_st_breadth3", "q_chi_kxm",
-    "q_krippendorff", "q_chunk", "q_quantile_monitor", "q_m4",
-    "q_logrank", "q_raster_join", "q_pairwise_welch", "q_image_ahash",
-    "q_explode_sample", "q_image_dedup", "q_knn_rrf", "q_robust_anomaly",
-    "q_best_per_source", "q_kn_score", "q_segment_dedup", "q_sample_budget",
-    "q_dispersion", "q_explode_tiles", "q_oov_rate", "q_dedup_lsh",
-    "q_pmi", "q_agg_mean", "q_cronbach", "q_interval_join",
-    "q_ewma", "q_tfidf", "q_e2e_curation", "q_dedup_best",
-    "q_dist_shift", "q_is_in", "q_zonal", "q_agg_stats",
-    "q_compact", "q_asof_nearest", "q_drift_monitor", "q_kappa",
-    "q_hellinger")
-
-  /** Queries where the r19 repartition-before-sort shape beats the
-    * checkpoint (heavy pre-sort rows — resampled tile blobs are cheaper
-    * to shuffle than to park in the block manager). */
-  private val repartSortQueries: Set[String] = Set(
-    "q_resample", "q_resample_aggs", "q_segment_lm_filter",
-    // 3-way probed: the exploded token/cell pre-sort rows are heavy,
-    // and the shuffle beat the checkpoint by ~5-7 % isolated (and by
-    // more in-suite) — the r19 shape stands for these two
-    "q_quantize", "q_unigram_apply")
-
   /** Explode a tile expression to (l_orderkey, i, cell), data cells only. */
   private def cells(s: SparkSession, dir: String, tile: Column): DataFrame =
     tiled(s, dir)
@@ -580,41 +440,10 @@ object SparkEntry {
       .orderBy("bucket")
   }
 
-  /** Declared queries. Names in [[sortOnce]] get their top-level global
-    * sort rewritten by [[ckptSort]] (same rows, same order — the child is
-    * materialized once instead of being re-executed by the range
-    * sampler); every other entry is served untouched. */
-  /** A/B hook for the probes below: GRAFT_SORTONCE_MODE=plain|repart|ckpt
-    * forces every sortOnce/repartSort name through one mode. Unset in
-    * production and in the bench — the per-query sets decide. */
-  private def sortMode: Option[String] = sys.env.get("GRAFT_SORTONCE_MODE")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queriesRaw.map { case (n, f) =>
-      val rewrite: Option[DataFrame => DataFrame] =
-        if (sortMode.contains("ckpt_all")) Some(ckptSort)
-        else if (sortOnce(n) || repartSortQueries(n)) sortMode match {
-          case Some("plain") => None
-          case Some("repart") => Some(repartSort)
-          case Some("ckpt") => Some(ckptSort)
-          case _ => Some(if (repartSortQueries(n)) repartSort else ckptSort)
-        } else None
-      rewrite match {
-        case Some(rw) => n -> ((s: SparkSession, d: String) => rw(f(s, d)))
-        case None => n -> f
-      }
-    }
-
-  /** The declared pipelines WITHOUT the sortOnce/repartSort rewrite —
-    * what [[ckptSort]] compiles into its checkpoint RDD. Plan audits
-    * (PlanAuditSpec) inspect THIS shape: the rewrite truncates the
-    * visible plan to Sort(LogicalRDD), which would let a forbidden join
-    * or window shape hide inside the RDD's compiled child. Execution
-    * paths must keep using [[queries]]. */
-  private[graft] def queriesPlain: Map[String, (SparkSession, String) => DataFrame] =
-    queriesRaw
-
-  private def queriesRaw: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Declared queries, by name. Each builder returns its plain DataFrame;
+    * a global sort over real work reads its input once through the
+    * [[MaterializeSortInput]] planner rule that `Raster.init` registers. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- per-tile statistics ----
     "q_tile_sum" -> ((s, dir) =>
       tiled(s, dir).select(col("l_orderkey"), rf_tile_sum(col("t_qty")).as("tile_sum"))

@@ -335,7 +335,8 @@ object functions {
 }
 
 /**
- * Session initialization: UDT + SQL function registration (the analog of
+ * Session initialization: UDT + SQL function registration and the
+ * [[MaterializeSortInput]] planner rule (the analog of
  * the reference's `spark.withRasterFrames` /
  * /root/reference/core/src/main/scala/org/locationtech/rasterframes/package.scala:60-83).
  */
@@ -344,6 +345,9 @@ object Raster {
     TileUDT.register()
     graft.udt.GeometryUDT.register()
     val registry = org.apache.spark.sql.graft.shims.functionRegistry(spark)
+    val planner = org.apache.spark.sql.graft.shims.experimental(spark)
+    if (!planner.extraStrategies.contains(MaterializeSortInput))
+      planner.extraStrategies = MaterializeSortInput +: planner.extraStrategies
 
     // Every name registers WITH documentation (usage + optional examples)
     // so `DESCRIBE FUNCTION EXTENDED` answers for the whole surface —

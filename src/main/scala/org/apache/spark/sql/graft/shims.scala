@@ -24,13 +24,10 @@ object shims {
     org.apache.spark.sql.classic.GraftColumnConverter.eager(c.node)
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
-  /** DataFrame from a logical plan (Dataset.ofRows is private[sql]) —
-    * lets tools re-drive a query's pre-sort child for measurement. */
-  def ofRows(spark: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** Session-level planner hooks (`experimental` lives on the classic
+    * session only). */
+  def experimental(spark: SparkSession): org.apache.spark.sql.ExperimentalMethods =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
   /** Block until every queued SparkListener event is delivered —
     * deterministic metric collection in tests (listenerBus is
     * private[spark]). */

@@ -98,9 +98,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("no query plans an unintended cartesian or nested-loop join") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    // audit the UNREWRITTEN pipelines: ckptSort compiles the child
-    // into a LogicalRDD that would hide these shapes from the plan text
-    for ((name, fn) <- SparkEntry.queriesPlain) {
+    for ((name, fn) <- SparkEntry.queries) {
       val plan =
         try fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -119,7 +117,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // count. AQE may still *choose* a broadcast join at tiny SF from
     // runtime stats — that is fine; what must never exist is the
     // explicit hint that forces it at any scale.
-    val df = SparkEntry.queriesPlain("q_tfidf")(spark, sfDir)
+    val df = SparkEntry.queries("q_tfidf")(spark, sfDir)
     val hints = df.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
     }
@@ -178,9 +176,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("every window operator is partitioned (no global fact-table sorts)") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    // audit the UNREWRITTEN pipelines: ckptSort compiles the child
-    // into a LogicalRDD that would hide these shapes from the plan text
-    for ((name, fn) <- SparkEntry.queriesPlain) {
+    for ((name, fn) <- SparkEntry.queries) {
       val plan =
         try fn(spark, sfDir).queryExecution.optimizedPlan
         catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
@@ -197,7 +193,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("document-table scans prune to the referenced columns") {
     // q_chunk reads only (doc_id, text) of documents: the scan must not
     // drag lang/source/n_chars through the generator
-    val plan = SparkEntry.queriesPlain("q_chunk")(spark, sfDir)
+    val plan = SparkEntry.queries("q_chunk")(spark, sfDir)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val readSchemas = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq

@@ -172,4 +172,43 @@ class RasterFunctionsSpec extends AnyFunSuite {
     assert(r(0).getString(1) == "int32")
     assert(r(0).getDouble(2) == 6.0)
   }
+
+  // ---- error paths of the SQL surface: each pins today's behaviour ----
+  private def oneRowSql(sql: String) = {
+    Seq(7.0).toDF("l_quantity").createOrReplaceTempView("li")
+    spark.sql(sql).collect()
+  }
+
+  test("SQL: a non-tile argument fails analysis, naming the function") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      oneRowSql("SELECT rf_tile_sum(l_quantity) FROM li"))
+    assert(e.getMessage.contains("rf_tile_sum expects a tile argument"), e.getMessage)
+  }
+
+  test("SQL: an unknown cell type name fails, naming the type") {
+    val e = intercept[IllegalArgumentException](oneRowSql(
+      "SELECT rf_convert_cell_type(rf_make_constant_tile(1.0, 2, 2, 'float64'), 'nosuch') FROM li"))
+    assert(e.getMessage.contains("Unknown cell type: nosuch"), e.getMessage)
+  }
+
+  test("SQL: local ops on tiles of different dimensions fail, naming both") {
+    val e = intercept[IllegalArgumentException](oneRowSql(
+      "SELECT rf_local_add(rf_make_constant_tile(1.0, 2, 2, 'float64'), " +
+        "rf_make_constant_tile(1.0, 3, 3, 'float64')) FROM li"))
+    assert(e.getMessage.contains("rf_local_add: mismatched tile dimensions 2x2 vs 3x3"),
+      e.getMessage)
+  }
+
+  test("SQL: a NULL binary is not a tile and fails analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      oneRowSql("SELECT rf_tile_sum(CAST(NULL AS BINARY)) FROM li"))
+    assert(e.getMessage.contains("rf_tile_sum expects a tile argument"), e.getMessage)
+  }
+
+  test("SQL: dividing by a zero tile yields infinite cells, not an error") {
+    val r = oneRowSql("SELECT rf_tile_mean(rf_local_divide(rf_make_constant_tile(4.0, 2, 2, " +
+      "'float64'), rf_make_constant_tile(0.0, 2, 2, 'float64'))) FROM li")
+    assert(r.length == 1)
+    assert(!r(0).isNullAt(0) && r(0).getDouble(0) == Double.PositiveInfinity, r(0).toString)
+  }
 }
