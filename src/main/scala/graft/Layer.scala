@@ -51,10 +51,12 @@ object Layer {
   }
 
   /** Read a layer back; `query` extent prunes via the spatial index
-    * (Parquet min/max on spatial_index + the exact extent predicate). */
+    * (Parquet min/max on spatial_index + the exact extent predicate).
+    * The layer's schema is inferred once per file set
+    * ([[graft.datasource.ParquetTables]]). */
   def read(spark: SparkSession, path: String,
       query: Option[graft.core.Extent] = None): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = graft.datasource.ParquetTables.read(spark, path)
     query match {
       case None => df
       case Some(e) =>

@@ -1,5 +1,6 @@
 package graft
 
+import graft.datasource.{ParquetTables, TilesDataSource}
 import graft.functions._
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -21,9 +22,12 @@ import org.apache.spark.sql.functions._
  */
 object SparkEntry {
 
+  /** Testdata table `name` of `dir`, its schema inferred once per file
+    * set ([[graft.datasource.ParquetTables]]): a warm builder starts no
+    * Spark job to resolve its tables. */
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
     Raster.init(s)
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetTables.read(s, s"$dir/$name.parquet")
   }
 
   /**
@@ -119,36 +123,15 @@ object SparkEntry {
    * DuckDB oracle re-derives arithmetically.
    *
    * The fixture write is driver-side by design (bounded: ~1/61 of
-   * orderkeys, 1 KB per file) and cached per testdata dir: rewritten
-   * only when the orderkey count changes.
+   * orderkeys, 1 KB per file) and cached per testdata dir
+   * ([[stampedFixture]]): rewritten only when lineitem's files change.
    */
   /** Write (or reuse) the per-orderkey two-band fixture GeoTIFFs for
-    * `dir`; returns the fixture directory. Cached per testdata dir:
-    * the freshness probe is a LIGHT distinct-count (no window, no tile
-    * assembly), so warm calls — every bench iteration after the first —
-    * skip the heavy tile collect entirely. */
-  private def geotiffFixtureDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    Raster.init(s)
-    val fxDir = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_gt_fixture_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    // freshness = sampled-orderkey count AND a content fingerprint (the
-    // exact sums the tiles are built from), so regenerated testdata with
-    // the same shape but different values still invalidates the cache
-    val probe = t(s, dir, "lineitem").where(col("l_orderkey") % 61 === 3)
-      .agg(countDistinct("l_orderkey"), sum("l_quantity"), sum("l_linenumber"))
-      .head()
-    val stamp = s"${probe.get(0)}:${probe.get(1)}:${probe.get(2)}"
-    val marker = fxDir.resolve("_fixture_count")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == stamp
-    if (!fresh) {
-      // Build into a unique sibling dir, then swap into place with an
-      // atomic rename — a concurrent JVM (overlapping bench/test runs)
-      // never observes a half-regenerated fixture dir.
+    * `dir`; returns the fixture directory. */
+  private def geotiffFixtureDir(s: SparkSession, dir: String): String =
+    stampedFixture(s, dir, "lineitem", "graft_gt_fixture_") { build =>
       val rows = tiled(s, dir).where(col("l_orderkey") % 61 === 3)
         .select(col("l_orderkey"), col("t_qty"), col("t_ln")).collect()
-      val build = Files.createTempDirectory(fxDir.getParent, fxDir.getFileName.toString + ".build")
       rows.foreach { r =>
         val ok = r.getAs[Number](0).longValue()
         graft.core.geotiff.GeoTiff.writeMultiband(
@@ -156,7 +139,31 @@ object SparkEntry {
           Seq(r.getAs[graft.core.Tile](1), r.getAs[graft.core.Tile](2)),
           graft.core.Extent(0, 0, 8, 4), graft.core.crs.CRS("epsg:4326"))
       }
-      Files.write(build.resolve(marker.getFileName), stamp.getBytes("UTF-8"))
+    }.toString
+
+  /** A driver-written fixture directory `prefix` + `dir` under
+    * java.io.tmpdir, derived from the testdata table `source`. It is
+    * reused while its `_fixture_stamp` marker holds that table's file-set
+    * fingerprint ([[ParquetTables.fingerprint]]), so a warm build lists
+    * one directory and starts no Spark job. Otherwise `write` fills a
+    * unique sibling directory, which is swapped into place with an
+    * atomic rename: a concurrent JVM (overlapping bench/test runs) never
+    * observes a half-regenerated fixture. A table that cannot be listed
+    * has no stamp, and its fixture is rebuilt on every call. */
+  private def stampedFixture(s: SparkSession, dir: String, source: String, prefix: String)(
+      write: java.nio.file.Path => Unit): java.nio.file.Path = {
+    import java.nio.file.{Files, Paths}
+    Raster.init(s)
+    val fxDir = Paths.get(System.getProperty("java.io.tmpdir"),
+      prefix + dir.replaceAll("[^A-Za-z0-9]", "_"))
+    val stamp = ParquetTables.fingerprint(s, s"$dir/$source.parquet")
+    val marker = fxDir.resolve("_fixture_stamp")
+    val fresh = stamp.exists(st =>
+      Files.exists(marker) && new String(Files.readAllBytes(marker), "UTF-8") == st)
+    if (!fresh) {
+      val build = Files.createTempDirectory(fxDir.getParent, fxDir.getFileName.toString + ".build")
+      write(build)
+      stamp.foreach(st => Files.write(build.resolve(marker.getFileName), st.getBytes("UTF-8")))
       val retired = if (Files.isDirectory(fxDir)) {
         val aside = Files.createTempDirectory(fxDir.getParent, fxDir.getFileName.toString + ".old")
         Files.delete(aside) // need a free name for the rename target
@@ -169,7 +176,7 @@ object SparkEntry {
       }
       retired.foreach(deleteTree)
     }
-    fxDir.toString
+    fxDir
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit = {
@@ -181,74 +188,60 @@ object SparkEntry {
     java.nio.file.Files.deleteIfExists(p)
   }
 
-  /** Write (or overwrite — ~350 features, trivially cheap) a GeoJSON
-    * FeatureCollection fixture over the bounded distinct (qi, lni)
-    * domain, with deliberately mixed property types (long, double,
-    * boolean, string) so the reader's Spark-JSON schema inference is on
-    * the oracled path. Atomic tmp-file + rename like the tiff fixtures. */
-  private def geojsonFixture(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val path = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_geojson_" + dir.replaceAll("[^A-Za-z0-9]", "_") + ".json")
-    val rows = t(s, dir, "lineitem")
-      .select(col("l_quantity").cast("int").as("qi"),
-        col("l_linenumber").cast("int").as("lni"))
-      .distinct().orderBy("qi", "lni").collect()
-    val features = rows.map { r =>
-      val (qi, lni) = (r.getInt(0), r.getInt(1))
-      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$qi,$lni]},""" +
-        s""""properties":{"qi":$qi,"lni":$lni,"label":"q$qi","ratio":${qi / 2.0},""" +
-        s""""flag":${qi % 2 == 0}}}"""
-    }
-    val doc = features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
-    val tmp = Files.createTempFile(path.getParent, path.getFileName.toString, ".tmp")
-    Files.write(tmp, doc.getBytes("UTF-8"))
-    Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    path.toString
-  }
+  /** A GeoJSON FeatureCollection fixture over the bounded distinct
+    * (qi, lni) domain, with deliberately mixed property types (long,
+    * double, boolean, string) so the reader's Spark-JSON schema
+    * inference is on the oracled path. Stamped and swapped in like the
+    * tiff fixtures ([[stampedFixture]]); returns the .json file. */
+  private def geojsonFixture(s: SparkSession, dir: String): String =
+    stampedFixture(s, dir, "lineitem", "graft_geojson_") { build =>
+      val rows = t(s, dir, "lineitem")
+        .select(col("l_quantity").cast("int").as("qi"),
+          col("l_linenumber").cast("int").as("lni"))
+        .distinct().orderBy("qi", "lni").collect()
+      val features = rows.map { r =>
+        val (qi, lni) = (r.getInt(0), r.getInt(1))
+        s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$qi,$lni]},""" +
+          s""""properties":{"qi":$qi,"lni":$lni,"label":"q$qi","ratio":${qi / 2.0},""" +
+          s""""flag":${qi % 2 == 0}}}"""
+      }
+      val doc = features.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+      java.nio.file.Files.write(build.resolve("features.json"), doc.getBytes("UTF-8"))
+    }.resolve("features.json").toString
 
   /** Two-file WARC fixture from the documents table: even doc_ids in a
     * plain .warc, odd in a whole-file-gzipped .warc.gz — one fixture
-    * exercises both decode paths of [[graft.datasource.Warc]]. Atomic
-    * tmp-file + rename like the other fixtures. */
-  private def warcFixtureDir(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_warc_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val rows = t(s, dir, "documents")
-      .select(col("doc_id"), col("text"), col("source"))
-      .orderBy("doc_id").collect()
-    def record(id: Long, text: String, source: String): Array[Byte] = {
-      val payload = text.getBytes("UTF-8")
-      val hdr = (s"WARC/1.0\r\n" +
-        s"WARC-Type: response\r\n" +
-        s"WARC-Target-URI: http://graft.test/$source/$id\r\n" +
-        f"WARC-Date: 2024-01-01T00:00:${id % 60}%02dZ\r\n" +
-        s"WARC-Record-ID: <urn:uuid:doc-$id>\r\n" +
-        s"Content-Type: text/plain\r\n" +
-        s"Content-Length: ${payload.length}\r\n\r\n").getBytes("UTF-8")
-      hdr ++ payload ++ "\r\n\r\n".getBytes("UTF-8")
-    }
-    val plain = rows.filter(_.getLong(0) % 2 == 0)
-      .flatMap(r => record(r.getLong(0), r.getString(1), r.getString(2)))
-    val odd = rows.filter(_.getLong(0) % 2 == 1)
-      .flatMap(r => record(r.getLong(0), r.getString(1), r.getString(2)))
-    val gzBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(odd); gz.close()
-      bos.toByteArray
-    }
-    Files.createDirectories(root)
-    for ((name, bytes) <- Seq("even.warc" -> plain, "odd.warc.gz" -> gzBytes)) {
-      val tmp = Files.createTempFile(root, name, ".tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, root.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    root.toString
-  }
+    * exercises both decode paths of [[graft.datasource.Warc]]. Stamped
+    * and swapped in like the tiff fixtures ([[stampedFixture]]). */
+  private def warcFixtureDir(s: SparkSession, dir: String): String =
+    stampedFixture(s, dir, "documents", "graft_warc_") { build =>
+      val rows = t(s, dir, "documents")
+        .select(col("doc_id"), col("text"), col("source"))
+        .orderBy("doc_id").collect()
+      def record(id: Long, text: String, source: String): Array[Byte] = {
+        val payload = text.getBytes("UTF-8")
+        val hdr = (s"WARC/1.0\r\n" +
+          s"WARC-Type: response\r\n" +
+          s"WARC-Target-URI: http://graft.test/$source/$id\r\n" +
+          f"WARC-Date: 2024-01-01T00:00:${id % 60}%02dZ\r\n" +
+          s"WARC-Record-ID: <urn:uuid:doc-$id>\r\n" +
+          s"Content-Type: text/plain\r\n" +
+          s"Content-Length: ${payload.length}\r\n\r\n").getBytes("UTF-8")
+        hdr ++ payload ++ "\r\n\r\n".getBytes("UTF-8")
+      }
+      val plain = rows.filter(_.getLong(0) % 2 == 0)
+        .flatMap(r => record(r.getLong(0), r.getString(1), r.getString(2)))
+      val odd = rows.filter(_.getLong(0) % 2 == 1)
+        .flatMap(r => record(r.getLong(0), r.getString(1), r.getString(2)))
+      val gzBytes = {
+        val bos = new java.io.ByteArrayOutputStream()
+        val gz = new java.util.zip.GZIPOutputStream(bos)
+        gz.write(odd); gz.close()
+        bos.toByteArray
+      }
+      java.nio.file.Files.write(build.resolve("even.warc"), plain)
+      java.nio.file.Files.write(build.resolve("odd.warc.gz"), gzBytes)
+    }.toString
 
   private def geotiffRead(s: SparkSession, dir: String, lazyTiles: Boolean): DataFrame = {
     val fxDir = geotiffFixtureDir(s, dir)
@@ -372,7 +365,10 @@ object SparkEntry {
           lit(8.0).as("xmax"), lit(4.0).as("ymax")).as("extent"),
         lit("epsg:4326").as("crs"))
     src.write.format("tiles").option("path", outDir.toString).save()
-    val catalog = s.read.option("header", "true").csv(s"$outDir/catalog.csv")
+    // the writer's catalog columns, as strings: no header-inference job
+    val catalog = s.read.option("header", "true")
+      .schema(TilesDataSource.catalogSchema(Seq("l_orderkey")))
+      .csv(s"$outDir/catalog.csv")
       .select(col("path").as("file"), col("l_orderkey").cast("long").as("l_orderkey"))
     s.read.format("geotiff")
       .option("path", outDir.toString)

@@ -4,6 +4,7 @@ import graft.expressions._
 import graft.udt.TileUDT
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression, Literal}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.DoubleType
@@ -339,16 +340,42 @@ object functions {
  * [[MaterializeSortInput]] planner rule (the analog of
  * the reference's `spark.withRasterFrames` /
  * /root/reference/core/src/main/scala/org/locationtech/rasterframes/package.scala:60-83).
+ *
+ * `init` is called by every table read of [[SparkEntry]], so on a
+ * session it has already initialized it only checks that the planner
+ * rule is still in place. Registering again would replace every
+ * function with an equal copy: Spark logs "replaced a previously
+ * registered function" for each of them, because a fresh
+ * `ExpressionInfo` and builder never compare equal to the old ones.
  */
 object Raster {
-  def init(spark: SparkSession): SparkSession = {
+  /** Function registries this JVM has filled; weak, so a registry goes
+    * away with its session. */
+  private val filled = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[FunctionRegistry, java.lang.Boolean]())
+
+  /** The UDT registration is JVM-wide: once. */
+  private lazy val udts: Unit = {
     TileUDT.register()
     graft.udt.GeometryUDT.register()
-    val registry = org.apache.spark.sql.graft.shims.functionRegistry(spark)
+  }
+
+  def init(spark: SparkSession): SparkSession = {
+    udts
     val planner = org.apache.spark.sql.graft.shims.experimental(spark)
     if (!planner.extraStrategies.contains(MaterializeSortInput))
       planner.extraStrategies = MaterializeSortInput +: planner.extraStrategies
+    val registry = org.apache.spark.sql.graft.shims.functionRegistry(spark)
+    filled.synchronized {
+      if (!filled.contains(registry)) {
+        register(registry)
+        filled.add(registry)
+      }
+    }
+    spark
+  }
 
+  private def register(registry: FunctionRegistry): Unit = {
     // Every name registers WITH documentation (usage + optional examples)
     // so `DESCRIBE FUNCTION EXTENDED` answers for the whole surface —
     // same property the reference enforces via ExpressionDescription
@@ -777,6 +804,5 @@ object Raster {
     reg2("rf_slope", Slope(_, _))
     reg1("rf_aspect", Aspect(_))
     regN("rf_hillshade", Hillshade(_))
-    spark
   }
 }
