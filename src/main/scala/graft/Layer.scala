@@ -51,12 +51,10 @@ object Layer {
   }
 
   /** Read a layer back; `query` extent prunes via the spatial index
-    * (Parquet min/max on spatial_index + the exact extent predicate).
-    * The layer's schema is inferred once per file set
-    * ([[graft.datasource.ParquetTables]]). */
+    * (Parquet min/max on spatial_index + the exact extent predicate). */
   def read(spark: SparkSession, path: String,
       query: Option[graft.core.Extent] = None): DataFrame = {
-    val df = graft.datasource.ParquetTables.read(spark, path)
+    val df = spark.read.parquet(path)
     query match {
       case None => df
       case Some(e) =>

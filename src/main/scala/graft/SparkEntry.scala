@@ -1,6 +1,6 @@
 package graft
 
-import graft.datasource.{ParquetTables, TilesDataSource}
+import graft.datasource.ParquetTables
 import graft.functions._
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -129,7 +129,7 @@ object SparkEntry {
   /** Write (or reuse) the per-orderkey two-band fixture GeoTIFFs for
     * `dir`; returns the fixture directory. */
   private def geotiffFixtureDir(s: SparkSession, dir: String): String =
-    stampedFixture(s, dir, "lineitem", "graft_gt_fixture_") { build =>
+    stampedFixture(s, dir, "lineitem", "graft_gt_fixture_", "geotiff-v1") { build =>
       val rows = tiled(s, dir).where(col("l_orderkey") % 61 === 3)
         .select(col("l_orderkey"), col("t_qty"), col("t_ln")).collect()
       rows.foreach { r =>
@@ -144,19 +144,22 @@ object SparkEntry {
   /** A driver-written fixture directory `prefix` + `dir` under
     * java.io.tmpdir, derived from the testdata table `source`. It is
     * reused while its `_fixture_stamp` marker holds that table's file-set
-    * fingerprint ([[ParquetTables.fingerprint]]), so a warm build lists
-    * one directory and starts no Spark job. Otherwise `write` fills a
+    * fingerprint ([[ParquetTables.fingerprint]]) and `format`, so a warm
+    * build lists one directory and starts no Spark job. The stamp does
+    * not see code: `format` names the fixture's layout version, and
+    * whoever changes what `write` produces (or a writer it calls, such as
+    * `GeoTiff.writeMultiband`) bumps it. Otherwise `write` fills a
     * unique sibling directory, which is swapped into place with an
     * atomic rename: a concurrent JVM (overlapping bench/test runs) never
     * observes a half-regenerated fixture. A table that cannot be listed
     * has no stamp, and its fixture is rebuilt on every call. */
-  private def stampedFixture(s: SparkSession, dir: String, source: String, prefix: String)(
-      write: java.nio.file.Path => Unit): java.nio.file.Path = {
+  private def stampedFixture(s: SparkSession, dir: String, source: String, prefix: String,
+      format: String)(write: java.nio.file.Path => Unit): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
     Raster.init(s)
     val fxDir = Paths.get(System.getProperty("java.io.tmpdir"),
       prefix + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val stamp = ParquetTables.fingerprint(s, s"$dir/$source.parquet")
+    val stamp = ParquetTables.fingerprint(s, s"$dir/$source.parquet").map(_ + ":" + format)
     val marker = fxDir.resolve("_fixture_stamp")
     val fresh = stamp.exists(st =>
       Files.exists(marker) && new String(Files.readAllBytes(marker), "UTF-8") == st)
@@ -194,7 +197,7 @@ object SparkEntry {
     * inference is on the oracled path. Stamped and swapped in like the
     * tiff fixtures ([[stampedFixture]]); returns the .json file. */
   private def geojsonFixture(s: SparkSession, dir: String): String =
-    stampedFixture(s, dir, "lineitem", "graft_geojson_") { build =>
+    stampedFixture(s, dir, "lineitem", "graft_geojson_", "geojson-v1") { build =>
       val rows = t(s, dir, "lineitem")
         .select(col("l_quantity").cast("int").as("qi"),
           col("l_linenumber").cast("int").as("lni"))
@@ -214,7 +217,7 @@ object SparkEntry {
     * exercises both decode paths of [[graft.datasource.Warc]]. Stamped
     * and swapped in like the tiff fixtures ([[stampedFixture]]). */
   private def warcFixtureDir(s: SparkSession, dir: String): String =
-    stampedFixture(s, dir, "documents", "graft_warc_") { build =>
+    stampedFixture(s, dir, "documents", "graft_warc_", "warc-v1") { build =>
       val rows = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
         .orderBy("doc_id").collect()
@@ -367,7 +370,7 @@ object SparkEntry {
     src.write.format("tiles").option("path", outDir.toString).save()
     // the writer's catalog columns, as strings: no header-inference job
     val catalog = s.read.option("header", "true")
-      .schema(TilesDataSource.catalogSchema(Seq("l_orderkey")))
+      .schema("path STRING, l_orderkey STRING")
       .csv(s"$outDir/catalog.csv")
       .select(col("path").as("file"), col("l_orderkey").cast("long").as("l_orderkey"))
     s.read.format("geotiff")

@@ -8,7 +8,7 @@ import graft.core.geotiff.GeoTiff
 import graft.udt.TileUDT
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Write-side connectors (V1 CreatableRelationProvider, like the
@@ -50,8 +50,7 @@ class TilesDataSource extends CreatableRelationProvider with DataSourceRegister 
           .mkString(",")
       }
     }.collect()
-    val header = TilesDataSource.catalogSchema(otherCols.map(_._1).toIndexedSeq)
-      .fieldNames.mkString(",")
+    val header = ("path" +: otherCols.map(_._1)).mkString(",")
     Files.write(Paths.get(s"$dir/catalog.csv"),
       (header +: entries).mkString("\n").getBytes("UTF-8"))
     val outerCtx = sqlContext
@@ -60,15 +59,6 @@ class TilesDataSource extends CreatableRelationProvider with DataSourceRegister 
       override def schema: StructType = data.schema
     }
   }
-}
-
-object TilesDataSource {
-  /** The columns of a `tiles` write's catalog.csv: `path` (the tile's
-    * file name), then the input's other columns, every one written as
-    * its string value. Reading the catalog with this schema skips
-    * Spark's header-inference job. */
-  def catalogSchema(otherColumns: Seq[String]): StructType =
-    StructType(("path" +: otherColumns).map(StructField(_, StringType)))
 }
 
 /** Mixed into [[GeoTiffDataSource]] so format("geotiff") reads AND writes. */

@@ -349,11 +349,6 @@ object functions {
  * `ExpressionInfo` and builder never compare equal to the old ones.
  */
 object Raster {
-  /** Function registries this JVM has filled; weak, so a registry goes
-    * away with its session. */
-  private val filled = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[FunctionRegistry, java.lang.Boolean]())
-
   /** The UDT registration is JVM-wide: once. */
   private lazy val udts: Unit = {
     TileUDT.register()
@@ -366,12 +361,8 @@ object Raster {
     if (!planner.extraStrategies.contains(MaterializeSortInput))
       planner.extraStrategies = MaterializeSortInput +: planner.extraStrategies
     val registry = org.apache.spark.sql.graft.shims.functionRegistry(spark)
-    filled.synchronized {
-      if (!filled.contains(registry)) {
-        register(registry)
-        filled.add(registry)
-      }
-    }
+    // rf_hillshade is registered last: if it is there, so is every name
+    if (!registry.functionExists(FunctionIdentifier("rf_hillshade"))) register(registry)
     spark
   }
 
@@ -803,6 +794,6 @@ object Raster {
     reg2("rf_convolve", Convolve(_, _))
     reg2("rf_slope", Slope(_, _))
     reg1("rf_aspect", Aspect(_))
-    regN("rf_hillshade", Hillshade(_))
+    regN("rf_hillshade", Hillshade(_)) // last: `init` checks for it
   }
 }
