@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's correctness gate: compare VerifyOne
-parquet dumps against their DuckDB oracle rows (columns sorted by name,
-rows sorted, exact value compare). Usage:
+"""Local stand-in for the driver's correctness gate: compare the parquet
+dumps written by `graft.Verify <sfDir> <outDir> [q_a,q_b,...]` against
+their DuckDB oracle rows (columns sorted by name, rows sorted, exact
+value compare). A query with an oracle but no parquet dump (Verify could
+not run it) is a named failure; the other queries are still checked.
+Usage:
   python3 scripts/check_queries.py OUTDIR [SFDIR] [--json OUT.json]
 
 --json writes a driver-format per-query record (rows/schema/hash match)
@@ -47,6 +50,13 @@ def dtype_offenders(rel):
 fail = 0
 records = {}
 for name, sql in sorted(oracles.items()):
+    if not any((outdir / name).glob("*.parquet")):
+        print(f"[FAIL] {name}: no parquet dump")
+        fail += 1
+        records[name] = {"rows_match": False, "schema_match": False,
+                         "hash_match": False, "spark_rows": None,
+                         "oracle_rows": None, "err": "no parquet dump"}
+        continue
     spark_rel = con.sql(f"SELECT * FROM '{outdir / name}/*.parquet'")
     cols = sorted(spark_rel.columns)
     sel = ", ".join(f'"{c}"' for c in cols)
@@ -98,7 +108,7 @@ if json_out is not None:
     qj = outdir / "queries.json"
     if not qj.exists():
         print("[FAIL] gate-record coverage: queries.json missing from the "
-              "dump — run a FULL graft.Verify (no SPARK_GRAFT_ONLY)")
+              "dump — run graft.Verify without a name list")
         fail += 1
     else:
         all_queries = set(json.loads(qj.read_text()))

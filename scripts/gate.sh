@@ -29,12 +29,17 @@ fi
 echo "sbt: $SBT_LINE"
 
 echo "=== gate 2/3: Verify + DuckDB oracle (sf0.01) ===" >&2
-if sbt -batch "runMain graft.Verify $SF $OUT" >/dev/null 2>&1 \
-   && python3 scripts/check_queries.py "$OUT" "$SF" \
-        --json "CORRECTNESS_SELF_r${ROUND}.json" >"$OUT/check.log" 2>&1; then
+# Verify's own log keeps each failed query's error ("[verify] q_x
+# failed: ...") next to check_queries' "[FAIL] q_x: no parquet dump".
+VERIFY_LOG="$(mktemp /tmp/gate_verify_log.XXXXXX)"
+VERIFY_RC=0
+sbt -batch "runMain graft.Verify $SF $OUT" >"$VERIFY_LOG" 2>&1 || VERIFY_RC=$?
+if python3 scripts/check_queries.py "$OUT" "$SF" \
+     --json "CORRECTNESS_SELF_r${ROUND}.json" >"$OUT/check.log" 2>&1 \
+   && [ "$VERIFY_RC" -eq 0 ]; then
   CHECK_LINE="$(grep -c '^\[OK ' "$OUT/check.log") OK / $(grep -c '^\[' "$OUT/check.log" ) checked (0 FAIL)"
 else
-  CHECK_LINE="FAILED — $(grep -c '^\[FAIL' "$OUT/check.log" 2>/dev/null || echo '?') failures, see $OUT/check.log"
+  CHECK_LINE="FAILED — $(grep -c '^\[FAIL' "$OUT/check.log" 2>/dev/null || echo '?') failures, Verify exit $VERIFY_RC, see $OUT/check.log and $VERIFY_LOG"
   FAIL=1
 fi
 echo "check_queries: $CHECK_LINE"

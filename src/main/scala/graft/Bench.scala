@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.Session
 import org.apache.spark.sql.functions._
 
 /**
@@ -17,16 +17,7 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Raster.init(spark)
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -104,19 +95,6 @@ object Bench {
       def cancel(): Unit = done = true
     }
 
-    /** Release Spark-level state a query invocation may have left behind:
-      * SQL-cached plans and persisted/localCheckpoint'ed RDD blocks.
-      * Queries that persist internally (IVF assignment, dedup fixpoints)
-      * can't unpersist before their consumer acts, so the blocks outlive
-      * the invocation — across a 100+-query suite in one JVM they
-      * accumulate and contaminate every later measurement (the round-8
-      * scale curve measured q_terrain at 4× its isolated time from
-      * exactly this). Runs OUTSIDE the timed region. */
-    def releaseLeftovers(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-
     /** warmup run + median of 3 timed runs — stable against JIT/GC noise;
       * leftover blocks are released after every rep so rep N doesn't pay
       * for rep N-1's leaked state. Each timed rep runs under a watchdog
@@ -125,14 +103,14 @@ object Bench {
       * per-rep times + GC seconds so spikes carry evidence, not vibes. */
     def medianOf3(name: String)(body: => Unit): Double = {
       val tw = time(body) // warmup (also the budget fallback)
-      releaseLeftovers()
+      Session.releaseLeftovers(spark)
       val budget = refMedians.get(name).map(m => math.max(5 * m, 2.0))
         .getOrElse(math.max(5 * tw, 10.0))
       val reps = Array.fill(3) {
         val gc0 = gcTimeMs
         val wd = new Watchdog(name, budget)
         val t = try time(body) finally wd.cancel()
-        releaseLeftovers()
+        Session.releaseLeftovers(spark)
         (t, (gcTimeMs - gc0) / 1000.0)
       }
       val ts = reps.map(_._1).sorted
@@ -170,7 +148,7 @@ object Bench {
       // NO explicit System.gc() here: measured (round 8), a full GC per
       // query made the whole suite ~1.3× slower — G1 returns committed
       // heap to the OS and every successor pays re-commit page faults.
-      // The deterministic releaseLeftovers() above is the real fix.
+      // The deterministic Session.releaseLeftovers above is the real fix.
     }
 
     // ---- baseline micro shapes (match BASELINE.md configs) ----

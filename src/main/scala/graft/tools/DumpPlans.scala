@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps formatted physical plans of the flagship queries to PLANS.md —
@@ -510,15 +509,10 @@ object DumpPlans {
         "m2^1.5 as m2*sqrt(m2), no pow(), zero joins, zero windows."))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      // small-SF auto-broadcast would mask the at-scale join shapes:
-      // with the threshold off, ONLY explicit broadcast() hints
-      // broadcast — the plans below show what a big cluster would run
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // small-SF auto-broadcast would mask the at-scale join shapes:
+    // with the threshold off, ONLY explicit broadcast() hints
+    // broadcast — the plans below show what a big cluster would run
+    val spark = Session.local(8, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the flagship queries\n\n")

@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for a list of SparkEntry queries to
   * files — the before/after plan evidence for optimization rounds.
   *
   * Usage: runMain graft.tools.PlanSnap <outDir> <suffix> <q1,q2,...> [sfDir]
-  * Writes <outDir>/<query>_<suffix>.txt per query. Session mirrors the
-  * Bench config (local[32], AQE on) so plan shapes match what the bench
-  * actually runs — EXCEPT plans are pre-execution (AQE initial plans).
+  * Writes <outDir>/<query>_<suffix>.txt per query. The session is the
+  * Bench one at local[32], so plan shapes match what the bench actually
+  * runs — EXCEPT plans are pre-execution (AQE initial plans).
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -17,15 +15,7 @@ object PlanSnap {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Raster.init(spark)
+    val spark = Session.local(32)
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a `factor`×-scaled copy of an SF directory as parquet,
@@ -23,12 +23,7 @@ object ReplicateSf {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sfbig"
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1 && factor <= 20, s"factor must be in [1, 20], got $factor")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
 
     def shifted(table: String, shifts: Map[String, Long]): DataFrame = {
       val base = spark.read.parquet(s"$src/$table.parquet")

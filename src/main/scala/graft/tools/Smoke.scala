@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * End-to-end smoke driver: real parquet in, tiles assembled per group,
  * map algebra + stats out — through both the SQL and column APIs.
@@ -10,15 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Raster.init(spark)
+    val spark = Session.local(4)
 
     spark.read.parquet(s"$sfDir/lineitem.parquet").createOrReplaceTempView("lineitem")
 

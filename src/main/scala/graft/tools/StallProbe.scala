@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /**
@@ -30,15 +29,7 @@ object StallProbe {
   def main(args: Array[String]): Unit = {
     val minutes = args.headOption.map(_.toInt).getOrElse(25)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Raster.init(spark)
+    val spark = Session.local(32)
 
     // timestamped frame samples from the driver-side threads of interest
     val samples = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()

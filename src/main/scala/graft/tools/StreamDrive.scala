@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Drive the stateful streaming faces end-to-end over the real events
@@ -10,14 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamDrive {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Raster.init(spark)
+    val spark = Session.local(8)
     val path = s"$sfDir/events.parquet"
     val schema = spark.read.parquet(path).schema
     // events.parquet is a single file: glob-filter the directory (the

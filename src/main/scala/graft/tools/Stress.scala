@@ -76,13 +76,7 @@ object Stress {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 16
     require(factor >= 1 && factor <= 20, s"factor must be in [1, 20], got $factor")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(32)
 
     val docs = replicateDocs(spark, sfDir, factor)
     val emb = replicateEmbeddings(spark, sfDir, factor)

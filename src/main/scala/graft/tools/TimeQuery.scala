@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times individual SparkEntry queries (warmup + median-of-3, like Bench)
   * without running the whole bench suite. Usage:
   * `runMain graft.tools.TimeQuery q_dedup_pipeline[,q_x,...] [sfDir]` */
@@ -12,41 +10,26 @@ object TimeQuery {
     // honor the bench's core-count contract so isolated medians can be
     // taken at the driver's low-cpu point too (default unchanged: 32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // A/B hook: SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2" layers session
     // confs on top, so candidate settings are measurable without edits
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(
+      _.split(";").map(_.trim).filter(_.nonEmpty).map { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
+          case Array(k, v) => k.trim -> v.trim
           case _ => sys.error(
             s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
         }
       })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Raster.init(spark)
-    // mirror Bench.releaseLeftovers: reclaim SQL cache + leaked
-    // checkpoint blocks between reps so rep N isn't charged for rep
-    // N-1's leftover state (same methodology as the suite numbers)
-    def releaseLeftovers(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    val spark = Session.local(cpus, extra: _*)
     for (n <- names) {
       def run(): Unit =
         graft.SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
       run()
-      releaseLeftovers()
+      Session.releaseLeftovers(spark)
       val ts = Array.fill(3) {
         val t0 = System.nanoTime(); run()
         val t = (System.nanoTime() - t0) / 1e9
-        releaseLeftovers(); t
+        Session.releaseLeftovers(spark); t
       }.sorted
       println(f"TIME $n ${ts(1)}%.3f s (min ${ts(0)}%.3f max ${ts(2)}%.3f) sf=$sfDir")
     }
