@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** The one way a graft entry point builds its SparkSession: every `main`
-  * under `src/main` and the test session go through [[local]], so core
-  * count is the only thing that differs between them. */
+  * under `src/main` and the test session go through [[local]], so they
+  * differ only in core count and the confs a tool passes as `extra`. */
 object Session {
   /** `local[cpus]` with `cpus` shuffle partitions, AQE on, UTC session
     * time, no UI, WARN logging and graft's functions registered. `extra`

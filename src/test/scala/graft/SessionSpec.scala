@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /**
@@ -57,7 +57,7 @@ class SessionSpec extends AnyFunSuite {
     val hits = Files.walk(Paths.get("src/main")).iterator.asScala
       .filter(Files.isRegularFile(_))
       .filter(p => Files.readString(p).contains("SparkSession.builder"))
-      .map((p: Path) => p.toString).toSeq
+      .map(_.toString).toSeq
     assert(hits == Seq("src/main/scala/graft/tools/Session.scala"))
   }
 }
