@@ -10,8 +10,12 @@ Usage:
 --json writes a driver-format per-query record (rows/schema/hash match)
 so each round carries a committed CORRECTNESS_SELF_r*.json even when
 the driver's own artifact goes missing (round 13 shipped `{}`).
+
+Each oracle's DuckDB wall time is measured; the ten slowest are printed
+as `slowest oracle <s> s <name>` lines and kept in the record's
+`__meta__.slowest_oracles_s`.
 """
-import json, math, sys
+import json, math, sys, time
 from pathlib import Path
 
 import duckdb
@@ -49,6 +53,7 @@ def dtype_offenders(rel):
 
 fail = 0
 records = {}
+oracle_s = {}
 for name, sql in sorted(oracles.items()):
     if not any((outdir / name).glob("*.parquet")):
         print(f"[FAIL] {name}: no parquet dump")
@@ -61,6 +66,7 @@ for name, sql in sorted(oracles.items()):
     cols = sorted(spark_rel.columns)
     sel = ", ".join(f'"{c}"' for c in cols)
     srows = con.sql(f'SELECT {sel} FROM spark_rel ORDER BY ALL').fetchall()
+    t0 = time.perf_counter()
     orel = con.sql(sql)
     bad = [("oracle", o) for o in dtype_offenders(orel)]
     bad += [("spark", o) for o in dtype_offenders(spark_rel)]
@@ -76,6 +82,7 @@ for name, sql in sorted(oracles.items()):
         continue
     ocols = sorted(orel.columns)
     orows = con.sql(f'SELECT {", ".join(chr(34)+c+chr(34) for c in ocols)} FROM orel ORDER BY ALL').fetchall()
+    oracle_s[name] = time.perf_counter() - t0
     ok = cols == ocols and len(srows) == len(orows)
     if ok:
         for a, b in zip(srows, orows):
@@ -99,6 +106,9 @@ for name, sql in sorted(oracles.items()):
             if a != b:
                 print(f"  first diff at row {i}:\n    spark : {a}\n    oracle: {b}")
                 break
+slowest = dict(sorted(oracle_s.items(), key=lambda kv: -kv[1])[:10])
+for name, s in slowest.items():
+    print(f"slowest oracle {s:9.2f} s {name}")
 if json_out is not None:
     # Gate-record coverage assert (r18 lesson: a query landed after the
     # gate refresh and the committed record silently covered 319/320):
@@ -137,6 +147,7 @@ if json_out is not None:
             .isoformat(timespec="seconds"),
         "git_head_at_generation": head or "unknown",
         "n_records": len(records),
+        "slowest_oracles_s": {n: round(s, 2) for n, s in slowest.items()},
     }
     json_out.write_text(json.dumps(records, indent=2) + "\n")
     print(f"[json] wrote {len(records) - 1} records to {json_out}")

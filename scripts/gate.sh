@@ -43,6 +43,8 @@ else
   FAIL=1
 fi
 echo "check_queries: $CHECK_LINE"
+# the DuckDB half is the gate's long pole: name its ten slowest oracles
+grep '^slowest oracle' "$OUT/check.log" || true
 
 echo "=== gate 3/3: pytest ===" >&2
 PY_LOG="$(mktemp)"
