@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.datasource.ParquetTables
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,24 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class ParquetTablesSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
+  import TestSession.jobs
   import spark.implicits._
   private val sfDir = "/root/testdata/sf0.001"
-
-  /** Spark jobs started while `body` runs. */
-  private def jobs[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
-      (a, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def sameAsSpark(got: DataFrame, path: String): Unit = {
     val want = spark.read.parquet(path)

@@ -7,6 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
   lazy val spark: SparkSession = tools.Session.local(4)
+
+  /** Spark jobs started on the test session while `body` runs. */
+  def jobs[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class RasterFunctionsSpec extends AnyFunSuite {

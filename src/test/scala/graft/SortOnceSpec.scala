@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
@@ -25,6 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class SortOnceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSession.spark
+  import TestSession.jobs
   private val sfDir = "/root/testdata/sf0.001"
 
   // one query per family, then the benchmark's query_mix list
@@ -56,22 +54,6 @@ class SortOnceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def overTarget[A](body: => A): A =
     withConfs("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(body)
-
-  /** Spark jobs started while `body` runs. */
-  private def jobs[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.sql.graft.shims.waitForListenerBus(sc)
-      (a, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A user's groupBy -> orderBy: the sort reads one finished shuffle stage. */
   private def aggThenSort(): DataFrame =
@@ -123,11 +105,7 @@ class SortOnceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     overTarget {
       val df = SparkEntry.queries("q_tile_minmax")(spark, sfDir)
       df.collect()
-      val under = underRangeExchanges(df)
-      assert(under.nonEmpty, "expected a range-partitioning exchange")
-      assert(under.forall(_.isInstanceOf[MaterializeSortInputExec]),
-        s"expected the materialize node under the range exchange, got " +
-          under.map(_.nodeName).mkString(", "))
+      assertMaterialized(df, "q_tile_minmax over the coalescing target")
       assert(materializeNodes(df).size == 1, df.queryExecution.executedPlan.toString)
     }
 
