@@ -56,6 +56,12 @@ object Bench {
             .map(m => m.group(1) -> m.group(2).toDouble).toMap
         }.getOrElse(Map.empty)
     val dumpDir = sys.env.getOrElse("SPARK_GRAFT_DUMP_DIR", "/tmp/graft_bench_dumps")
+    // Janino compilations (generated-class cache misses) in the timed
+    // reps, per entry: a warm query that still compiles has lost its
+    // classes from the cache. File record only.
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def codegenCompiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def gcTimeMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -106,6 +112,7 @@ object Bench {
       Session.releaseLeftovers(spark)
       val budget = refMedians.get(name).map(m => math.max(5 * m, 2.0))
         .getOrElse(math.max(5 * tw, 10.0))
+      val compiles0 = codegenCompiles
       val reps = Array.fill(3) {
         val gc0 = gcTimeMs
         val wd = new Watchdog(name, budget)
@@ -113,6 +120,7 @@ object Bench {
         Session.releaseLeftovers(spark)
         (t, (gcTimeMs - gc0) / 1000.0)
       }
+      compiles(name) = codegenCompiles - compiles0
       val ts = reps.map(_._1).sorted
       if (ts(2) > 5 * ts(0) && ts(2) > 2.0)
         System.err.println(
@@ -305,6 +313,8 @@ object Bench {
       // stdout lines stay timestamp-free so reruns of the same tree diff
       // clean.
       val stamped = line.dropRight(1) +
+        compiles.map { case (k, v) => "\"" + k + "\":" + v }
+          .mkString(",\"codegen_compiles\":{", ",", "}") +
         s""","generated_at":"${java.time.Instant.now()}"}"""
       try w.println(stamped) finally w.close()
     }

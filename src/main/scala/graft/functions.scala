@@ -347,8 +347,29 @@ object functions {
  * function with an equal copy: Spark logs "replaced a previously
  * registered function" for each of them, because a fresh
  * `ExpressionInfo` and builder never compare equal to the old ones.
+ *
+ * `init` also sizes Spark's generated-class cache (see
+ * [[CodegenCacheEntries]]) unless the session already has a value for
+ * `spark.sql.codegen.cache.maxEntries`.
  */
 object Raster {
+  /** Entries in Spark's generated-class cache (Spark's default is 100).
+    * Spark keys the cache by (class loader, source), and in `local[k]` a
+    * whole-stage class is compiled under both the driver's and the
+    * executor's loader, so one pass over perfbench's 15-query query_mix
+    * needs about 215 entries: with 100, every class is evicted before it
+    * is used again and recompiled on each repeat. 1000 leaves headroom
+    * for larger query sets.
+    *
+    * Spark builds the cache once per JVM, from the active session's conf,
+    * when it first generates code. So this only takes effect if `init`
+    * runs before the JVM's first query, as it does in every graft entry
+    * point; a cache built earlier keeps the size it was built with. A
+    * value the user set (builder, SparkConf or `-D`) is copied into the
+    * session's conf when the session is built and is left alone. */
+  val CodegenCacheEntries = 1000
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
   /** The UDT registration is JVM-wide: once. */
   private lazy val udts: Unit = {
     TileUDT.register()
@@ -356,6 +377,10 @@ object Raster {
   }
 
   def init(spark: SparkSession): SparkSession = {
+    // A static conf: RuntimeConfig.set would refuse it, SQLConf does not.
+    val conf = org.apache.spark.sql.graft.shims.sqlConf(spark)
+    if (!conf.contains(CodegenCacheKey))
+      conf.setConfString(CodegenCacheKey, CodegenCacheEntries.toString)
     udts
     val planner = org.apache.spark.sql.graft.shims.experimental(spark)
     if (!planner.extraStrategies.contains(MaterializeSortInput))

@@ -33,4 +33,8 @@ object shims {
     * private[spark]). */
   def waitForListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+  /** The session's own `SQLConf`. Unlike `RuntimeConfig.set`, its
+    * `setConfString` does not refuse static confs. */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 }

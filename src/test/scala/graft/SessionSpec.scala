@@ -1,7 +1,9 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
@@ -12,7 +14,8 @@ import scala.jdk.CollectionConverters._
  * dumper (`Verify.dump`): the shared test session carries the recipe's
  * confs, a subset dump writes only what it was asked for, the JSON
  * escaper round-trips through a real JSON parser, and no other file in
- * `src/main` builds its own session.
+ * `src/main` builds its own session. `Raster.init` sizes Spark's
+ * generated-class cache, so repeated queries reuse their classes.
  */
 class SessionSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -25,6 +28,20 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.sessionState.functionRegistry
       .functionExists(FunctionIdentifier("rf_hillshade")))
+  }
+
+  test("Raster.init sizes the codegen cache: a repeated round of 120 queries compiles nothing") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+    // each query needs its own whole-stage class (the literal is inlined
+    // into the source); with the driver's and the executor's class loader
+    // that is over 240 cache entries, more than Spark's default of 100
+    def round(): Unit = for (i <- 0 until 120)
+      spark.range(8).select(col("id") * lit(i)).write.format("noop").mode("overwrite").save()
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    round()
+    val before = compiles
+    round()
+    assert(compiles - before == 0)
   }
 
   test("Verify.dump with a name list writes only those queries and no queries.json") {
