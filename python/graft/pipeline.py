@@ -1,98 +1,80 @@
-"""Training-data pipeline DataFrame ops — Python mirror of the Scala
-``graft.pipeline`` package (``Chunking``, ``QuantileFilter``).
+"""Training-data pipeline operators: thin py4j wrappers over the Scala
+``graft.pipeline`` objects (``Stats``, ``Dedup``, ``Graph``, ``Joins``,
+``QuantileFilter``, ...).
 
-Same algorithms, pure PySpark composition, so results are identical
-row-for-row (asserted by ``test_pipeline.py`` against the Scala specs'
-fixtures):
+Each wrapper calls its Scala operator directly and returns the JVM plan
+as a Python DataFrame, so every algorithm has one implementation and
+every Scala fix reaches Python. Argument conversion lives in
+``graft._bridge``; a wrapper keeps only the checks that need no data
+(raised as ``ValueError``). The Scala contract holds as is: most keyed
+operators require non-empty ``keys``, and runtime errors carry the
+snake_case operator name (``raise_error("bh_fdr: ...")``).
 
-- ``chunk``: fixed-size token windows with overlap — a per-row explode
-  of a computed index range plus array slices; no shuffle.
-- ``quantile_threshold`` / ``quantile_keep_above``: integer-exact
-  discrete p-quantile from a value histogram (never a global row sort),
-  broadcast back as a scalar filter.
+Python-only, because no Scala operator takes these arguments:
+
+- ``hll_overlap`` and ``vad_segments``: compositions that exist inline
+  in ``SparkEntry`` (q_hll_overlap, q_vad), not as operators;
+- ``hard_negatives_with_cells``: takes PRE-ASSIGNED cells, while
+  ``Similarity.hardNegatives`` fits its own IVF cells.
 """
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from graft._bridge import _jc, _jvm, _pl, _seq, _wrap
+
+
+def _check_disjoint(left, right, key):
+    collide = (set(left.columns) & set(right.columns)) - {key}
+    if collide:
+        raise ValueError(f"column names must not collide across sides: "
+                         f"{sorted(collide)}")
+
+
+def _check_max_distinct(max_distinct):
+    if not 2 <= max_distinct <= 1 << 24:
+        raise ValueError("max_distinct must be in [2, %d], got %d"
+                         % (1 << 24, max_distinct))
 
 
 def chunk(df, id_col, text_col, size_tokens, overlap=0):
     """Split documents into ``size_tokens``-token windows advancing by
     ``size_tokens - overlap``; every token lands in at least one chunk,
-    short docs yield one short chunk."""
+    short docs yield one short chunk. Scala ``Chunking.chunk``."""
     if size_tokens <= 0:
         raise ValueError("size_tokens must be positive")
     if not 0 <= overlap < size_tokens:
         raise ValueError("overlap must be in [0, size_tokens)")
-    stride = size_tokens - overlap
-    return (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__t"))
-        .select(
-            F.col(id_col), F.col("__t"),
-            F.explode(F.expr(f"sequence(0, (size(__t) - 1) div {stride})"))
-            .alias("__ci"))
-        .select(
-            F.col(id_col),
-            F.col("__ci").cast("int").alias("chunk_idx"),
-            (F.col("__ci") * stride).cast("int").alias("start_token"),
-            F.concat_ws(
-                " ", F.slice(F.col("__t"), F.col("__ci") * stride + 1,
-                             F.lit(size_tokens))).alias("chunk_text"),
-            F.least(F.lit(size_tokens),
-                    F.size(F.col("__t")) - F.col("__ci") * stride)
-            .cast("int").alias("n_chunk_tokens"),
-        )
-    )
+    return _wrap(df, _pl().Chunking.chunk(
+        df._jdf, id_col, text_col, int(size_tokens), int(overlap)))
 
 
 def quantile_threshold(df, score, permille):
     """One-row frame holding the smallest score value whose cumulative
-    histogram count reaches ceil(n * permille / 1000)."""
+    histogram count reaches ceil(n * permille / 1000). Scala
+    ``QuantileFilter.threshold``."""
     if not 0 <= permille <= 1000:
         raise ValueError("permille must be in [0, 1000]")
-    s = df.select(score.cast("long").alias("__s"))
-    hist = s.groupBy("__s").agg(F.count(F.lit(1)).alias("__c"))
-    cum = hist.withColumn(
-        "__cume",
-        F.sum("__c").over(
-            Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, 0)))
-    tot = s.agg(F.count(F.lit(1)).alias("__n"))
-    return (
-        cum.crossJoin(tot)
-        .where(F.col("__cume") >= F.expr(f"(__n * {permille} + 999) div 1000"))
-        .agg(F.min("__s").alias("threshold"))
-    )
+    return _wrap(df, _pl().QuantileFilter.threshold(
+        df._jdf, _jc(score), int(permille)))
 
 
 def quantile_keep_above(df, score, permille):
-    """Keep rows with score >= the permille threshold (ties kept)."""
-    thr = quantile_threshold(df, score, permille)
-    return (
-        df.crossJoin(F.broadcast(thr))
-        .where(score.cast("long") >= F.col("threshold"))
-    )
+    """Keep rows with score >= the permille threshold (ties kept). Scala
+    ``QuantileFilter.keepAbove``."""
+    return _wrap(df, _pl().QuantileFilter.keepAbove(
+        df._jdf, _jc(score), int(permille)))
 
 
 def dedupe_within_doc(df, id_col, text_col, seg_tokens=8):
     """Collapse repeated ``seg_tokens``-token segments inside one document
-    to their first occurrence (order-preserving); returns
-    (id, clean_text, n_segments, n_dropped). No shuffle."""
+    to their first occurrence (order-preserving); returns (id, clean_text,
+    n_segments, n_dropped). No shuffle. Scala ``Dedup.dedupeWithinDoc``."""
     if seg_tokens <= 0:
         raise ValueError("seg_tokens must be positive")
-    segs = F.expr(
-        f"transform(sequence(0, (size(__t) + {seg_tokens - 1}) div {seg_tokens} - 1), "
-        f"i -> array_join(slice(__t, i * {seg_tokens} + 1, {seg_tokens}), ' '))")
-    return (
-        df.select(F.col(id_col).alias("id"),
-                  F.split(F.col(text_col), " ").alias("__t"))
-        .select(F.col("id"), segs.alias("__segs"))
-        .select(F.col("id"), F.col("__segs"),
-                F.array_distinct("__segs").alias("__kept"))
-        .select(F.col("id"),
-                F.array_join("__kept", " ").alias("clean_text"),
-                F.size("__segs").alias("n_segments"),
-                (F.size("__segs") - F.size("__kept")).alias("n_dropped"))
-    )
+    return _wrap(df, _pl().Dedup.dedupeWithinDoc(
+        df._jdf, id_col, text_col, int(seg_tokens)))
 
 
 def gopher_metrics(df, id_col, text_col,
@@ -101,1145 +83,423 @@ def gopher_metrics(df, id_col, text_col,
                    max_symbol_ratio=0.1, min_alpha_ratio=0.8,
                    min_stop_hits=2,
                    stopwords=("the", "a", "and", "of", "to", "in")):
-    """Gopher-rule metrics + composite gopher_pass verdict (same rules,
-    thresholds, and pinned arithmetic as the Scala GopherRules)."""
-    text = F.col(text_col)
-    toks = F.split(text, " ")
-    n = F.size(toks)
-    sum_len = F.aggregate(F.transform(toks, F.length), F.lit(0),
-                          lambda a, x: a + x)
-    hashes = F.length(text) - F.length(F.replace(text, F.lit("#"), F.lit("")))
-    ellipses = (F.length(text)
-                - F.length(F.replace(text, F.lit("..."), F.lit("")))) / F.lit(3)
-    alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]")))
-    stop_hits = F.size(F.filter(
-        F.array_distinct(toks), lambda t: t.isin(*stopwords)))
-    mean_word_len = sum_len.cast("double") / n
-    symbol_ratio = (hashes + ellipses).cast("double") / n
-    alpha_ratio = alpha.cast("double") / n
-    return df.select(
-        F.col(id_col),
-        n.cast("int").alias("n_words"),
-        mean_word_len.alias("mean_word_len"),
-        symbol_ratio.alias("symbol_ratio"),
-        alpha_ratio.alias("alpha_ratio"),
-        stop_hits.cast("int").alias("stop_hits"),
-        (n.between(min_words, max_words)
-         & mean_word_len.between(min_mean_word_len, max_mean_word_len)
-         & (symbol_ratio <= max_symbol_ratio)
-         & (alpha_ratio >= min_alpha_ratio)
-         & (stop_hits >= min_stop_hits)).alias("gopher_pass"))
+    """Gopher-rule metrics + composite gopher_pass verdict. Scala
+    ``GopherRules.metrics``."""
+    return _wrap(df, _pl().GopherRules.metrics(
+        df._jdf, id_col, text_col, int(min_words), int(max_words),
+        float(min_mean_word_len), float(max_mean_word_len),
+        float(max_symbol_ratio), float(min_alpha_ratio), int(min_stop_hits),
+        _seq(stopwords)))
 
 
 def winnow_pairs(df, id_col, text_col, k=3, w=4, min_shared=2,
                  max_doc_freq=20):
     """Near-dup candidate pairs by shared winnowing fingerprints with the
-    hot-fingerprint cutoff (see Scala Dedup.winnowPairs)."""
-    sel = (
-        df.select(F.col(id_col).alias("id"),
-                  F.explode(F.expr(f"pl_winnow({text_col}, {k}, {w})")).alias("s"))
-        .select("id", F.col("s.fp").alias("fp")).distinct())
-    hot = (sel.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-           .where(F.col("df") > max_doc_freq).select("fp"))
-    kept = sel.join(F.broadcast(hot), ["fp"], "left_anti")
-    return (
-        kept.alias("a").join(
-            kept.alias("b"),
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .agg(F.count(F.lit(1)).cast("int").alias("shared"))
-        .where(F.col("shared") >= min_shared)
-    )
-
-
-def _kmeans_fit(vectors, k, iters):
-    """Deterministic Lloyd quantizer — same init (sorted-id prefix, first
-    k vectors) and same sequential arithmetic order as the Scala
-    ``QuantizerKMeans.fit``, so centroids agree bit-for-bit (pure-python
-    floats are IEEE doubles)."""
-    if not vectors:
-        raise ValueError("k-means needs at least one vector")
-    dim = len(vectors[0])
-    cents = [list(vectors[i]) for i in range(min(k, len(vectors)))]
-    while len(cents) < k:
-        cents.append(list(vectors[0]))
-    for _ in range(iters):
-        sums = [[0.0] * dim for _ in range(k)]
-        counts = [0] * k
-        for v in vectors:
-            best, best_d = 0, float("inf")
-            for c in range(k):
-                cc = cents[c]
-                d = 0.0
-                for i in range(dim):
-                    x = v[i] - cc[i]
-                    d += x * x
-                if d < best_d:
-                    best_d, best = d, c
-            s = sums[best]
-            for i in range(dim):
-                s[i] += v[i]
-            counts[best] += 1
-        cents = [
-            cents[c] if counts[c] == 0
-            else [sums[c][i] / counts[c] for i in range(dim)]
-            for c in range(k)
-        ]
-    return cents
+    hot-fingerprint cutoff. Scala ``Dedup.winnowPairs``."""
+    return _wrap(df, _pl().Dedup.winnowPairs(
+        df._jdf, id_col, text_col, int(k), int(w), int(min_shared),
+        int(max_doc_freq)))
 
 
 def semdedup_keep(df, id_col, vec_col, nlist=16, threshold=0.97,
                   fit_sample_size=100000, fit_iters=10):
-    """SemDeDup keep decisions — Python mirror of the Scala
-    ``EmbeddingDedup.semDedupKeep`` (Abbas et al. 2023,
-    arXiv:2303.09540): k-means cells + within-cell cosine pruning, keep
-    priority = LOW centroid similarity (edge examples survive), ties to
-    the lower id. Returns ``(id, cell, csim, keep)``.
-
-    Same scale shape as the Scala side: bounded driver fit sample,
-    nlist-row broadcast centroid table, cell equi-join for candidate
-    pairs — no corpus broadcast, no cross join over data rows.
-    """
-    sample = [list(r[1]) for r in
-              df.select(F.col(id_col).alias("id"),
-                        F.col(vec_col).cast("array<double>").alias("v"))
-                .orderBy("id").limit(fit_sample_size).collect()]
-    cents = _kmeans_fit(sample, nlist, fit_iters)
-    spark = df.sparkSession
-    centroids = F.broadcast(spark.createDataFrame(
-        [(i, v) for i, v in enumerate(cents)],
-        "cell int, centroid array<double>"))
-    vecs = df.select(F.col(id_col).alias("id"),
-                     F.col(vec_col).cast("array<double>").alias("vec"))
-    # assignment: argmin squared-L2 over the nlist-row broadcast table;
-    # (dist, cell) min-struct ties to the lowest cell like the Scala
-    # NearestCentroid expression
-    dist = F.aggregate(
-        F.zip_with(F.col("vec"), F.col("centroid"),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    w = Window.partitionBy("id").orderBy("__d", "cell")
-    scored = (
-        vecs.join(centroids)
-        .withColumn("__d", dist)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(F.col("cell"), F.col("id"), F.col("vec"),
-                F.expr("pl_cosine_similarity(vec, centroid)").alias("csim"))
-        .localCheckpoint(True)
-    )
-    a = scored.select(F.col("cell"), F.col("id").alias("a_id"),
-                      F.col("vec").alias("a_vec"), F.col("csim").alias("a_csim"))
-    b = scored.select(F.col("cell"), F.col("id").alias("b_id"),
-                      F.col("vec").alias("b_vec"), F.col("csim").alias("b_csim"))
-    dropped = (
-        a.join(b, ["cell"])
-        .where((F.col("a_csim") < F.col("b_csim"))
-               | ((F.col("a_csim") == F.col("b_csim"))
-                  & (F.col("a_id") < F.col("b_id"))))
-        .where(F.expr("pl_cosine_similarity(a_vec, b_vec)") >= threshold)
-        .select(F.col("b_id").alias("id")).distinct())
-    return (
-        scored.select("id", "cell", "csim")
-        .join(dropped.withColumn("dup", F.lit(True)), ["id"], "left")
-        .select("id", "cell", "csim",
-                F.coalesce(~F.col("dup"), F.lit(True)).alias("keep")))
+    """SemDeDup keep decisions (Abbas et al. 2023, arXiv:2303.09540):
+    k-means cells + within-cell cosine pruning, keep priority = LOW
+    centroid similarity (edge examples survive), ties to the lower id.
+    Returns ``(id, cell, csim, keep)``. Scala
+    ``EmbeddingDedup.semDedupKeep``."""
+    return _wrap(df, _pl().EmbeddingDedup.semDedupKeep(
+        df._jdf, id_col, vec_col, int(nlist), float(threshold),
+        int(fit_sample_size), int(fit_iters)))
 
 
 def read_warc(spark, path):
-    """Common Crawl WARC container read through the JVM ``warc`` DSv2
-    source (one task per ``.warc``/``.warc.gz`` file — the industry
-    shape): columns ``(record_type, target_uri, warc_date, content_type,
-    content_length, payload)``."""
-    return spark.read.format("warc").option("path", path).load()
+    """Common Crawl WARC container read: columns ``(record_type,
+    target_uri, warc_date, record_id, content_type, content_length,
+    payload)``, one task per ``.warc``/``.warc.gz`` file. Scala
+    ``graft.datasource.Warc.read`` (the reader behind the ``warc`` data
+    source)."""
+    return _wrap(spark, _jvm().graft.datasource.Warc.read(
+        spark._jsparkSession, path))
 
 
 def substring_dedup(df, id_col, text_col, k=8):
-    """Exact substring dedup — Python mirror of the Scala
-    ``Dedup.substringDedup`` (Lee et al. 2022, arXiv:2107.06499
-    "ExactSubstr", at k-token-window granularity): drop every token
-    covered by a k-token window whose content occurs more than once in
-    the corpus. Windows come from the registered ``pl_winnow`` with
-    w=1 (every window, no downsampling); "occurs more than once" is one
-    linear groupBy(fp); flagged windows return via LEFT SEMI join on fp
-    (no pair blowup); overlapping windows merge per doc with the
-    cumulative-max interval merge. Returns
-    ``(id, n_tokens, n_dup_spans, n_removed_tokens, cleaned_text)``.
-    """
+    """Exact substring dedup (Lee et al. 2022, arXiv:2107.06499
+    "ExactSubstr", at k-token-window granularity): drop every token covered
+    by a k-token window whose content occurs more than once in the corpus.
+    Windows come from the registered ``pl_winnow`` with w=1 (every window,
+    no downsampling); "occurs more than once" is one linear groupBy(fp);
+    flagged windows return via LEFT SEMI join on fp (no pair blowup);
+    overlapping windows merge per doc with the cumulative-max interval
+    merge. Returns ``(id, n_tokens, n_dup_spans, n_removed_tokens,
+    cleaned_text)``. Scala ``Dedup.substringDedup``."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    wins = (
-        df.select(F.col(id_col).alias("id"),
-                  F.explode(F.expr(f"pl_winnow({text_col}, {k}, 1)")).alias("w"))
-        .select("id", F.col("w.pos").alias("pos"), F.col("w.fp").alias("fp")))
-    dup_fp = (wins.groupBy("fp").agg(F.count(F.lit(1)).alias("n"))
-              .where(F.col("n") > 1).select("fp"))
-    flagged = wins.join(dup_fp, ["fp"], "left_semi")
-    by_doc = Window.partitionBy("id").orderBy("pos")
-    merged = (
-        flagged.withColumn("e", F.col("pos") + k)
-        .withColumn("pmax", F.max("e").over(
-            by_doc.rowsBetween(Window.unboundedPreceding, -1)))
-        .withColumn("brk", F.when(
-            F.col("pmax").isNull() | (F.col("pos") > F.col("pmax")), 1).otherwise(0))
-        .withColumn("grp", F.sum("brk").over(
-            by_doc.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("id", "grp")
-        .agg(F.min("pos").alias("s"), F.max("e").alias("e")))
-    spans = merged.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_dup_spans"),
-        F.sum(F.col("e") - F.col("s")).cast("long").alias("n_removed_tokens"),
-        F.sort_array(F.collect_list(F.struct("s", "e"))).alias("spans"))
-    return (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        .join(spans, ["id"], "left")
-        .select(
-            "id",
-            F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-            F.coalesce(F.col("n_dup_spans"), F.lit(0)).alias("n_dup_spans"),
-            F.coalesce(F.col("n_removed_tokens"), F.lit(0)).alias("n_removed_tokens"),
-            F.when(F.col("spans").isNull(), F.col("text")).otherwise(F.expr(
-                "array_join(transform(filter(transform(split(text, ' '), "
-                "(x, i) -> named_struct('x', x, 'i', i)), "
-                "p -> NOT exists(spans, sp -> p.i >= sp.s AND p.i < sp.e)), "
-                "p -> p.x), ' ')")).alias("cleaned_text")))
+    return _wrap(df, _pl().Dedup.substringDedup(
+        df._jdf, id_col, text_col, int(k)))
 
 
 def pmi_pairs(df, id_col, text_col, min_support=5, k=20):
-    """Top co-occurring term pairs by rational PMI lift — Python mirror
-    of the Scala ``Dedup.pmiPairs``: for unordered pairs (a < b)
-    co-occurring in >= ``min_support`` documents,
-    ``lift = n_ab * N / (n_a * n_b)`` (no logarithm — the ranking is
-    identical and the scores stay bit-exact cross-engine). The df filter
-    runs before pairing and is lossless; the global top-k is sort+limit
+    """Top co-occurring term pairs by rational PMI lift: for unordered
+    pairs (a < b) co-occurring in >= ``min_support`` documents, ``lift =
+    n_ab * N / (n_a * n_b)`` (no logarithm — the ranking is identical and
+    the scores stay bit-exact cross-engine). The df filter runs before
+    pairing and is lossless; the global top-k is sort+limit
     (TakeOrderedAndProject), rank assigned over the k survivors only.
-    Returns ``(a, b, n_ab, n_a, n_b, lift, rank)``."""
+    Returns ``(a, b, n_ab, n_a, n_b, lift, rank)``. Scala
+    ``Dedup.pmiPairs``."""
     if min_support <= 0 or k <= 0:
         raise ValueError("min_support and k must be positive")
-    toks = (df.select(F.col(id_col).alias("id"),
-                      F.explode(F.split(F.col(text_col), " ")).alias("term"))
-            .distinct())
-    dfc = (toks.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-           .where(F.col("df") >= min_support))
-    kt = toks.join(dfc, "term")
-    l = kt.select("id", F.col("term").alias("a"), F.col("df").alias("n_a"))
-    r = kt.select("id", F.col("term").alias("b"), F.col("df").alias("n_b"))
-    pairs = (l.join(r, "id").where(F.col("a") < F.col("b"))
-             .groupBy("a", "b", "n_a", "n_b")
-             .agg(F.count(F.lit(1)).alias("n_ab"))
-             .where(F.col("n_ab") >= min_support))
-    n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (pairs.crossJoin(F.broadcast(n_docs))
-              .withColumn("lift", F.col("n_ab").cast("double") * F.col("n_docs")
-                          / (F.col("n_a") * F.col("n_b")))
-              .orderBy(F.col("lift").desc(), "a", "b").limit(k))
-    w = Window.orderBy(F.col("lift").desc(), "a", "b")
-    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .select("a", "b", "n_ab", "n_a", "n_b", "lift", "rank"))
+    return _wrap(df, _pl().Dedup.pmiPairs(
+        df._jdf, id_col, text_col, int(min_support), int(k)))
 
 
 def page_rank(edges, src_col, dst_col, iterations=3, damping_permille=850):
-    """Fixed-point PageRank — Python mirror of the Scala
-    ``Graph.pageRank``: damped power iteration as joins + aggregations,
-    ranks as integer MILLIONTHS (floating summation order would make
-    runs and engines disagree; long sums are associative, so the result
-    is bit-reproducible). Parallel edges dedupe; dangling nodes leak
-    mass (simple variant). Returns ``(node, rank)``."""
+    """Fixed-point PageRank: damped power iteration as joins +
+    aggregations, ranks as integer MILLIONTHS (floating summation order
+    would make runs and engines disagree; long sums are associative, so the
+    result is bit-reproducible). Parallel edges dedupe; dangling nodes leak
+    mass (simple variant). Returns ``(node, rank)``. Scala
+    ``Graph.pageRank``."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     if not 0 <= damping_permille <= 1000:
         raise ValueError(
             f"damping_permille must be in [0, 1000], got {damping_permille}")
-    e = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-         .distinct().localCheckpoint(True))
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint(True))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = (1000 - damping_permille) * 1000000
-    ranks = nodes.withColumn("rank", F.lit(1000000))
-    for _ in range(iterations):
-        contribs = (e.join(ranks.withColumnRenamed("node", "src"), "src")
-                    .join(outdeg, "src")
-                    .select(F.col("dst").alias("node"),
-                            F.expr("rank div outdeg").alias("contrib"))
-                    .groupBy("node").agg(F.sum("contrib").alias("in_mass")))
-        ranks = (nodes.join(contribs, ["node"], "left")
-                 .select("node",
-                         F.expr(f"({base}L + {damping_permille} * "
-                                "coalesce(in_mass, 0L)) div 1000").alias("rank"))
-                 .localCheckpoint(True))
-    return ranks
+    return _wrap(edges, _pl().Graph.pageRank(
+        edges._jdf, src_col, dst_col, int(iterations), int(damping_permille)))
 
 
 def hits(edges, src_col, dst_col, iterations=2):
-    """HITS hubs-and-authorities — Python mirror of the Scala
-    ``Graph.hits``: per iteration, authority = in-edge hub sum and hub =
-    out-edge authority sum, each max-normalized to integer millionths
-    (exact long arithmetic, bit-reproducible). Returns
-    ``(node, hub, auth)``."""
+    """HITS hubs-and-authorities: per iteration, authority = in-edge hub
+    sum and hub = out-edge authority sum, each max-normalized to integer
+    millionths (exact long arithmetic, bit-reproducible). Returns ``(node,
+    hub, auth)``. Scala ``Graph.hits``."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-         .distinct().localCheckpoint(True))
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionByName(e.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint(True))
-
-    def normalized(raw, c):
-        mx = raw.agg(F.max(F.col(c)).alias("__graft_mx"))
-        return (raw.crossJoin(F.broadcast(mx))
-                .select("node", F.expr(
-                    f"{c} * 1000000L div greatest(__graft_mx, 1L)").alias(c)))
-
-    scores = (nodes.withColumn("hub", F.lit(1000000))
-              .withColumn("auth", F.lit(1000000)))
-    for _ in range(iterations):
-        a_raw = (nodes.join(
-            e.join(scores.select(F.col("node").alias("src"), "hub"), "src")
-            .groupBy(F.col("dst").alias("node")).agg(F.sum("hub").alias("auth")),
-            ["node"], "left")
-            .select("node", F.coalesce("auth", F.lit(0)).alias("auth")))
-        auth = normalized(a_raw, "auth").localCheckpoint(True)
-        h_raw = (nodes.join(
-            e.join(auth.select(F.col("node").alias("dst"), "auth"), "dst")
-            .groupBy(F.col("src").alias("node")).agg(F.sum("auth").alias("hub")),
-            ["node"], "left")
-            .select("node", F.coalesce("hub", F.lit(0)).alias("hub")))
-        hub = normalized(h_raw, "hub").localCheckpoint(True)
-        scores = (hub.join(auth, ["node"]).select("node", "hub", "auth")
-                  .localCheckpoint(True))
-    return scores
+    return _wrap(edges, _pl().Graph.hits(
+        edges._jdf, src_col, dst_col, int(iterations)))
 
 
 def triangles(edges, src_col, dst_col):
-    """Triangle enumeration — Python mirror of the Scala
-    ``Graph.triangles``: degree-ordered orientation (each undirected edge
-    points from its (degree, id)-smaller endpoint), so wedge generation
-    is O(m^1.5) total regardless of hub skew and each triangle is found
-    once, at its unique minimal apex. Direction, parallel edges and
-    self-loops are ignored. Returns ``(a, b, c)`` with ``a < b < c``."""
-    e = (edges.select(F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-                      F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"))
-         .where(F.col("lo") != F.col("hi"))
-         .distinct().localCheckpoint(True))
-    deg = (e.select(F.col("lo").alias("node"))
-           .unionByName(e.select(F.col("hi").alias("node")))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
-    oriented = (
-        e.join(deg.select(F.col("node").alias("lo"), F.col("deg").alias("dlo")), "lo")
-        .join(deg.select(F.col("node").alias("hi"), F.col("deg").alias("dhi")), "hi")
-        .select(F.when(F.struct("dlo", "lo") < F.struct("dhi", "hi"),
-                       F.struct(F.col("lo").alias("u"), F.col("hi").alias("v"),
-                                F.col("dhi").alias("dv")))
-                .otherwise(F.struct(F.col("hi").alias("u"), F.col("lo").alias("v"),
-                                    F.col("dlo").alias("dv"))).alias("o"))
-        .select(F.col("o.u").alias("u"), F.col("o.v").alias("v"),
-                F.col("o.dv").alias("dv"))
-        .localCheckpoint(True))
-    w1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
-    w2 = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
-    wedges = (w1.join(w2, ["u"])
-              .where(F.struct("d1", "v1") < F.struct("d2", "v2"))
-              .select("u", "v1", "v2"))
-    closing = oriented.select(F.col("v").alias("v2"), F.col("u").alias("v1"))
-    return (wedges.join(closing, ["v1", "v2"])
-            .select(F.array_sort(F.array("u", "v1", "v2")).alias("t"))
-            .select(F.col("t")[0].alias("a"), F.col("t")[1].alias("b"),
-                    F.col("t")[2].alias("c")))
+    """Triangle enumeration: degree-ordered orientation (each undirected
+    edge points from its (degree, id)-smaller endpoint), so wedge
+    generation is O(m^1.5) total regardless of hub skew and each triangle
+    is found once, at its unique minimal apex. Direction, parallel edges
+    and self-loops are ignored. Returns ``(a, b, c)`` with ``a < b < c``.
+    Scala ``Graph.triangles``."""
+    return _wrap(edges, _pl().Graph.triangles(edges._jdf, src_col, dst_col))
 
 
 def snapshot_diff(old_df, new_df, id_col, text_col):
-    """Crawl-to-crawl snapshot diff — Python mirror of the Scala
-    ``Dedup.snapshotDiff``: classify every id as added / removed /
-    changed / unchanged by content fingerprint. One full-outer shuffle
-    join on the id; both sides reduce to (id, fingerprint) before the
-    exchange. Returns ``(id, status, old_fp, new_fp)``."""
-    import graft.functions as gf
-
-    o = old_df.select(F.col(id_col).alias("id"),
-                      gf.pl_fingerprint(F.col(text_col)).alias("old_fp"))
-    n = new_df.select(F.col(id_col).alias("id"),
-                      gf.pl_fingerprint(F.col(text_col)).alias("new_fp"))
-    return (o.join(n, ["id"], "full_outer")
-            .select("id",
-                    F.when(F.col("old_fp").isNull(), "added")
-                    .when(F.col("new_fp").isNull(), "removed")
-                    .when(F.col("old_fp") == F.col("new_fp"), "unchanged")
-                    .otherwise("changed").alias("status"),
-                    "old_fp", "new_fp"))
+    """Crawl-to-crawl snapshot diff: classify every id as added / removed /
+    changed / unchanged by content fingerprint. One full-outer shuffle join
+    on the id; both sides reduce to (id, fingerprint) before the exchange.
+    Returns ``(id, status, old_fp, new_fp)``. Scala ``Dedup.snapshotDiff``."""
+    return _wrap(old_df, _pl().Dedup.snapshotDiff(
+        old_df._jdf, new_df._jdf, id_col, text_col))
 
 
 def diversity_report(df, src_col, text_col):
-    """Per-source lexical-diversity report — Python mirror of the Scala
-    ``Dedup.diversityReport``: doc/token totals, distinct unigrams and
-    bigrams, type-token ratios. Integer counts + one exact double
-    division per ratio."""
-    import graft.functions as gf
-
-    toks = df.select(F.col(src_col).alias("source"),
-                     F.explode(F.split(F.col(text_col), " ")).alias("g"))
-    uni = toks.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.countDistinct("g").alias("distinct_tokens"))
-    bi = (df.select(F.col(src_col).alias("source"),
-                    F.explode(gf.pl_ngrams(F.split(F.col(text_col), " "), 2))
-                    .alias("g"))
-          .groupBy("source").agg(
-              F.count(F.lit(1)).alias("n_bigrams"),
-              F.countDistinct("g").alias("distinct_bigrams")))
-    docs = df.groupBy(F.col(src_col).alias("source")).agg(
-        F.count(F.lit(1)).alias("n_docs"))
-    return (docs.join(uni, "source").join(bi, "source")
-            .select("source", "n_docs", "n_tokens", "distinct_tokens",
-                    (F.col("distinct_tokens").cast("double")
-                     / F.col("n_tokens")).alias("ttr"),
-                    "n_bigrams", "distinct_bigrams",
-                    (F.col("distinct_bigrams").cast("double")
-                     / F.col("n_bigrams")).alias("bigram_ttr")))
+    """Per-source lexical-diversity report: doc/token totals, distinct
+    unigrams and bigrams, type-token ratios. Integer counts + one exact
+    double division per ratio. Scala ``Dedup.diversityReport``."""
+    return _wrap(df, _pl().Dedup.diversityReport(df._jdf, src_col, text_col))
 
 
 def salted_join(big, small, key, salts=8):
-    """Skew-salted inner equi-join — Python mirror of the Scala
-    ``Joins.saltedJoin``: row-identical to ``big.join(small, key)`` but a
-    hot key's rows spread over ``salts`` reducers. The big side gets a
-    deterministic row-hash salt; the small side replicates once per salt
-    through a generator (no broadcast requirement)."""
-    b = big.withColumn(
-        "__graft_salt",
-        F.pmod(F.xxhash64(F.struct(*[F.col(c) for c in big.columns])),
-               F.lit(salts)))
-    s = small.withColumn(
-        "__graft_salt", F.explode(F.sequence(F.lit(0).cast("long"),
-                                             F.lit(salts - 1).cast("long"))))
-    big_payload = [c for c in big.columns if c != key]
-    small_payload = [c for c in small.columns if c != key]
-    return (b.alias("b").join(
-                s.alias("s"),
-                (F.col(f"b.{key}") == F.col(f"s.{key}"))
-                & (F.col("b.__graft_salt") == F.col("s.__graft_salt")))
-            .select(F.col(f"b.{key}").alias(key),
-                    *[F.col(f"b.{c}").alias(c) for c in big_payload],
-                    *[F.col(f"s.{c}").alias(c) for c in small_payload]))
+    """Skew-salted inner equi-join: row-identical to ``big.join(small,
+    key)`` but a hot key's rows spread over ``salts`` reducers. The big
+    side gets a deterministic row-hash salt; the small side replicates once
+    per salt through a generator (no broadcast requirement). Scala
+    ``Joins.saltedJoin``."""
+    return _wrap(big, _pl().Joins.saltedJoin(
+        big._jdf, small._jdf, key, int(salts)))
 
 
 def compact_latest(df, keys, order_cols):
-    """CDC latest-wins changelog compaction — Python mirror of the Scala
-    ``Joins.compactLatest``: one row per ``keys``, the lexicographically
-    greatest ``order_cols`` tuple, via the map-side-combining ``max_by``
-    aggregate (no window sort). ``order_cols`` must be a total order
-    within each key (end with a unique id)."""
-    payload = [c for c in df.columns if c not in keys]
-    ord_s = F.struct(*[F.col(c) for c in order_cols])
-    return (df.groupBy(*[F.col(k) for k in keys])
-            .agg(F.max_by(F.struct(*[F.col(c) for c in payload]),
-                          ord_s).alias("__graft_last"))
-            .select(*[F.col(k) for k in keys],
-                    *[F.col(f"__graft_last.{c}").alias(c) for c in payload]))
+    """CDC latest-wins changelog compaction: one row per ``keys``, the
+    lexicographically greatest ``order_cols`` tuple, via the map-side-
+    combining ``max_by`` aggregate (no window sort). ``order_cols`` must be
+    a total order within each key (end with a unique id). Scala
+    ``Joins.compactLatest``."""
+    return _wrap(df, _pl().Joins.compactLatest(
+        df._jdf, _seq(keys), _seq(order_cols)))
 
 
 def overlap_join(left, right, key, left_start, left_end, right_start,
                  right_end, bucket_width):
-    """Interval-overlap equi-join — Python mirror of the Scala
-    ``Joins.overlapJoin``: pairs rows sharing ``key`` whose CLOSED
+    """Interval-overlap equi-join: pairs rows sharing ``key`` whose CLOSED
     ``[start, end]`` intervals overlap. Each interval explodes to the
-    ``bucket_width``-sized buckets it touches; the join runs on
-    ``(key, bucket)``, and keeping only ``greatest(starts)``'s bucket
-    makes each pair exactly-once with no dedup shuffle."""
+    ``bucket_width``-sized buckets it touches; the join runs on ``(key,
+    bucket)``, and keeping only ``greatest(starts)``'s bucket makes each
+    pair exactly-once with no dedup shuffle. Scala ``Joins.overlapJoin``."""
     if bucket_width <= 0:
         raise ValueError(f"bucket_width must be positive, got {bucket_width}")
-    collide = (set(left.columns) & set(right.columns)) - {key}
-    if collide:
-        raise ValueError(f"column names must not collide across sides: "
-                         f"{sorted(collide)}")
-    l = left.withColumn("__graft_bkt", F.explode(F.sequence(
-        F.expr(f"{left_start} div {bucket_width}L"),
-        F.expr(f"{left_end} div {bucket_width}L"))))
-    r = (right.withColumnRenamed(key, "__graft_rk")
-         .withColumn("__graft_bkt", F.explode(F.sequence(
-             F.expr(f"{right_start} div {bucket_width}L"),
-             F.expr(f"{right_end} div {bucket_width}L")))))
-    out_cols = ([F.col(c) for c in left.columns]
-                + [F.col(c) for c in right.columns if c != key])
-    return (l.join(r, (F.col(key) == F.col("__graft_rk"))
-                   & (l["__graft_bkt"] == r["__graft_bkt"]))
-            .where((F.col(left_start) <= F.col(right_end))
-                   & (F.col(right_start) <= F.col(left_end))
-                   & (l["__graft_bkt"] == F.expr(
-                       f"greatest({left_start}, {right_start})"
-                       f" div {bucket_width}L")))
-            .select(*out_cols))
+    _check_disjoint(left, right, key)
+    return _wrap(left, _pl().Joins.overlapJoin(
+        left._jdf, right._jdf, key, left_start, left_end, right_start,
+        right_end, int(bucket_width)))
 
 
 def segment_lm_filter(df, id_col, text_col, seg_tokens=8,
                       max_rare_permille=500, rare_max_cnt=1):
-    """CCNet-style segment LM gate — Python mirror of the Scala
-    ``SegmentLm.segmentLmFilter``: fixed token-window segments score
+    """CCNet-style segment LM gate: fixed token-window segments score
     against the corpus bigram table; segments whose bigrams are mostly
     corpus-unique drop, documents reassemble in order. Integer-permille
-    rarity keeps the gate exactly replayable."""
-    from graft import functions as gf
-    segs_arr = F.expr(
-        f"transform(sequence(0, CAST(ceil(size(__t) / {seg_tokens}.0) AS INT)"
-        f" - 1), i -> array_join(slice(__t, i * {seg_tokens} + 1,"
-        f" {seg_tokens}), ' '))")
-    tokenized = df.select(F.col(id_col).alias("id"),
-                          F.split(F.col(text_col), " ").alias("__t"))
-    segs = tokenized.select("id", F.posexplode(segs_arr).alias("pos", "seg"))
-    model = (df.select(F.explode(gf.pl_ngrams(F.split(F.col(text_col), " "), 2))
-                       .alias("gram"))
-             .groupBy("gram").agg(F.count(F.lit(1)).alias("cnt")))
-    sgrams = segs.select("id", "pos",
-                         F.explode(gf.pl_ngrams(F.split(F.col("seg"), " "), 2))
-                         .alias("gram"))
-    rarity = (sgrams.join(model, ["gram"])
-              .groupBy("id", "pos")
-              .agg(F.count(F.lit(1)).alias("__n"),
-                   F.sum(F.when(F.col("cnt") <= rare_max_cnt, 1)
-                         .otherwise(0)).alias("__r")))
-    kept = (segs.join(rarity, ["id", "pos"], "left")
-            .where(F.coalesce(F.expr("__r * 1000 div __n"), F.lit(0))
-                   <= max_rare_permille)
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_kept"),
-                 F.array_join(F.expr(
-                     "transform(sort_array(collect_list(struct(pos, seg))),"
-                     " s -> s.seg)"), " ").alias("clean_text")))
-    return (tokenized.select("id", F.size(segs_arr).alias("n_segments"))
-            .join(kept, ["id"], "left")
-            .select("id",
-                    F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-                    "n_segments",
-                    (F.col("n_segments") - F.coalesce("n_kept", F.lit(0)))
-                    .cast("int").alias("n_dropped")))
+    rarity keeps the gate exactly replayable. Scala
+    ``SegmentLm.segmentLmFilter``."""
+    return _wrap(df, _pl().SegmentLm.segmentLmFilter(
+        df._jdf, id_col, text_col, int(seg_tokens), int(max_rare_permille),
+        int(rare_max_cnt)))
 
 
 def priority_sample(df, id_col, weight_col, k):
-    """Weighted priority sampling (Duffield-Lund-Thorup, integer form) —
-    Python mirror of the Scala ``Splits.prioritySample``:
+    """Weighted priority sampling (Duffield-Lund-Thorup, integer form):
     ``priority = (pl_mix64(id) & Long.Max) div max(weight, 1)``, the k
     smallest priorities win. Deterministic, seedless, exact integer
-    comparisons; the plan is a scalar projection + bounded global
-    top-k."""
+    comparisons; the plan is a scalar projection + bounded global top-k.
+    Scala ``Splits.prioritySample``."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    from graft import functions as gf
-    return (df.withColumn("__graft_u",
-                          gf.pl_mix64(F.col(id_col))
-                          .bitwiseAND(F.lit(9223372036854775807)))
-            .withColumn("priority",
-                        F.expr(f"__graft_u div greatest({weight_col}, 1L)"))
-            .orderBy("priority", id_col).limit(k)
-            .drop("__graft_u"))
+    return _wrap(df, _pl().Splits.prioritySample(
+        df._jdf, id_col, weight_col, int(k)))
 
 
 def priority_sample_per_key(df, keys, id_col, k):
-    """Per-key deterministic k-sample -- Python mirror of the Scala
-    ``Splits.prioritySamplePerKey`` and batch face of the streaming
-    reservoir: seedless mix64 priorities, k smallest per key via one
-    key-partitioned row_number window."""
+    """Per-key deterministic k-sample and batch face of the streaming
+    reservoir: seedless mix64 priorities, k smallest per key via one key-
+    partitioned row_number window. Scala ``Splits.prioritySamplePerKey``."""
     if k <= 0:
         raise ValueError("k must be positive, got %d" % k)
-    from graft import functions as gf
-    w = (Window.partitionBy(*[F.col(c) for c in keys])
-         .orderBy(F.col("priority"), F.col(id_col)))
-    return (df.withColumn("priority",
-                          gf.pl_mix64(F.col(id_col))
-                          .bitwiseAND(F.lit(9223372036854775807)))
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k).drop("__rn"))
+    return _wrap(df, _pl().Splits.prioritySamplePerKey(
+        df._jdf, _seq(keys), id_col, int(k)))
 
 
 def band_join(left, right, key, left_val, right_val, eps):
-    """Scalar band join — Python mirror of the Scala ``Joins.bandJoin``:
-    pairs rows sharing ``key`` whose integral values differ by at most
-    ``eps``. The left side replicates to its home bucket and both
-    neighbors (width = eps), the right keeps its single home bucket, so
-    each matching pair meets exactly once in an equi-join."""
+    """Scalar band join: pairs rows sharing ``key`` whose integral values
+    differ by at most ``eps``. The left side replicates to its home bucket
+    and both neighbors (width = eps), the right keeps its single home
+    bucket, so each matching pair meets exactly once in an equi-join. Scala
+    ``Joins.bandJoin``."""
     if eps <= 0:
         raise ValueError(f"eps must be positive, got {eps}")
-    collide = (set(left.columns) & set(right.columns)) - {key}
-    if collide:
-        raise ValueError(f"column names must not collide across sides: "
-                         f"{sorted(collide)}")
-    l = left.withColumn("__graft_bkt", F.explode(F.array(
-        F.expr(f"{left_val} div {eps}L - 1"),
-        F.expr(f"{left_val} div {eps}L"),
-        F.expr(f"{left_val} div {eps}L + 1"))))
-    r = (right.withColumnRenamed(key, "__graft_rk")
-         .withColumn("__graft_bkt", F.expr(f"{right_val} div {eps}L")))
-    out_cols = ([F.col(c) for c in left.columns]
-                + [F.col(c) for c in right.columns if c != key])
-    return (l.join(r, (F.col(key) == F.col("__graft_rk"))
-                   & (l["__graft_bkt"] == r["__graft_bkt"]))
-            .where(F.abs(F.col(left_val) - F.col(right_val)) <= eps)
-            .select(*out_cols))
+    _check_disjoint(left, right, key)
+    return _wrap(left, _pl().Joins.bandJoin(
+        left._jdf, right._jdf, key, left_val, right_val, int(eps)))
 
 
 def apply_changelog(snapshot, changes, keys, order_cols, op_col):
-    """CDC MERGE — Python mirror of the Scala ``Joins.applyChangelog``:
-    apply a changelog (upserts AND ``op == 'D'`` tombstones) to a
-    snapshot. The changelog compacts map-side to one head per touched
+    """CDC MERGE: apply a changelog (upserts AND ``op == 'D'`` tombstones)
+    to a snapshot. The changelog compacts map-side to one head per touched
     key (``compact_latest``), then ONE full-outer equi-join upserts /
-    deletes; untouched keys pass through."""
-    payload = [c for c in snapshot.columns if c not in keys]
-    missing = [c for c in payload + [op_col] if c not in changes.columns]
-    if missing:
-        raise ValueError(f"changes is missing columns: {missing}")
-    sel = list(dict.fromkeys(list(keys) + payload + [op_col] + list(order_cols)))
-    latest = compact_latest(changes.select(*sel), keys, order_cols)
-    cond = None
-    for k in keys:
-        c = F.col(f"s.{k}") == F.col(f"c.{k}")
-        cond = c if cond is None else (cond & c)
-    return (snapshot.alias("s").join(latest.alias("c"), cond, "full_outer")
-            .where(F.col(f"c.{op_col}").isNull()
-                   | (F.col(f"c.{op_col}") != "D"))
-            .select(*[F.coalesce(F.col(f"c.{k}"), F.col(f"s.{k}")).alias(k)
-                      for k in keys],
-                    *[F.when(F.col(f"c.{op_col}").isNotNull(),
-                             F.col(f"c.{p}")).otherwise(F.col(f"s.{p}")).alias(p)
-                      for p in payload]))
+    deletes; untouched keys pass through. Scala ``Joins.applyChangelog``."""
+    return _wrap(snapshot, _pl().Joins.applyChangelog(
+        snapshot._jdf, changes._jdf, _seq(keys), _seq(order_cols), op_col))
 
 
 def fuzzy_join(left, right, left_col, right_col):
-    """Edit-distance-≤1 string join — Python mirror of the Scala
-    ``Joins.fuzzyJoin``: FastSS deletion-variant blocking
-    (``pl_deletion_variants``) turns Levenshtein matching into an
-    equi-join on variants; only candidates pay the exact refine. Column
-    names must not collide across sides; inputs should be deduplicated
-    relations."""
-    import graft.functions as gf
-
-    lv = left.withColumn("__graft_var",
-                         F.explode(gf.pl_deletion_variants(F.col(left_col))))
-    rv = right.withColumn("__graft_var",
-                          F.explode(gf.pl_deletion_variants(F.col(right_col))))
-    return (lv.alias("l").join(
-                rv.alias("r"), F.col("l.__graft_var") == F.col("r.__graft_var"))
-            .select(*[F.col(f"l.{c}").alias(c) for c in left.columns],
-                    *[F.col(f"r.{c}").alias(c) for c in right.columns])
-            .where(F.levenshtein(F.col(left_col), F.col(right_col)) <= 1)
-            .distinct())
+    """Edit-distance-≤1 string join: FastSS deletion-variant blocking
+    (``pl_deletion_variants``) turns Levenshtein matching into an equi-join
+    on variants; only candidates pay the exact refine. Column names must
+    not collide across sides; inputs should be deduplicated relations.
+    Scala ``Joins.fuzzyJoin``."""
+    return _wrap(left, _pl().Joins.fuzzyJoin(
+        left._jdf, right._jdf, left_col, right_col))
 
 
 def anomaly_flags(df, keys, value_col, k_num=2, k_den=1):
-    """Division-free per-group z-score gate — Python mirror of the Scala
-    ``Stats.anomalyFlags``: appends ``grp_n``, ``dev2 = (n·v − s)²``,
-    ``var_n2 = n·ssq − s²`` and ``is_anomaly = kDen²·dev2 > kNum²·var_n2``
-    in exact integer math (pre-scale float metrics to longs first)."""
-    v = F.col(value_col).cast("long")
-    moments = df.groupBy(*[F.col(c) for c in keys]).agg(
-        F.count(F.lit(1)).alias("grp_n"),
-        F.sum(v).alias("__graft_s"),
-        F.sum(v * v).alias("__graft_ssq"))
-    d = F.col("grp_n") * v - F.col("__graft_s")
-    return (df.join(moments, list(keys))
-            .withColumn("dev2", d * d)
-            .withColumn("var_n2",
-                        F.col("grp_n") * F.col("__graft_ssq")
-                        - F.col("__graft_s") * F.col("__graft_s"))
-            .withColumn("is_anomaly",
-                        F.lit(k_den * k_den) * F.col("dev2")
-                        > F.lit(k_num * k_num) * F.col("var_n2"))
-            .drop("__graft_s", "__graft_ssq"))
+    """Division-free per-group z-score gate: appends ``grp_n``, ``dev2 =
+    (n·v − s)²``, ``var_n2 = n·ssq − s²`` and ``is_anomaly = kDen²·dev2 >
+    kNum²·var_n2`` in exact integer math (pre-scale float metrics to longs
+    first). Scala ``Stats.anomalyFlags``."""
+    return _wrap(df, _pl().Stats.anomalyFlags(
+        df._jdf, _seq(keys), value_col, int(k_num), int(k_den)))
 
 
 def profile(df, cols):
-    """Deequ-style column profile — Python mirror of the Scala
-    ``Profile.profile``: one row per column with row/null/distinct counts
-    and string-cast min/max, as per-column two-phase ``groupBy(value)``
-    branches (map-side combine, column-pruned scans — no multi-distinct
-    Expand). Keep float columns out when cross-engine string parity
-    matters; cache computed inputs first (branches re-evaluate)."""
-    from functools import reduce
-
-    def branch(c):
-        return (df.groupBy(F.col(c).alias("__graft_v"))
-                .agg(F.count(F.lit(1)).alias("__graft_cnt"))
-                .agg(F.coalesce(F.sum("__graft_cnt"), F.lit(0).cast("long"))
-                     .alias("n_rows"),
-                     F.coalesce(F.sum(F.when(F.col("__graft_v").isNotNull(),
-                                             F.col("__graft_cnt"))),
-                                F.lit(0).cast("long")).alias("n_non_null"),
-                     F.count("__graft_v").alias("n_distinct"),
-                     F.min("__graft_v").cast("string").alias("min_value"),
-                     F.max("__graft_v").cast("string").alias("max_value"))
-                .select(F.lit(c).alias("column"), "n_rows", "n_non_null",
-                        "n_distinct", "min_value", "max_value"))
-
-    return reduce(lambda a, b: a.unionAll(b), [branch(c) for c in cols])
+    """Deequ-style column profile: one row per column with
+    row/null/distinct counts and string-cast min/max, as per-column two-
+    phase ``groupBy(value)`` branches (map-side combine, column-pruned
+    scans — no multi-distinct Expand). Keep float columns out when cross-
+    engine string parity matters; cache computed inputs first (branches re-
+    evaluate). Scala ``Profile.profile``."""
+    return _wrap(df, _pl().Profile.profile(df._jdf, _seq(cols)))
 
 
 def bloom_join(big, small, key, num_bits=1 << 20, k=5):
-    """Bloom-prefiltered inner equi-join — Python mirror of the Scala
-    ``Joins.bloomJoin``: row-identical to ``big.join(small, key)``, but
-    the big side is cut at the scan by a membership probe against a
-    Bloom bitset of the small side's keys (built by a one-row aggregate,
-    ``num_bits/8`` bytes collected driver-side). False positives die in
-    the exact join; false negatives are impossible."""
-    import graft.functions as gf
-
-    bits = (small.select(gf.pl_bloom_agg(F.xxhash64(F.col(key)),
-                                         num_bits, k).alias("bits"))
-            .head()[0])
-    return (big.where(gf.pl_bloom_contains(F.lit(bits),
-                                           F.xxhash64(F.col(key)), k))
-            .join(small, key))
+    """Bloom-prefiltered inner equi-join: row-identical to
+    ``big.join(small, key)``, but the big side is cut at the scan by a
+    membership probe against a Bloom bitset of the small side's keys (built
+    by a one-row aggregate, ``num_bits/8`` bytes collected driver-side).
+    False positives die in the exact join; false negatives are impossible.
+    Scala ``Joins.bloomJoin``."""
+    return _wrap(big, _pl().Joins.bloomJoin(
+        big._jdf, small._jdf, key, int(num_bits), int(k)))
 
 
 def edit_distance_pairs(docs, id_col, text_col, prefix_len=16,
                         max_dist=10, hot_cap=64):
-    """Blocked exact edit-distance near-dup pairs — Python mirror of the
-    Scala ``Joins.editDistancePairs``: prefix-block equi-self-join +
-    thresholded banded ``levenshtein`` refine; blocks larger than
-    ``hot_cap`` are excluded by a broadcast anti-join."""
-    d = docs.select(F.col(id_col).alias("__graft_id"),
-                    F.col(text_col).alias("__graft_txt"),
-                    F.substring(F.col(text_col), 1, prefix_len)
-                    .alias("__graft_blk"))
-    hot = (d.groupBy("__graft_blk").agg(F.count(F.lit(1)).alias("__graft_n"))
-           .where(F.col("__graft_n") > hot_cap).select("__graft_blk"))
-    cool = d.join(F.broadcast(hot), ["__graft_blk"], "left_anti")
-    a = cool.select("__graft_blk", F.col("__graft_id").alias("id_a"),
-                    F.col("__graft_txt").alias("__graft_ta"))
-    b = cool.select("__graft_blk", F.col("__graft_id").alias("id_b"),
-                    F.col("__graft_txt").alias("__graft_tb"))
-    return (a.join(b, ["__graft_blk"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b",
-                    F.levenshtein(F.col("__graft_ta"), F.col("__graft_tb"),
-                                  max_dist).cast("int").alias("dist"))
-            .where(F.col("dist") >= 0))
+    """Blocked exact edit-distance near-dup pairs: prefix-block equi-self-
+    join + thresholded banded ``levenshtein`` refine; blocks larger than
+    ``hot_cap`` are excluded by a broadcast anti-join. Scala
+    ``Joins.editDistancePairs``."""
+    return _wrap(docs, _pl().Joins.editDistancePairs(
+        docs._jdf, id_col, text_col, int(prefix_len), int(max_dist),
+        int(hot_cap)))
 
 
 def z_index(a, b):
-    """Morton/Z2 interleave of two non-negative integer key columns
-    (16 bits each) — Python mirror of the Scala ``Layout.zIndex``."""
-    def spread16(x):
-        v = x.bitwiseAND(F.lit(0xFFFF))
-        v = v.bitwiseOR(F.shiftleft(v, 8)).bitwiseAND(F.lit(0x00FF00FF))
-        v = v.bitwiseOR(F.shiftleft(v, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
-        v = v.bitwiseOR(F.shiftleft(v, 2)).bitwiseAND(F.lit(0x33333333))
-        return v.bitwiseOR(F.shiftleft(v, 1)).bitwiseAND(F.lit(0x55555555))
-
-    return spread16(a.cast("long")).bitwiseOR(
-        F.shiftleft(spread16(b.cast("long")), 1))
+    """Morton/Z2 interleave of two non-negative integer key columns (16
+    bits each). Scala ``Layout.zIndex``."""
+    return Column(_pl().Layout.zIndex(_jc(a), _jc(b)))
 
 
 def zorder_write(df, key_a, key_b, path, files=16):
-    """Write ``df`` as ``files`` Parquet files z-ordered on
-    ``(key_a, key_b)`` — Python mirror of the Scala
-    ``Layout.zorderWrite``: range-partitioned by the Morton index so
-    per-file min-max stats prune conjunctive range predicates on BOTH
-    keys."""
-    (df.withColumn("__graft_z", z_index(F.col(key_a), F.col(key_b)))
-     .repartitionByRange(files, F.col("__graft_z"))
-     .sortWithinPartitions("__graft_z")
-     .drop("__graft_z")
-     .write.mode("overwrite").parquet(path))
+    """Write ``df`` as ``files`` Parquet files z-ordered on ``(key_a,
+    key_b)``: range-partitioned by the Morton index so per-file min-max
+    stats prune conjunctive range predicates on BOTH keys. Scala
+    ``Layout.zorderWrite``."""
+    _pl().Layout.zorderWrite(df._jdf, key_a, key_b, path, int(files))
 
 
 def dsir_top_k(df, id_col, text_col, is_target, buckets=512, k=100):
-    """DSIR importance resampling (Xie et al. 2023, arXiv:2302.03169) —
-    Python mirror of the Scala ``Dsir.topK``. Hashed lowercase-alnum
-    unigram features (``pl_fingerprint`` rolling hash, power-of-two
-    bucket mask), add-one-smoothed log-likelihood-ratio weights in
-    integer micro-nats, per-doc score = Σ λ[bucket(tok)], top-``k`` by
-    (score desc, id). Returns ``(doc_id, score_unats, rank)``.
-
-    Scale shape: the token stream reduces to a ``buckets``-row count
-    table; the λ table is broadcast back for scoring (the Scala side
-    goes one step further and ships λ inside a Catalyst expression so
-    scoring needs no join at all).
-    """
+    """DSIR importance resampling (Xie et al. 2023, arXiv:2302.03169).
+    Hashed lowercase-alnum unigram features (``pl_fingerprint`` rolling
+    hash, power-of-two bucket mask), add-one-smoothed log-likelihood-ratio
+    weights in integer micro-nats, per-doc score = Σ λ[bucket(tok)],
+    top-``k`` by (score desc, id). Returns ``(doc_id, score_unats, rank)``.
+    Scala ``Dsir.topK``."""
     if buckets & (buckets - 1) != 0:
         raise ValueError("buckets must be a power of two")
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), is_target.cast("boolean").alias("tgt"),
-        F.explode(F.expr(
-            f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")).alias("tok"))
-    th = toks.select("doc_id", "tgt",
-                     F.pmod(F.expr("pl_fingerprint(tok)"), F.lit(buckets)).alias("b"))
-    bc = th.groupBy("b").agg(
-        F.count(F.lit(1)).alias("r"),
-        F.sum(F.when(F.col("tgt"), F.lit(1)).otherwise(F.lit(0))).alias("t"))
-    tot = bc.agg(F.sum("r").alias("rr"), F.sum("t").alias("tt"))
-    lam = bc.crossJoin(F.broadcast(tot)).select(
-        "b",
-        F.round(F.lit(1e6) * (
-            F.log((F.col("t") + F.lit(1.0)) / (F.col("tt") + F.lit(float(buckets))))
-            - F.log((F.col("r") + F.lit(1.0)) / (F.col("rr") + F.lit(float(buckets))))
-        )).cast("long").alias("lam"))
-    scored = (th.join(F.broadcast(lam), "b")
-              .groupBy("doc_id").agg(F.sum("lam").alias("score_unats")))
-    # docs with zero tokens score exactly 0, like the Scala expression
-    base = df.select(F.col(id_col).alias("doc_id"))
-    full = (base.join(scored, "doc_id", "left")
-            .na.fill({"score_unats": 0}))
-    top = full.orderBy(F.col("score_unats").desc(), F.col("doc_id")).limit(k)
-    return top.withColumn(
-        "rank", F.row_number().over(
-            Window.orderBy(F.col("score_unats").desc(), F.col("doc_id"))).cast("int"))
+    return _wrap(df, _pl().Dsir.topK(
+        df._jdf, id_col, text_col, _jc(is_target), int(buckets), int(k)))
 
 
 def longest_prefix_join(left, ip_col, id_col, rules, len_col, prefix_col):
-    """Longest-prefix-match (CIDR) join — Python mirror of the Scala
-    ``Joins.longestPrefixJoin``: bounded candidate expansion (one per
-    distinct prefix length, ≤ 33), equi-join on ``(len, prefix)``,
-    longest match wins per row via a lexicographic struct max. Left
-    outer: unmatched rows keep null ``matched_len`` + payload.
-    """
-    lengths = sorted(r[0] for r in
-                     rules.select(F.col(len_col).cast("int")).distinct().collect())
-    if not lengths or any(l < 1 or l > 32 for l in lengths):
-        raise ValueError(f"prefix lengths must be in [1,32], got {lengths}")
-    payload = [c for c in rules.columns if c not in (len_col, prefix_col)]
-    r = rules.select(F.col(len_col).cast("int").alias("__graft_len"),
-                     F.col(prefix_col).cast("long").alias("__graft_p"),
-                     *[F.col(p) for p in payload])
-    cand = (left
-            .withColumn("__graft_len",
-                        F.explode(F.array(*[F.lit(l) for l in lengths])))
-            .withColumn("__graft_p",
-                        F.expr(f"shiftright({ip_col}, 32 - __graft_len)"))
-            .join(r, ["__graft_len", "__graft_p"]))
-    winner = (cand.groupBy(F.col(id_col))
-              .agg(F.max(F.struct(F.col("__graft_len").alias("len"),
-                                  *[F.col(p) for p in payload])).alias("__graft_w"))
-              .select(F.col(id_col).alias("__graft_id"), "__graft_w"))
-    return (left.join(winner, F.col(id_col) == F.col("__graft_id"), "left")
-            .select(*[F.col(c) for c in left.columns],
-                    F.col("__graft_w.len").alias("matched_len"),
-                    *[F.col(f"__graft_w.{p}").alias(p) for p in payload]))
+    """Longest-prefix-match (CIDR) join: bounded candidate expansion (one
+    per distinct prefix length, ≤ 33), equi-join on ``(len, prefix)``,
+    longest match wins per row via a lexicographic struct max. Left outer:
+    unmatched rows keep null ``matched_len`` + payload. Scala
+    ``Joins.longestPrefixJoin``."""
+    return _wrap(left, _pl().Joins.longestPrefixJoin(
+        left._jdf, ip_col, id_col, rules._jdf, len_col, prefix_col))
 
 
 def wordpiece_stats(df, id_col, text_col, vocab_size=200):
-    """Greedy longest-match subword stats — Python mirror of the Scala
-    ``Wordpiece.pieceStats``: vocab = top-``vocab_size`` corpus words
-    by (count desc, word) plus single ASCII-alnum chars; per doc,
-    greedy longest-prefix tokenization yields (n_words, n_pieces,
-    n_unk). The Scala side evaluates in the scan via a shipped-vocab
-    expression; the mirror walks words with an offset join against a
-    precomputed longest-match table (same result, pure DataFrame ops).
-    """
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.expr(
-            f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")).alias("tok"))
-    top = [r[0] for r in
-           toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-               .orderBy(F.col("c").desc(), F.col("tok"))
-               .limit(vocab_size).collect()]
-    chars = [chr(c) for c in range(ord("a"), ord("z") + 1)] + \
-            [chr(c) for c in range(ord("0"), ord("9") + 1)]
-    vocab = set(top) | set(chars)
-    max_len = max(len(p) for p in vocab)
-
-    def walk(word):
-        np_, nu = 0, 0
-        i = 0
-        while i < len(word):
-            hit = 0
-            for l in range(min(max_len, len(word) - i), 0, -1):
-                if word[i:i + l] in vocab:
-                    hit = l
-                    break
-            if hit:
-                np_, i = np_ + 1, i + hit
-            else:
-                np_, nu, i = np_ + 1, nu + 1, i + 1
-        return np_, nu
-
-    # distinct words are bounded by the corpus vocabulary — walk them
-    # driver-side (the Scala expression does the same work in the scan)
-    dwords = [r[0] for r in toks.select("tok").distinct().collect()]
-    spark = df.sparkSession
-    wstats = F.broadcast(spark.createDataFrame(
-        [(w, *walk(w)) for w in dwords], "tok string, np int, nu int"))
-    g = (toks.join(wstats, "tok")
-         .groupBy("doc_id")
-         .agg(F.count(F.lit(1)).cast("int").alias("n_words"),
-              F.sum("np").cast("int").alias("n_pieces"),
-              F.sum("nu").cast("int").alias("n_unk")))
-    return (df.select(F.col(id_col).alias("id"))
-            .join(g, F.col("id") == g["doc_id"], "left").drop("doc_id")
-            .na.fill({"n_words": 0, "n_pieces": 0, "n_unk": 0}))
+    """Greedy longest-match subword stats: vocab = top-``vocab_size``
+    corpus words by (count desc, word) plus single ASCII-alnum chars; per
+    doc, greedy longest-prefix tokenization yields (n_words, n_pieces,
+    n_unk), evaluated in the scan by a shipped-vocab expression. Scala
+    ``Wordpiece.pieceStats``."""
+    return _wrap(df, _pl().Wordpiece.pieceStats(
+        df._jdf, id_col, text_col, int(vocab_size)))
 
 
 def cusum(df, keys, order_col, value_col, ref, slack, threshold):
-    """Two-sided CUSUM change-point detection — Python mirror of the
-    Scala ``Stats.cusum``. The ``max(0, .)`` recurrence in closed form:
-    ``S_t = P_t - min(0, min_{j<=t} P_j)`` with ``P`` the prefix sum of
-    drift-adjusted deltas — two window passes over one shuffle by
-    ``keys``, all integer math.
-    """
+    """Two-sided CUSUM change-point detection. The ``max(0, .)`` recurrence
+    in closed form: ``S_t = P_t - min(0, min_{j<=t} P_j)`` with ``P`` the
+    prefix sum of drift-adjusted deltas — two window passes over one
+    shuffle by ``keys``, all integer math. Scala ``Stats.cusum``."""
     if slack < 0 or threshold <= 0:
         raise ValueError("slack >= 0 and threshold > 0 required")
-    w = (Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col))
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    v = F.col(value_col).cast("long")
-    with_p = (df
-              .withColumn("__graft_ph", F.sum(v - F.lit(ref) - F.lit(slack)).over(w))
-              .withColumn("__graft_pl", F.sum(F.lit(ref) - v - F.lit(slack)).over(w)))
-    return (with_p
-            .withColumn("cusum_hi",
-                        F.col("__graft_ph") - F.least(F.lit(0), F.min("__graft_ph").over(w)))
-            .withColumn("cusum_lo",
-                        F.col("__graft_pl") - F.least(F.lit(0), F.min("__graft_pl").over(w)))
-            .withColumn("is_change",
-                        (F.col("cusum_hi") > threshold) | (F.col("cusum_lo") > threshold))
-            .drop("__graft_ph", "__graft_pl"))
+    return _wrap(df, _pl().Stats.cusum(
+        df._jdf, _seq(keys), order_col, value_col, int(ref), int(slack),
+        int(threshold)))
 
 
 def quantize_step(df, value_col, max_bins=4096):
-    """Scale-aware quantization step — Python mirror of the Scala
-    ``Stats.quantizeStep``: the smallest power-of-10 step ``s`` such
-    that ``count(distinct v div s) <= max_bins``. Exact, deterministic
-    and engine-replayable (a distinct-count lattice over the distinct
-    value table, no HLL). Use the result as ``expr(f"v div {s}")``
-    before feeding any quantize-first operator (psi/ks/dist-shift/
-    kendall/drift_stream) — a hand-picked width safe at one scale
-    detonates those operators' fail-loud bin guards at 10x."""
+    """Scale-aware quantization step: the smallest power-of-10 step ``s``
+    such that ``count(distinct v div s) <= max_bins``. Exact, deterministic
+    and engine-replayable (a distinct-count lattice over the distinct value
+    table, no HLL). Use the result as ``expr(f"v div {s}")`` before feeding
+    any quantize-first operator (psi/ks/dist-shift/ kendall/drift_stream) —
+    a hand-picked width safe at one scale detonates those operators' fail-
+    loud bin guards at 10x. Scala ``Stats.quantizeStep``."""
     if max_bins < 32:
         raise ValueError("max_bins must be >= 32, got %d" % max_bins)
-    steps = [10 ** e for e in range(19)]
-    dv = (df.where(F.col(value_col).isNotNull())
-          .select(F.col(value_col).cast("long").alias("__v")).distinct())
-    row = dv.agg(*[F.countDistinct(F.expr("__v div %dL" % s))
-                   .alias("c%d" % s) for s in steps]).head()
-    for i, s in enumerate(steps):
-        if row[i] <= max_bins:
-            return s
-    return steps[-1]
+    return _pl().Stats.quantizeStep(df._jdf, value_col, int(max_bins))
 
 
 def psi_report(ref, cur, value_col, buckets=10):
-    """Population stability index drift report — Python mirror of the
-    Scala ``Stats.psiReport``: reference-decile boundaries from the
-    integer-exact histogram quantile, per-bucket contribution in
-    integer micro-nats with add-one smoothing. Total PSI = the column
-    sum (warn > 100000 µnats ≙ 0.1, act > 250000 ≙ 0.25).
-    """
+    """Population stability index drift report: reference-decile boundaries
+    from the integer-exact histogram quantile, per-bucket contribution in
+    integer micro-nats with add-one smoothing. Total PSI = the column sum
+    (warn > 100000 µnats ≙ 0.1, act > 250000 ≙ 0.25). Scala
+    ``Stats.psiReport``."""
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
-    s = ref.select(F.col(value_col).cast("long").alias("__s"))
-    hist = s.groupBy("__s").agg(F.count(F.lit(1)).alias("__c"))
-    cum = hist.withColumn("__cume", F.sum("__c").over(
-        Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, 0)))
-    n = s.count()
-    cume_rows = sorted((r["__s"], r["__cume"]) for r in cum.collect())
-    bounds = []
-    for i in range(1, buckets):
-        p = i * 1000 // buckets
-        need = (n * p + 999) // 1000
-        bounds.append(next(v for v, c in cume_rows if c >= need))
-    bounds.sort()
-
-    def bucket_of(v):
-        b = F.lit(0)
-        for x in bounds:
-            b = b + F.when(v >= F.lit(x), 1).otherwise(0)
-        return b
-
-    def side(df, name):
-        return (df.select(bucket_of(F.col(value_col).cast("long")).alias("bucket"))
-                .groupBy("bucket").agg(F.count(F.lit(1)).alias(name)))
-
-    j = (side(ref, "ref_n").join(side(cur, "cur_n"), ["bucket"], "full")
-         .na.fill({"ref_n": 0, "cur_n": 0}))
-    totals = j.agg(F.sum("ref_n").alias("__r"), F.sum("cur_n").alias("__c2"))
-    return (j.crossJoin(F.broadcast(totals))
-            .select("bucket", "ref_n", "cur_n",
-                    F.round(F.lit(1e6) *
-                            ((F.col("ref_n") + F.lit(1.0)) / (F.col("__r") + F.lit(float(buckets)))
-                             - (F.col("cur_n") + F.lit(1.0)) / (F.col("__c2") + F.lit(float(buckets)))) *
-                            (F.log((F.col("ref_n") + F.lit(1.0)) / (F.col("__r") + F.lit(float(buckets))))
-                             - F.log((F.col("cur_n") + F.lit(1.0)) / (F.col("__c2") + F.lit(float(buckets))))))
-                    .cast("long").alias("psi_unats")))
+    return _wrap(ref, _pl().Stats.psiReport(
+        ref._jdf, cur._jdf, value_col, int(buckets)))
 
 
 def rrf_fuse(lists, k, rrf_k=60):
-    """Reciprocal-rank fusion (Cormack et al. 2009) — Python mirror of
-    the Scala ``Similarity.rrfFuse``: integer-micro scores
+    """Reciprocal-rank fusion (Cormack et al. 2009): integer-micro scores
     ``1e6 div (rrf_k + rank)`` summed per (query, neighbor), per-query
-    top-``k`` with ties to the lower neighbor id.
-    """
+    top-``k`` with ties to the lower neighbor id. Scala
+    ``Similarity.rrfFuse``."""
     if not lists:
         raise ValueError("at least one ranked list required")
-    u = None
-    for df in lists:
-        part = df.select("query_id", "neighbor_id",
-                         F.expr(f"1000000L div ({rrf_k}L + rank)").alias("__c"))
-        u = part if u is None else u.unionByName(part)
-    sc = u.groupBy("query_id", "neighbor_id").agg(F.sum("__c").alias("rrf_unats"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_unats").desc(), F.col("neighbor_id"))
-    return (sc.withColumn("rank", F.row_number().over(w).cast("int"))
-            .where(F.col("rank") <= k))
+    return _wrap(lists[0], _pl().Similarity.rrfFuse(
+        _seq([d._jdf for d in lists]), int(k), int(rrf_k)))
 
 
 def frequent_pairs(df, basket_col, item_col, min_support=2):
-    """Market-basket frequent item pairs — Python mirror of the Scala
-    ``Baskets.frequentPairs``: ordered self-equi-join on the basket id,
-    support / integer-permille confidence and lift.
-    """
+    """Market-basket frequent item pairs: ordered self-equi-join on the
+    basket id, support / integer-permille confidence and lift. Scala
+    ``Baskets.frequentPairs``."""
     if min_support < 1:
         raise ValueError("min_support must be >= 1")
-    items = df.select(F.col(basket_col).alias("__b"),
-                      F.col(item_col).alias("__i")).distinct()
-    n = items.select("__b").distinct().agg(F.count(F.lit(1)).alias("__n"))
-    ic = items.groupBy(F.col("__i").alias("__ic")).agg(F.count(F.lit(1)).alias("__c"))
-    a = items.select("__b", F.col("__i").alias("item_a"))
-    b = items.select("__b", F.col("__i").alias("item_b"))
-    pairs = (a.join(b, ["__b"]).where(F.col("item_a") < F.col("item_b"))
-             .groupBy("item_a", "item_b").agg(F.count(F.lit(1)).alias("support"))
-             .where(F.col("support") >= min_support))
-    return (pairs
-            .join(ic.withColumnRenamed("__c", "__ca"),
-                  F.col("item_a") == F.col("__ic")).drop("__ic")
-            .join(ic.withColumnRenamed("__c", "__cb"),
-                  F.col("item_b") == F.col("__ic")).drop("__ic")
-            .crossJoin(F.broadcast(n))
-            .select("item_a", "item_b", "support",
-                    F.expr("support * 1000 div __ca").alias("conf_ab_permille"),
-                    F.expr("support * __n * 1000 div (__ca * __cb)").alias("lift_permille")))
+    return _wrap(df, _pl().Baskets.frequentPairs(
+        df._jdf, basket_col, item_col, int(min_support)))
 
 
 def label_propagation(edges, src_col, dst_col, iterations=3):
-    """Deterministic synchronous label propagation — Python mirror of
-    the Scala ``Graph.labelPropagation``: every node adopts the most
-    frequent neighbor label (ties to the smallest), fixed iteration
-    count, isolated nodes keep their own. Returns (node, community).
-    """
+    """Deterministic synchronous label propagation: every node adopts the
+    most frequent neighbor label (ties to the smallest), fixed iteration
+    count, isolated nodes keep their own. Returns (node, community). Scala
+    ``Graph.labelPropagation``."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    d = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    e = (d.unionByName(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
-         .where(F.col("a") != F.col("b")).distinct().localCheckpoint(True))
-    nodes = e.select(F.col("a").alias("node")).distinct().localCheckpoint(True)
-    labels = nodes.withColumn("community", F.col("node"))
-    for _ in range(iterations):
-        votes = (e.join(labels.select(F.col("node").alias("b"),
-                                      F.col("community").alias("lbl")), "b")
-                 .groupBy(F.col("a").alias("node"), F.col("lbl"))
-                 .agg(F.count(F.lit(1)).alias("c")))
-        winner = (votes.groupBy("node")
-                  .agg(F.min(F.struct((-F.col("c")).alias("nc"),
-                                      F.col("lbl").alias("l"))).alias("w"))
-                  .select("node", F.col("w.l").alias("community")))
-        labels = (nodes.join(winner, ["node"], "left")
-                  .select("node", F.coalesce(F.col("community"),
-                                             F.col("node")).alias("community"))
-                  .localCheckpoint(True))
-    return labels
+    return _wrap(edges, _pl().Graph.labelPropagation(
+        edges._jdf, src_col, dst_col, int(iterations)))
 
 
 def path_prefix_join(left, path_col, id_col, rules, prefix_col):
-    """Longest URL path-prefix match — Python mirror of the Scala
-    ``Joins.pathPrefixJoin``: bounded per-depth segment-prefix
-    expansion into an equi-join on (prefix, depth); the deepest rule
-    wins; segment boundaries are respected (``/ab`` is not under
-    ``/a``). Left outer; rule payload rides through.
-    """
-    depths = sorted(r[0] for r in rules.select(
-        (F.size(F.split(F.col(prefix_col), "/")) - 1).cast("int").alias("__d"))
-        .distinct().collect())
-    if not depths or any(d < 1 or d > 32 for d in depths):
-        raise ValueError(f"rule depths must be in [1,32], got {depths}")
-    payload = [c for c in rules.columns if c != prefix_col]
-    r = rules.select(F.col(prefix_col).alias("__graft_p"),
-                     (F.size(F.split(F.col(prefix_col), "/")) - 1)
-                     .cast("int").alias("__graft_d"),
-                     *[F.col(p) for p in payload])
-    cand = (left
-            .withColumn("__graft_d",
-                        F.explode(F.array(*[F.lit(d) for d in depths])))
-            .withColumn("__graft_p", F.array_join(
-                F.slice(F.split(F.col(path_col), "/"), F.lit(1),
-                        F.col("__graft_d") + 1), "/"))
-            .join(r, ["__graft_p", "__graft_d"]))
-    winner = (cand.groupBy(F.col(id_col))
-              .agg(F.max(F.struct(F.col("__graft_d").alias("d"),
-                                  *[F.col(p) for p in payload])).alias("__graft_w"))
-              .select(F.col(id_col).alias("__graft_id"), "__graft_w"))
-    return (left.join(winner, F.col(id_col) == F.col("__graft_id"), "left")
-            .select(*[F.col(c) for c in left.columns],
-                    F.col("__graft_w.d").alias("matched_depth"),
-                    *[F.col(f"__graft_w.{p}").alias(p) for p in payload]))
+    """Longest URL path-prefix match: bounded per-depth segment-prefix
+    expansion into an equi-join on (prefix, depth); the deepest rule wins;
+    segment boundaries are respected (``/ab`` is not under ``/a``). Left
+    outer; rule payload rides through. Scala ``Joins.pathPrefixJoin``."""
+    return _wrap(left, _pl().Joins.pathPrefixJoin(
+        left._jdf, path_col, id_col, rules._jdf, prefix_col))
 
 
 def ndcg_k(results, truth, k):
-    """Graded nDCG@k of a ranked list vs a ranked truth — Python
-    mirror of the Scala ``Similarity.ndcgK``: rel = k+1 - truth_rank
-    (0 if absent), integer-micro discounts round(1e6/log2(i+1)),
-    ndcg_permille = dcg*1000 div idcg.
-    """
-    import math
+    """Graded nDCG@k of a ranked list vs a ranked truth: rel = k+1 -
+    truth_rank (0 if absent), integer-micro discounts round(1e6/log2(i+1)),
+    ndcg_permille = dcg*1000 div idcg. Scala ``Similarity.ndcgK``."""
     if not 1 <= k <= 100:
         raise ValueError("k must be in [1,100]")
-    disc = [round(1e6 * math.log(2) / math.log(i + 1)) for i in range(1, k + 1)]
-    idcg = sum((k + 1 - i) * disc[i - 1] for i in range(1, k + 1))
-    t = (truth.where(F.col("rank") <= k)
-         .select("query_id", "neighbor_id", F.col("rank").alias("__tr")))
-    return (results.where(F.col("rank") <= k)
-            .join(t, ["query_id", "neighbor_id"], "left")
-            .select("query_id",
-                    (F.coalesce(F.lit(k + 1) - F.col("__tr"), F.lit(0)).cast("long")
-                     * F.element_at(F.array(*[F.lit(d) for d in disc]),
-                                    F.col("rank"))).alias("__g"))
-            .groupBy("query_id").agg(F.sum("__g").alias("dcg_unats"))
-            .withColumn("ndcg_permille",
-                        F.expr(f"dcg_unats * 1000 div {idcg}L")))
+    return _wrap(results, _pl().Similarity.ndcgK(
+        results._jdf, truth._jdf, int(k)))
 
 
 def trend(df, keys, x_col, y_col):
-    """Per-key least-squares linear trend — Python mirror of the Scala
-    ``Stats.trend``: exact integer moments in one groupBy, slope in
-    integer micro-units; singleton keys report null.
-    """
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    return (df.groupBy(*[F.col(k) for k in keys])
-            .agg(F.count(F.lit(1)).alias("n"), F.sum(x).alias("__sx"),
-                 F.sum(y).alias("__sy"), F.sum(x * y).alias("__sxy"),
-                 F.sum(x * x).alias("__sxx"))
-            .withColumn("slope_micro", F.when(
-                F.col("n") * F.col("__sxx") - F.col("__sx") * F.col("__sx") == 0,
-                F.lit(None)).otherwise(
-                F.round(F.lit(1e6) *
-                        (F.col("n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")).cast("double") /
-                        (F.col("n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast("double"))
-                .cast("long")))
-            .drop("__sx", "__sy", "__sxy", "__sxx"))
+    """Per-key least-squares linear trend: exact integer moments in one
+    groupBy, slope in integer micro-units; singleton keys report null.
+    Scala ``Stats.trend``."""
+    return _wrap(df, _pl().Stats.trend(df._jdf, _seq(keys), x_col, y_col))
 
 
 def benford(df, value_col):
-    """Benford first-digit audit — Python mirror of the Scala
-    ``Stats.benford``: digit from the decimal string, expected permille
-    log10(1+1/d), signed deviation.
-    """
-    import math
-    expected = {d: round(1000.0 * math.log10(1.0 + 1.0 / d)) for d in range(1, 10)}
-    exp_col = F.lit(0)
-    for d in range(1, 10):
-        exp_col = F.when(F.col("digit") == d, F.lit(expected[d])).otherwise(exp_col)
-    v = F.col(value_col).cast("long")
-    digits = (df.where(v > 0)
-              .select(F.substring(v.cast("string"), 1, 1).cast("int").alias("digit"))
-              .groupBy("digit").agg(F.count(F.lit(1)).alias("n")))
-    tot = digits.agg(F.sum("n").alias("__t"))
-    return (digits.crossJoin(F.broadcast(tot))
-            .select("digit", "n",
-                    F.expr("n * 1000 div __t").alias("observed_permille"),
-                    exp_col.cast("long").alias("expected_permille"))
-            .withColumn("deviation_permille",
-                        F.col("observed_permille") - F.col("expected_permille")))
+    """Benford first-digit audit: digit from the decimal string, expected
+    permille log10(1+1/d), signed deviation. Scala ``Stats.benford``."""
+    return _wrap(df, _pl().Stats.benford(df._jdf, value_col))
 
 
 def hll_overlap(a, b, key_col, m=64):
-    """Audience-overlap estimate via HLL inclusion–exclusion — Python
-    mirror of the q_hll_overlap composition: est(A) + est(B) −
+    """Audience-overlap estimate via HLL inclusion–exclusion, the
+    q_hll_overlap composition (no Scala operator): est(A) + est(B) −
     est(A∪B), clamped at 0, beside the union estimate. Uses the
     registered pl_hll_* SQL aggregates; the sketches make the overlap
     question answerable without materializing either distinct set.
@@ -1260,8 +520,8 @@ def hll_overlap(a, b, key_col, m=64):
 
 
 def vad_segments(df, id_col, energies_col):
-    """Voice-activity segments — Python mirror of the q_vad
-    composition: explode a per-clip window-energy array (e.g.
+    """Voice-activity segments, the q_vad composition (no Scala
+    operator): explode a per-clip window-energy array (e.g.
     ``mm_wav_energy(blob, win)``), mark windows whose energy beats the
     clip mean with the integer cross-multiply ``e * n_windows >
     total_energy`` (no division), and merge runs of active windows
@@ -1285,359 +545,145 @@ def vad_segments(df, id_col, energies_col):
 
 
 def percentile_report(df, keys, value_col, permilles=(500, 900, 990)):
-    """Per-key EXACT discrete percentile report — Python mirror of the
-    Scala ``Stats.percentileReport``: one (key, value) histogram
-    shuffle, a per-key cume window over distinct values, and the
-    cross-multiplied ceil threshold ``cume * 1000 >= n * p`` (division-
-    free), pivoted to one row per key with a ``p<permille>`` column
-    each.
-    """
-    hist = (df.groupBy(*([F.col(c) for c in keys]
-                         + [F.col(value_col).cast("long").alias("__v")]))
-            .agg(F.count(F.lit(1)).alias("__c")))
-    w_cume = (Window.partitionBy(*[F.col(c) for c in keys]).orderBy("__v")
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_key = Window.partitionBy(*[F.col(c) for c in keys])
-    cum = (hist.withColumn("__cume", F.sum("__c").over(w_cume))
-           .withColumn("__n", F.sum("__c").over(w_key)))
-    aggs = [F.max("__n").alias("n")] + [
-        F.min(F.when(F.col("__cume") * 1000 >= F.col("__n") * p,
-                     F.col("__v"))).alias(f"p{p}")
-        for p in permilles]
-    return cum.groupBy(*[F.col(c) for c in keys]).agg(*aggs)
+    """Per-key EXACT discrete percentile report: one (key, value) histogram
+    shuffle, a per-key cume window over distinct values, and the cross-
+    multiplied ceil threshold ``cume * 1000 >= n * p`` (division- free),
+    pivoted to one row per key with a ``p<permille>`` column each. Scala
+    ``Stats.percentileReport``."""
+    return _wrap(df, _pl().Stats.percentileReport(
+        df._jdf, _seq(keys), value_col, _seq([int(v) for v in permilles])))
 
 
 def k_core(edges, src_col, dst_col, k, rounds=3):
-    """k-core pruning — Python mirror of the Scala ``Graph.kCore``:
-    ``rounds`` fixed iterations of "drop nodes with degree < k"; per
-    round one degree aggregate and two equi-joins against the survivor
-    table, with ``localCheckpoint`` cutting the plan lineage.
-    """
-    e = (edges.select(F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-                      F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"))
-         .where(F.col("lo") != F.col("hi"))
-         .distinct().localCheckpoint(True))
-
-    def degrees(cur):
-        return (cur.select(F.col("lo").alias("node"))
-                .unionByName(cur.select(F.col("hi").alias("node")))
-                .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-
-    for _ in range(rounds):
-        keep = degrees(e).where(F.col("degree") >= k).select("node")
-        e = (e.join(keep.select(F.col("node").alias("lo")), "lo")
-             .join(keep.select(F.col("node").alias("hi")), "hi")
-             .select("lo", "hi").localCheckpoint(True))
-    return degrees(e)
+    """k-core pruning: ``rounds`` fixed iterations of "drop nodes with
+    degree < k"; per round one degree aggregate and two equi-joins against
+    the survivor table, with ``localCheckpoint`` cutting the plan lineage.
+    Scala ``Graph.kCore``."""
+    return _wrap(edges, _pl().Graph.kCore(
+        edges._jdf, src_col, dst_col, int(k), int(rounds)))
 
 
 def k_anonymity_audit(df, quasi_cols, k):
-    """k-anonymity audit — Python mirror of the Scala
-    ``KAnonymity.audit``: per full quasi-identifier combo its count and
-    ``is_risky = n < k``, plus the coarser prefix combo's count and
-    whether generalizing away the finest column clears it
-    (``coarse_ok``). ``quasi_cols`` ordered coarse -> fine, >= 2 cols.
-    """
+    """k-anonymity audit: per full quasi-identifier combo its count and
+    ``is_risky = n < k``, plus the coarser prefix combo's count and whether
+    generalizing away the finest column clears it (``coarse_ok``).
+    ``quasi_cols`` ordered coarse -> fine, >= 2 cols. Scala
+    ``KAnonymity.audit``."""
     if len(quasi_cols) < 2:
         raise ValueError("need >= 2 quasi columns (coarse -> fine)")
-    coarse_cols = list(quasi_cols[:-1])
-    full = (df.groupBy(*[F.col(c) for c in quasi_cols])
-            .agg(F.count(F.lit(1)).alias("n")))
-    coarse = (df.groupBy(*[F.col(c) for c in coarse_cols])
-              .agg(F.count(F.lit(1)).alias("n_coarse")))
-    return (full.join(coarse, coarse_cols)
-            .withColumn("is_risky", F.col("n") < k)
-            .withColumn("coarse_ok", F.col("n_coarse") >= k))
+    return _wrap(df, _pl().KAnonymity.audit(df._jdf, _seq(quasi_cols), int(k)))
 
 
 def calibrate_scores(df, group_col, score_col):
-    """Per-group percentile-rank calibration — Python mirror of the
-    Scala ``QuantileFilter.calibrate``: ``calib_permille`` = permille
-    of the group's rows scoring strictly below this row
-    (``below * 1000 div n``, ties share one value), via the
-    (group, score) histogram cume and one equi-join back — rows are
-    never window-sorted.
-    """
-    v = F.col(score_col).cast("long")
-    hist = (df.groupBy(F.col(group_col).alias("__g"), v.alias("__v"))
-            .agg(F.count(F.lit(1)).alias("__c")))
-    w_cume = (Window.partitionBy("__g").orderBy("__v")
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_grp = Window.partitionBy("__g")
-    m = (hist.withColumn("__below", F.sum("__c").over(w_cume) - F.col("__c"))
-         .withColumn("__n", F.sum("__c").over(w_grp))
-         .select(F.col("__g"), F.col("__v"),
-                 F.expr("__below * 1000 div __n").alias("calib_permille")))
-    return (df.join(m, (F.col(group_col) == F.col("__g")) & (v == F.col("__v")))
-            .drop("__g", "__v"))
+    """Per-group percentile-rank calibration: ``calib_permille`` = permille
+    of the group's rows scoring strictly below this row (``below * 1000 div
+    n``, ties share one value), via the (group, score) histogram cume and
+    one equi-join back — rows are never window-sorted. Scala
+    ``QuantileFilter.calibrate``."""
+    return _wrap(df, _pl().QuantileFilter.calibrate(
+        df._jdf, group_col, score_col))
 
 
 def token_entropy(df, id_col, text_col):
-    """Per-doc Shannon token entropy in integer micro-nats — Python
-    mirror of the Scala ``Stats.tokenEntropy``: one (id, token) count
-    aggregate, each term ``round(1e6 * (c/n) * ln(n/c))`` rounded
-    before the sum (the psi micro-nat discipline).
-    """
-    toks = (df.select(F.col(id_col).alias("id"),
-                      F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-            .where(F.col("tok") != ""))
-    cnt = toks.groupBy("id", "tok").agg(F.count(F.lit(1)).alias("__c"))
-    tot = cnt.groupBy("id").agg(F.sum("__c").alias("n_tokens"),
-                                F.count(F.lit(1)).alias("n_unique"))
-    return (cnt.join(tot, "id")
-            .groupBy("id", "n_tokens", "n_unique")
-            .agg(F.sum(F.round(F.lit(1e6) * F.col("__c") / F.col("n_tokens")
-                               * F.log(F.col("n_tokens").cast("double")
-                                       / F.col("__c"))).cast("long"))
-                 .alias("entropy_unats")))
+    """Per-doc Shannon token entropy in integer micro-nats: one (id, token)
+    count aggregate, each term ``round(1e6 * (c/n) * ln(n/c))`` rounded
+    before the sum (the psi micro-nat discipline). Scala
+    ``Stats.tokenEntropy``."""
+    return _wrap(df, _pl().Stats.tokenEntropy(df._jdf, id_col, text_col))
 
 
 def conservation_audit(parent, parent_key, parent_val, child, child_key,
                        child_val):
-    """Parent/child conservation audit — Python mirror of the Scala
-    ``Joins.conservationAudit``: children reduce first to parent-key
-    cardinality, then one left equi-join; orphan headers report
-    ``child_sum = 0``. Integral values only (pre-scale to cents).
-    """
-    sums = (child.groupBy(F.col(child_key).alias(parent_key))
-            .agg(F.sum(F.col(child_val).cast("long")).alias("child_sum"),
-                 F.count(F.lit(1)).alias("n_children")))
-    return (parent.select(F.col(parent_key),
-                          F.col(parent_val).cast("long").alias("parent_val"))
-            .join(sums, [parent_key], "left")
-            .na.fill(0, ["child_sum", "n_children"])
-            .withColumn("diff", F.col("parent_val") - F.col("child_sum")))
+    """Parent/child conservation audit: children reduce first to parent-key
+    cardinality, then one left equi-join; orphan headers report ``child_sum
+    = 0``. Integral values only (pre-scale to cents). Scala
+    ``Joins.conservationAudit``."""
+    return _wrap(parent, _pl().Joins.conservationAudit(
+        parent._jdf, parent_key, parent_val, child._jdf, child_key, child_val))
 
 
 def winsorize(df, keys, value_col, lo_permille=10, hi_permille=990):
-    """Per-key winsorization — Python mirror of the Scala
-    ``Stats.winsorize``: clamp into the key's exact discrete
-    ``[p<lo>, p<hi>]`` percentile band (from :func:`percentile_report`'s
-    histogram machinery), appended as ``<value_col>_w``.
-    """
-    pr = (percentile_report(df, keys, value_col, (lo_permille, hi_permille))
-          .select(*([F.col(c) for c in keys]
-                    + [F.col(f"p{lo_permille}").alias("__lo"),
-                       F.col(f"p{hi_permille}").alias("__hi")])))
-    return (df.join(pr, list(keys))
-            .withColumn(f"{value_col}_w",
-                        F.greatest(F.least(F.col(value_col).cast("long"),
-                                           F.col("__hi")), F.col("__lo")))
-            .drop("__lo", "__hi"))
+    """Per-key winsorization: clamp into the key's exact discrete ``[p<lo>,
+    p<hi>]`` percentile band (from :func:`percentile_report`'s histogram
+    machinery), appended as ``<value_col>_w``. Scala ``Stats.winsorize``."""
+    return _wrap(df, _pl().Stats.winsorize(
+        df._jdf, _seq(keys), value_col, int(lo_permille), int(hi_permille)))
 
 
 def robust_anomaly_flags(df, keys, value_col, k_num=3, k_den=1):
-    """Median/MAD outlier gate — Python mirror of the Scala
-    ``Stats.robustAnomalyFlags``: flags ``|v - med| * k_den > MAD *
-    k_num`` with both med and MAD exact discrete medians from two
-    histogram passes; all integer, bit-reproducible.
-    """
-    med = (percentile_report(df, keys, value_col, (500,))
-           .select(*([F.col(c) for c in keys] + [F.col("p500").alias("med")])))
-    dev = (df.join(med, list(keys))
-           .withColumn("abs_dev",
-                       F.abs(F.col(value_col).cast("long") - F.col("med"))))
-    mad = (percentile_report(dev, keys, "abs_dev", (500,))
-           .select(*([F.col(c) for c in keys] + [F.col("p500").alias("mad")])))
-    return (dev.join(mad, list(keys))
-            .withColumn("is_anomaly",
-                        F.col("abs_dev") * k_den > F.col("mad") * k_num))
+    """Median/MAD outlier gate: flags ``|v - med| * k_den > MAD * k_num``
+    with both med and MAD exact discrete medians from two histogram passes;
+    all integer, bit-reproducible. Scala ``Stats.robustAnomalyFlags``."""
+    return _wrap(df, _pl().Stats.robustAnomalyFlags(
+        df._jdf, _seq(keys), value_col, int(k_num), int(k_den)))
 
 
 def l_diversity(df, quasi_cols, sensitive_col, l):
-    """l-diversity audit — Python mirror of the Scala
-    ``KAnonymity.lDiversity``: per quasi combo, row count, distinct
-    sensitive-value count, ``is_risky = l_distinct < l``; two bounded
-    groupBys, no countDistinct Expand.
-    """
-    return (df.groupBy(*(list(quasi_cols) + [sensitive_col]))
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .groupBy(*quasi_cols)
-            .agg(F.sum("__c").alias("n"),
-                 F.count(F.lit(1)).alias("l_distinct"))
-            .withColumn("is_risky", F.col("l_distinct") < l))
+    """l-diversity audit: per quasi combo, row count, distinct sensitive-
+    value count, ``is_risky = l_distinct < l``; two bounded groupBys, no
+    countDistinct Expand. Scala ``KAnonymity.lDiversity``."""
+    return _wrap(df, _pl().KAnonymity.lDiversity(
+        df._jdf, _seq(quasi_cols), sensitive_col, int(l)))
 
 
 def collocations(df, text_col, min_count=5):
-    """Adjacent-bigram collocation mining — Python mirror of the Scala
-    ``Stats.collocations``: strict bigram counts, unigram joins, and the
-    left-assoc micro-nat PMI sum rounded once.
-    """
-    toks = df.select(F.split(F.col(text_col), " ").alias("__t"))
-    uni = (toks.select(F.explode("__t").alias("tok"))
-           .where(F.col("tok") != "")
-           .groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
-    ws = F.col("__t")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(ws) - 2),
-        lambda i: F.concat_ws(" ", F.slice(ws, i + 1, 2)))
-    bi0 = (toks.where(F.size("__t") >= 2)
-           .select(F.explode(grams).alias("bg"))
-           .groupBy("bg").agg(F.count(F.lit(1)).alias("c_ab")))
-    totals = F.broadcast(
-        uni.agg(F.sum("c").alias("n_uni"))
-        .crossJoin(bi0.agg(F.sum("c_ab").alias("n_bi"))))
-    bi = (bi0.where(F.col("c_ab") >= min_count)
-          .withColumn("a", F.expr("split(bg, ' ')[0]"))
-          .withColumn("b", F.expr("split(bg, ' ')[1]")))
-    return (bi.join(uni.select(F.col("tok").alias("a"),
-                               F.col("c").alias("c_a")), "a")
-            .join(uni.select(F.col("tok").alias("b"),
-                             F.col("c").alias("c_b")), "b")
-            .crossJoin(totals)
-            .select("a", "b", "c_ab", "c_a", "c_b",
-                    F.round(F.lit(1e6) * (F.log("c_ab")
-                            + F.lit(2.0) * F.log("n_uni")
-                            - F.log("n_bi") - F.log("c_a") - F.log("c_b")))
-                    .cast("long").alias("pmi_unats")))
+    """Adjacent-bigram collocation mining: strict bigram counts, unigram
+    joins, and the left-assoc micro-nat PMI sum rounded once. Scala
+    ``Stats.collocations``."""
+    return _wrap(df, _pl().Stats.collocations(
+        df._jdf, text_col, int(min_count)))
 
 
 def gap_regularity(df, keys, ts_col, divisor=1000000, k_num=1, k_den=10,
                    min_gaps=5):
-    """Inter-event cadence regularity — Python mirror of the Scala
-    ``Stats.gapRegularity``: integral-div gaps off one per-key lag
-    window, integer moment aggregate, division-cleared CV^2 flag;
-    all-zero-gap keys (cadence faster than the divisor) flag robotic.
-    """
-    w = Window.partitionBy(*keys).orderBy(ts_col)
-    return (df.withColumn("__diff", F.col(ts_col).cast("long")
-                          - F.lag(F.col(ts_col).cast("long"), 1).over(w))
-            .withColumn("__gap", F.expr(f"__diff div {int(divisor)}L"))
-            .where(F.col("__gap").isNotNull())
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n_gaps"),
-                 F.sum("__gap").alias("gap_sum"),
-                 F.sum(F.col("__gap") * F.col("__gap")).alias("gap_ssq"))
-            .withColumn("var_n2", F.col("n_gaps") * F.col("gap_ssq")
-                        - F.col("gap_sum") * F.col("gap_sum"))
-            .withColumn("is_robotic",
-                        (F.col("n_gaps") >= min_gaps)
-                        & ((F.col("gap_sum") == 0)
-                           | (F.col("var_n2") * k_den
-                              < F.col("gap_sum") * F.col("gap_sum") * k_num))))
+    """Inter-event cadence regularity: integral-div gaps off one per-key
+    lag window, integer moment aggregate, division-cleared CV^2 flag; all-
+    zero-gap keys (cadence faster than the divisor) flag robotic. Scala
+    ``Stats.gapRegularity``."""
+    return _wrap(df, _pl().Stats.gapRegularity(
+        df._jdf, _seq(keys), ts_col, int(divisor), int(k_num), int(k_den),
+        int(min_gaps)))
 
 
 def jaccard_prefix_pairs(df, id_col, text_col, threshold_permille, shingle=3,
                          hot_cap=1024):
-    """PPJoin-style Jaccard threshold self-join — Python mirror of the
-    Scala ``Dedup.jaccardPrefixPairs``: STRICT distinct ``shingle``-gram
-    sets (a doc with fewer than ``shingle`` tokens contributes nothing),
-    global rare-first prefix candidates, symmetric size filter, PPJoin
-    position filter, ``hot_cap`` prefix-block guard, exact intersection
-    verify, all integer permille.
-    """
-    tp = int(threshold_permille)
-    ws = F.col("__t")
-    grams = F.array_distinct(F.transform(
-        F.sequence(F.lit(0), F.size(ws) - shingle),
-        lambda i: F.concat_ws(" ", F.slice(ws, i + 1, shingle))))
-    toks = (df.select(F.col(id_col).alias("id"),
-                      F.split(F.col(text_col), " ").alias("__t"))
-            .where(F.size("__t") >= shingle)
-            .select(F.col("id"), F.explode(grams).alias("tok"))
-            .where(F.col("tok") != ""))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy("__df", "tok")
-    ranked = toks.join(freq, "tok").withColumn("__rn", F.row_number().over(w))
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    pref = (ranked.join(sizes, "id")
-            .where(F.col("__rn")
-                   <= F.col("sz") - F.expr(f"(sz * {tp} + 999) div 1000") + 1)
-            .select("id", "sz", "tok", "__rn"))
-    hot = (pref.groupBy("tok").agg(F.count(F.lit(1)).alias("__n"))
-           .where(F.col("__n") > hot_cap).select("tok"))
-    cool = pref.join(F.broadcast(hot), ["tok"], "left_anti")
-    cand = (cool.select(F.col("id").alias("a_id"), F.col("sz").alias("a_sz"),
-                        F.col("__rn").alias("a_rn"), "tok")
-            .join(cool.select(F.col("id").alias("b_id"),
-                              F.col("sz").alias("b_sz"),
-                              F.col("__rn").alias("b_rn"), "tok"), "tok")
-            .where((F.col("a_id") < F.col("b_id"))
-                   & (F.col("b_sz") * 1000 >= F.col("a_sz") * tp)
-                   & (F.col("a_sz") * 1000 >= F.col("b_sz") * tp)
-                   & ((F.lit(1) + F.least(F.col("a_sz") - F.col("a_rn"),
-                                          F.col("b_sz") - F.col("b_rn")))
-                      * (1000 + tp)
-                      >= tp * (F.col("a_sz") + F.col("b_sz"))))
-            .select("a_id", "b_id", "a_sz", "b_sz").distinct())
-    inter = (cand.join(toks.select(F.col("id").alias("a_id"), "tok"), "a_id")
-             .join(toks.select(F.col("id").alias("b_id"), "tok"),
-                   ["b_id", "tok"])
-             .groupBy("a_id", "b_id", "a_sz", "b_sz")
-             .agg(F.count(F.lit(1)).alias("inter")))
-    return (inter.where(F.col("inter") * 1000
-                        >= tp * (F.col("a_sz") + F.col("b_sz") - F.col("inter")))
-            .withColumn("jaccard_permille",
-                        F.expr("inter * 1000 div (a_sz + b_sz - inter)")))
+    """PPJoin-style Jaccard threshold self-join: STRICT distinct
+    ``shingle``-gram sets (a doc with fewer than ``shingle`` tokens
+    contributes nothing), global rare-first prefix candidates, symmetric
+    size filter, PPJoin position filter, ``hot_cap`` prefix-block guard,
+    exact intersection verify, all integer permille. Scala
+    ``Dedup.jaccardPrefixPairs``."""
+    return _wrap(df, _pl().Dedup.jaccardPrefixPairs(
+        df._jdf, id_col, text_col, int(threshold_permille), int(shingle),
+        int(hot_cap)))
 
 
 def window_cooccur(df, text_col, window=5, min_count=5):
-    """Symmetric window co-occurrence counts — Python mirror of the
-    Scala ``Stats.windowCooccur``: per-row HOF pair generation (explode
-    distances 1..window, zip each token with its d-successor, strict
-    windows), canonical least/greatest pair order, ONE map-side-
-    combinable groupBy count, ``min_count`` tail prune.
-    """
+    """Symmetric window co-occurrence counts: per-row HOF pair generation
+    (explode distances 1..window, zip each token with its d-successor,
+    strict windows), canonical least/greatest pair order, ONE map-side-
+    combinable groupBy count, ``min_count`` tail prune. Scala
+    ``Stats.windowCooccur``."""
     if window < 1 or min_count < 1:
         raise ValueError("window and min_count must be >= 1")
-    return (df.select(F.split(F.col(text_col), " ").alias("ws"),
-                      F.explode(F.sequence(F.lit(1), F.lit(window))).alias("d"))
-            .where(F.size("ws") > F.col("d"))
-            .select(F.explode(F.expr(
-                "transform(sequence(1, size(ws) - d), "
-                "i -> struct(ws[i-1] as x, ws[i+d-1] as y))")).alias("p"))
-            .where((F.col("p.x") != "") & (F.col("p.y") != ""))
-            .select(F.least("p.x", "p.y").alias("a"),
-                    F.greatest("p.x", "p.y").alias("b"))
-            .groupBy("a", "b").agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") >= min_count))
+    return _wrap(df, _pl().Stats.windowCooccur(
+        df._jdf, text_col, int(window), int(min_count)))
 
 
 def cohen_kappa(df, a_col, b_col):
-    """Cohen's kappa — Python mirror of the Scala ``Stats.cohenKappa``:
-    one (a, b) pair-count groupBy, marginal products, the integer-
-    cleared (n*agree - pe_num)/(n^2 - pe_num) in sign-handled
-    truncating permille; the clearing runs in DECIMAL(38,0) so n*agree
-    and n^2 cannot wrap past ~3e9 rows.
-    """
-    pairs = (df.groupBy(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-             .agg(F.count(F.lit(1)).alias("c")))
-    a_marg = pairs.groupBy("a").agg(F.sum("c").alias("ca"))
-    b_marg = pairs.groupBy("b").agg(F.sum("c").alias("cb"))
-    tot = pairs.agg(
-        F.sum("c").alias("n"),
-        F.coalesce(F.sum(F.when(F.col("a") == F.col("b"), F.col("c"))),
-                   F.lit(0)).alias("agree"))
-    pe = (a_marg.join(b_marg, F.col("a") == F.col("b"))
-          .agg(F.coalesce(F.sum(F.col("ca") * F.col("cb")),
-                          F.lit(0)).alias("pe_num")))
-    return (F.broadcast(tot).crossJoin(F.broadcast(pe))
-            .withColumn("__n", F.col("n").cast("decimal(38,0)"))
-            .withColumn("__agree", F.col("agree").cast("decimal(38,0)"))
-            .withColumn("__pe", F.col("pe_num").cast("decimal(38,0)"))
-            .withColumn("kappa_num",
-                        (F.col("__n") * F.col("__agree") - F.col("__pe"))
-                        .cast("long"))
-            .withColumn("kappa_den",
-                        (F.col("__n") * F.col("__n") - F.col("__pe"))
-                        .cast("long"))
-            .withColumn("kappa_permille", F.expr(
-                "cast(case when __n * __n - __pe = 0 then null "
-                "when __n * __agree - __pe >= 0 "
-                "then (__n * __agree - __pe) * 1000 div (__n * __n - __pe) "
-                "else -((__pe - __n * __agree) * 1000 div (__n * __n - __pe)) "
-                "end as long)"))
-            .drop("__n", "__agree", "__pe"))
+    """Cohen's kappa: one (a, b) pair-count groupBy, marginal products, the
+    integer- cleared (n*agree - pe_num)/(n^2 - pe_num) in sign-handled
+    truncating permille; the clearing runs in DECIMAL(38,0) so n*agree and
+    n^2 cannot wrap past ~3e9 rows. Scala ``Stats.cohenKappa``."""
+    return _wrap(df, _pl().Stats.cohenKappa(df._jdf, a_col, b_col))
 
 
 def shard_balance(df, id_col, weight_col, shards=256):
-    """Hash-shard balance audit — Python mirror of the Scala
-    ``Layout.shardBalance``: shard = pl_mix64(id) & (shards-1) (shards
+    """Hash-shard balance audit: shard = pl_mix64(id) & (shards-1) (shards
     must be a power of two), per-shard row count and weight sum, signed
-    permille deviation from the even split off a broadcast one-row
-    total. Requires an integral id column so a bad id fails loudly
-    instead of pooling into a NULL shard.
-    """
+    permille deviation from the even split off a broadcast one-row total.
+    Requires an integral id column so a bad id fails loudly instead of
+    pooling into a NULL shard. Scala ``Layout.shardBalance``."""
     if shards < 2 or (shards & (shards - 1)) != 0:
         raise ValueError(f"shards must be a power of two >= 2, got {shards}")
     id_type = df.schema[id_col].dataType.typeName()
@@ -1646,452 +692,150 @@ def shard_balance(df, id_col, weight_col, shards=256):
         raise ValueError(
             f"shard_balance needs an integral id column; '{id_col}' is "
             f"{id_type} (hash raw bytes or pre-parse instead)")
-    per_shard = (df.select(
-        (F.expr(f"pl_mix64(CAST({id_col} AS LONG))")
-         .bitwiseAND(F.lit(shards - 1))).alias("shard"),
-        F.col(weight_col).cast("long").alias("__w"))
-        .groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("__w").alias("w_sum")))
-    tot = per_shard.agg(F.sum("w_sum").alias("__tot"))
-    return (per_shard.crossJoin(F.broadcast(tot))
-            .withColumn("dev_permille",
-                        F.expr(f"w_sum * {shards}L * 1000 div __tot - 1000"))
-            .drop("__tot"))
+    return _wrap(df, _pl().Layout.shardBalance(
+        df._jdf, id_col, _jc(weight_col), int(shards)))
 
 
 def containment_prefix_pairs(df, id_col, text_col, threshold_permille,
                              shingle=3, hot_cap=1024):
-    """Set-containment threshold join — Python mirror of the Scala
-    ``Dedup.containmentPrefixPairs``: a's rare-first prefix probes b's
+    """Set-containment threshold join: a's rare-first prefix probes b's
     FULL rare-ranked shingle list (index-probe shape), one-sided size
-    filter, per-match position filter, ``hot_cap`` anti-join on
-    document frequency, exact intersection verify; ordered pairs with
-    integer ``containment_permille = inter*1000 div a_sz``.
-    """
-    tp = int(threshold_permille)
-    if not 1 <= tp <= 1000:
-        raise ValueError(f"threshold_permille must be in [1,1000], got {tp}")
-    ws = F.col("__t")
-    grams = F.array_distinct(F.transform(
-        F.sequence(F.lit(0), F.size(ws) - shingle),
-        lambda i: F.concat_ws(" ", F.slice(ws, i + 1, shingle))))
-    toks = (df.select(F.col(id_col).alias("id"),
-                      F.split(F.col(text_col), " ").alias("__t"))
-            .where(F.size("__t") >= shingle)
-            .select(F.col("id"), F.explode(grams).alias("tok"))
-            .where(F.col("tok") != ""))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy("__df", "tok")
-    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    ranked = (toks.join(freq, "tok")
-              .withColumn("__rn", F.row_number().over(w)).join(sizes, "id"))
-    need = F.expr(f"(sz * {tp} + 999) div 1000")
-    pref = (ranked.where(F.col("__rn") <= F.col("sz") - need + 1)
-            .select("id", "sz", "tok", "__rn"))
-    hot = freq.where(F.col("__df") > hot_cap).select("tok")
-    probe = pref.join(F.broadcast(hot), ["tok"], "left_anti")
-    index = (ranked.select("id", "sz", "tok", "__rn")
-             .join(F.broadcast(hot), ["tok"], "left_anti"))
-    cand = (probe.select(F.col("id").alias("a_id"), F.col("sz").alias("a_sz"),
-                         F.col("__rn").alias("a_rn"), "tok")
-            .join(index.select(F.col("id").alias("b_id"),
-                               F.col("sz").alias("b_sz"),
-                               F.col("__rn").alias("b_rn"), "tok"), "tok")
-            .where((F.col("a_id") != F.col("b_id"))
-                   & (F.col("b_sz") * 1000 >= F.col("a_sz") * tp)
-                   & ((F.lit(1) + F.least(F.col("a_sz") - F.col("a_rn"),
-                                          F.col("b_sz") - F.col("b_rn")))
-                      * 1000 >= tp * F.col("a_sz")))
-            .select("a_id", "b_id", "a_sz", "b_sz").distinct())
-    return (cand.join(toks.select(F.col("id").alias("a_id"), "tok"), "a_id")
-            .join(toks.select(F.col("id").alias("b_id"), "tok"),
-                  ["b_id", "tok"])
-            .groupBy("a_id", "b_id", "a_sz", "b_sz")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .where(F.col("inter") * 1000 >= tp * F.col("a_sz"))
-            .withColumn("containment_permille",
-                        F.expr("inter * 1000 div a_sz")))
+    filter, per-match position filter, ``hot_cap`` anti-join on document
+    frequency, exact intersection verify; ordered pairs with integer
+    ``containment_permille = inter*1000 div a_sz``. Scala
+    ``Dedup.containmentPrefixPairs``."""
+    if not 1 <= threshold_permille <= 1000:
+        raise ValueError("threshold_permille must be in [1,1000], "
+                         f"got {threshold_permille}")
+    return _wrap(df, _pl().Dedup.containmentPrefixPairs(
+        df._jdf, id_col, text_col, int(threshold_permille), int(shingle),
+        int(hot_cap)))
 
 
 def fleiss_kappa(df, item_col, category_col, raters):
-    """Fleiss' kappa — Python mirror of the Scala ``Stats.fleissKappa``:
-    one (item, category) groupBy, an item-bounded completeness
-    semi-join (items without exactly ``raters`` ratings drop), three
-    one-row aggregates met in broadcast crossJoins, DECIMAL(38,0)
+    """Fleiss' kappa: one (item, category) groupBy, an item-bounded
+    completeness semi-join (items without exactly ``raters`` ratings drop),
+    three one-row aggregates met in broadcast crossJoins, DECIMAL(38,0)
     clearing: num = (S - N*r)*N*r - C*(r-1), den = (r-1)*((N*r)^2 - C),
-    sign-handled truncating permille (NULL when den = 0).
-    """
+    sign-handled truncating permille (NULL when den = 0). Scala
+    ``Stats.fleissKappa``."""
     if raters < 2:
         raise ValueError(f"raters must be >= 2, got {raters}")
-    nij = (df.groupBy(F.col(item_col).alias("item"),
-                      F.col(category_col).alias("cat"))
-           .agg(F.count(F.lit(1)).alias("c")))
-    complete = (nij.groupBy("item").agg(F.sum("c").alias("__r"))
-                .where(F.col("__r") == raters).select("item"))
-    kept = nij.join(complete, "item")
-    n_items = complete.agg(F.count(F.lit(1)).alias("n_items"))
-    s_sq = kept.agg(F.coalesce(F.sum(F.col("c") * F.col("c")),
-                               F.lit(0)).alias("s_sq"))
-    c_sq = (kept.groupBy("cat").agg(F.sum("c").alias("cj"))
-            .agg(F.coalesce(F.sum(F.col("cj") * F.col("cj")),
-                            F.lit(0)).alias("c_sq")))
-    return (F.broadcast(n_items).crossJoin(F.broadcast(s_sq))
-            .crossJoin(F.broadcast(c_sq))
-            .withColumn("__nr", (F.col("n_items") * F.lit(raters))
-                        .cast("decimal(38,0)"))
-            .withColumn("__s", F.col("s_sq").cast("decimal(38,0)"))
-            .withColumn("__c", F.col("c_sq").cast("decimal(38,0)"))
-            .withColumn("__num", (F.col("__s") - F.col("__nr"))
-                        * F.col("__nr") - F.col("__c") * F.lit(raters - 1))
-            .withColumn("__den", (F.col("__nr") * F.col("__nr")
-                                  - F.col("__c")) * F.lit(raters - 1))
-            .select(F.col("n_items"), F.lit(raters).alias("n_raters"),
-                    F.col("s_sq"), F.col("c_sq"),
-                    F.col("__num").cast("long").alias("kappa_num"),
-                    F.col("__den").cast("long").alias("kappa_den"),
-                    F.expr("cast(case when __den = 0 then null "
-                           "when __num >= 0 then __num * 1000 div __den "
-                           "else -((-__num) * 1000 div __den) end as long)")
-                    .alias("kappa_permille")))
+    return _wrap(df, _pl().Stats.fleissKappa(
+        df._jdf, item_col, category_col, int(raters)))
 
 
 def rouge_n(df, id_col, cand_col, ref_col, n=2):
-    """ROUGE-N — Python mirror of the Scala ``Stats.rougeN``: per-row
-    strict pl_ngrams windows + a clipped-overlap fold over the
-    reference's distinct grams; recall/precision/F1 in truncating
-    permille (NULL when the side has no n-gram). ZERO shuffles.
-    """
+    """ROUGE-N: per-row strict pl_ngrams windows + a clipped-overlap fold
+    over the reference's distinct grams; recall/precision/F1 in truncating
+    permille (NULL when the side has no n-gram). ZERO shuffles. Scala
+    ``Stats.rougeN``."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    from . import functions as gf
-    matched = F.expr(
-        "aggregate(array_distinct(__rg), 0L, (acc, g) -> acc + "
-        "least(size(filter(__rg, x -> x = g)), "
-        "size(filter(__cg, x -> x = g))))")
-    return (df.select(
-                F.col(id_col).alias("id"),
-                gf.pl_ngrams(F.split(F.col(cand_col), " "), n).alias("__cg"),
-                gf.pl_ngrams(F.split(F.col(ref_col), " "), n).alias("__rg"))
-            .select(F.col("id"),
-                    F.size("__cg").cast("long").alias("cand_n"),
-                    F.size("__rg").cast("long").alias("ref_n"),
-                    matched.alias("match_n"))
-            .select(F.col("id"), "cand_n", "ref_n", "match_n",
-                    F.when(F.col("cand_n") > 0,
-                           F.expr("match_n * 1000 div cand_n"))
-                    .alias("rouge_p"),
-                    F.when(F.col("ref_n") > 0,
-                           F.expr("match_n * 1000 div ref_n"))
-                    .alias("rouge_r"),
-                    F.when(F.col("cand_n") + F.col("ref_n") > 0,
-                           F.expr("match_n * 2000 div (cand_n + ref_n)"))
-                    .alias("rouge_f")))
+    return _wrap(df, _pl().Stats.rougeN(
+        df._jdf, id_col, cand_col, ref_col, int(n)))
 
 
 def adamic_adar(edges, src_col, dst_col, max_degree=64, min_common=1):
-    """Adamic-Adar link prediction — Python mirror of the Scala
-    ``Graph.adamicAdar``: canonical undirected edges, adjacency,
-    centers capped at ``max_degree`` (the hub guard) BEFORE the wedge
-    self-join on the center, per-wedge round(1e6/ln(deg)) micro-unit
-    terms, existing edges removed with a LEFT ANTI join.
-    """
+    """Adamic-Adar link prediction: canonical undirected edges, adjacency,
+    centers capped at ``max_degree`` (the hub guard) BEFORE the wedge self-
+    join on the center, per-wedge round(1e6/ln(deg)) micro-unit terms,
+    existing edges removed with a LEFT ANTI join. Scala
+    ``Graph.adamicAdar``."""
     if max_degree < 2:
         raise ValueError(f"max_degree must be >= 2, got {max_degree}")
-    e = (edges.select(F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-                      F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"))
-         .where(F.col("lo") != F.col("hi"))
-         .distinct().localCheckpoint(True))
-    adj = (e.select(F.col("lo").alias("w"), F.col("hi").alias("nb"))
-           .unionByName(e.select(F.col("hi").alias("w"),
-                                 F.col("lo").alias("nb"))))
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("deg"))
-    centers = adj.join(deg.where(F.col("deg") <= max_degree), "w")
-    a = centers.select("w", F.col("nb").alias("u"), "deg")
-    b = centers.select("w", F.col("nb").alias("v"))
-    scored = (a.join(b, ["w"]).where(F.col("u") < F.col("v"))
-              .groupBy("u", "v")
-              .agg(F.count(F.lit(1)).alias("common"),
-                   F.sum(F.round(F.lit(1e6)
-                                 / F.log(F.col("deg").cast("double")))
-                         .cast("long")).alias("aa_unats"))
-              .where(F.col("common") >= min_common))
-    return scored.join(e, (scored["u"] == e["lo"]) & (scored["v"] == e["hi"]),
-                       "left_anti")
+    return _wrap(edges, _pl().Graph.adamicAdar(
+        edges._jdf, src_col, dst_col, int(max_degree), int(min_common)))
 
 
 def co_membership(df, user_col, item_col, max_items=50, min_users=2):
-    """Co-membership ("also engaged") — Python mirror of the Scala
-    ``Graph.coMembership``: distinct (user, item), hub users above
-    ``max_items`` dropped BEFORE the user-bounded pair self-join, one
-    (a, b) pair count pruned at ``min_users``.
-    """
+    """Co-membership ("also engaged"): distinct (user, item), hub users
+    above ``max_items`` dropped BEFORE the user-bounded pair self-join, one
+    (a, b) pair count pruned at ``min_users``. Scala
+    ``Graph.coMembership``."""
     if max_items < 2:
         raise ValueError(f"max_items must be >= 2, got {max_items}")
-    ui = (df.select(F.col(user_col).alias("u"), F.col(item_col).alias("i"))
-          .where(F.col("u").isNotNull() & F.col("i").isNotNull())
-          .distinct())
-    keep = (ui.groupBy("u").agg(F.count(F.lit(1)).alias("__d"))
-            .where(F.col("__d") <= max_items).select("u"))
-    kept = ui.join(keep, "u")
-    return (kept.select("u", F.col("i").alias("a"))
-            .join(kept.select("u", F.col("i").alias("b")), ["u"])
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_users"))
-            .where(F.col("n_users") >= min_users))
+    return _wrap(df, _pl().Graph.coMembership(
+        df._jdf, user_col, item_col, int(max_items), int(min_users)))
 
 
 def krippendorff_alpha(df, item_col, category_col):
-    """Krippendorff's alpha (nominal) — Python mirror of the Scala
-    ``Stats.krippendorffAlpha``: variable panel sizes (items with
-    r_i >= 2 all contribute; single-rating items are unpairable),
-    per-item micro-unit disagreement terms round(1e6*(ri^2-si)/(ri-1)),
-    integer expected side, DECIMAL(38,0) clearing, sign-handled
-    truncating permille (NULL when nothing is pairable or one
-    category).
-    """
-    nij = (df.groupBy(F.col(item_col).alias("item"),
-                      F.col(category_col).alias("cat"))
-           .agg(F.count(F.lit(1)).alias("c")))
-    per_item = (nij.groupBy("item")
-                .agg(F.sum("c").alias("ri"),
-                     F.sum(F.col("c") * F.col("c")).alias("si"))
-                .where(F.col("ri") >= 2))
-    items = per_item.agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.coalesce(F.sum(F.round(
-            F.lit(1e6) * (F.col("ri") * F.col("ri") - F.col("si"))
-            .cast("double") / (F.col("ri") - 1)).cast("long")),
-            F.lit(0)).alias("d_o_micro"))
-    pairable = nij.join(per_item.select("item"), "item")
-    cats = (pairable.groupBy("cat").agg(F.sum("c").alias("nc"))
-            .agg(F.coalesce(F.sum("nc"), F.lit(0)).alias("n_ratings"),
-                 F.coalesce(F.sum(F.col("nc") * F.col("nc")),
-                            F.lit(0)).alias("c_sq")))
-    return (F.broadcast(cats).crossJoin(F.broadcast(items))
-            .withColumn("__n", F.col("n_ratings").cast("decimal(38,0)"))
-            .withColumn("__c", F.col("c_sq").cast("decimal(38,0)"))
-            .withColumn("__do", F.col("d_o_micro").cast("decimal(38,0)"))
-            .withColumn("__de", (F.col("__n") * F.col("__n") - F.col("__c"))
-                        * F.lit(1000000))
-            .withColumn("__num", F.col("__de")
-                        - (F.col("__n") - 1) * F.col("__do"))
-            .select("n_ratings", "n_items", "d_o_micro", "c_sq",
-                    F.col("__num").cast("long").alias("alpha_num"),
-                    F.col("__de").cast("long").alias("alpha_den"),
-                    F.expr("cast(case when __de = 0 then null "
-                           "when __num >= 0 then __num * 1000 div __de "
-                           "else -((-__num) * 1000 div __de) end as long)")
-                    .alias("alpha_permille")))
+    """Krippendorff's alpha (nominal): variable panel sizes (items with r_i
+    >= 2 all contribute; single-rating items are unpairable), per-item
+    micro-unit disagreement terms round(1e6*(ri^2-si)/(ri-1)), integer
+    expected side, DECIMAL(38,0) clearing, sign-handled truncating permille
+    (NULL when nothing is pairable or one category). Scala
+    ``Stats.krippendorffAlpha``."""
+    return _wrap(df, _pl().Stats.krippendorffAlpha(
+        df._jdf, item_col, category_col))
 
 
 def cosine_sim_join(df, id_col, text_col, threshold_permille, df_cap=1024):
-    """Sparse tf-idf cosine similarity join — Python mirror of the
-    Scala ``Dedup.cosineSimJoin``: centi-nat integer idf weights
-    (round(100*ln(N/df))), inverted-index candidates with the
-    df > ``df_cap`` hub guard, exact integer dots/norms in
-    DECIMAL(38,0), cos^2 in ppm thresholded at
-    ``threshold_permille``^2.
-    """
-    tp = int(threshold_permille)
-    if not 1 <= tp <= 1000:
-        raise ValueError(f"threshold_permille must be in [1,1000], got {tp}")
-    tf = (df.select(F.col(id_col).alias("id"),
-                    F.explode(F.split(F.col(text_col), " ")).alias("term"))
-          .where(F.col("term") != "")
-          .groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf")))
-    dfc = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = F.broadcast(df.agg(F.count(F.lit(1)).alias("__n")))
-    weighted = (tf.join(dfc.where(F.col("df") <= df_cap), "term")
-                .crossJoin(n)
-                .select("id", "term",
-                        (F.col("tf") * F.round(
-                            F.lit(100.0) * F.log(F.col("__n").cast("double")
-                                                 / F.col("df")))
-                         .cast("long")).alias("w"))
-                .where(F.col("w") > 0))
-    norms = weighted.groupBy("id").agg(
-        F.sum(F.col("w").cast("decimal(38,0)") * F.col("w")).alias("norm2"))
-    dots = (weighted.select(F.col("id").alias("a"), "term",
-                            F.col("w").alias("wa"))
-            .join(weighted.select(F.col("id").alias("b"), "term",
-                                  F.col("w").alias("wb")), "term")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("common_terms"),
-                 F.sum(F.col("wa").cast("decimal(38,0)")
-                       * F.col("wb")).alias("dot")))
-    return (dots
-            .join(norms.select(F.col("id").alias("a"),
-                               F.col("norm2").alias("na")), "a")
-            .join(norms.select(F.col("id").alias("b"),
-                               F.col("norm2").alias("nb")), "b")
-            # exact overflow-free ppm (matches the Scala operator): the
-            # x1e6 is split into two x1e3 steps around the integral
-            # division — floor(A*1e6/B) = q1*1e3 + floor(r1*1e3/B) with
-            # q1 = A*1e3 div B, r1 = A*1e3 mod B; peak intermediate is
-            # B*1e3 (A <= B by Cauchy-Schwarz), never near DECIMAL(38,0)
-            .withColumn("cos2_ppm", F.expr(
-                "cast((dot * dot * 1000 div (na * nb)) * 1000"
-                " + ((dot * dot * 1000) % (na * nb)) * 1000 div (na * nb)"
-                " as long)"))
-            .where(F.col("cos2_ppm") >= F.lit(tp * tp))
-            .select("a", "b", "common_terms", "cos2_ppm"))
+    """Sparse tf-idf cosine similarity join: centi-nat integer idf weights
+    (round(100*ln(N/df))), inverted-index candidates with the df >
+    ``df_cap`` hub guard, exact integer dots/norms in DECIMAL(38,0), cos^2
+    in ppm thresholded at ``threshold_permille``^2. Scala
+    ``Dedup.cosineSimJoin``."""
+    if not 1 <= threshold_permille <= 1000:
+        raise ValueError("threshold_permille must be in [1,1000], "
+                         f"got {threshold_permille}")
+    return _wrap(df, _pl().Dedup.cosineSimJoin(
+        df._jdf, id_col, text_col, int(threshold_permille), int(df_cap)))
 
 
 def blocklist_hits(df, id_col, text_col, patterns):
-    """Multi-pattern blocklist scan — Python mirror of the Scala
-    ``Blocklist.hits``: one Aho-Corasick pass per row via the
+    """Multi-pattern blocklist scan: one Aho-Corasick pass per row via the
     registered ``pl_multi_match_counts`` SQL function (counts ALL
-    overlapping occurrences), exploded to (id, pattern, n_hits > 0).
-    """
+    overlapping occurrences), exploded to (id, pattern, n_hits > 0). Scala
+    ``Blocklist.hits``."""
     if not patterns:
         raise ValueError("patterns must not be empty")
-    lits = ", ".join("'" + p.replace("'", "''") + "'" for p in patterns)
-    counts = F.expr(f"pl_multi_match_counts({text_col}, array({lits}))")
-    pats = F.array(*[F.lit(p) for p in patterns])
-    return (df.select(F.col(id_col).alias("id"),
-                      F.posexplode(counts).alias("__pi", "n_hits"))
-            .where(F.col("n_hits") > 0)
-            .select("id", F.element_at(pats, F.col("__pi") + 1)
-                    .alias("pattern"), "n_hits"))
+    return _wrap(df, _pl().Blocklist.hits(
+        df._jdf, id_col, text_col, _seq(patterns)))
 
 
 def t_closeness(df, quasi_cols, sensitive_col, t_permille):
-    """t-closeness audit — Python mirror of the Scala
-    ``KAnonymity.tCloseness``: integer EMD (mean absolute cumulative
-    gap over the ordered sensitive values) of each quasi combo's
-    distribution vs the corpus, via a dense combo x value grid
-    (broadcast crossJoin of two metadata-sized tables), cumulative
-    windows over grid rows, DECIMAL(38,0) clearing.
-
-    NULL contract (matches the Scala operator): rows with a NULL
-    sensitive or quasi value are EXCLUDED up front — the grid join is
-    null-unsafe and engines disagree on NULL ordering in the cumulative
-    window; COALESCE a sentinel upstream if NULLs are data.
-    """
-    tp = int(t_permille)
-    if not 1 <= tp <= 1000:
-        raise ValueError(f"t_permille must be in [1,1000], got {tp}")
-    nn = None
-    for c in list(quasi_cols) + [sensitive_col]:
-        cond = F.col(c).isNotNull()
-        nn = cond if nn is None else (nn & cond)
-    df = df.where(nn)
-    combo = [F.col(c) for c in quasi_cols]
-    cell = (df.groupBy(*(combo + [F.col(sensitive_col).alias("__v")]))
-            .agg(F.count(F.lit(1)).alias("__p")))
-    glob = (df.groupBy(F.col(sensitive_col).alias("__v"))
-            .agg(F.count(F.lit(1)).alias("__q")))
-    combos = cell.groupBy(*combo).agg(F.sum("__p").alias("n"))
-    grid = (F.broadcast(combos).crossJoin(F.broadcast(glob))
-            .join(cell, list(quasi_cols) + ["__v"], "left")
-            .na.fill(0, ["__p"]))
-    w = Window.partitionBy(*quasi_cols).orderBy("__v")
-    totals = F.broadcast(glob.agg(F.sum("__q").alias("__n"),
-                                  F.count(F.lit(1)).alias("__k")))
-    return (grid
-            .withColumn("__cp", F.sum("__p").over(w))
-            .withColumn("__cq", F.sum("__q").over(w))
-            .crossJoin(totals)
-            .where(F.col("__k") >= 2)
-            .groupBy(*(combo + [F.col("n"), F.col("__n"), F.col("__k")]))
-            .agg(F.sum(F.abs(F.col("__cp").cast("decimal(38,0)")
-                             * F.col("__n")
-                             - F.col("__cq").cast("decimal(38,0)")
-                             * F.col("n"))).alias("__d"))
-            .withColumn("emd_permille", F.expr(
-                "cast(__d * 1000 div (cast(n as decimal(38,0)) * __n "
-                "* (__k - 1)) as long)"))
-            .withColumn("is_risky", F.col("emd_permille") > tp)
-            .select(*(list(quasi_cols) + ["n", "emd_permille", "is_risky"])))
+    """t-closeness audit: integer EMD (mean absolute cumulative gap over
+    the ordered sensitive values) of each quasi combo's distribution vs the
+    corpus, via a dense combo x value grid (broadcast crossJoin of two
+    metadata-sized tables), cumulative windows over grid rows,
+    DECIMAL(38,0) clearing. Scala ``KAnonymity.tCloseness``."""
+    if not 1 <= t_permille <= 1000:
+        raise ValueError(f"t_permille must be in [1,1000], got {t_permille}")
+    return _wrap(df, _pl().KAnonymity.tCloseness(
+        df._jdf, _seq(quasi_cols), sensitive_col, int(t_permille)))
 
 
 def flesch_readability(df, id_col, text_col):
-    """Flesch reading ease — Python mirror of the Scala
-    ``Readability.flesch``: sentence-per-line text, vowel-group
-    syllables (floor 1 per word), milli-point score rounded once;
-    NULL for wordless rows. Pure per-row built-ins, zero shuffles.
-    """
-    words = F.filter(
-        F.split(F.regexp_replace(F.col("__text"), "\n", " "), " "),
-        lambda w: w != "")
-    syl = F.expr(
-        "aggregate(filter(split(regexp_replace(__text, '\\n', ' '), ' '), "
-        "w -> w != ''), 0L, (acc, w) -> acc + greatest(1L, "
-        "size(regexp_extract_all(lower(w), '[aeiouy]+', 0))))")
-    sentences = F.size(F.filter(F.split(F.col("__text"), "\n"),
-                                lambda l: F.trim(l) != ""))
-    return (df.select(F.col(id_col).alias("id"),
-                      F.col(text_col).alias("__text"))
-            .select(F.col("id"),
-                    F.greatest(sentences.cast("long"),
-                               F.lit(1)).alias("n_sentences"),
-                    F.size(words).cast("long").alias("n_words"),
-                    syl.alias("n_syllables"))
-            .select("id", "n_sentences", "n_words", "n_syllables",
-                    F.when(F.col("n_words") > 0,
-                           F.round(F.lit(206835.0)
-                                   - F.lit(1015.0) * F.col("n_words")
-                                   / F.col("n_sentences")
-                                   - F.lit(84600.0) * F.col("n_syllables")
-                                   / F.col("n_words")).cast("long"))
-                    .alias("flesch_milli")))
+    """Flesch reading ease: sentence-per-line text, vowel-group syllables
+    (floor 1 per word), milli-point score rounded once; NULL for wordless
+    rows. Pure per-row built-ins, zero shuffles. Scala
+    ``Readability.flesch``."""
+    return _wrap(df, _pl().Readability.flesch(df._jdf, id_col, text_col))
 
 
 def bpe_learn(df, text_col, rounds):
-    """BPE merge learning — Python mirror of the Scala ``Bpe.learn``:
-    per round, within-word adjacent-unit pair counts, a deterministic
-    (cnt DESC, pair) one-row argmax, and the delimiter-replace rewrite
-    ('¦x¦¦y¦' -> '¦xy¦') whose left-to-right non-overlap IS the BPE
-    greedy scan. Returns one (round, pair, merged, cnt) row per round
-    (rounds past pair exhaustion emit nothing).
-    """
+    """BPE merge learning: per round, within-word adjacent-unit pair
+    counts, a deterministic (cnt DESC, pair) one-row argmax, and the
+    delimiter-replace rewrite ('¦x¦¦y¦' -> '¦xy¦') whose left-to-right non-
+    overlap IS the BPE greedy scan. Returns one (round, pair, merged, cnt)
+    row per round (rounds past pair exhaustion emit nothing). Scala
+    ``Bpe.learn``."""
     if not 1 <= rounds <= 16:
         raise ValueError(f"rounds must be in [1,16], got {rounds}")
-    d = "¦"
-    work = df.select(F.transform(
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != ""),
-        lambda tok: F.concat(F.lit(d + d),
-                             F.regexp_replace(tok, "(?s)(.)", "$1" + d + d)))
-        .alias("work"))
-    out = None
-    for r in range(1, rounds + 1):
-        units = F.filter(F.split(F.col("w"), d + "+"), lambda u: u != "")
-        pairs = (work.select(F.explode("work").alias("w"))
-                 .select(F.explode(F.expr(
-                     f"pl_ngrams(filter(split(w, '{d}+'), u -> u != ''), 2)"))
-                     .alias("pair"))
-                 .groupBy("pair").agg(F.count(F.lit(1)).alias("cnt")))
-        best = (pairs.orderBy(F.desc("cnt"), F.asc("pair")).limit(1)
-                .select(F.lit(r).alias("round"), "pair", "cnt",
-                        F.expr("split(pair, ' ')[0]").alias("__x"),
-                        F.expr("split(pair, ' ')[1]").alias("__y"))
-                .localCheckpoint(True))
-        row = best.select("round", "pair",
-                          F.concat("__x", "__y").alias("merged"), "cnt")
-        out = row if out is None else out.unionByName(row)
-        work = (work.crossJoin(F.broadcast(best.select("__x", "__y")))
-                .select(F.transform(F.col("work"), lambda w: F.replace(
-                    w,
-                    F.concat(F.lit(d), F.col("__x"), F.lit(d + d),
-                             F.col("__y"), F.lit(d)),
-                    F.concat(F.lit(d), F.col("__x"), F.col("__y"),
-                             F.lit(d)))).alias("work")))
-    return out
+    return _wrap(df, _pl().Bpe.learn(df._jdf, text_col, int(rounds)))
 
 
 def hard_negatives_with_cells(df, id_col, vec_col, label_col, cell_col,
                               max_cell_mates=4096):
-    """Contrastive hard-negative mining — Python mirror of the Scala
-    ``Similarity.hardNegatives`` over a PRE-ASSIGNED cell column (the
-    deterministic IVF fit is a Scala-side expression; assign cells with
-    the Scala operator or any bucketing first): one cell
+    """Contrastive hard-negative mining over a PRE-ASSIGNED cell column,
+    with the pair logic of ``Similarity.hardNegatives`` (which fits its
+    own IVF cells, so it cannot take ``cell_col``): one cell
     equi-self-join, cosine refine, per-anchor lexicographic struct max
     (sim DESC, id ASC ties). ``max_cell_mates`` is the hub guard: the
     neighbor side is capped to the max_cell_mates LOWEST-ID members of
     each cell, bounding pairs at O(N * max_cell_mates) on skewed cells;
     anchors are never dropped, only the mates they compare against."""
-    from pyspark.sql import Window as _W
     LMAX = (1 << 63) - 1
     a = df.select(F.col(id_col).alias("query_id"),
                   F.col(label_col).alias("label"),
@@ -2102,7 +846,7 @@ def hard_negatives_with_cells(df, id_col, vec_col, label_col, cell_col,
                    F.col(vec_col).cast("array<double>").alias("b_vec"),
                    F.col(cell_col).alias("cell"))
          .withColumn("__r", F.row_number().over(
-             _W.partitionBy("cell").orderBy("neighbor_id")))
+             Window.partitionBy("cell").orderBy("neighbor_id")))
          .where(F.col("__r") <= max_cell_mates).drop("__r"))
     dot = F.expr("aggregate(zip_with(a_vec, b_vec, (x, y) -> x * y), "
                  "0D, (acc, v) -> acc + v)")
@@ -2132,3278 +876,752 @@ def hard_negatives_with_cells(df, id_col, vec_col, label_col, cell_col,
 
 
 def ngram_novelty(df, id_col, text_col, n=3):
-    """Per-doc n-gram novelty — Python mirror of the Scala
-    ``Stats.ngramNovelty``: gram origin = min doc id, per-doc novel
-    fraction in truncating permille; sub-n docs contribute one
-    truncated whole-doc gram (the pl_distinct_ngrams convention).
-    """
+    """Per-doc n-gram novelty: gram origin = min doc id, per-doc novel
+    fraction in truncating permille; sub-n docs contribute one truncated
+    whole-doc gram (the pl_distinct_ngrams convention). Scala
+    ``Stats.ngramNovelty``."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    grams = (df.select(F.col(id_col).alias("id"),
-                       F.explode(F.expr(
-                           f"pl_distinct_ngrams(split({text_col}, ' '), {n})"))
-                       .alias("gram"))
-             .where(F.col("gram") != ""))
-    origin = grams.groupBy("gram").agg(F.min("id").alias("__first"))
-    return (grams.join(origin, "gram")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_grams"),
-                 F.sum(F.when(F.col("id") == F.col("__first"), 1)
-                       .otherwise(0)).alias("n_novel"))
-            .withColumn("novelty_permille",
-                        F.expr("n_novel * 1000 div n_grams")))
+    return _wrap(df, _pl().Stats.ngramNovelty(
+        df._jdf, id_col, text_col, int(n)))
 
 
 def zipf_fit(df, text_col, top_r=1000):
-    """Zipf rank-frequency fit — Python mirror of the Scala
-    ``Stats.zipfFit``: integer least squares on once-rounded micro-nat
-    (ln rank, ln count) over the top_r most frequent terms (count DESC,
-    term ASC ties). One map-side-combinable token count, a distributed
-    TakeOrdered top_r cut, one single-row moment aggregate. Returns one
-    row: n_terms, slope_micro, intercept_micro (organic text sits near
-    slope_micro ~ -1e6).
-    """
+    """Zipf rank-frequency fit: integer least squares on once-rounded
+    micro-nat (ln rank, ln count) over the top_r most frequent terms (count
+    DESC, term ASC ties). One map-side-combinable token count, a
+    distributed TakeOrdered top_r cut, one single-row moment aggregate.
+    Returns one row: n_terms, slope_micro, intercept_micro (organic text
+    sits near slope_micro ~ -1e6). Scala ``Stats.zipfFit``."""
     if top_r < 2:
         raise ValueError(f"top_r must be >= 2, got {top_r}")
-    counts = (df.select(F.explode(F.split(F.col(text_col), " "))
-                        .alias("term"))
-              .where(F.col("term") != "")
-              .groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-              .orderBy(F.desc("cnt"), F.col("term")).limit(top_r))
-    w = Window.orderBy(F.desc("cnt"), F.col("term"))
-    return (counts
-            .withColumn("__r", F.row_number().over(w))
-            .select(F.round(F.lit(1e6) * F.log(F.col("__r").cast("double")))
-                    .cast("long").alias("__x"),
-                    F.round(F.lit(1e6) * F.log(F.col("cnt").cast("double")))
-                    .cast("long").alias("__y"))
-            .agg(F.count(F.lit(1)).alias("n_terms"),
-                 F.sum(F.col("__x").cast("decimal(38,0)")).alias("__sx"),
-                 F.sum(F.col("__y").cast("decimal(38,0)")).alias("__sy"),
-                 F.sum(F.col("__x").cast("decimal(38,0)") * F.col("__y"))
-                 .alias("__sxy"),
-                 F.sum(F.col("__x").cast("decimal(38,0)") * F.col("__x"))
-                 .alias("__sxx"))
-            .withColumn("__den", F.expr("n_terms * __sxx - __sx * __sx"))
-            .withColumn("slope_micro", F.expr(
-                "cast(if(__den = 0, null, (n_terms * __sxy - __sx * __sy)"
-                " * 1000000 div __den) as long)"))
-            .withColumn("intercept_micro", F.expr(
-                "cast(if(__den = 0, null, (__sy * 1000000 - slope_micro"
-                " * __sx) div (n_terms * 1000000)) as long)"))
-            .select("n_terms", "slope_micro", "intercept_micro"))
+    return _wrap(df, _pl().Stats.zipfFit(df._jdf, text_col, int(top_r)))
 
 
 def chi_square_2x2(df, keys, group_col, success_col):
-    """Chi-square 2x2 independence test per key — Python mirror of the
-    Scala ``Stats.chiSquare2x2``: four conditional counts in ONE
-    map-side-combinable groupBy, chi2 in rounded-once micro-points
-    (the trend recipe), significant_95 at the chi2(1) 5% critical
-    value; NULL on degenerate margins.
-    """
-    g = F.col(group_col).cast("boolean")
-    s = F.col(success_col).cast("boolean")
-    return (df.groupBy(*[F.col(k) for k in keys])
-            .agg(F.count(F.when(~g & s, 1)).alias("a"),
-                 F.count(F.when(~g & ~s, 1)).alias("b"),
-                 F.count(F.when(g & s, 1)).alias("c"),
-                 F.count(F.when(g & ~s, 1)).alias("d"))
-            .withColumn("chi2_micro", F.expr(
-                "cast(case when (a + b) = 0 or (c + d) = 0"
-                " or (a + c) = 0 or (b + d) = 0 then null"
-                " else round(1e6 * cast(a + b + c + d as double)"
-                " * cast(a * d - b * c as double)"
-                " * cast(a * d - b * c as double)"
-                " / (cast(a + b as double) * cast(c + d as double)"
-                " * cast(a + c as double) * cast(b + d as double)))"
-                " end as long)"))
-            .withColumn("significant_95",
-                        F.when(F.col("chi2_micro").isNull(), F.lit(None))
-                        .otherwise(F.col("chi2_micro") > 3841459)))
-
-
-def _cap_pooled_distinct(joined, op, max_distinct):
-    """Fail-loud cap on the pooled distinct-value table of the batch
-    two-sample family -- mirror of the Scala
-    ``Stats.capPooledDistinct``: the cumulative windows downstream run
-    single-partition over the pooled distinct values, so an
-    unquantized continuous metric is a scale-killer; the guard rides
-    the same empty partitioning (no extra shuffle) and is woven into
-    __ca so pruning cannot drop it."""
-    if not (2 <= max_distinct <= (1 << 24)):
-        raise ValueError("max_distinct must be in [2, %d], got %d"
-                         % (1 << 24, max_distinct))
-    w_all = Window.partitionBy()
-    return (joined
-            .withColumn("__ndv", F.count(F.lit(1)).over(w_all))
-            .withColumn("__ca", F.when(
-                F.col("__ndv") <= max_distinct, F.col("__ca"))
-                .otherwise(F.raise_error(F.concat(
-                    F.lit("%s: pooled distinct-value table has " % op),
-                    F.col("__ndv").cast("string"),
-                    F.lit(" values, exceeds max_distinct=%d -- quantize"
-                          " the metric upstream (quantize_step) or"
-                          " raise max_distinct deliberately"
-                          % max_distinct)))))
-            .drop("__ndv"))
+    """Chi-square 2x2 independence test per key: four conditional counts in
+    ONE map-side-combinable groupBy, chi2 in rounded-once micro-points (the
+    trend recipe), significant_95 at the chi2(1) 5% critical value; NULL on
+    degenerate margins. Scala ``Stats.chiSquare2x2``."""
+    return _wrap(df, _pl().Stats.chiSquare2x2(
+        df._jdf, _seq(keys), group_col, success_col))
 
 
 def ks_statistic(ref, cur, value_col, max_distinct=65536):
-    """Two-sample Kolmogorov-Smirnov statistic — Python mirror of the
-    Scala ``Stats.ksStatistic``: exact integer D in ppm over the
-    distinct-value table (one groupBy per side, cumulative windows
-    over distinct values only), smallest-value argmax tie-break.
-    NULL values are excluded from both sides by contract (no position
-    on the value axis; engine-ambiguous NULL window ordering).
-    """
-    va = (ref.select(F.col(value_col).cast("long").alias("__v"))
-          .where(F.col("__v").isNotNull())
-          .groupBy("__v").agg(F.count(F.lit(1)).alias("__ca")))
-    vb = (cur.select(F.col(value_col).cast("long").alias("__v"))
-          .where(F.col("__v").isNotNull())
-          .groupBy("__v").agg(F.count(F.lit(1)).alias("__cb")))
-    w = Window.orderBy("__v")
-    joined = (_cap_pooled_distinct(
-        va.join(vb, ["__v"], "full_outer").na.fill(0, ["__ca", "__cb"]),
-        "ks_statistic", max_distinct)
-        .withColumn("__cuma", F.sum("__ca").over(w))
-        .withColumn("__cumb", F.sum("__cb").over(w)))
-    totals = F.broadcast(joined.agg(F.sum("__ca").alias("__na"),
-                                    F.sum("__cb").alias("__nb")))
-    return (joined.crossJoin(totals)
-            .withColumn("__gap", F.abs(
-                F.col("__cuma").cast("decimal(38,0)") * F.col("__nb")
-                - F.col("__cumb").cast("decimal(38,0)") * F.col("__na")))
-            .agg(F.max("__na").alias("n_ref"), F.max("__nb").alias("n_cur"),
-                 F.max(F.struct(F.col("__gap"),
-                                (-F.col("__v").cast("decimal(38,0)"))
-                                .alias("__nv"),
-                                F.col("__v").alias("__vv"))).alias("__m"))
-            .select("n_ref", "n_cur",
-                    F.expr("cast(__m.__gap * 1000000 div"
-                           " (cast(n_ref as decimal(38,0)) * n_cur) as long)")
-                    .alias("d_ppm"),
-                    F.col("__m.__vv").alias("at_value")))
+    """Two-sample Kolmogorov-Smirnov statistic: exact integer D in ppm over
+    the distinct-value table (one groupBy per side, cumulative windows over
+    distinct values only), smallest-value argmax tie-break. NULL values are
+    excluded from both sides by contract (no position on the value axis;
+    engine-ambiguous NULL window ordering). Scala ``Stats.ksStatistic``."""
+    _check_max_distinct(max_distinct)
+    return _wrap(ref, _pl().Stats.ksStatistic(
+        ref._jdf, cur._jdf, value_col, int(max_distinct)))
 
 
 def mrr_k(results, truth, k):
-    """MRR@k — Python mirror of the Scala ``Similarity.mrrK``: per
-    query, the first result rank <= k whose neighbor is in the truth
-    set; rr_ppm = 1e6 div rank (truncating), 0 on miss.
-    """
-    t = (truth.select("query_id", "neighbor_id")
-         .withColumn("__rel", F.lit(1)))
-    return (results.where(F.col("rank") <= k)
-            .join(t, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(F.min(F.when(F.col("__rel").isNotNull(), F.col("rank")))
-                 .cast("long").alias("first_rel_rank"))
-            .withColumn("rr_ppm", F.expr(
-                "cast(coalesce(1000000 div first_rel_rank, 0) as long)")))
+    """MRR@k: per query, the first result rank <= k whose neighbor is in
+    the truth set; rr_ppm = 1e6 div rank (truncating), 0 on miss. Scala
+    ``Similarity.mrrK``."""
+    return _wrap(results, _pl().Similarity.mrrK(
+        results._jdf, truth._jdf, int(k)))
 
 
 def conformal_quantile(df, score_col, alpha_permille):
-    """Split-conformal calibration quantile — Python mirror of the
-    Scala ``Stats.conformalQuantile``: qhat = the k-th smallest
-    calibration score with k = ceil((n+1)(1-alpha)); NULL row when
-    k > n (too few calibration points). Distinct-value cumulative
-    window, one one-row aggregate. NULL scores are excluded by
-    contract (the ks_statistic NULL rule).
-    """
-    ap = int(alpha_permille)
-    if not 1 <= ap <= 999:
-        raise ValueError(f"alpha_permille must be in [1,999], got {ap}")
-    counts = (df.select(F.col(score_col).cast("long").alias("__v"))
-              .where(F.col("__v").isNotNull())
-              .groupBy("__v").agg(F.count(F.lit(1)).alias("__c")))
-    w = Window.orderBy("__v")
-    return (counts
-            .withColumn("__cum", F.sum("__c").over(w))
-            .crossJoin(F.broadcast(counts.agg(F.sum("__c").alias("__n"))))
-            .withColumn("__k", F.expr(
-                f"((__n + 1) * {1000 - ap} + 999) div 1000"))
-            .where(F.col("__cum") >= F.col("__k"))
-            .agg(F.max("__n").alias("n"), F.max("__k").alias("k"),
-                 F.min("__v").alias("qhat")))
+    """Split-conformal calibration quantile: qhat = the k-th smallest
+    calibration score with k = ceil((n+1)(1-alpha)); NULL row when k > n
+    (too few calibration points). Distinct-value cumulative window, one
+    one-row aggregate. NULL scores are excluded by contract (the
+    ks_statistic NULL rule). Scala ``Stats.conformalQuantile``."""
+    if not 1 <= alpha_permille <= 999:
+        raise ValueError(
+            f"alpha_permille must be in [1,999], got {alpha_permille}")
+    return _wrap(df, _pl().Stats.conformalQuantile(
+        df._jdf, score_col, int(alpha_permille)))
 
 
 def bm25(df, id_col, text_col, query_terms, k1_milli=1200,
          b_permille=750, k=10):
-    """Okapi BM25 top-k retrieval scoring — Python mirror of the Scala
-    ``Dedup.bm25``: Lucene (1 + ...) idf, per-(doc, term) contribution
-    rounded once to micro-points. Tokens filter to the query terms
-    BEFORE any shuffle; df and the one-row totals broadcast.
-    """
+    """Okapi BM25 top-k retrieval scoring: Lucene (1 + ...) idf, per-(doc,
+    term) contribution rounded once to micro-points. Tokens filter to the
+    query terms BEFORE any shuffle; df and the one-row totals broadcast.
+    Scala ``Dedup.bm25``."""
     if not query_terms:
         raise ValueError("query_terms required")
-    toks = F.split(F.col(text_col), " ")
-    base = (df.select(F.col(id_col).alias("id"),
-                      F.size(F.filter(toks, lambda t: t != ""))
-                      .cast("long").alias("__dl"),
-                      F.explode(toks).alias("__t"))
-            .where(F.col("__t").isin(list(query_terms))))
-    tf = (base.groupBy("id", "__t")
-          .agg(F.count(F.lit(1)).alias("__tf"), F.max("__dl").alias("__dl")))
-    dfc = (base.select("id", "__t").distinct()
-           .groupBy("__t").agg(F.count(F.lit(1)).alias("__df")))
-    totals = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.sum(F.size(F.filter(toks, lambda t: t != "")).cast("long"))
-        .alias("__sumlen"))
-    k1 = F.lit(int(k1_milli)).cast("double") / F.lit(1000.0)
-    b = F.lit(int(b_permille)).cast("double") / F.lit(1000.0)
-    avgdl = F.col("__sumlen").cast("double") / F.col("__n").cast("double")
-    contrib = F.round(F.lit(1e6) *
-                      F.log(F.lit(1.0) +
-                            (F.col("__n").cast("double") - F.col("__df") +
-                             F.lit(0.5)) /
-                            (F.col("__df").cast("double") + F.lit(0.5))) *
-                      (F.col("__tf").cast("double") * (k1 + F.lit(1.0))) /
-                      (F.col("__tf").cast("double") +
-                       k1 * (F.lit(1.0) - b +
-                             b * (F.col("__dl").cast("double") / avgdl)))
-                      ).cast("long")
-    scored = (tf.join(F.broadcast(dfc), "__t")
-              .crossJoin(F.broadcast(totals))
-              .select(F.col("id"), contrib.alias("__c"))
-              .groupBy("id")
-              .agg(F.count(F.lit(1)).alias("n_hit"),
-                   F.sum("__c").alias("score_micro"))
-              .orderBy(F.col("score_micro").desc(), F.col("id")).limit(k))
-    w = Window.orderBy(F.col("score_micro").desc(), F.col("id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .select("id", "n_hit", "score_micro", "rank"))
+    return _wrap(df, _pl().Dedup.bm25(
+        df._jdf, id_col, text_col, _seq(query_terms), int(k1_milli),
+        int(b_permille), int(k)))
 
 
 def token_label_mi(df, id_col, text_col, label_col, k=20):
-    """Token-label mutual information (label-leakage audit) — Python
-    mirror of the Scala ``Stats.tokenLabelMI``: per-token MI against a
-    document label in integer micro-nats (per-cell round-once), dense
-    term x label grid with the broadcast label margins, top-k.
-    """
-    pres = (df.select(F.col(id_col).alias("__id"),
-                      F.col(label_col).alias("__l"),
-                      F.explode(F.split(F.col(text_col), " ")).alias("__t"))
-            .where(F.col("__t") != "").distinct())
-    cells = pres.groupBy("__t", "__l").agg(F.count(F.lit(1)).alias("__c1"))
-    term_margin = cells.groupBy("__t").agg(F.sum("__c1").alias("__nt"))
-    label_margin = (df.groupBy(F.col(label_col).alias("__l"))
-                    .agg(F.count(F.lit(1)).alias("__nl")))
-    total = df.agg(F.count(F.lit(1)).alias("__n"))
-    grid = (term_margin.crossJoin(F.broadcast(label_margin))
-            .join(cells, ["__t", "__l"], "left").na.fill(0, ["__c1"])
-            .crossJoin(F.broadcast(total)))
-
-    def contrib(c, row_margin):
-        return (F.when(c == 0, F.lit(0).cast("long"))
-                .otherwise(F.round(F.lit(1e6) *
-                                   (c.cast("double") / F.col("__n")) *
-                                   F.log(c.cast("double") * F.col("__n") /
-                                         (row_margin.cast("double") *
-                                          F.col("__nl")))).cast("long")))
-
-    per_cell = grid.select(
-        "__t", "__nt",
-        (contrib(F.col("__c1"), F.col("__nt")) +
-         contrib(F.col("__nl") - F.col("__c1"),
-                 F.col("__n") - F.col("__nt"))).alias("__mi"))
-    top = (per_cell.groupBy("__t", "__nt")
-           .agg(F.sum("__mi").alias("mi_unats"))
-           .orderBy(F.col("mi_unats").desc(), F.col("__t")).limit(k))
-    w = Window.orderBy(F.col("mi_unats").desc(), F.col("__t"))
-    return (top.withColumn("rank", F.row_number().over(w).cast("int"))
-            .select(F.col("__t").alias("term"),
-                    F.col("__nt").alias("n_docs_with"), "mi_unats", "rank"))
-
-
-# Poisson(1) inverse-CDF thresholds on the 63-bit uniform scale —
-# shared verbatim with the Scala Stats.PoissonThresholds and the
-# DuckDB oracle so bootstrap weights replay exactly on any engine.
-POISSON_THRESHOLDS = (
-    3393088950634442752, 6786177901268885504, 8482722376586106880,
-    9048237201691847680, 9189615907968282624, 9217891649223569408,
-    9222604272766116864)
+    """Token-label mutual information (label-leakage audit): per-token MI
+    against a document label in integer micro-nats (per-cell round-once),
+    dense term x label grid with the broadcast label margins, top-k. Scala
+    ``Stats.tokenLabelMI``."""
+    return _wrap(df, _pl().Stats.tokenLabelMI(
+        df._jdf, id_col, text_col, label_col, int(k)))
 
 
 def poisson_bootstrap(df, id_col, value_col, reps=32):
-    """Poisson bootstrap of the mean of a pre-scaled integral metric —
-    Python mirror of the Scala ``Stats.poissonBootstrap``: reps
-    deterministic mix64 replicates, weight 0..7 from the shared
-    Poisson(1) thresholds, one map-side-combined groupBy(rep).
-    """
-    from graft import functions as gf
-    reps = int(reps)
+    """Poisson bootstrap of the mean of a pre-scaled integral metric: reps
+    deterministic mix64 replicates, weight 0..7 from the shared Poisson(1)
+    thresholds, one map-side-combined groupBy(rep). Scala
+    ``Stats.poissonBootstrap``."""
     if not 2 <= reps <= 1024:
         raise ValueError(f"reps must be in [2,1024], got {reps}")
-    # per-replicate golden multiples as PRECOMPUTED signed-64 literals
-    # (ANSI column arithmetic would throw on the wrap), XOR'd in
-    def seed(r):
-        s = ((r + 1) * 11400714819323198485) % (1 << 64)
-        return s - (1 << 64) if s >= (1 << 63) else s
-    rep = F.explode(F.array(*[
-        F.struct(F.lit(r).alias("r"), F.lit(seed(r)).alias("s"))
-        for r in range(reps)])).alias("__rs")
-    h = gf.pl_mix64(F.col(id_col).cast("long").bitwiseXOR(F.col("__rs.s")))
-    u = h.bitwiseAND(F.lit(9223372036854775807))
-    wgt = F.lit(0).cast("long")
-    for t in POISSON_THRESHOLDS:
-        wgt = wgt + F.when(u >= F.lit(t), F.lit(1)).otherwise(F.lit(0))
-    return (df.select(F.col(id_col).cast("long").alias(id_col),
-                      F.col(value_col).cast("long").alias("__v"), rep)
-            .withColumn("rep", F.col("__rs.r"))
-            .withColumn("__w", wgt)
-            .groupBy("rep")
-            .agg(F.sum("__w").alias("n_eff"),
-                 F.sum(F.col("__w") * F.col("__v")).alias("sum_w"))
-            .select(F.col("rep").cast("int").alias("rep"), "n_eff", "sum_w",
-                    (F.col("sum_w").cast("double") / F.col("n_eff"))
-                    .alias("mean")))
+    return _wrap(df, _pl().Stats.poissonBootstrap(
+        df._jdf, id_col, value_col, int(reps)))
 
 
 def token_kl(p, q, text_col, k=20):
-    """Token-distribution KL divergence between two corpus slices —
-    Python mirror of the Scala ``Stats.tokenKL``: add-one-smoothed
-    per-term KL(P||Q) contributions in integer micro-nats over the
-    union vocabulary, top-k most over-represented in P.
-    """
-    def counts(df, name):
-        return (df.select(F.explode(F.split(F.col(text_col), " "))
-                          .alias("term"))
-                .where(F.col("term") != "")
-                .groupBy("term").agg(F.count(F.lit(1)).alias(name)))
-    joined = (counts(p, "p_cnt").join(counts(q, "q_cnt"), ["term"],
-                                      "full_outer")
-              .na.fill(0, ["p_cnt", "q_cnt"]))
-    totals = joined.agg(F.sum("p_cnt").alias("__np"),
-                        F.sum("q_cnt").alias("__nq"),
-                        F.count(F.lit(1)).alias("__v"))
-    contrib = F.round(F.lit(1e6) *
-                      ((F.col("p_cnt") + F.lit(1.0)) /
-                       (F.col("__np") + F.col("__v"))) *
-                      F.log(((F.col("p_cnt") + F.lit(1.0)) /
-                             (F.col("__np") + F.col("__v"))) /
-                            ((F.col("q_cnt") + F.lit(1.0)) /
-                             (F.col("__nq") + F.col("__v"))))).cast("long")
-    top = (joined.crossJoin(F.broadcast(totals))
-           .select("term", "p_cnt", "q_cnt", contrib.alias("kl_unats"))
-           .orderBy(F.col("kl_unats").desc(), F.col("term")).limit(k))
-    w = Window.orderBy(F.col("kl_unats").desc(), F.col("term"))
-    return top.withColumn("rank", F.row_number().over(w).cast("int"))
+    """Token-distribution KL divergence between two corpus slices: add-one-
+    smoothed per-term KL(P||Q) contributions in integer micro-nats over the
+    union vocabulary, top-k most over-represented in P. Scala
+    ``Stats.tokenKL``."""
+    return _wrap(p, _pl().Stats.tokenKL(p._jdf, q._jdf, text_col, int(k)))
 
 
 def source_overlap(df, source_col, text_col):
-    """Pairwise source content Jaccard over 64-bit doc fingerprints —
-    Python mirror of the Scala ``Dedup.sourceOverlap``: distinct
-    (source, fp) before any join, fp-keyed ordered self-join, exact
-    truncating ppm.
-    """
-    from graft import functions as gf
-    fps = (df.select(F.col(source_col).alias("src"),
-                     gf.pl_fingerprint(F.col(text_col)).alias("__fp"))
-           .distinct())
-    sizes = fps.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
-    l = fps.select(F.col("src").alias("src_a"), "__fp")
-    r = fps.select(F.col("src").alias("src_b"), "__fp")
-    return (l.join(r, "__fp").where(F.col("src_a") < F.col("src_b"))
-            .groupBy("src_a", "src_b").agg(F.count(F.lit(1)).alias("inter"))
-            .join(F.broadcast(sizes.select(F.col("src").alias("src_a"),
-                                           F.col("n").alias("n_a"))), "src_a")
-            .join(F.broadcast(sizes.select(F.col("src").alias("src_b"),
-                                           F.col("n").alias("n_b"))), "src_b")
-            .select("src_a", "src_b", "n_a", "n_b", "inter",
-                    F.expr("inter * 1000000 div (n_a + n_b - inter)")
-                    .alias("jaccard_ppm")))
+    """Pairwise source content Jaccard over 64-bit doc fingerprints:
+    distinct (source, fp) before any join, fp-keyed ordered self-join,
+    exact truncating ppm. Scala ``Dedup.sourceOverlap``."""
+    return _wrap(df, _pl().Dedup.sourceOverlap(df._jdf, source_col, text_col))
 
 
 def simpson_reversals(df, stratum_col, group_col, success_col):
-    """Simpson's-paradox screen — Python mirror of the Scala
-    ``Stats.simpsonReversals``: per-stratum 2x2 counts, rational
-    risk-difference signs (divisions cleared), reversal flag vs the
-    pooled direction. Exact integer math throughout.
-    """
-    g = F.col(group_col).cast("boolean")
-    s = F.col(success_col).cast("boolean")
-    strata = df.groupBy(F.col(stratum_col).alias("stratum")).agg(
-        F.count(F.when(g & s, 1)).alias("a"),
-        F.count(F.when(g & ~s, 1)).alias("b"),
-        F.count(F.when(~g & s, 1)).alias("c"),
-        F.count(F.when(~g & ~s, 1)).alias("d"))
-
-    def sig(a, b, c, d):
-        return F.signum(a * (c + d) - c * (a + b)).cast("int")
-
-    pooled = strata.agg(F.sum("a").alias("__pa"), F.sum("b").alias("__pb"),
-                        F.sum("c").alias("__pc"), F.sum("d").alias("__pd"))
-    return (strata.crossJoin(F.broadcast(pooled))
-            .select("stratum", "a", "b", "c", "d",
-                    sig(F.col("a"), F.col("b"), F.col("c"), F.col("d"))
-                    .alias("stratum_sign"),
-                    sig(F.col("__pa"), F.col("__pb"), F.col("__pc"),
-                        F.col("__pd")).alias("pooled_sign"))
-            .withColumn("reverses",
-                        F.col("stratum_sign") * F.col("pooled_sign") == -1))
+    """Simpson's-paradox screen: per-stratum 2x2 counts, rational risk-
+    difference signs (divisions cleared), reversal flag vs the pooled
+    direction. Exact integer math throughout. Scala
+    ``Stats.simpsonReversals``."""
+    return _wrap(df, _pl().Stats.simpsonReversals(
+        df._jdf, stratum_col, group_col, success_col))
 
 
 def gini_concentration(df, key_col):
-    """Gini concentration of rows over a grouping key — Python mirror
-    of the Scala ``Stats.giniConcentration``: exact integer Lorenz
+    """Gini concentration of rows over a grouping key: exact integer Lorenz
     formula over (count, key)-sorted per-key counts, truncating ppm.
-    Moments run in DECIMAL(38,0) — the x1e6-scaled numerator overflows
-    a long at n_keys*total > ~9.2e12; decimals hold to 1e32.
-    """
-    counts = (df.groupBy(F.col(key_col).alias("__k"))
-              .agg(F.count(F.lit(1)).alias("__c")))
-    w = Window.orderBy(F.col("__c"), F.col("__k"))
-    return (counts.withColumn("__i", F.row_number().over(w).cast("long"))
-            .agg(F.count(F.lit(1)).alias("n_keys"),
-                 F.sum("__c").alias("total"),
-                 F.sum(F.col("__i").cast("decimal(38,0)") * F.col("__c"))
-                 .alias("__ic"))
-            .select("n_keys", "total",
-                    F.expr("(2 * __ic - (cast(n_keys as decimal(38,0)) + 1)"
-                           " * total) * 1000000"
-                           " div (cast(n_keys as decimal(38,0)) * total)")
-                    .alias("gini_ppm")))
+    Moments run in DECIMAL(38,0) — the x1e6-scaled numerator overflows a
+    long at n_keys*total > ~9.2e12; decimals hold to 1e32. Scala
+    ``Stats.giniConcentration``."""
+    return _wrap(df, _pl().Stats.giniConcentration(df._jdf, key_col))
 
 
 def cmh_test(df, stratum_col, group_col, success_col):
-    """Cochran-Mantel-Haenszel pooled 2x2 chi-square across strata —
-    Python mirror of the Scala ``Stats.cmhTest``: per-stratum E/V in
-    round-once micro-points, exact long sums, one double division;
-    strata with n < 2 contribute nothing.
-    """
-    g = F.col(group_col).cast("boolean")
-    s = F.col(success_col).cast("boolean")
-    strata = (df.groupBy(F.col(stratum_col).alias("__st")).agg(
-        F.count(F.when(g & s, 1)).alias("a"),
-        F.count(F.when(g & ~s, 1)).alias("b"),
-        F.count(F.when(~g & s, 1)).alias("c"),
-        F.count(F.when(~g & ~s, 1)).alias("d"))
-        .withColumn("n", F.col("a") + F.col("b") + F.col("c") + F.col("d")))
-    num_i = (F.when(F.col("n") < 2, F.lit(0).cast("long"))
-             .otherwise(F.round(F.lit(1e6) * (
-                 F.col("a") - (F.col("a") + F.col("b")).cast("double") *
-                 (F.col("a") + F.col("c")) / F.col("n"))).cast("long")))
-    den_i = (F.when(F.col("n") < 2, F.lit(0).cast("long"))
-             .otherwise(F.round(F.lit(1e6) * (
-                 (F.col("a") + F.col("b")).cast("double") *
-                 (F.col("c") + F.col("d")) * (F.col("a") + F.col("c")) *
-                 (F.col("b") + F.col("d"))) /
-                 (F.col("n").cast("double") * F.col("n") *
-                  (F.col("n") - F.lit(1)))).cast("long")))
-    chi2 = (F.when(F.col("den_micro") == 0, F.lit(None).cast("long"))
-            .otherwise(F.round(F.col("num_micro").cast("double") *
-                               F.col("num_micro") / F.col("den_micro"))
-                       .cast("long")))
-    return (strata.agg(F.count(F.lit(1)).alias("n_strata"),
-                       F.sum(num_i).alias("num_micro"),
-                       F.sum(den_i).alias("den_micro"))
-            .select("n_strata", "num_micro", "den_micro",
-                    chi2.alias("chi2_micro"))
-            .withColumn("significant_95",
-                        F.when(F.col("chi2_micro").isNull(),
-                               F.lit(None).cast("boolean"))
-                        .otherwise(F.col("chi2_micro") > 3841459)))
+    """Cochran-Mantel-Haenszel pooled 2x2 chi-square across strata: per-
+    stratum E/V in round-once micro-points, exact long sums, one double
+    division; strata with n < 2 contribute nothing. Scala
+    ``Stats.cmhTest``."""
+    return _wrap(df, _pl().Stats.cmhTest(
+        df._jdf, stratum_col, group_col, success_col))
 
 
 def ewma_smooth(df, key_col, order_col, value_col, lags=8):
-    """Truncated half-decay EWMA in exact integer arithmetic — Python
-    mirror of the Scala ``Temporal.ewmaSmooth``: weight 2^(L-1-k) on
-    lag k over one per-key window; absent lags leave both sums.
-    """
-    lags = int(lags)
+    """Truncated half-decay EWMA in exact integer arithmetic: weight
+    2^(L-1-k) on lag k over one per-key window; absent lags leave both
+    sums. Scala ``Temporal.ewmaSmooth``."""
     if not 1 <= lags <= 16:
         raise ValueError(f"lags must be in [1,16], got {lags}")
-    w = Window.partitionBy(F.col(key_col)).orderBy(F.col(order_col))
-    v = F.col(value_col).cast("long")
-    num = F.lit(0).cast("long")
-    den = F.lit(0).cast("long")
-    for k in range(lags):
-        wt = 1 << (lags - 1 - k)
-        l = F.lag(v, k).over(w)
-        num = num + F.when(l.isNotNull(), l * F.lit(wt)).otherwise(0)
-        den = den + F.when(l.isNotNull(), F.lit(wt)).otherwise(0)
-    return (df.withColumn("__graft_num", num)
-            .withColumn("__graft_den", den)
-            .withColumn("ewma_milli",
-                        F.expr("(1000 * __graft_num) div __graft_den"))
-            .drop("__graft_num", "__graft_den"))
+    return _wrap(df, _pl().Temporal.ewmaSmooth(
+        df._jdf, key_col, order_col, value_col, int(lags)))
 
 
 def rbo_topk(a, b, k):
-    """Rank-biased overlap at p=1/2 — Python mirror of the Scala
-    ``Similarity.rboTopK``: exact 2^-d depth weights, overlap via
-    max(rank_A, rank_B) <= d against a broadcast k-row depth table;
-    queries sharing nothing keep a 0 row.
-    """
-    k = int(k)
+    """Rank-biased overlap at p=1/2: exact 2^-d depth weights, overlap via
+    max(rank_A, rank_B) <= d against a broadcast k-row depth table; queries
+    sharing nothing keep a 0 row. Scala ``Similarity.rboTopK``."""
     if not 1 <= k <= 62:
         raise ValueError(f"k must be in [1,62], got {k}")
-    ar = (a.where(F.col("rank") <= k)
-          .select("query_id", "neighbor_id",
-                  F.col("rank").cast("long").alias("__ra")))
-    br = (b.where(F.col("rank") <= k)
-          .select("query_id", "neighbor_id",
-                  F.col("rank").cast("long").alias("__rb")))
-    common = (ar.join(br, ["query_id", "neighbor_id"])
-              .select("query_id",
-                      F.greatest("__ra", "__rb").alias("__m")))
-    depths = a.sparkSession.createDataFrame(
-        [(d,) for d in range(1, k + 1)], "__d long")
-    per_query = (common.join(F.broadcast(depths),
-                             F.col("__m") <= F.col("__d"))
-                 .groupBy("query_id", "__d")
-                 .agg(F.count(F.lit(1)).alias("__x"))
-                 .select("query_id", F.expr(
-                     "__x * 1000000 div (__d * shiftleft(cast(1 as bigint),"
-                     " cast(__d as int)))").alias("__contrib"))
-                 .groupBy("query_id")
-                 .agg(F.sum("__contrib").alias("rbo_ppm")))
-    n_common = common.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_common"))
-    return (a.select("query_id").distinct()
-            .join(n_common, ["query_id"], "left")
-            .join(per_query, ["query_id"], "left")
-            .na.fill(0, ["n_common", "rbo_ppm"]))
+    return _wrap(a, _pl().Similarity.rboTopK(a._jdf, b._jdf, int(k)))
 
 
 def neyman_sample(df, id_col, src_col, metric_col, budget):
-    """Neyman-allocated stratified sample — Python mirror of the Scala
-    ``Mixture.neymanSample``: allocation min(n_h, budget*w_h div sum w)
-    with w_h = round(sqrt(n*ssq - s^2)) (= N_h*sigma_h, engine-exact by
-    IEEE sqrt), rows taken per stratum in mix64(id) order. The take
-    here is the naive per-stratum window — row-identical to the Scala
-    bucketed two-phase take (pinned by CurationSpec).
-    """
-    from graft import functions as gf
-    budget = int(budget)
+    """Neyman-allocated stratified sample: allocation min(n_h, budget*w_h
+    div sum w) with w_h = round(sqrt(n*ssq - s^2)) (= N_h*sigma_h, engine-
+    exact by IEEE sqrt), rows taken per stratum in mix64(id) order by a
+    bucketed two-phase take. ``metric_col`` is a column name or Column.
+    Scala ``Mixture.neymanSample``."""
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
-    v = F.col(metric_col).cast("long")
-    m = (df.select(F.col(src_col).alias("__src"), v.alias("__v"))
-         .groupBy("__src").agg(F.count(F.lit(1)).alias("__nh"),
-                               F.sum("__v").alias("__s"),
-                               F.sum(F.col("__v") * F.col("__v"))
-                               .alias("__ssq")))
-    w = m.withColumn("w_h", F.round(F.sqrt(
-        (F.col("__nh") * F.col("__ssq") - F.col("__s") * F.col("__s"))
-        .cast("double"))).cast("long"))
-    tot = w.agg(F.sum("w_h").alias("__tw"))
-    alloc = (w.crossJoin(F.broadcast(tot))
-             .withColumn("alloc", F.least(F.col("__nh"), F.expr(
-                 f"case when __tw = 0 then 0"
-                 f" else {budget} * w_h div __tw end")))
-             .select(F.col("__src").alias(src_col), "w_h", "alloc"))
-    win = Window.partitionBy(F.col(src_col)).orderBy(
-        gf.pl_mix64(F.col(id_col)), F.col(id_col))
-    return (df.join(F.broadcast(alloc), src_col)
-            .withColumn("__rn", F.row_number().over(win))
-            .where(F.col("__rn") <= F.col("alloc"))
-            .drop("__rn"))
+    return _wrap(df, _pl().Mixture.neymanSample(
+        df._jdf, id_col, src_col, _jc(metric_col), int(budget)))
 
 
 def quantile_normalize(df, group_col, score_col):
-    """Quantile normalization across groups — Python mirror of the
-    Scala ``QuantileFilter.quantileNormalize``: within-group inclusive
-    cumulative permille over the distinct-score histogram, mapped onto
-    the pooled discrete quantile at that permille (1..1000 broadcast
-    grid). Integral pre-quantized scores only. The within-group
-    permille is a CEILING division (range [1,1000] — a floor maps any
-    value with cum < n/1000 to 0 and silently drops it at the grid
-    join). NULL group/score rows are excluded by contract.
-    """
-    v = F.col(score_col).cast("long")
-    d = df.where(F.col(group_col).isNotNull() & v.isNotNull())
-    hist = (d.groupBy(F.col(group_col).alias("__g"), v.alias("__v"))
-            .agg(F.count(F.lit(1)).alias("__c")))
-    w_cume = (Window.partitionBy("__g").orderBy("__v")
-              .rowsBetween(Window.unboundedPreceding, 0))
-    w_grp = Window.partitionBy("__g")
-    pm_map = (hist.withColumn("__cum", F.sum("__c").over(w_cume))
-              .withColumn("__n", F.sum("__c").over(w_grp))
-              .select("__g", "__v",
-                      F.expr("(__cum * 1000 + __n - 1) div __n")
-                      .alias("src_permille")))
-    pooled = (d.groupBy(v.alias("__pv")).agg(F.count(F.lit(1)).alias("__pc"))
-              .withColumn("__pcum", F.sum("__pc").over(
-                  Window.orderBy("__pv")
-                  .rowsBetween(Window.unboundedPreceding, 0))))
-    p_tot = d.agg(F.count(F.lit(1)).alias("__pn"))
-    grid = df.sparkSession.createDataFrame(
-        [(p,) for p in range(1, 1001)], "__pm int")
-    inv = (pooled.crossJoin(F.broadcast(p_tot)).crossJoin(F.broadcast(grid))
-           .where(F.col("__pcum") >= F.expr("(__pn * __pm + 999) div 1000"))
-           .groupBy("__pm").agg(F.min("__pv").alias("norm_score")))
-    return (d.join(pm_map, (F.col(group_col) == F.col("__g")) &
-                   (v == F.col("__v")))
-            .join(F.broadcast(inv), F.col("src_permille") == F.col("__pm"))
-            .drop("__g", "__v", "__pm"))
+    """Quantile normalization across groups: within-group inclusive
+    cumulative permille over the distinct-score histogram, mapped onto the
+    pooled discrete quantile at that permille (1..1000 broadcast grid).
+    Integral pre-quantized scores only. The within-group permille is a
+    CEILING division (range [1,1000] — a floor maps any value with cum <
+    n/1000 to 0 and silently drops it at the grid join). NULL group/score
+    rows are excluded by contract. Scala
+    ``QuantileFilter.quantileNormalize``."""
+    return _wrap(df, _pl().QuantileFilter.quantileNormalize(
+        df._jdf, group_col, score_col))
 
 
 def effective_sample_size(df, weight_col):
-    """ESS = (sum w)^2 / sum w^2 — Python mirror of the Scala
-    ``Stats.effectiveSampleSize``: exact long moments, one round-once
-    milli ratio, NULL when all weights are zero.
-    """
-    w = F.col(weight_col).cast("long")
-    return (df.agg(F.count(F.lit(1)).alias("n"), F.sum(w).alias("sum_w"),
-                   F.sum(w * w).alias("sum_w2"))
-            .select("n", "sum_w", "sum_w2",
-                    F.when(F.col("sum_w2") == 0, F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1000.0) * (
-                        F.col("sum_w").cast("double") * F.col("sum_w") /
-                        F.col("sum_w2"))).cast("long")).alias("ess_milli")))
+    """ESS = (sum w)^2 / sum w^2: exact long moments, one round-once milli
+    ratio, NULL when all weights are zero. Scala
+    ``Stats.effectiveSampleSize``."""
+    return _wrap(df, _pl().Stats.effectiveSampleSize(df._jdf, weight_col))
 
 
 def spearman_corr(df, x_col, y_col):
-    """Spearman rank correlation with mid-rank ties — Python mirror of
-    the Scala ``Stats.spearmanCorr``: integer double-ranks
+    """Spearman rank correlation with mid-rank ties: integer double-ranks
     (2*cum_before + cnt + 1) from distinct-value histograms, six exact
-    DECIMAL(38,0) moments (longs overflow the n*Sxx-class products at
-    n ~ 39k; decimals hold to n ~ 1e9), one round-once micro rho; NULL
-    on a constant metric. Rows with a NULL in either metric are
-    excluded (pairwise-complete).
-    """
-    complete = df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-
-    def ranks(c, out):
-        w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
-        return (complete.select(F.col(c).cast("long").alias("__v"))
-                .groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
-                .withColumn("__before",
-                            F.coalesce(F.sum("__c").over(w), F.lit(0)))
-                .select(F.col("__v").alias(f"__{out}"),
-                        (F.lit(2) * F.col("__before") + F.col("__c") +
-                         F.lit(1)).cast("long").alias(out)))
-
-    joined = (complete.select(F.col(x_col).cast("long").alias("__xv"),
-                              F.col(y_col).cast("long").alias("__yv"))
-              .join(ranks(x_col, "drx"), F.col("__xv") == F.col("__drx"))
-              .join(ranks(y_col, "dry"), F.col("__yv") == F.col("__dry")))
-    dx = F.col("drx").cast("decimal(38,0)")
-    dy = F.col("dry").cast("decimal(38,0)")
-    return (joined.agg(F.count(F.lit(1)).alias("n"),
-                       F.sum(dx).alias("__sx"), F.sum(dy).alias("__sy"),
-                       F.sum(dx * dy).alias("__sxy"),
-                       F.sum(dx * dx).alias("__sxx"),
-                       F.sum(dy * dy).alias("__syy"))
-            .select("n", F.when(
-                (F.col("n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-                 == 0) |
-                (F.col("n") * F.col("__syy") - F.col("__sy") * F.col("__sy")
-                 == 0), F.lit(None).cast("long"))
-                .otherwise(F.round(F.lit(1e6) *
-                    (F.col("n").cast("double") * F.col("__sxy") -
-                     F.col("__sx").cast("double") * F.col("__sy")) /
-                    F.sqrt((F.col("n") * F.col("__sxx") -
-                            F.col("__sx") * F.col("__sx")).cast("double")) /
-                    F.sqrt((F.col("n") * F.col("__syy") -
-                            F.col("__sy") * F.col("__sy")).cast("double")))
-                    .cast("long")).alias("rho_micro")))
+    DECIMAL(38,0) moments (longs overflow the n*Sxx-class products at n ~
+    39k; decimals hold to n ~ 1e9), one round-once micro rho; NULL on a
+    constant metric. Rows with a NULL in either metric are excluded
+    (pairwise-complete). Scala ``Stats.spearmanCorr``."""
+    return _wrap(df, _pl().Stats.spearmanCorr(df._jdf, x_col, y_col))
 
 
 def token_jsd(p, q, text_col):
-    """Jensen-Shannon divergence of two token distributions — Python
-    mirror of the Scala ``Stats.tokenJSD``: symmetric, bounded by ln 2,
-    one rounded micro-nat per union-vocabulary term with m = (p+q)/2,
-    exact long sum.
-    """
-    def counts(df, name):
-        return (df.select(F.explode(F.split(F.col(text_col), " "))
-                          .alias("term"))
-                .where(F.col("term") != "")
-                .groupBy("term").agg(F.count(F.lit(1)).alias(name)))
-    joined = (counts(p, "p_cnt").join(counts(q, "q_cnt"), ["term"],
-                                      "full_outer")
-              .na.fill(0, ["p_cnt", "q_cnt"]))
-    totals = joined.agg(F.sum("p_cnt").alias("__np"),
-                        F.sum("q_cnt").alias("__nq"),
-                        F.count(F.lit(1)).alias("__v"))
-    pp = (F.col("p_cnt") + F.lit(1.0)) / (F.col("__np") + F.col("__v"))
-    qq = (F.col("q_cnt") + F.lit(1.0)) / (F.col("__nq") + F.col("__v"))
-    m = (pp + qq) / F.lit(2.0)
-    contrib = F.round(F.lit(1e6) * (
-        F.lit(0.5) * pp * F.log(pp / m) +
-        F.lit(0.5) * qq * F.log(qq / m))).cast("long")
-    return (joined.crossJoin(F.broadcast(totals))
-            .agg(F.count(F.lit(1)).alias("n_terms"),
-                 F.sum(contrib).alias("jsd_unats")))
+    """Jensen-Shannon divergence of two token distributions: symmetric,
+    bounded by ln 2, one rounded micro-nat per union-vocabulary term with m
+    = (p+q)/2, exact long sum. Scala ``Stats.tokenJSD``."""
+    return _wrap(p, _pl().Stats.tokenJSD(p._jdf, q._jdf, text_col))
 
 
 def mann_whitney_u(df, keys, group_col, value_col):
-    """Mann-Whitney U rank-sum test per key — Python mirror of the
-    Scala ``Stats.mannWhitneyU``: pooled integer double-ranks from
-    per-key distinct-value histograms (never a row sort), exact 2*U,
-    tie-corrected round-once z over DECIMAL(38,0) moments; z NULL when
-    a key lacks both groups or all values tie.
-    """
-    kc = [F.col(k) for k in keys]
-    complete = (df.where(F.col(value_col).isNotNull() &
-                         F.col(group_col).isNotNull())
-                .select(*kc, F.col(value_col).cast("long").alias("__v"),
-                        F.col(group_col).cast("boolean").alias("__g")))
-    w = (Window.partitionBy(*kc).orderBy("__v")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    hist = (complete.groupBy(*kc, F.col("__v"))
-            .agg(F.count(F.lit(1)).alias("__c"),
-                 F.count(F.when(F.col("__g"), 1)).alias("__ca"))
-            .withColumn("__dr", F.lit(2) * F.coalesce(
-                F.sum("__c").over(w), F.lit(0)) + F.col("__c") + F.lit(1)))
-    dec = "decimal(38,0)"
-    m = (hist.groupBy(*kc)
-         .agg(F.sum("__c").cast(dec).alias("__n"),
-              F.sum("__ca").cast(dec).alias("__na"),
-              F.sum(F.col("__ca").cast(dec) * F.col("__dr")).alias("__r2a"),
-              F.sum(F.col("__c").cast(dec) * F.col("__c") * F.col("__c") -
-                    F.col("__c")).alias("__t")))
-    n, na = F.col("__n"), F.col("__na")
-    nb = n - na
-    u2a = F.col("__r2a") - na * (na + F.lit(1))
-    # factored denominator: each factor fits DECIMAL(38,0) to n ~ 1e12
-    d1 = na * nb
-    d2 = n * n * n - n - F.col("__t")
-    return m.select(
-        *kc, na.cast("long").alias("n_a"), nb.cast("long").alias("n_b"),
-        u2a.cast("long").alias("u2_a"),
-        F.when((na == 0) | (nb == 0) | (d2 == 0),
-               F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * (u2a - na * nb).cast("double") *
-                   F.sqrt((F.lit(3).cast(dec) * n * (n - F.lit(1)))
-                          .cast("double")) /
-                   F.sqrt(d1.cast("double")) /
-                   F.sqrt(d2.cast("double"))).cast("long"))
-        .alias("z_micro"))
+    """Mann-Whitney U rank-sum test per key: pooled integer double-ranks
+    from per-key distinct-value histograms (never a row sort), exact 2*U,
+    tie-corrected round-once z over DECIMAL(38,0) moments; z NULL when a
+    key lacks both groups or all values tie. Scala ``Stats.mannWhitneyU``."""
+    return _wrap(df, _pl().Stats.mannWhitneyU(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def bh_fdr(df, key_cols, p_micro_col, q_micro=50000, max_tests=1000000):
-    """Benjamini-Hochberg step-up FDR — Python mirror of the Scala
-    ``Stats.bhFdr``: pure long arithmetic (p_micro*m <= k*q_micro) over
-    the metadata-sized per-test table; ties decide together by
-    construction. A ``max_tests`` count guard fails loudly if a
-    corpus-sized table reaches the single-partition rank window.
-    Returns key cols + (p_micro, rank, m_tests, k_star, reject)."""
-    kc = [F.col(k) for k in key_cols]
-    ordered = Window.orderBy(F.col("p_micro"), *kc)
-    ranked = (df.select(*kc,
-                        F.col(p_micro_col).cast("long").alias("p_micro"))
-              .withColumn("rank",
-                          F.row_number().over(ordered).cast("long")))
-    kstar = (ranked
-             .withColumn("__m", F.count(F.lit(1)).over(Window.partitionBy()))
-             .withColumn("__m", F.when(F.col("__m") <= max_tests,
-                                       F.col("__m"))
-                         .otherwise(F.raise_error(F.concat(
-                             F.lit("bh_fdr: per-test table has "),
-                             F.col("__m").cast("string"),
-                             F.lit(" rows, exceeds max_tests=%d"
-                                   % max_tests)))))
-             .agg(F.max("__m").alias("m_tests"),
-                  F.max(F.when(F.col("p_micro") * F.col("__m") <=
-                               F.col("rank") * F.lit(q_micro),
-                               F.col("rank"))).alias("k_star")))
-    return (ranked.crossJoin(F.broadcast(kstar))
-            .withColumn("reject", F.col("k_star").isNotNull() &
-                        (F.col("rank") <= F.col("k_star")))
-            .select(*kc, "p_micro", "rank", "m_tests", "k_star", "reject"))
+    """Benjamini-Hochberg step-up FDR: pure long arithmetic (p_micro*m <=
+    k*q_micro) over the metadata-sized per-test table; ties decide together
+    by construction. A ``max_tests`` count guard fails loudly if a corpus-
+    sized table reaches the single-partition rank window. Returns key cols
+    + (p_micro, rank, m_tests, k_star, reject). Scala ``Stats.bhFdr``."""
+    return _wrap(df, _pl().Stats.bhFdr(
+        df._jdf, _seq(key_cols), p_micro_col, int(q_micro), int(max_tests)))
 
 
 def cuped(df, keys, variant_col, pre_col, metric_col):
-    """CUPED variance reduction — Python mirror of the Scala
-    ``Stats.cuped``: one (key, variant) moments groupBy, pooled moments
-    re-summed from the variant partials, theta / adjusted means / rho^2
-    as round-once micro expressions; theta NULL when var(x) = 0."""
-    dec = "decimal(38,0)"
-    kc = [F.col(k) for k in keys]
-    x = F.col(pre_col).cast("long").cast(dec)
-    y = F.col(metric_col).cast("long").cast(dec)
-    per_variant = (df.where(F.col(pre_col).isNotNull() &
-                            F.col(metric_col).isNotNull())
-                   .groupBy(*kc, F.col(variant_col).alias("variant"))
-                   .agg(F.count(F.lit(1)).cast(dec).alias("__nv"),
-                        F.sum(x).alias("__sxv"), F.sum(y).alias("__syv"),
-                        F.sum(x * x).alias("__sxxv"),
-                        F.sum(x * y).alias("__sxyv"),
-                        F.sum(y * y).alias("__syyv")))
-    pooled = (per_variant.groupBy(*kc)
-              .agg(F.sum("__nv").alias("__n"), F.sum("__sxv").alias("__sx"),
-                   F.sum("__syv").alias("__sy"),
-                   F.sum("__sxxv").alias("__sxx"),
-                   F.sum("__sxyv").alias("__sxy"),
-                   F.sum("__syyv").alias("__syy")))
-    j = per_variant.join(F.broadcast(pooled), keys)
-    covn = F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")
-    varxn = F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")
-    varyn = F.col("__n") * F.col("__syy") - F.col("__sy") * F.col("__sy")
-    theta = covn.cast("double") / varxn.cast("double")
-    mean_y = F.col("__syv").cast("double") / F.col("__nv").cast("double")
-    dxv = (F.col("__sxv").cast("double") / F.col("__nv").cast("double") -
-           F.col("__sx").cast("double") / F.col("__n").cast("double"))
-    return j.select(
-        *kc, "variant", F.col("__nv").cast("long").alias("n"),
-        F.round(F.lit(1e6) * mean_y).cast("long").alias("mean_y_micro"),
-        F.when(varxn == 0, F.round(F.lit(1e6) * mean_y))
-        .otherwise(F.round(F.lit(1e6) * (mean_y - theta * dxv)))
-        .cast("long").alias("mean_adj_micro"),
-        F.when(varxn == 0, F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * theta).cast("long"))
-        .alias("theta_micro"),
-        F.when((varxn == 0) | (varyn == 0), F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * covn.cast("double") *
-                   covn.cast("double") / varxn.cast("double") /
-                   varyn.cast("double")).cast("long"))
-        .alias("var_reduction_ppm"))
+    """CUPED variance reduction: one (key, variant) moments groupBy, pooled
+    moments re-summed from the variant partials, theta / adjusted means /
+    rho^2 as round-once micro expressions; theta NULL when var(x) = 0.
+    Scala ``Stats.cuped``."""
+    return _wrap(df, _pl().Stats.cuped(
+        df._jdf, _seq(keys), variant_col, pre_col, metric_col))
 
 
 def kendall_tau(df, keys, x_col, y_col, max_cells_per_key=4096):
-    """Kendall tau-b — Python mirror of the Scala ``Stats.kendallTau``:
-    the O(n^2) pair definition collapsed to the quantized joint
-    distinct-cell table (cell self-join is D^2 per key behind a
-    fail-loud cap); doubled tie terms keep every intermediate integral.
-    """
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    cells = (df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-             .select(*kc, F.col(x_col).cast("long").alias("__x"),
-                     F.col(y_col).cast("long").alias("__y"))
-             .groupBy(*kc, F.col("__x"), F.col("__y"))
-             .agg(F.count(F.lit(1)).alias("__c")))
-    wg = Window.partitionBy(*kc)
-    guarded = (cells
-               .withColumn("__ncells", F.count(F.lit(1)).over(wg))
-               .withColumn("__c", F.when(
-                   F.col("__ncells") <= max_cells_per_key, F.col("__c"))
-                   .otherwise(F.raise_error(F.concat(
-                       F.lit("kendall_tau: per-key distinct-cell count "),
-                       F.col("__ncells"),
-                       F.lit(" exceeds max_cells_per_key=%d"
-                             % max_cells_per_key)))))
-               .drop("__ncells"))
-    a = guarded.select(*kc, F.col("__x").alias("__ax"),
-                       F.col("__y").alias("__ay"), F.col("__c").alias("__cca"))
-    b = guarded.select(*kc, F.col("__x").alias("__bx"),
-                       F.col("__y").alias("__by"), F.col("__c").alias("__ccb"))
-    cd = (a.join(b, keys)
-          .where((F.col("__bx") > F.col("__ax")) &
-                 (F.col("__by") != F.col("__ay")))
-          .groupBy(*kc)
-          .agg(F.sum(F.when(F.col("__by") > F.col("__ay"),
-                            F.col("__cca").cast(dec) * F.col("__ccb"))
-                     .otherwise(F.lit(0).cast(dec))).alias("__nc"),
-               F.sum(F.when(F.col("__by") < F.col("__ay"),
-                            F.col("__cca").cast(dec) * F.col("__ccb"))
-                     .otherwise(F.lit(0).cast(dec))).alias("__nd")))
-    tot = guarded.groupBy(*kc).agg(F.sum("__c").cast(dec).alias("__n"))
-    n1 = (guarded.groupBy(*kc, F.col("__x"))
-          .agg(F.sum("__c").cast(dec).alias("__tx"))
-          .groupBy(*kc)
-          .agg(F.sum(F.col("__tx") * (F.col("__tx") - F.lit(1)))
-               .cast(dec).alias("__n1x2")))
-    n2 = (guarded.groupBy(*kc, F.col("__y"))
-          .agg(F.sum("__c").cast(dec).alias("__ty"))
-          .groupBy(*kc)
-          .agg(F.sum(F.col("__ty") * (F.col("__ty") - F.lit(1)))
-               .cast(dec).alias("__n2x2")))
-    n0x2 = F.col("__n") * (F.col("__n") - F.lit(1))
-    z = F.lit(0).cast(dec)
-    return (tot.join(n1, keys).join(n2, keys).join(cd, keys, "left")
-            .select(*kc, F.col("__n").cast("long").alias("n"),
-                    F.coalesce(F.col("__nc"), z).cast("long").alias("nc"),
-                    F.coalesce(F.col("__nd"), z).cast("long").alias("nd"),
-                    F.when((n0x2 - F.col("__n1x2") == 0) |
-                           (n0x2 - F.col("__n2x2") == 0),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(2e6) *
-                        (F.coalesce(F.col("__nc"), z) -
-                         F.coalesce(F.col("__nd"), z)).cast("double") /
-                        F.sqrt((n0x2 - F.col("__n1x2")).cast("double")) /
-                        F.sqrt((n0x2 - F.col("__n2x2")).cast("double")))
-                        .cast("long")).alias("tau_b_micro")))
+    """Kendall tau-b: the O(n^2) pair definition collapsed to the quantized
+    joint distinct-cell table (cell self-join is D^2 per key behind a fail-
+    loud cap); doubled tie terms keep every intermediate integral. Scala
+    ``Stats.kendallTau``."""
+    return _wrap(df, _pl().Stats.kendallTau(
+        df._jdf, _seq(keys), x_col, y_col, int(max_cells_per_key)))
 
 
 def kaplan_meier(df, keys, duration_col, event_col):
-    """Kaplan-Meier product-limit survival — Python mirror of the Scala
-    ``Stats.kaplanMeier``: log-space exact long sums of per-time
-    rounded micro-nat terms; risk sets via one DESC cumulative window
-    over distinct times; extinction rows (d = n_risk) carry NULL log.
-    """
-    kc = [F.col(k) for k in keys]
-    per_t = (df.where(F.col(duration_col).isNotNull() &
-                      F.col(event_col).isNotNull())
-             .select(*kc, F.col(duration_col).cast("long").alias("t"),
-                     F.col(event_col).cast("boolean").alias("__e"))
-             .groupBy(*kc, F.col("t"))
-             .agg(F.count(F.lit(1)).alias("__n"),
-                  F.count(F.when(F.col("__e"), 1)).alias("d_events")))
-    w_desc = (Window.partitionBy(*kc).orderBy(F.col("t").desc())
-              .rowsBetween(Window.unboundedPreceding, 0))
-    w_asc = (Window.partitionBy(*kc).orderBy("t")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    return (per_t
-            .withColumn("n_risk", F.sum("__n").over(w_desc))
-            .withColumn("__term", F.when(
-                F.col("d_events") == F.col("n_risk"), F.lit(0))
-                .otherwise(F.round(F.lit(1e6) * F.log(
-                    (F.col("n_risk") - F.col("d_events")).cast("double") /
-                    F.col("n_risk").cast("double"))).cast("long")))
-            .withColumn("km_log_unats", F.when(
-                F.col("d_events") == F.col("n_risk"),
-                F.lit(None).cast("long"))
-                .otherwise(F.sum("__term").over(w_asc)))
-            .select(*kc, "t", "n_risk", "d_events",
-                    (F.col("__n") - F.col("d_events")).alias("c_censored"),
-                    "km_log_unats"))
+    """Kaplan-Meier product-limit survival: log-space exact long sums of
+    per-time rounded micro-nat terms; risk sets via one DESC cumulative
+    window over distinct times; extinction rows (d = n_risk) carry NULL
+    log. Scala ``Stats.kaplanMeier``."""
+    return _wrap(df, _pl().Stats.kaplanMeier(
+        df._jdf, _seq(keys), duration_col, event_col))
 
 
 def log_rank(df, keys, group_col, duration_col, event_col):
-    """Log-rank (Mantel-Cox) test — Python mirror of the Scala
-    ``Stats.logRank``: hypergeometric O-E walk over the per-time
-    machinery, DECIMAL(38,0) numerators with one double division point
-    per term, z = 1e3*sum(oe)/sqrt(sum(v))."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    per_t = (df.where(F.col(duration_col).isNotNull() &
-                      F.col(event_col).isNotNull() &
-                      F.col(group_col).isNotNull())
-             .select(*kc, F.col(duration_col).cast("long").alias("__t"),
-                     F.col(event_col).cast("boolean").alias("__e"),
-                     F.col(group_col).cast("boolean").alias("__g"))
-             .groupBy(*kc, F.col("__t"))
-             .agg(F.count(F.lit(1)).alias("__m"),
-                  F.count(F.when(F.col("__g"), 1)).alias("__ma"),
-                  F.count(F.when(F.col("__e"), 1)).alias("__d"),
-                  F.count(F.when(F.col("__e") & F.col("__g"), 1))
-                  .alias("__da")))
-    w_desc = (Window.partitionBy(*kc).orderBy(F.col("__t").desc())
-              .rowsBetween(Window.unboundedPreceding, 0))
-    risky = (per_t
-             .withColumn("__n", F.sum("__m").over(w_desc))
-             .withColumn("__na", F.sum("__ma").over(w_desc))
-             .where(F.col("__d") > 0))
-
-    def D(c):
-        return c.cast(dec)
-    oe_t = F.round(F.lit(1e6) *
-                   (D(F.col("__da")) * F.col("__n") -
-                    D(F.col("__d")) * F.col("__na")).cast("double") /
-                   F.col("__n").cast("double")).cast("long")
-    v_t = F.when(F.col("__n") == 1, F.lit(0)).otherwise(
-        F.round(F.lit(1e6) *
-                (D(F.col("__d")) * F.col("__na") *
-                 (F.col("__n") - F.col("__na")) *
-                 (F.col("__n") - F.col("__d"))).cast("double") /
-                (D(F.col("__n")) * F.col("__n") *
-                 (F.col("__n") - F.lit(1))).cast("double")).cast("long"))
-    return (risky.withColumn("__oe", oe_t).withColumn("__v", v_t)
-            .groupBy(*kc)
-            .agg(F.count(F.lit(1)).alias("n_times"),
-                 F.sum("__oe").alias("oe_sum_micro"),
-                 F.sum("__v").alias("var_sum_micro"))
-            .withColumn("z_micro", F.when(
-                F.col("var_sum_micro") <= 0, F.lit(None).cast("long"))
-                .otherwise(F.round(F.lit(1e3) *
-                    F.col("oe_sum_micro").cast("double") /
-                    F.sqrt(F.col("var_sum_micro").cast("double")))
-                    .cast("long"))))
+    """Log-rank (Mantel-Cox) test: hypergeometric O-E walk over the per-
+    time machinery, DECIMAL(38,0) numerators with one double division point
+    per term, z = 1e3*sum(oe)/sqrt(sum(v)). Scala ``Stats.logRank``."""
+    return _wrap(df, _pl().Stats.logRank(
+        df._jdf, _seq(keys), group_col, duration_col, event_col))
 
 
 def sprt_constants_micro(p0_permille, p1_permille, alpha_permille,
                          beta_permille):
-    """The four Wald SPRT micro-nat constants (success step, failure
-    step, upper bound, lower bound) — plan-time HALF_UP rounding shared
-    with the Scala ``Stats.sprtConstantsMicro`` so both engines inline
-    identical longs."""
-    import math
-    from decimal import Decimal, ROUND_HALF_UP
-
-    def r(x):
-        return int(Decimal(repr(1e6 * x)).quantize(0, ROUND_HALF_UP))
-    p0, p1 = p0_permille / 1000.0, p1_permille / 1000.0
-    a, b = alpha_permille / 1000.0, beta_permille / 1000.0
-    return (r(math.log(p1 / p0)), r(math.log((1 - p1) / (1 - p0))),
-            r(math.log((1 - b) / a)), r(math.log(b / (1 - a))))
+    """The four Wald SPRT micro-nat constants (success step, failure step,
+    upper bound, lower bound) — plan-time HALF_UP rounding, the longs
+    that ``sprt`` and its DuckDB oracle inline. Scala
+    ``Stats.sprtConstantsMicro``."""
+    seq = _pl().Stats.sprtConstantsMicro(
+        int(p0_permille), int(p1_permille), int(alpha_permille),
+        int(beta_permille))
+    return tuple(seq.apply(i) for i in range(seq.size()))
 
 
 def sprt(df, keys, order_col, success_col, p0_permille=500,
          p1_permille=600, alpha_permille=50, beta_permille=50):
-    """Wald SPRT early-stop A/B gate — Python mirror of the Scala
-    ``Stats.sprt``: four plan-time micro-nat constants, exact
-    cumulative-long LLR walk per key, bit-reproducible first-crossing
-    decision. Rejects inverted boundaries (alpha + beta >= 1)."""
-    lp_s, lp_f, a_up, b_lo = sprt_constants_micro(
-        p0_permille, p1_permille, alpha_permille, beta_permille)
-    if not (a_up > 0 > b_lo):
+    """Wald SPRT early-stop A/B gate: four plan-time micro-nat constants,
+    exact cumulative-long LLR walk per key, bit-reproducible first-crossing
+    decision. Rejects inverted boundaries (alpha + beta >= 1). Scala
+    ``Stats.sprt``."""
+    if alpha_permille + beta_permille >= 1000:
         raise ValueError("alpha + beta must be < 1000 permille: "
                          "SPRT decision boundaries invert")
-    kc = [F.col(k) for k in keys]
-    step = (F.when(F.col(success_col).cast("boolean"), F.lit(lp_s))
-            .otherwise(F.lit(lp_f)))
-    w = (Window.partitionBy(*kc).orderBy(F.col(order_col))
-         .rowsBetween(Window.unboundedPreceding, 0))
-    wo = Window.partitionBy(*kc).orderBy(F.col(order_col))
-    return (df.withColumn("__llr", F.sum(step).over(w))
-            .withColumn("__rn", F.row_number().over(wo))
-            .groupBy(*kc)
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.min(F.when(F.col("__llr") >= a_up, F.col("__rn")))
-                 .alias("__hit1"),
-                 F.min(F.when(F.col("__llr") <= b_lo, F.col("__rn")))
-                 .alias("__hit0"),
-                 F.sum(step).alias("llr_final_micro"))
-            .withColumn("decision", F.when(
-                F.col("__hit1").isNotNull() &
-                (F.col("__hit0").isNull() |
-                 (F.col("__hit1") < F.col("__hit0"))), F.lit("accept_h1"))
-                .when(F.col("__hit0").isNotNull(), F.lit("accept_h0"))
-                .otherwise(F.lit("continue")))
-            .withColumn("decided_at",
-                        F.least("__hit1", "__hit0").cast("long"))
-            .drop("__hit1", "__hit0"))
+    return _wrap(df, _pl().Stats.sprt(
+        df._jdf, _seq(keys), order_col, success_col, int(p0_permille),
+        int(p1_permille), int(alpha_permille), int(beta_permille)))
 
 
 def theil_sen_slope(df, keys, x_col, y_col, max_series_len=4096):
-    """Theil-Sen robust slope — Python mirror of the Scala
-    ``Stats.theilSenSlope``: median of all per-key pairwise slopes,
-    with the O(len^2) pair join guarded by a fail-loud raise_error at
-    max_series_len riding the key-partitioned window."""
-    kc = [F.col(k) for k in keys]
-    wg = Window.partitionBy(*kc)
-    src = (df.select(*kc, F.col(x_col).cast("long").alias("__x"),
-                     F.col(y_col).cast("long").alias("__y"))
-           .withColumn("__len", F.count(F.lit(1)).over(wg))
-           .withColumn("__x", F.when(
-               F.col("__len") <= max_series_len, F.col("__x"))
-               .otherwise(F.raise_error(F.concat(
-                   F.lit("theil_sen: per-key series length "),
-                   F.col("__len"),
-                   F.lit(" exceeds max_series_len=%d" % max_series_len)))))
-           .drop("__len"))
-    a = src.select(*kc, F.col("__x").alias("__x1"),
-                   F.col("__y").alias("__y1"))
-    b = src.select(*kc, F.col("__x").alias("__x2"),
-                   F.col("__y").alias("__y2"))
-    pairs = (a.join(b, keys).where(F.col("__x2") > F.col("__x1"))
-             .withColumn("__s", (F.col("__y2") - F.col("__y1"))
-                         .cast("double") /
-                         (F.col("__x2") - F.col("__x1")).cast("double")))
-    w = Window.partitionBy(*kc).orderBy("__s")
-    wk = Window.partitionBy(*kc)
-    return (pairs.withColumn("__rn", F.row_number().over(w))
-            .withColumn("__m", F.count(F.lit(1)).over(wk))
-            .where((F.col("__rn") == F.expr("(__m + 1) div 2")) |
-                   (F.col("__rn") == F.expr("(__m + 2) div 2")))
-            .groupBy(*kc)
-            .agg(F.max("__m").alias("n_pairs"),
-                 F.round(F.lit(1e6) * F.avg("__s")).cast("long")
-                 .alias("ts_slope_micro")))
+    """Theil-Sen robust slope: median of all per-key pairwise slopes, with
+    the O(len^2) pair join guarded by a fail-loud raise_error at
+    max_series_len riding the key-partitioned window. Scala
+    ``Stats.theilSenSlope``."""
+    return _wrap(df, _pl().Stats.theilSenSlope(
+        df._jdf, _seq(keys), x_col, y_col, int(max_series_len)))
 
 
 def roc_auc(df, keys, label_col, score_col):
-    """Exact ROC-AUC + Cliff's delta — Python mirror of the Scala
-    ``Stats.rocAuc``: AUC = U/(n+ * n-) via the pooled integer
-    double-rank construction over distinct scores (mid-rank ties =
+    """Exact ROC-AUC + Cliff's delta: AUC = U/(n+ * n-) via the pooled
+    integer double-rank construction over distinct scores (mid-rank ties =
     trapezoid); delta = 2*AUC - 1 rides the same moments. Zero floats.
-    """
-    kc = [F.col(k) for k in keys]
-    complete = (df.where(F.col(score_col).isNotNull() &
-                         F.col(label_col).isNotNull())
-                .select(*kc, F.col(score_col).cast("long").alias("__v"),
-                        F.col(label_col).cast("boolean").alias("__g")))
-    w = (Window.partitionBy(*kc).orderBy("__v")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    hist = (complete.groupBy(*kc, F.col("__v"))
-            .agg(F.count(F.lit(1)).alias("__c"),
-                 F.count(F.when(F.col("__g"), 1)).alias("__ca"))
-            .withColumn("__dr", F.lit(2) * F.coalesce(
-                F.sum("__c").over(w), F.lit(0)) + F.col("__c") + F.lit(1)))
-    dec = "decimal(38,0)"
-    m = (hist.groupBy(*kc)
-         .agg(F.sum("__c").cast(dec).alias("__n"),
-              F.sum("__ca").cast(dec).alias("__na"),
-              F.sum(F.col("__ca").cast(dec) * F.col("__dr")).alias("__r2a")))
-    na, n = F.col("__na"), F.col("__n")
-    return m.select(
-        *kc, na.cast("long").alias("n_pos"),
-        (n - na).cast("long").alias("n_neg"),
-        (F.col("__r2a") - na * (na + F.lit(1))).cast("long").alias("u2"),
-        F.when((na == 0) | (n == na), F.lit(None).cast("long"))
-        .otherwise(F.expr("cast(((__r2a - __na * (__na + 1)) * 500000) div "
-                          "(__na * (__n - __na)) as long)")).alias("auc_ppm"),
-        F.when((na == 0) | (n == na), F.lit(None).cast("long"))
-        .otherwise(F.expr(
-            "cast(((__r2a - __na * (__na + 1) - __na * (__n - __na)) "
-            "* 1000000) div (__na * (__n - __na)) as long)"))
-        .alias("delta_ppm"))
+    Scala ``Stats.rocAuc``."""
+    return _wrap(df, _pl().Stats.rocAuc(
+        df._jdf, _seq(keys), label_col, score_col))
 
 
 def pr_auc(df, keys, label_col, score_col):
-    """Trapezoidal PR-AUC — Python mirror of the Scala ``Stats.prAuc``:
-    distinct-threshold points DESC with the (recall 0, precision 1)
-    anchor; per-threshold nano terms rounded once from exact tp/fp,
-    summed as longs."""
-    kc = [F.col(k) for k in keys]
-    complete = (df.where(F.col(score_col).isNotNull() &
-                         F.col(label_col).isNotNull())
-                .select(*kc, F.col(score_col).cast("long").alias("__v"),
-                        F.col(label_col).cast("boolean").alias("__g")))
-    hist = (complete.groupBy(*kc, F.col("__v"))
-            .agg(F.count(F.lit(1)).alias("__c"),
-                 F.count(F.when(F.col("__g"), 1)).alias("__p")))
-    w_desc = (Window.partitionBy(*kc).orderBy(F.col("__v").desc())
-              .rowsBetween(Window.unboundedPreceding, 0))
-    w_key = Window.partitionBy(*kc)
-    w_lag = Window.partitionBy(*kc).orderBy(F.col("__v").desc())
-    pts = (hist
-           .withColumn("__tp", F.sum("__p").over(w_desc))
-           .withColumn("__sc", F.sum("__c").over(w_desc))
-           .withColumn("__na", F.sum("__p").over(w_key))
-           .withColumn("__nt", F.sum("__c").over(w_key))
-           .withColumn("__tpp",
-                       F.coalesce(F.lag("__tp", 1).over(w_lag), F.lit(0)))
-           .withColumn("__scp", F.lag("__sc", 1).over(w_lag)))
-    p_cur = F.col("__tp").cast("double") / F.col("__sc").cast("double")
-    p_prev = (F.when(F.col("__scp").isNull(), F.lit(1.0))
-              .otherwise(F.col("__tpp").cast("double") /
-                         F.col("__scp").cast("double")))
-    terms = pts.withColumn("__nano", F.when(
-        F.col("__na") == 0, F.lit(0))
-        .otherwise(F.round(
-            F.lit(1e9) * (F.col("__tp") - F.col("__tpp")).cast("double") *
-            (p_cur + p_prev) /
-            (F.lit(2.0) * F.col("__na").cast("double"))).cast("long")))
-    return (terms.groupBy(*kc)
-            .agg(F.max("__na").alias("__napos"), F.max("__nt").alias("__ntot"),
-                 F.count(F.lit(1)).alias("n_thresholds"),
-                 F.sum("__nano").alias("__area"))
-            .select(*kc, F.col("__napos").alias("n_pos"),
-                    (F.col("__ntot") - F.col("__napos")).alias("n_neg"),
-                    "n_thresholds",
-                    F.when(F.col("__napos") == 0, F.lit(None).cast("long"))
-                    .otherwise(F.expr("cast(__area div 1000 as long)"))
-                    .alias("pr_auc_micro")))
+    """Trapezoidal PR-AUC: distinct-threshold points DESC with the (recall
+    0, precision 1) anchor; per-threshold nano terms rounded once from
+    exact tp/fp, summed as longs. Scala ``Stats.prAuc``."""
+    return _wrap(df, _pl().Stats.prAuc(
+        df._jdf, _seq(keys), label_col, score_col))
 
 
 def mcc(df, keys, label_col, pred_col):
-    """Matthews correlation coefficient — Python mirror of the Scala
-    ``Stats.mcc``: exact confusion counts, DECIMAL(38,0) numerator,
-    four marginals under separate sqrts, round-once micro."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    m = (df.where(F.col(label_col).isNotNull() & F.col(pred_col).isNotNull())
-         .select(*kc, F.col(label_col).cast("boolean").alias("__y"),
-                 F.col(pred_col).cast("boolean").alias("__p"))
-         .groupBy(*kc)
-         .agg(F.count(F.when(F.col("__y") & F.col("__p"), 1)).alias("tp"),
-              F.count(F.when(~F.col("__y") & F.col("__p"), 1)).alias("fp"),
-              F.count(F.when(F.col("__y") & ~F.col("__p"), 1)).alias("fn"),
-              F.count(F.when(~F.col("__y") & ~F.col("__p"), 1)).alias("tn")))
-    num = F.col("tp").cast(dec) * F.col("tn") - \
-        F.col("fp").cast(dec) * F.col("fn")
-    m1 = F.col("tp") + F.col("fp")
-    m2 = F.col("tp") + F.col("fn")
-    m3 = F.col("tn") + F.col("fp")
-    m4 = F.col("tn") + F.col("fn")
-    return m.select(
-        *kc, "tp", "fp", "fn", "tn",
-        F.when((m1 == 0) | (m2 == 0) | (m3 == 0) | (m4 == 0),
-               F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * num.cast("double") /
-                   F.sqrt(m1.cast("double")) / F.sqrt(m2.cast("double")) /
-                   F.sqrt(m3.cast("double")) / F.sqrt(m4.cast("double")))
-                   .cast("long")).alias("mcc_micro"))
+    """Matthews correlation coefficient: exact confusion counts,
+    DECIMAL(38,0) numerator, four marginals under separate sqrts, round-
+    once micro. Scala ``Stats.mcc``."""
+    return _wrap(df, _pl().Stats.mcc(df._jdf, _seq(keys), label_col, pred_col))
 
 
 def calibration_report(df, p_micro_col, label_col, bins=10):
-    """Calibration report + ECE — Python mirror of the Scala
-    ``Stats.calibrationReport``: exact per-bin counts, integer gap
-    |1e6*n_pos - sum(p)|, ECE = sum(gap) div N on every row via a
-    one-row broadcast."""
-    per_bin = (df.where(F.col(p_micro_col).isNotNull() &
-                        F.col(label_col).isNotNull())
-               # fail loud with a named diagnosis, not a bogus
-               # negative-bin row: p is micro-unit by contract
-               .select(F.when(
-                   (F.col(p_micro_col) < 0) | (F.col(p_micro_col) > 1000000),
-                   F.raise_error(F.concat(
-                       F.lit("calibration_report: p_micro="),
-                       F.col(p_micro_col).cast("string"),
-                       F.lit(" outside [0, 1000000] -- probabilities "
-                             "must be micro-unit scaled"))))
-                .otherwise(F.least(
-                   F.expr("(cast(%s as bigint) * %d) div 1000000"
-                          % (p_micro_col, bins)),
-                   F.lit(bins - 1))).alias("bin"),
-                   F.col(label_col).cast("boolean").alias("__y"),
-                   F.col(p_micro_col).cast("long").alias("__p"))
-               .groupBy("bin")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.count(F.when(F.col("__y"), 1)).alias("n_pos"),
-                    F.sum("__p").alias("conf_sum"))
-               .withColumn("gap_abs", F.abs(
-                   F.col("n_pos") * F.lit(1000000) - F.col("conf_sum"))))
-    tot = per_bin.agg(
-        F.sum("n").alias("n_total"),
-        F.expr("cast(sum(gap_abs) div sum(n) as long)").alias("ece_micro"))
-    return per_bin.crossJoin(F.broadcast(tot))
+    """Calibration report + ECE: exact per-bin counts, integer gap
+    |1e6*n_pos - sum(p)|, ECE = sum(gap) div N on every row via a one-row
+    broadcast. Scala ``Stats.calibrationReport``."""
+    return _wrap(df, _pl().Stats.calibrationReport(
+        df._jdf, p_micro_col, label_col, int(bins)))
 
 
 def mcnemar(df, keys, a_col, b_col):
-    """McNemar's paired-binary test — Python mirror of the Scala
-    ``Stats.mcnemar``: chi2 = (n10-n01)^2/(n10+n01) as one exact
-    integer expression; NULL with no discordant pairs."""
-    kc = [F.col(k) for k in keys]
-    m = (df.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-         .select(*kc, F.col(a_col).cast("boolean").alias("__a"),
-                 F.col(b_col).cast("boolean").alias("__b"))
-         .groupBy(*kc)
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.count(F.when(F.col("__a") & F.col("__b"), 1)).alias("n11"),
-              F.count(F.when(~F.col("__a") & ~F.col("__b"), 1)).alias("n00"),
-              F.count(F.when(F.col("__a") & ~F.col("__b"), 1)).alias("n10"),
-              F.count(F.when(~F.col("__a") & F.col("__b"), 1)).alias("n01")))
-    return m.select(
-        *kc, "n", "n11", "n00", "n10", "n01",
-        F.when(F.col("n10") + F.col("n01") == 0, F.lit(None).cast("long"))
-        .otherwise(F.expr("cast((cast(n10 - n01 as decimal(38,0)) * "
-                          "(n10 - n01) * 1000000) div (n10 + n01) as long)"))
-        .alias("chi2_micro"))
+    """McNemar's paired-binary test: chi2 = (n10-n01)^2/(n10+n01) as one
+    exact integer expression; NULL with no discordant pairs. Scala
+    ``Stats.mcnemar``."""
+    return _wrap(df, _pl().Stats.mcnemar(df._jdf, _seq(keys), a_col, b_col))
 
 
 def nelson_aalen(df, keys, duration_col, event_col):
-    """Nelson-Aalen cumulative hazard — Python mirror of the Scala
-    ``Stats.nelsonAalen``: kaplan_meier's per-distinct-time machinery
-    with additive round-once d/n_risk micro terms."""
-    kc = [F.col(k) for k in keys]
-    per_t = (df.where(F.col(duration_col).isNotNull() &
-                      F.col(event_col).isNotNull())
-             .select(*kc, F.col(duration_col).cast("long").alias("t"),
-                     F.col(event_col).cast("boolean").alias("__e"))
-             .groupBy(*kc, F.col("t"))
-             .agg(F.count(F.lit(1)).alias("__n"),
-                  F.count(F.when(F.col("__e"), 1)).alias("d_events")))
-    w_desc = (Window.partitionBy(*kc).orderBy(F.col("t").desc())
-              .rowsBetween(Window.unboundedPreceding, 0))
-    w_asc = (Window.partitionBy(*kc).orderBy("t")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    return (per_t
-            .withColumn("n_risk", F.sum("__n").over(w_desc))
-            .withColumn("__term", F.round(
-                F.lit(1e6) * F.col("d_events").cast("double") /
-                F.col("n_risk").cast("double")).cast("long"))
-            .withColumn("na_cum_micro", F.sum("__term").over(w_asc))
-            .select(*kc, "t", "n_risk", "d_events",
-                    (F.col("__n") - F.col("d_events")).alias("c_censored"),
-                    "na_cum_micro"))
+    """Nelson-Aalen cumulative hazard: kaplan_meier's per-distinct-time
+    machinery with additive round-once d/n_risk micro terms. Scala
+    ``Stats.nelsonAalen``."""
+    return _wrap(df, _pl().Stats.nelsonAalen(
+        df._jdf, _seq(keys), duration_col, event_col))
 
 
 def welch_t(df, keys, group_col, value_col):
-    """Welch's unequal-variance t-test — Python mirror of the Scala
-    ``Stats.welchT``: six exact DECIMAL(38,0) moments in one groupBy;
-    t and the Welch-Satterthwaite df as round-once doubles."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    g = F.col("__g")
-    v = F.col("__v")
-    m = (df.where(F.col(value_col).isNotNull() &
-                  F.col(group_col).isNotNull())
-         .select(*kc, F.col(value_col).cast("long").alias("__v"),
-                 F.col(group_col).cast("boolean").alias("__g"))
-         .groupBy(*kc)
-         # DECIMAL(38,0) from the first multiply -- a long v*v
-         # product wraps silently past 2^63; decimal fails loud
-         .agg(F.count(F.when(g, 1)).cast(dec).alias("__naM"),
-              F.sum(F.when(g, v.cast(dec)).otherwise(F.lit(0).cast(dec)))
-              .alias("__sa"),
-              F.sum(F.when(g, v.cast(dec) * v.cast(dec))
-                    .otherwise(F.lit(0).cast(dec))).alias("__qa"),
-              F.count(F.when(~g, 1)).cast(dec).alias("__nbM"),
-              F.sum(F.when(~g, v.cast(dec)).otherwise(F.lit(0).cast(dec)))
-              .alias("__sb"),
-              F.sum(F.when(~g, v.cast(dec) * v.cast(dec))
-                    .otherwise(F.lit(0).cast(dec))).alias("__qb")))
-    na, nb = F.col("__naM"), F.col("__nbM")
-    va = (na * F.col("__qa") - F.col("__sa") * F.col("__sa")).cast("double") \
-        / (na * na * (na - F.lit(1))).cast("double")
-    vb = (nb * F.col("__qb") - F.col("__sb") * F.col("__sb")).cast("double") \
-        / (nb * nb * (nb - F.lit(1))).cast("double")
-    ma = F.col("__sa").cast("double") / na.cast("double")
-    mb = F.col("__sb").cast("double") / nb.cast("double")
-    bad = (na < 2) | (nb < 2)
-    return m.select(
-        *kc, na.cast("long").alias("n_a"), nb.cast("long").alias("n_b"),
-        F.when(bad, F.lit(None).cast("long"))
-        .otherwise(F.when(va + vb == 0.0, F.lit(None).cast("long"))
-                   .otherwise(F.round(F.lit(1e6) * (ma - mb) /
-                              F.sqrt(va + vb)).cast("long")))
-        .alias("t_micro"),
-        F.when(bad, F.lit(None).cast("long"))
-        .otherwise(F.when(
-            va * va / (na.cast("double") - F.lit(1.0)) +
-            vb * vb / (nb.cast("double") - F.lit(1.0)) == 0.0,
-            F.lit(None).cast("long"))
-            .otherwise(F.round(
-                F.lit(1e3) * (va + vb) * (va + vb) /
-                (va * va / (na.cast("double") - F.lit(1.0)) +
-                 vb * vb / (nb.cast("double") - F.lit(1.0)))).cast("long")))
-        .alias("df_milli"))
+    """Welch's unequal-variance t-test: six exact DECIMAL(38,0) moments in
+    one groupBy; t and the Welch-Satterthwaite df as round-once doubles.
+    Scala ``Stats.welchT``."""
+    return _wrap(df, _pl().Stats.welchT(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def chi_square_kxm(df, a_col, b_col, max_levels=1000):
-    """General k x m chi-square + Cramer's V — Python mirror of the
-    Scala ``Stats.chiSquareKxM``: exact per-cell nano terms over the
-    dense level grid (absent cells contribute their expected mass);
-    fail-loud max_levels guards on both margins."""
-    base = (df.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-            .select(F.col(a_col).cast("string").alias("__a"),
-                    F.col(b_col).cast("string").alias("__b")))
-    cells = base.groupBy("__a", "__b").agg(F.count(F.lit(1)).alias("__o"))
-
-    def margin(c, n, guard):
-        return (base.groupBy(c).agg(F.count(F.lit(1)).alias(n))
-                .withColumn("__lv",
-                            F.count(F.lit(1)).over(Window.partitionBy()))
-                .withColumn(n, F.when(F.col("__lv") <= max_levels, F.col(n))
-                            .otherwise(F.raise_error(F.concat(
-                                F.lit("chi_square_kxm: %s has " % guard),
-                                F.col("__lv").cast("string"),
-                                F.lit(" levels, exceeds max_levels=%d"
-                                      % max_levels)))))
-                .drop("__lv"))
-
-    ra = margin("__a", "__ra", "column A")
-    cb = margin("__b", "__cb", "column B")
-    tot = base.agg(F.count(F.lit(1)).alias("__N"))
-    dec = "decimal(38,0)"
-    grid = (ra.crossJoin(F.broadcast(cb))
-            .join(cells, ["__a", "__b"], "left")
-            .na.fill(0, ["__o"])
-            .crossJoin(F.broadcast(tot)))
-    num = (F.col("__o").cast(dec) * F.col("__N") -
-           F.col("__ra").cast(dec) * F.col("__cb"))
-    summed = (grid.withColumn("__num2", num * num)
-              .withColumn("__t", F.expr(
-                  "cast(round(1e9 * cast(__num2 as double) / "
-                  "cast(cast(__N as decimal(38,0)) * __ra * __cb as double))"
-                  " as bigint)"))
-              .agg(F.max("__N").alias("n"),
-                   F.countDistinct("__a").alias("k_levels"),
-                   F.countDistinct("__b").alias("m_levels"),
-                   F.sum("__t").alias("chi2_nano")))
-    return summed.select(
-        "n", "k_levels", "m_levels",
-        ((F.col("k_levels") - 1) * (F.col("m_levels") - 1)).alias("dof"),
-        "chi2_nano",
-        F.when((F.col("n") == 0) | (F.col("k_levels") < 2) |
-               (F.col("m_levels") < 2), F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * F.sqrt(
-            F.col("chi2_nano").cast("double") / F.lit(1e9) /
-            (F.col("n").cast("double") *
-             F.least(F.col("k_levels") - 1, F.col("m_levels") - 1)
-             .cast("double")))).cast("long")).alias("v_micro"))
+    """General k x m chi-square + Cramer's V: exact per-cell nano terms
+    over the dense level grid (absent cells contribute their expected
+    mass); fail-loud max_levels guards on both margins. Scala
+    ``Stats.chiSquareKxM``."""
+    return _wrap(df, _pl().Stats.chiSquareKxM(
+        df._jdf, a_col, b_col, int(max_levels)))
 
 
 def acf(df, keys, order_col, value_col, max_lag=8):
-    """Per-key autocorrelation at lags 1..max_lag — Python mirror of
-    the Scala ``Stats.acf``: exact mean-centered moments (multiply
-    through by n^2), one round-once micro division per lag."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    w = Window.partitionBy(*kc).orderBy(F.col("__t"))
-    base = (df.where(F.col(value_col).isNotNull() &
-                     F.col(order_col).isNotNull())
-            .select(*kc, F.col(order_col).alias("__t"),
-                    F.col(value_col).cast("long").alias("__x")))
-    lagged = base
-    for lag in range(1, max_lag + 1):
-        lagged = lagged.withColumn("__lag%d" % lag,
-                                   F.lag("__x", lag).over(w))
-    # DECIMAL(38,0) from the first multiply -- a long x*lag product
-    # wraps silently past 2^63; decimal fails loud
-    xd = F.col("__x").cast(dec)
-    aggs = [F.count(F.lit(1)).cast(dec).alias("__n"),
-            F.sum(xd).alias("__s"),
-            F.sum(xd * xd).alias("__q")]
-    for lag in range(1, max_lag + 1):
-        lg = F.col("__lag%d" % lag)
-        lgd = lg.cast(dec)
-        aggs += [
-            F.sum(F.when(lg.isNotNull(), xd * lgd)
-                  .otherwise(F.lit(0).cast(dec))).alias("__xx%d" % lag),
-            F.sum(F.when(lg.isNotNull(), lgd).otherwise(F.lit(0).cast(dec)))
-            .alias("__sh%d" % lag),
-            F.sum(F.when(lg.isNotNull(), xd).otherwise(F.lit(0).cast(dec)))
-            .alias("__st%d" % lag),
-            F.count(F.when(lg.isNotNull(), 1)).cast(dec)
-            .alias("__np%d" % lag)]
-    m = lagged.groupBy(*kc).agg(*aggs)
-    n, s = F.col("__n"), F.col("__s")
-    den = n * n * F.col("__q") - n * s * s
-    per_lag = [F.struct(
-        F.lit(lag).alias("lag"),
-        F.col("__np%d" % lag).cast("long").alias("n_pairs"),
-        F.when((den == 0) | (F.col("__np%d" % lag) == 0),
-               F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * (
-            n * n * F.col("__xx%d" % lag) -
-            n * s * (F.col("__sh%d" % lag) + F.col("__st%d" % lag)) +
-            (n - F.lit(lag)) * s * s).cast("double") /
-            den.cast("double")).cast("long")).alias("r_micro"))
-        for lag in range(1, max_lag + 1)]
-    return (m.select(*kc, F.explode(F.array(*per_lag)).alias("__e"))
-            .select(*kc, "__e.lag", "__e.n_pairs", "__e.r_micro"))
+    """Per-key autocorrelation at lags 1..max_lag: exact mean-centered
+    moments (multiply through by n^2), one round-once micro division per
+    lag. Scala ``Stats.acf``."""
+    return _wrap(df, _pl().Stats.acf(
+        df._jdf, _seq(keys), order_col, value_col, int(max_lag)))
 
 
 def vocabulary_richness(df, text_col):
-    """Good-Turing unseen mass + bias-corrected Chao1 — Python mirror
-    of the Scala ``Stats.vocabularyRichness``: one freq-of-freq rollup,
-    exact integer divisions."""
-    counts = (df.select(F.explode(F.split(F.col(text_col), " "))
-                        .alias("tok"))
-              .where(F.col("tok") != "")
-              .groupBy("tok").agg(F.count(F.lit(1)).alias("__c")))
-    fof = counts.groupBy("__c").agg(F.count(F.lit(1)).alias("__nc"))
-    return (fof.agg(
-        F.sum(F.col("__c") * F.col("__nc")).alias("n_tokens"),
-        F.sum("__nc").alias("vocab"),
-        F.coalesce(F.sum(F.when(F.col("__c") == 1, F.col("__nc"))),
-                   F.lit(0)).alias("n1"),
-        F.coalesce(F.sum(F.when(F.col("__c") == 2, F.col("__nc"))),
-                   F.lit(0)).alias("n2"))
-        .select("n_tokens", "vocab", "n1", "n2",
-                F.expr("cast((n1 * 1000000) div n_tokens as long)")
-                .alias("p0_ppm"),
-                F.expr("cast(vocab * 1000 + (cast(n1 as decimal(38,0)) * "
-                       "(n1 - 1) * 1000) div (2 * (n2 + 1)) as long)")
-                .alias("chao1_milli")))
+    """Good-Turing unseen mass + bias-corrected Chao1: one freq-of-freq
+    rollup, exact integer divisions. Scala ``Stats.vocabularyRichness``."""
+    return _wrap(df, _pl().Stats.vocabularyRichness(df._jdf, text_col))
 
 
 def cohens_d(df, keys, group_col, value_col):
-    """Cohen's d / Hedges' g — Python mirror of the Scala
-    ``Stats.cohensD``: pooled-sd standardized mean difference over the
-    welch_t six-moment groupBy; (1e6*(ma-mb))/sp association order."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    g, v = F.col("__g"), F.col("__v")
-    m = (df.where(F.col(value_col).isNotNull() &
-                  F.col(group_col).isNotNull())
-         .select(*kc, F.col(value_col).cast("long").alias("__v"),
-                 F.col(group_col).cast("boolean").alias("__g"))
-         .groupBy(*kc)
-         # DECIMAL(38,0) from the first multiply -- a long v*v
-         # product wraps silently past 2^63; decimal fails loud
-         .agg(F.count(F.when(g, 1)).cast(dec).alias("__naM"),
-              F.sum(F.when(g, v.cast(dec)).otherwise(F.lit(0).cast(dec)))
-              .alias("__sa"),
-              F.sum(F.when(g, v.cast(dec) * v.cast(dec))
-                    .otherwise(F.lit(0).cast(dec))).alias("__qa"),
-              F.count(F.when(~g, 1)).cast(dec).alias("__nbM"),
-              F.sum(F.when(~g, v.cast(dec)).otherwise(F.lit(0).cast(dec)))
-              .alias("__sb"),
-              F.sum(F.when(~g, v.cast(dec) * v.cast(dec))
-                    .otherwise(F.lit(0).cast(dec))).alias("__qb")))
-    na, nb = F.col("__naM"), F.col("__nbM")
-    ssa = (na * F.col("__qa") - F.col("__sa") * F.col("__sa")) \
-        .cast("double") / na.cast("double")
-    ssb = (nb * F.col("__qb") - F.col("__sb") * F.col("__sb")) \
-        .cast("double") / nb.cast("double")
-    ma = F.col("__sa").cast("double") / na.cast("double")
-    mb = F.col("__sb").cast("double") / nb.cast("double")
-    n_tot = (na + nb).cast("double")
-    sp = F.sqrt((ssa + ssb) / (n_tot - F.lit(2.0)))
-    bad = (na < 2) | (nb < 2)
-    return m.select(
-        *kc, na.cast("long").alias("n_a"), nb.cast("long").alias("n_b"),
-        F.when(bad, F.lit(None).cast("long"))
-        .otherwise(F.when(ssa + ssb == 0.0, F.lit(None).cast("long"))
-                   .otherwise(F.round(F.lit(1e6) * (ma - mb) / sp)
-                              .cast("long"))).alias("d_micro"),
-        F.when(bad, F.lit(None).cast("long"))
-        .otherwise(F.when(ssa + ssb == 0.0, F.lit(None).cast("long"))
-                   .otherwise(F.round(F.lit(1e6) * (ma - mb) / sp *
-                              (F.lit(1.0) - F.lit(3.0) /
-                               (F.lit(4.0) * n_tot - F.lit(9.0))))
-                              .cast("long"))).alias("g_micro"))
+    """Cohen's d / Hedges' g: pooled-sd standardized mean difference over
+    the welch_t six-moment groupBy; (1e6*(ma-mb))/sp association order.
+    Scala ``Stats.cohensD``."""
+    return _wrap(df, _pl().Stats.cohensD(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def cochran_armitage(df, keys, score_col, label_col):
-    """Cochran-Armitage trend test — Python mirror of the Scala
-    ``Stats.cochranArmitage``: exact per-level moments, factored
-    denominator (each factor under its own sqrt), round-once z."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    per_level = (df.where(F.col(score_col).isNotNull() &
-                          F.col(label_col).isNotNull())
-                 .select(*kc, F.col(score_col).cast("long").alias("__s"),
-                         F.col(label_col).cast("boolean").alias("__y"))
-                 .groupBy(*kc, F.col("__s"))
-                 .agg(F.count(F.lit(1)).alias("__ni"),
-                      F.count(F.when(F.col("__y"), 1)).alias("__ri")))
-    m = (per_level.groupBy(*kc)
-         .agg(F.sum("__ni").cast(dec).alias("__N"),
-              F.sum("__ri").cast(dec).alias("__R"),
-              F.count(F.lit(1)).alias("n_levels"),
-              F.sum(F.col("__s").cast(dec) * F.col("__ni")).alias("__ns"),
-              F.sum(F.col("__s").cast(dec) * F.col("__s") * F.col("__ni"))
-              .alias("__nss"),
-              F.sum(F.col("__s").cast(dec) * F.col("__ri")).alias("__sr")))
-    n_big, r = F.col("__N"), F.col("__R")
-    nt = F.col("__sr") * n_big - F.col("__ns") * r
-    x = n_big * F.col("__nss") - F.col("__ns") * F.col("__ns")
-    return m.select(
-        *kc, n_big.cast("long").alias("n"), r.cast("long").alias("r_pos"),
-        "n_levels",
-        F.when((r == 0) | (r == n_big) | (x == 0),
-               F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * nt.cast("double") *
-                   F.sqrt(n_big.cast("double")) /
-                   F.sqrt((r * (n_big - r)).cast("double")) /
-                   F.sqrt(x.cast("double"))).cast("long")).alias("z_micro"))
+    """Cochran-Armitage trend test: exact per-level moments, factored
+    denominator (each factor under its own sqrt), round-once z. Scala
+    ``Stats.cochranArmitage``."""
+    return _wrap(df, _pl().Stats.cochranArmitage(
+        df._jdf, _seq(keys), score_col, label_col))
 
 
 def anova_f(df, keys, group_col, value_col):
-    """One-way ANOVA F — Python mirror of the Scala ``Stats.anovaF``:
-    per-group nano terms rounded once from exact DECIMAL moments,
-    summed in DECIMAL; F/eta^2 round-once; ss_* reported in whole
-    value^2 units."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    pg = (df.where(F.col(value_col).isNotNull() &
-                   F.col(group_col).isNotNull())
-          .select(*kc, F.col(group_col).cast("string").alias("__g"),
-                  F.col(value_col).cast("long").alias("__v"))
-          .groupBy(*kc, F.col("__g"))
-          # DECIMAL(38,0) from the first multiply -- long v*v wraps
-          .agg(F.count(F.lit(1)).cast(dec).alias("__ng"),
-               F.sum(F.col("__v").cast(dec)).alias("__sg"),
-               F.sum(F.col("__v").cast(dec) * F.col("__v").cast(dec))
-               .alias("__qg"))
-          .withColumn("__t", F.round(
-              F.lit(1e9) * (F.col("__sg") * F.col("__sg")).cast("double") /
-              F.col("__ng").cast("double")).cast(dec)))
-    m = (pg.groupBy(*kc)
-         .agg(F.sum("__ng").cast(dec).alias("__n"),
-              F.count(F.lit(1)).alias("k_groups"),
-              F.sum("__sg").cast(dec).alias("__s"),
-              F.sum("__qg").cast(dec).alias("__q"),
-              F.sum("__t").alias("__a")))
-    b_term = F.round(
-        F.lit(1e9) * (F.col("__s") * F.col("__s")).cast("double") /
-        F.col("__n").cast("double")).cast(dec)
-    with_b = (m.withColumn("__b", b_term)
-              .withColumn("__ssb", F.greatest(
-                  F.col("__a") - F.col("__b"), F.lit(0).cast(dec)))
-              .withColumn("__sstd",
-                          F.col("__q") * F.lit(1000000000) - F.col("__b"))
-              .withColumn("__ssw",
-                          F.col("__q") * F.lit(1000000000) - F.col("__a")))
-    n, k = F.col("__n"), F.col("k_groups")
-    bad = (k < 2) | (n <= k.cast(dec)) | (F.col("__ssw") <= 0)
-    return with_b.select(
-        *kc, n.cast("long").alias("n"), k,
-        F.expr("cast(__ssb div 1000000000 as long)").alias("ss_between"),
-        F.expr("cast(__ssw div 1000000000 as long)").alias("ss_within"),
-        F.when(bad, F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) *
-                   (F.col("__ssb").cast("double") /
-                    (k - F.lit(1)).cast("double")) /
-                   (F.col("__ssw").cast("double") /
-                    (n - k.cast(dec)).cast("double"))).cast("long"))
-        .alias("f_micro"),
-        F.when((k < 2) | (F.col("__sstd") <= 0), F.lit(None).cast("long"))
-        .otherwise(F.expr("cast((__ssb * 1000000) div __sstd as long)"))
-        .alias("eta2_ppm"))
+    """One-way ANOVA F: per-group nano terms rounded once from exact
+    DECIMAL moments, summed in DECIMAL; F/eta^2 round-once; ss_* reported
+    in whole value^2 units. Scala ``Stats.anovaF``."""
+    return _wrap(df, _pl().Stats.anovaF(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def brown_forsythe(df, keys, group_col, value_col):
-    """Brown-Forsythe robust variance test — Python mirror of the
-    Scala ``Stats.brownForsythe``: deterministic lower medians off the
-    per-(key, group) distinct-value histogram, then anova_f on
-    |x - median|."""
-    kc = [F.col(k) for k in keys]
-    base = (df.where(F.col(value_col).isNotNull() &
-                     F.col(group_col).isNotNull())
-            .select(*kc, F.col(group_col).cast("string").alias("__g"),
-                    F.col(value_col).cast("long").alias("__v")))
-    gk = kc + [F.col("__g")]
-    hist = base.groupBy(*gk, F.col("__v")).agg(F.count(F.lit(1)).alias("__c"))
-    w_cum = (Window.partitionBy(*gk).orderBy(F.col("__v"))
-             .rowsBetween(Window.unboundedPreceding, 0))
-    w_tot = Window.partitionBy(*gk)
-    med = (hist
-           .withColumn("__cum", F.sum("__c").over(w_cum))
-           .withColumn("__tot", F.sum("__c").over(w_tot))
-           .where(F.col("__cum") * 2 >= F.col("__tot"))
-           .groupBy(*gk).agg(F.min("__v").alias("__med")))
-    z = (base.join(med, keys + ["__g"])
-         .select(*kc, F.col("__g"),
-                 F.abs(F.col("__v") - F.col("__med")).alias("__z")))
-    return anova_f(z, keys, "__g", "__z")
+    """Brown-Forsythe robust variance test: deterministic lower medians off
+    the per-(key, group) distinct-value histogram, then anova_f on |x -
+    median|. Scala ``Stats.brownForsythe``."""
+    return _wrap(df, _pl().Stats.brownForsythe(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def kruskal_wallis(df, keys, group_col, value_col):
-    """Kruskal-Wallis H — Python mirror of the Scala
-    ``Stats.kruskalWallis``: pooled double mid-ranks over distinct
-    values, per-group nano terms, tie-corrected round-once H."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    cells = (df.where(F.col(value_col).isNotNull() &
-                      F.col(group_col).isNotNull())
-             .select(*kc, F.col(group_col).cast("string").alias("__g"),
-                     F.col(value_col).cast("long").alias("__v"))
-             .groupBy(*kc, F.col("__g"), F.col("__v"))
-             .agg(F.count(F.lit(1)).alias("__cgv")))
-    pooled = cells.groupBy(*kc, F.col("__v")).agg(F.sum("__cgv").alias("__cv"))
-    w = (Window.partitionBy(*kc).orderBy("__v")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    dr = pooled.withColumn("__dr", F.lit(2) * F.coalesce(
-        F.sum("__cv").over(w), F.lit(0)) + F.col("__cv") + F.lit(1))
-    per_g = (cells.join(dr.select(*kc, "__v", "__dr"), keys + ["__v"])
-             .groupBy(*kc, F.col("__g"))
-             .agg(F.sum("__cgv").cast(dec).alias("__ng"),
-                  F.sum(F.col("__cgv").cast(dec) * F.col("__dr"))
-                  .alias("__r2g"))
-             .withColumn("__t", F.round(
-                 F.lit(1e9) * (F.col("__r2g") * F.col("__r2g"))
-                 .cast("double") /
-                 (F.lit(4).cast(dec) * F.col("__ng")).cast("double"))
-                 .cast(dec)))
-    ties = (pooled.groupBy(*kc)
-            .agg(F.sum(F.col("__cv").cast(dec) * F.col("__cv") *
-                       F.col("__cv") - F.col("__cv")).alias("__tie")))
-    m = (per_g.groupBy(*kc)
-         .agg(F.sum("__ng").cast(dec).alias("__n"),
-              F.count(F.lit(1)).alias("k_groups"),
-              F.sum("__t").alias("__a"))
-         .join(ties, keys))
-    n = F.col("__n")
-    corr = F.lit(1.0) - F.col("__tie").cast("double") / \
-        (n * n * n - n).cast("double")
-    bad = (F.col("k_groups") < 2) | ((n * n * n - n) == 0) | \
-        (F.col("__tie") == (n * n * n - n))
-    return m.select(
-        *kc, n.cast("long").alias("n"), "k_groups",
-        F.when(bad, F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * (
-            F.lit(12.0) * F.col("__a").cast("double") / F.lit(1e9) /
-            (n * (n + F.lit(1))).cast("double") -
-            F.lit(3.0) * (n + F.lit(1)).cast("double")) / corr)
-            .cast("long")).alias("h_micro"))
+    """Kruskal-Wallis H: pooled double mid-ranks over distinct values, per-
+    group nano terms, tie-corrected round-once H. Scala
+    ``Stats.kruskalWallis``."""
+    return _wrap(df, _pl().Stats.kruskalWallis(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def grubbs(df, keys, value_col):
-    """Grubbs' outlier statistic — Python mirror of the Scala
-    ``Stats.grubbs``: extremes-only identity, one moment pass,
-    factored sqrts."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    m = (df.where(F.col(value_col).isNotNull())
-         .select(*kc, F.col(value_col).cast("long").alias("__v"))
-         .groupBy(*kc)
-         # DECIMAL(38,0) from the first multiply -- long v*v wraps
-         .agg(F.count(F.lit(1)).cast(dec).alias("__n"),
-              F.sum(F.col("__v").cast(dec)).alias("__s"),
-              F.sum(F.col("__v").cast(dec) * F.col("__v").cast(dec))
-              .alias("__q"),
-              F.min("__v").alias("__mn"), F.max("__v").alias("__mx")))
-    n, s = F.col("__n"), F.col("__s")
-    dev_hi = n * F.col("__mx") - s
-    dev_lo = s - n * F.col("__mn")
-    dev = F.greatest(dev_hi, dev_lo)
-    var_num = n * F.col("__q") - s * s
-    return m.select(
-        *kc, n.cast("long").alias("n"),
-        F.when(dev_hi >= dev_lo, F.col("__mx")).otherwise(F.col("__mn"))
-        .alias("at_value"),
-        F.when((n < 3) | (var_num == 0), F.lit(None).cast("long"))
-        .otherwise(F.round(F.lit(1e6) * dev.cast("double") *
-                   F.sqrt((n - F.lit(1)).cast("double")) /
-                   F.sqrt(n.cast("double")) /
-                   F.sqrt(var_num.cast("double"))).cast("long"))
-        .alias("g_micro"))
+    """Grubbs' outlier statistic: extremes-only identity, one moment pass,
+    factored sqrts. Scala ``Stats.grubbs``."""
+    return _wrap(df, _pl().Stats.grubbs(df._jdf, _seq(keys), value_col))
 
 
 def anderson_darling(ref, cur, value_col, max_distinct=65536):
-    """Anderson-Darling two-sample test — Python mirror of the Scala
-    ``Stats.andersonDarling``: tie-adjusted midrank form over the
-    pooled distinct-value histogram; per-(sample, value) nano terms
-    rounded once, exact long sums, round-once A^2."""
-    dec = "decimal(38,0)"
-
-    def side(df, n):
-        return (df.where(F.col(value_col).isNotNull())
-                .select(F.col(value_col).cast("long").alias("__v"))
-                .groupBy("__v").agg(F.count(F.lit(1)).alias(n)))
-
-    j = _cap_pooled_distinct(
-        side(ref, "__ca").join(side(cur, "__cb"), ["__v"], "full")
-        .na.fill(0, ["__ca", "__cb"]), "anderson_darling", max_distinct)
-    w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (j.withColumn("__cuma", F.sum("__ca").over(w))
-           .withColumn("__cumb", F.sum("__cb").over(w)))
-    tot = j.agg(F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb"),
-                F.count(F.lit(1)).alias("__nv"))
-    g = (cum.crossJoin(F.broadcast(tot))
-         .withColumn("__l", F.col("__ca") + F.col("__cb"))
-         .withColumn("__N", F.col("__na") + F.col("__nb"))
-         .withColumn("__b2", F.lit(2) * (F.col("__cuma") + F.col("__cumb"))
-                     - F.col("__l"))
-         .withColumn("__den2",
-                     F.col("__b2").cast(dec) *
-                     (F.lit(2) * F.col("__N") - F.col("__b2")) -
-                     F.col("__N").cast(dec) * F.col("__l")))
-
-    def term_for(cum_c, c_c, n_c):
-        m2 = F.lit(2) * F.col(cum_c) - F.col(c_c)
-        num2 = (F.col("__N").cast(dec) * m2 -
-                F.col(n_c).cast(dec) * F.col("__b2")).cast("double")
-        return (F.when((F.col("__den2") == 0) | (F.col(n_c) == 0), F.lit(0))
-                .otherwise(F.round(F.lit(1e9) * F.col("__l").cast("double") *
-                           num2 * num2 /
-                           (F.col("__N").cast("double") *
-                            F.col(n_c).cast("double") *
-                            F.col("__den2").cast("double"))).cast("long")))
-
-    return (g.withColumn("__ta", term_for("__cuma", "__ca", "__na"))
-            .withColumn("__tb", term_for("__cumb", "__cb", "__nb"))
-            .agg(F.max("__na").alias("n_ref"), F.max("__nb").alias("n_cur"),
-                 F.max("__nv").alias("__nvx"), F.max("__N").alias("__Nx"),
-                 F.sum(F.col("__ta") + F.col("__tb")).alias("__sum"))
-            .select("n_ref", "n_cur",
-                    F.when((F.col("n_ref") == 0) | (F.col("n_cur") == 0) |
-                           (F.col("__nvx") < 2), F.lit(None).cast("long"))
-                    .otherwise(F.round(
-                        ((F.col("__Nx") - F.lit(1)).cast(dec) *
-                         F.col("__sum")).cast("double") /
-                        F.col("__Nx").cast("double") / F.lit(1000.0))
-                        .cast("long")).alias("a2_micro")))
+    """Anderson-Darling two-sample test: tie-adjusted midrank form over the
+    pooled distinct-value histogram; per-(sample, value) nano terms rounded
+    once, exact long sums, round-once A^2. Scala ``Stats.andersonDarling``."""
+    _check_max_distinct(max_distinct)
+    return _wrap(ref, _pl().Stats.andersonDarling(
+        ref._jdf, cur._jdf, value_col, int(max_distinct)))
 
 
 def energy_distance(ref, cur, value_col, max_distinct=65536):
-    """Energy distance two-sample test — Python mirror of the Scala
-    ``Stats.energyDistance``: every pairwise-|difference| sum exact via
-    the sorted prefix identity over distinct values (no pair join);
-    one round-once micro over the three V-statistic ratios."""
-    dec = "decimal(38,0)"
-
-    def side(df, n):
-        return (df.where(F.col(value_col).isNotNull())
-                .select(F.col(value_col).cast("long").alias("__v"))
-                .groupBy("__v").agg(F.count(F.lit(1)).alias(n)))
-
-    j = _cap_pooled_distinct(
-        side(ref, "__ca").join(side(cur, "__cb"), ["__v"], "full")
-        .na.fill(0, ["__ca", "__cb"]), "energy_distance", max_distinct)
-    w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (j.withColumn("__cab", F.coalesce(F.sum("__ca").over(w),
-                                            F.lit(0)).cast(dec))
-           .withColumn("__cbb", F.coalesce(F.sum("__cb").over(w),
-                                           F.lit(0)).cast(dec))
-           .withColumn("__sab", F.coalesce(
-               F.sum(F.col("__v").cast(dec) * F.col("__ca")).over(w),
-               F.lit(0).cast(dec)))
-           .withColumn("__sbb", F.coalesce(
-               F.sum(F.col("__v").cast(dec) * F.col("__cb")).over(w),
-               F.lit(0).cast(dec))))
-    tot = j.agg(F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb"))
-    v = F.col("__v").cast(dec)
-    terms = (cum
-             .withColumn("__tab", F.col("__ca").cast(dec) *
-                         (v * F.col("__cbb") - F.col("__sbb")) +
-                         F.col("__cb").cast(dec) *
-                         (v * F.col("__cab") - F.col("__sab")))
-             .withColumn("__taa", F.lit(2).cast(dec) * F.col("__ca") *
-                         (v * F.col("__cab") - F.col("__sab")))
-             .withColumn("__tbb", F.lit(2).cast(dec) * F.col("__cb") *
-                         (v * F.col("__cbb") - F.col("__sbb")))
-             .agg(F.sum("__tab").alias("__ab"), F.sum("__taa").alias("__aa"),
-                  F.sum("__tbb").alias("__bb")))
-    return (terms.crossJoin(F.broadcast(tot))
-            .select(F.col("__na").alias("n_ref"),
-                    F.col("__nb").alias("n_cur"),
-                    F.when((F.col("__na") == 0) | (F.col("__nb") == 0),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * (
-                        F.lit(2.0) * F.col("__ab").cast("double") /
-                        (F.col("__na").cast(dec) * F.col("__nb"))
-                        .cast("double") -
-                        F.col("__aa").cast("double") /
-                        (F.col("__na").cast(dec) * F.col("__na"))
-                        .cast("double") -
-                        F.col("__bb").cast("double") /
-                        (F.col("__nb").cast(dec) * F.col("__nb"))
-                        .cast("double"))).cast("long")).alias("e_micro")))
+    """Energy distance two-sample test: every pairwise-|difference| sum
+    exact via the sorted prefix identity over distinct values (no pair
+    join); one round-once micro over the three V-statistic ratios. Scala
+    ``Stats.energyDistance``."""
+    _check_max_distinct(max_distinct)
+    return _wrap(ref, _pl().Stats.energyDistance(
+        ref._jdf, cur._jdf, value_col, int(max_distinct)))
 
 
 def mutual_information(df, a_col, b_col, max_levels=1000):
-    """Mutual information + Theil's U — Python mirror of the Scala
-    ``Stats.mutualInformation``: per-cell/level nano-nat terms rounded
-    once from exact counts (absent cells contribute exactly 0 — no
-    dense grid), U = MI/H(A) round-once; max_levels margin guards."""
-    base = (df.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-            .select(F.col(a_col).cast("string").alias("__a"),
-                    F.col(b_col).cast("string").alias("__b")))
-    cells = base.groupBy("__a", "__b").agg(F.count(F.lit(1)).alias("__o"))
-
-    def margin(c, n, guard):
-        return (base.groupBy(c).agg(F.count(F.lit(1)).alias(n))
-                .withColumn("__lv",
-                            F.count(F.lit(1)).over(Window.partitionBy()))
-                .withColumn(n, F.when(F.col("__lv") <= max_levels, F.col(n))
-                            .otherwise(F.raise_error(F.concat(
-                                F.lit("mutual_information: %s has " % guard),
-                                F.col("__lv").cast("string"),
-                                F.lit(" levels, exceeds max_levels=%d"
-                                      % max_levels)))))
-                .drop("__lv"))
-
-    ra = margin("__a", "__ra", "column A")
-    cb = margin("__b", "__cb", "column B")
-    tot = base.agg(F.count(F.lit(1)).alias("__N"))
-    dec = "decimal(38,0)"
-    g = (cells.join(F.broadcast(ra), "__a").join(F.broadcast(cb), "__b")
-         .crossJoin(F.broadcast(tot)))
-    mi_term = F.round(F.lit(1e9) * F.col("__o").cast("double") /
-                      F.col("__N").cast("double") *
-                      F.log((F.col("__o").cast(dec) * F.col("__N"))
-                            .cast("double") /
-                            (F.col("__ra").cast(dec) * F.col("__cb"))
-                            .cast("double"))).cast("long")
-    mi = (g.withColumn("__t", mi_term)
-          .agg(F.max("__N").alias("n"),
-               F.countDistinct("__a").alias("k_levels"),
-               F.countDistinct("__b").alias("m_levels"),
-               F.sum("__t").alias("mi_nano_nats")))
-    ha = (ra.crossJoin(F.broadcast(tot))
-          .withColumn("__h", F.round(
-              F.lit(-1e9) * F.col("__ra").cast("double") /
-              F.col("__N").cast("double") *
-              F.log(F.col("__ra").cast("double") /
-                    F.col("__N").cast("double"))).cast("long"))
-          .agg(F.sum("__h").alias("h_a_nano_nats")))
-    return (mi.crossJoin(F.broadcast(ha))
-            .select("n", "k_levels", "m_levels", "mi_nano_nats",
-                    "h_a_nano_nats",
-                    F.when(F.col("h_a_nano_nats") <= 0,
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) *
-                               F.col("mi_nano_nats").cast("double") /
-                               F.col("h_a_nano_nats").cast("double"))
-                               .cast("long")).alias("u_micro")))
+    """Mutual information + Theil's U: per-cell/level nano-nat terms
+    rounded once from exact counts (absent cells contribute exactly 0 — no
+    dense grid), U = MI/H(A) round-once; max_levels margin guards. Scala
+    ``Stats.mutualInformation``."""
+    return _wrap(df, _pl().Stats.mutualInformation(
+        df._jdf, a_col, b_col, int(max_levels)))
 
 
 def isotonic_calibrate(df, score_col, label_col, buckets=16):
-    """Isotonic (PAV) score calibration — Python mirror of the Scala
-    ``Stats.isotonicCalibrate``: quantile-bucketed score->rate map,
+    """Isotonic (PAV) score calibration: quantile-bucketed score->rate map,
     driver-side pool-adjacent-violators over the metadata-sized bucket
-    table with exact (arbitrary-precision) cross-product compares."""
-    from decimal import Decimal, ROUND_HALF_UP
+    table with exact (arbitrary-precision) cross-product compares. Scala
+    ``Stats.isotonicCalibrate``."""
     if not 2 <= buckets <= 256:
         raise ValueError("buckets must be in [2, 256]")
-    # exact quantile bounds from the distinct-value histogram — the
-    # Scala Stats.quantileBounds algorithm, never approxQuantile
-    s = df.select(F.col(score_col).cast("long").alias("__s"))
-    hist = s.groupBy("__s").agg(F.count(F.lit(1)).alias("__c"))
-    cum = hist.withColumn("__cume", F.sum("__c").over(
-        Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, 0)))
-    tot = s.agg(F.count(F.lit(1)).alias("__n"))
-    pm = df.sparkSession.createDataFrame(
-        [(i * 1000 // buckets,) for i in range(1, buckets)], "__p long")
-    bounds = sorted(r["__b"] for r in
-                    cum.crossJoin(F.broadcast(tot))
-                    .crossJoin(F.broadcast(pm))
-                    .where(F.col("__cume") >=
-                           F.expr("(__n * __p + 999) div 1000"))
-                    .groupBy("__p").agg(F.min("__s").alias("__b"))
-                    .collect())  # bounded: buckets-1 longs
-    bucket = F.lit(0)
-    for b in bounds:
-        bucket = bucket + F.when(F.col(score_col).cast("long") >=
-                                 F.lit(int(b)), 1).otherwise(0)
-    rows = (df.select(bucket.alias("bucket"),
-                      F.col(label_col).cast("boolean").alias("__y"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.count(F.when(F.col("__y"), 1)).alias("n_pos"))
-            .orderBy("bucket").collect())
-    rows = [(r["bucket"], r["n"], r["n_pos"]) for r in rows]
-    blocks = []
-    for i, (_, n, pos) in enumerate(rows):
-        st, bn, bp = i, n, pos
-        while blocks and bp * blocks[-1][1] < blocks[-1][2] * bn:
-            pst, pn, pp = blocks.pop()
-            st, bn, bp = pst, bn + pn, bp + pp
-        # python ints are arbitrary-precision — the BigInt compare free
-        blocks.append((st, bn, bp))
-    cal = [0] * len(rows)
-    ends = [b[0] for b in blocks[1:]] + [len(rows)]
-    for (st, bn, bp), end in zip(blocks, ends):
-        ppm = int(Decimal(repr(1e6 * (bp / bn))).quantize(0, ROUND_HALF_UP))
-        for i in range(st, end):
-            cal[i] = ppm
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(b, n, p, cal[i]) for i, (b, n, p) in enumerate(rows)],
-        "bucket int, n long, n_pos long, cal_ppm long")
+    return _wrap(df, _pl().Stats.isotonicCalibrate(
+        df._jdf, score_col, label_col, int(buckets)))
 
 
 def modularity(labels, edges, src_col, dst_col):
-    """Newman-Girvan modularity — Python mirror of the Scala
-    ``Graph.modularity``: exact integer intra-edge/degree moments per
-    community, DECIMAL(38,0) numerator, one round-once division;
-    labels must cover every edge endpoint (enforced with raise_error).
-    """
-    direct = edges.select(F.col(src_col).alias("a"),
-                          F.col(dst_col).alias("b"))
-    e = (direct.unionByName(direct.select(F.col("b").alias("a"),
-                                          F.col("a").alias("b")))
-         .where(F.col("a") != F.col("b")).distinct())
-
-    def need(c, ep):
-        return (F.when(F.col(c).isNotNull(), F.col(c))
-                .otherwise(F.raise_error(F.concat(
-                    F.lit("modularity: edge endpoint "),
-                    F.col(ep).cast("string"),
-                    F.lit(" has no community label")))))
-    with_l = (e.join(labels.select(F.col("node").alias("a"),
-                                   F.col("community").alias("ca")),
-                     ["a"], "left")
-              .join(labels.select(F.col("node").alias("b"),
-                                  F.col("community").alias("cb")),
-                    ["b"], "left")
-              .select("a", "b", need("ca", "a").alias("ca"),
-                      need("cb", "b").alias("cb")))
-    m2t = with_l.agg(F.count(F.lit(1)).alias("__m2"))
-    per_c = (with_l.groupBy("ca")
-             .agg(F.count(F.when(F.col("ca") == F.col("cb"), 1))
-                  .alias("__intra2"),
-                  F.count(F.lit(1)).alias("__deg")))
-    dec = "decimal(38,0)"
-    return (per_c.crossJoin(F.broadcast(m2t))
-            .select("ca",
-                    (F.col("__m2").cast(dec) * F.col("__intra2") -
-                     F.col("__deg").cast(dec) * F.col("__deg"))
-                    .alias("__num_c"), "__m2")
-            .agg(F.count(F.lit(1)).alias("n_communities"),
-                 F.max("__m2").alias("__m2x"), F.sum("__num_c").alias("__num"))
-            .select("n_communities", F.expr("__m2x div 2").alias("m_edges"),
-                    F.round(F.lit(1e6) * F.col("__num").cast("double") /
-                            (F.col("__m2x").cast(dec) * F.col("__m2x"))
-                            .cast("double")).cast("long").alias("q_ppm")))
+    """Newman-Girvan modularity: exact integer intra-edge/degree moments
+    per community, DECIMAL(38,0) numerator, one round-once division; labels
+    must cover every edge endpoint (enforced with raise_error). Scala
+    ``Graph.modularity``."""
+    return _wrap(labels, _pl().Graph.modularity(
+        labels._jdf, edges._jdf, src_col, dst_col))
 
 
 def distribution_distance(ref, cur, value_col, max_distinct=65536):
-    """Wasserstein-1 + total variation + Cramer-von Mises in one pass —
-    Python mirror of the Scala ``Stats.distributionDistance``: exact
-    cross-multiplied CDF gaps over the joint distinct-value histogram,
-    one integer div for W1/TV, per-value nano-rounded terms for CvM."""
-    dec = "decimal(38,0)"
-
-    def hist(df, name):
-        return (df.select(F.col(value_col).cast("long").alias("__v"))
-                .where(F.col("__v").isNotNull())
-                .groupBy("__v").agg(F.count(F.lit(1)).alias(name)))
-    w = Window.orderBy("__v")
-    joined = (_cap_pooled_distinct(
-        hist(ref, "__ca").join(hist(cur, "__cb"), ["__v"], "full_outer")
-        .na.fill(0, ["__ca", "__cb"]),
-        "distribution_distance", max_distinct)
-              .withColumn("__cuma", F.sum("__ca").over(w))
-              .withColumn("__cumb", F.sum("__cb").over(w))
-              .withColumn("__width", F.coalesce(
-                  F.lead("__v", 1).over(w) - F.col("__v"), F.lit(0))))
-    na, nb = F.col("__na").cast(dec), F.col("__nb").cast(dec)
-    gap = F.abs(F.col("__cuma").cast(dec) * F.col("__nb") -
-                F.col("__cumb").cast(dec) * F.col("__na"))
-    pgap = F.abs(F.col("__ca").cast(dec) * F.col("__nb") -
-                 F.col("__cb").cast(dec) * F.col("__na"))
-    gap_d = gap.cast("double") / (na * nb).cast("double")
-    cvm_nano = F.round(F.lit(1e9) * gap_d * gap_d *
-                       (F.col("__ca") + F.col("__cb")).cast("double")) \
-        .cast("long")
-    totals = joined.agg(F.sum("__ca").alias("__na"),
-                        F.sum("__cb").alias("__nb"))
-    return (joined.crossJoin(F.broadcast(totals))
-            .agg(F.max("__na").alias("n_ref"), F.max("__nb").alias("n_cur"),
-                 F.sum(gap * F.col("__width")).alias("__w1num"),
-                 F.sum(pgap).alias("__tvnum"),
-                 F.sum(cvm_nano.cast(dec)).alias("__cvmnano"))
-            .selectExpr("n_ref", "n_cur",
-                        "cast(__w1num * 1000000 div "
-                        "(cast(n_ref as decimal(38,0)) * n_cur) as long) "
-                        "as w1_micro",
-                        "cast(__tvnum * 500000 div "
-                        "(cast(n_ref as decimal(38,0)) * n_cur) as long) "
-                        "as tv_ppm",
-                        "cast(__cvmnano div (1000 * "
-                        "(cast(n_ref as decimal(38,0)) + n_cur)) as long) "
-                        "as cvm_micro"))
+    """Wasserstein-1 + total variation + Cramer-von Mises in one pass:
+    exact cross-multiplied CDF gaps over the joint distinct-value
+    histogram, one integer div for W1/TV, per-value nano-rounded terms for
+    CvM. Scala ``Stats.distributionDistance``."""
+    _check_max_distinct(max_distinct)
+    return _wrap(ref, _pl().Stats.distributionDistance(
+        ref._jdf, cur._jdf, value_col, int(max_distinct)))
 
 
 def token_dispersion(df, part_col, text_col, min_count=5, k=50,
                      max_parts=10000):
-    """Gries' DP token dispersion — Python mirror of the Scala
-    ``Stats.tokenDispersion``: per token, the total-variation distance
+    """Gries' DP token dispersion: per token, the total-variation distance
     between its occurrence distribution over parts and the parts' size
-    shares; exact cross-multiplied integers, one floor div per token,
-    top-k most-concentrated first. A ``max_parts`` distinct-count guard
-    fails loudly if the part column is corpus-cardinality."""
-    dec = "decimal(38,0)"
-    tok = (df.select(F.col(part_col).alias("part"),
-                     F.explode(F.split(F.col(text_col), " "))
-                     .alias("token"))
-           .where(F.col("token") != ""))
-    ctp = tok.groupBy("token", "part").agg(F.count(F.lit(1)).alias("__c"))
-    ft = (ctp.groupBy("token").agg(F.sum("__c").alias("__f"))
-          .where(F.col("__f") >= min_count))
-    np_ = (tok.groupBy("part").agg(F.count(F.lit(1)).alias("__np"))
-           .withColumn("__nparts",
-                       F.count(F.lit(1)).over(Window.partitionBy()))
-           .withColumn("__np", F.when(F.col("__nparts") <= max_parts,
-                                      F.col("__np"))
-                       .otherwise(F.raise_error(F.concat(
-                           F.lit("token_dispersion: "),
-                           F.col("__nparts").cast("string"),
-                           F.lit(" distinct parts exceeds max_parts=%d"
-                                 % max_parts)))))
-           .drop("__nparts"))
-    tot = np_.agg(F.sum("__np").alias("__N"))
-    return (ft.crossJoin(F.broadcast(np_))
-            .join(ctp, ["token", "part"], "left")
-            .na.fill(0, ["__c"])
-            .crossJoin(F.broadcast(tot))
-            .groupBy("token")
-            .agg(F.max("__f").alias("f"),
-                 F.sum(F.abs(F.col("__c").cast(dec) * F.col("__N") -
-                             F.col("__np").cast(dec) * F.col("__f")))
-                 .alias("__num"),
-                 F.max("__N").alias("__Nx"))
-            .selectExpr("token", "f",
-                        "cast(__num * 500000 div "
-                        "(cast(f as decimal(38,0)) * __Nx) as long) "
-                        "as dp_ppm")
-            .orderBy(F.col("dp_ppm").desc(), "token").limit(k))
+    shares; exact cross-multiplied integers, one floor div per token, top-k
+    most-concentrated first. A ``max_parts`` distinct-count guard fails
+    loudly if the part column is corpus-cardinality. Scala
+    ``Stats.tokenDispersion``."""
+    return _wrap(df, _pl().Stats.tokenDispersion(
+        df._jdf, part_col, text_col, int(min_count), int(k), int(max_parts)))
 
 
 def durbin_watson(df, keys, order_col, value_col):
-    """Durbin-Watson first-order serial-correlation statistic per key
-    -- Python mirror of the Scala ``Stats.durbinWatson``: DECIMAL(38,0)
-    sums from the first multiply, one key-partitioned lag-1 window +
-    one groupBy, one round-once micro division. NULL when n < 2 or
-    the denominator is 0."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    w = Window.partitionBy(*kc).orderBy(F.col("__t"))
-    base = (df.where(F.col(value_col).isNotNull() &
-                     F.col(order_col).isNotNull())
-            .select(*kc, F.col(order_col).alias("__t"),
-                    F.col(value_col).cast("long").alias("__x"))
-            .withColumn("__lag", F.lag("__x", 1).over(w)))
-    xd = F.col("__x").cast(dec)
-    dd = (F.col("__x") - F.col("__lag")).cast(dec)
-    m = base.groupBy(*kc).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(xd * xd).alias("__den"),
-        F.sum(F.when(F.col("__lag").isNotNull(), dd * dd)
-              .otherwise(F.lit(0).cast(dec))).alias("__num"))
-    return m.select(*kc, F.col("n"),
-                    F.when((F.col("n") < 2) | (F.col("__den") == 0),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(
-                        F.lit(1e6) * F.col("__num").cast("double") /
-                        F.col("__den").cast("double")).cast("long"))
-                    .alias("dw_micro"))
+    """Durbin-Watson first-order serial-correlation statistic per key:
+    DECIMAL(38,0) sums from the first multiply, one key-partitioned lag-1
+    window + one groupBy, one round-once micro division. NULL when n < 2 or
+    the denominator is 0. Scala ``Stats.durbinWatson``."""
+    return _wrap(df, _pl().Stats.durbinWatson(
+        df._jdf, _seq(keys), order_col, value_col))
 
 
 def runs_test(df, keys, order_col, flag_col):
-    """Wald-Wolfowitz runs test per key -- Python mirror of the Scala
-    ``Stats.runsTest``: exact run count via one lag-1 window, exact
-    DECIMAL mean/variance numerators, round-once micro z. NULL when
-    either side is empty, n < 2, or the variance is 0."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    w = Window.partitionBy(*kc).orderBy(F.col("__t"))
-    base = (df.where(F.col(flag_col).isNotNull() &
-                     F.col(order_col).isNotNull())
-            .select(*kc, F.col(order_col).alias("__t"),
-                    F.col(flag_col).cast("boolean").alias("__x"))
-            .withColumn("__brk", F.when(
-                F.lag("__x", 1).over(w).isNull() |
-                (F.lag("__x", 1).over(w) != F.col("__x")),
-                F.lit(1)).otherwise(F.lit(0))))
-    m = base.groupBy(*kc).agg(
-        F.count(F.when(F.col("__x"), 1)).alias("n_pos"),
-        F.count(F.when(~F.col("__x"), 1)).alias("n_neg"),
-        F.sum("__brk").alias("runs"))
-    n1, n2 = F.col("n_pos").cast(dec), F.col("n_neg").cast(dec)
-    n = n1 + n2
-    two = F.lit(2).cast(dec)
-    mu_num = two * n1 * n2 + n
-    var_num = two * n1 * n2 * (two * n1 * n2 - n)
-    sigma = F.sqrt(var_num.cast("double") /
-                   (n * n * (n - F.lit(1).cast(dec))).cast("double"))
-    return m.select(*kc, "n_pos", "n_neg", "runs",
-                    F.when((F.col("n_pos") == 0) | (F.col("n_neg") == 0) |
-                           (n < F.lit(2).cast(dec)) |
-                           (var_num <= F.lit(0).cast(dec)),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * (
-                        F.col("runs").cast("double") -
-                        mu_num.cast("double") / n.cast("double")) / sigma)
-                        .cast("long")).alias("z_micro"))
+    """Wald-Wolfowitz runs test per key: exact run count via one lag-1
+    window, exact DECIMAL mean/variance numerators, round-once micro z.
+    NULL when either side is empty, n < 2, or the variance is 0. Scala
+    ``Stats.runsTest``."""
+    return _wrap(df, _pl().Stats.runsTest(
+        df._jdf, _seq(keys), order_col, flag_col))
 
 
 def ljung_box(df, keys, order_col, value_col, max_lag=8):
-    """Ljung-Box portmanteau whiteness statistic per key -- Python
-    mirror of the Scala ``Stats.ljungBox``: composes ``acf`` by
-    CONTRACT on its quantized r_micro, summing exact integer per-lag
-    terms (order-independent), one round-once division. NULL q when
-    n <= h."""
-    dec = "decimal(38,0)"
-    r = acf(df, keys, order_col, value_col, max_lag)
-    terms = r.withColumn("__term", F.when(
-        F.col("r_micro").isNull(), F.lit(0)).otherwise(
-        F.expr("cast((cast(r_micro as decimal(38,0)) * r_micro"
-               " * 1000000) div n_pairs as bigint)")))
-    s = (terms.groupBy(*[F.col(k) for k in keys])
-         .agg(F.sum("__term").alias("__s"), F.count(F.lit(1)).alias("h"),
-              (F.max(F.when(F.col("lag") == 1, F.col("n_pairs"))) +
-               F.lit(1)).alias("n")))
-    return s.select(*[F.col(k) for k in keys], "n", "h",
-                    F.when(F.col("n") <= F.col("h"),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(
-                        (F.col("n").cast(dec) *
-                         (F.col("n") + F.lit(2)).cast(dec)).cast("double") *
-                        F.col("__s").cast("double") / 1e12).cast("long"))
-                    .alias("q_micro"))
+    """Ljung-Box portmanteau whiteness statistic per key: composes ``acf``
+    by CONTRACT on its quantized r_micro, summing exact integer per-lag
+    terms (order-independent), one round-once division. NULL q when n <= h.
+    Scala ``Stats.ljungBox``."""
+    return _wrap(df, _pl().Stats.ljungBox(
+        df._jdf, _seq(keys), order_col, value_col, int(max_lag)))
 
 
 def jarque_bera(df, keys, value_col):
-    """Jarque-Bera normality test per key -- Python mirror of the
-    Scala ``Stats.jarqueBera``: exact single-pass DECIMAL(38,0) power
-    sums s1..s4, scale-free central-moment ratios (the n-powers
-    cancel), m2^1.5 as m2*sqrt(m2) (no pow() parity risk). NULL when
-    n < 2 or M2 = 0. Overflow bound: n * v_max < 10**9.5 per key."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    vd = F.col("__v").cast(dec)
-    m = (df.where(F.col(value_col).isNotNull())
-         .select(*kc, F.col(value_col).cast("long").alias("__v"))
-         .groupBy(*kc)
-         .agg(F.count(F.lit(1)).cast(dec).alias("__n"),
-              F.sum(vd).alias("__s1"),
-              F.sum(vd * vd).alias("__s2"),
-              F.sum(vd * vd * vd).alias("__s3"),
-              F.sum(vd * vd * vd * vd).alias("__s4")))
-    n, s1 = F.col("__n"), F.col("__s1")
-    s2, s3, s4 = F.col("__s2"), F.col("__s3"), F.col("__s4")
-    three, four, six = (F.lit(x).cast(dec) for x in (3, 4, 6))
-    two = F.lit(2).cast(dec)
-    m2 = n * s2 - s1 * s1
-    m3 = n * n * s3 - three * n * s1 * s2 + two * s1 * s1 * s1
-    m4 = (n * n * n * s4 - four * n * n * s1 * s3 +
-          six * n * s1 * s1 * s2 - three * s1 * s1 * s1 * s1)
-    m2d, m3d, m4d = m2.cast("double"), m3.cast("double"), m4.cast("double")
-    skew = m3d / (m2d * F.sqrt(m2d))
-    kurt = m4d / (m2d * m2d) - F.lit(3.0)
-    bad = (n < F.lit(2).cast(dec)) | (m2 <= F.lit(0).cast(dec))
-    null_long = F.lit(None).cast("long")
-    return m.select(
-        *kc, n.cast("long").alias("n"),
-        F.when(bad, null_long)
-        .otherwise(F.round(F.lit(1e6) * skew).cast("long"))
-        .alias("skew_micro"),
-        F.when(bad, null_long)
-        .otherwise(F.round(F.lit(1e6) * kurt).cast("long"))
-        .alias("kurt_micro"),
-        F.when(bad, null_long)
-        .otherwise(F.round(F.lit(1e6) * n.cast("double") / F.lit(6.0) *
-                           (skew * skew + kurt * kurt / F.lit(4.0)))
-                   .cast("long")).alias("jb_micro"))
+    """Jarque-Bera normality test per key: exact single-pass DECIMAL(38,0)
+    power sums s1..s4, scale-free central-moment ratios (the n-powers
+    cancel), m2^1.5 as m2*sqrt(m2) (no pow() parity risk). NULL when n < 2
+    or M2 = 0. Overflow bound: n * v_max < 10**9.5 per key. Scala
+    ``Stats.jarqueBera``."""
+    return _wrap(df, _pl().Stats.jarqueBera(df._jdf, _seq(keys), value_col))
 
 
 def cochran_q(df, keys, item_col, treatment_col, outcome_col):
-    """Cochran's Q per key -- Python mirror of the Scala
-    ``Stats.cochranQ``: exact integers end to end over one item-level
-    and one treatment-level rollup; blocks must be complete (fails
-    loud on an item whose treatment count differs from k). NULL when
-    the denominator is 0 or k < 2."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    base = (df.where(F.col(item_col).isNotNull() &
-                     F.col(treatment_col).isNotNull() &
-                     F.col(outcome_col).isNotNull())
-            .select(*kc, F.col(item_col).alias("__i"),
-                    F.col(treatment_col).alias("__j"),
-                    F.col(outcome_col).cast("boolean").alias("__y")))
-    k = base.groupBy(*kc).agg(F.countDistinct("__j").alias("__k"))
-    items = (base.groupBy(*kc, F.col("__i"))
-             .agg(F.count(F.lit(1)).alias("__ki"),
-                  F.count(F.when(F.col("__y"), 1)).alias("__li")))
-    li = F.col("__li").cast(dec)
-    item_sums = (items.join(F.broadcast(k), keys)
-                 .withColumn("__li", F.when(
-                     F.col("__ki") == F.col("__k"), F.col("__li"))
-                     .otherwise(F.raise_error(F.concat(
-                         F.lit("cochran_q: item "),
-                         F.col("__i").cast("string"), F.lit(" has "),
-                         F.col("__ki").cast("string"),
-                         F.lit(" treatments, expected "),
-                         F.col("__k").cast("string"),
-                         F.lit(" -- blocks must be complete")))))
-                 .groupBy(*kc)
-                 .agg(F.count(F.lit(1)).alias("n_items"),
-                      F.sum(li).alias("__sl"),
-                      F.sum(li * li).alias("__sl2")))
-    gj = F.col("__gj").cast(dec)
-    treat_sums = (base.groupBy(*kc, F.col("__j"))
-                  .agg(F.count(F.when(F.col("__y"), 1)).alias("__gj"))
-                  .groupBy(*kc)
-                  .agg(F.sum(gj).alias("__sg"), F.sum(gj * gj).alias("__sg2")))
-    kd = F.col("__k").cast(dec)
-    num = (kd - F.lit(1).cast(dec)) * \
-        (kd * F.col("__sg2") - F.col("__sg") * F.col("__sg"))
-    den = kd * F.col("__sl") - F.col("__sl2")
-    return (item_sums.join(treat_sums, keys).join(F.broadcast(k), keys)
-            .select(*kc, "n_items", F.col("__k").alias("k"),
-                    F.when((F.col("__k") < 2) |
-                           (den <= F.lit(0).cast(dec)),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * num.cast("double") /
-                                       den.cast("double")).cast("long"))
-                    .alias("q_micro")))
+    """Cochran's Q per key: exact integers end to end over one item-level
+    and one treatment-level rollup; blocks must be complete (fails loud on
+    an item whose treatment count differs from k). NULL when the
+    denominator is 0 or k < 2. Scala ``Stats.cochranQ``."""
+    return _wrap(df, _pl().Stats.cochranQ(
+        df._jdf, _seq(keys), item_col, treatment_col, outcome_col))
 
 
 def bartlett(df, keys, group_col, value_col):
-    """Bartlett's equal-variance test per key -- Python mirror of the
-    Scala ``Stats.bartlett``: per-group nano-rounded ln-variance /
-    within-SS / reciprocal terms summed order-independently, exact
-    DECIMAL variance numerators under a single log. NULL when k < 2,
-    any n_g < 2, or any group variance is 0."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    g = (df.where(F.col(value_col).isNotNull() &
-                  F.col(group_col).isNotNull())
-         .select(*kc, F.col(group_col).cast("string").alias("__g"),
-                 F.col(value_col).cast("long").alias("__v"))
-         .groupBy(*kc, F.col("__g"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("__ng"),
-              F.sum(F.col("__v").cast(dec)).alias("__sg"),
-              F.sum(F.col("__v").cast(dec) * F.col("__v").cast(dec))
-              .alias("__qg")))
-    ng = F.col("__ng")
-    ssn = ng * F.col("__qg") - F.col("__sg") * F.col("__sg")
-    wt = (g.withColumn("__ssn", ssn)
-          .withColumn("__lnterm", F.when(
-              (ng < 2) | (F.col("__ssn") <= 0), F.lit(None).cast(dec))
-              .otherwise(F.round(
-                  F.lit(1e9) * (ng - F.lit(1)).cast("double") *
-                  F.log(F.col("__ssn").cast("double") /
-                        (ng * (ng - F.lit(1))).cast("double"))).cast(dec)))
-          .withColumn("__tnano", F.round(
-              F.lit(1e9) * F.col("__ssn").cast("double") /
-              ng.cast("double")).cast(dec))
-          .withColumn("__inv", F.when(ng < 2, F.lit(None).cast("long"))
-                      .otherwise(F.round(
-                          F.lit(1e9) / (ng - F.lit(1)).cast("double"))
-                          .cast("long"))))
-    m = (wt.groupBy(*kc)
-         .agg(F.count(F.lit(1)).alias("k"),
-              F.sum(ng).cast("long").alias("n"),
-              F.min(ng.cast("long")).alias("__minn"),
-              F.min(F.col("__ssn")).alias("__minssn"),
-              F.sum("__lnterm").alias("__T"),
-              F.sum("__tnano").alias("__ssw"),
-              F.sum("__inv").alias("__invs")))
-    kd = F.col("k").cast("double")
-    nmk = (F.col("n") - F.col("k")).cast("double")
-    ssw = F.col("__ssw").cast("double")
-    chi2 = nmk * (F.log(ssw) - F.log(F.lit(1e9) * nmk)) - \
-        F.col("__T").cast("double") / F.lit(1e9)
-    c = F.lit(1.0) + (F.col("__invs").cast("double") / F.lit(1e9) -
-                      F.lit(1.0) / nmk) / (F.lit(3.0) * (kd - F.lit(1.0)))
-    return m.select(*kc, "k", "n",
-                    F.when((F.col("k") < 2) | (F.col("__minn") < 2) |
-                           (F.col("__minssn") <= 0) | (F.col("__ssw") <= 0),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * chi2 / c).cast("long"))
-                    .alias("chi2_micro"))
+    """Bartlett's equal-variance test per key: per-group nano-rounded ln-
+    variance / within-SS / reciprocal terms summed order-independently,
+    exact DECIMAL variance numerators under a single log. NULL when k < 2,
+    any n_g < 2, or any group variance is 0. Scala ``Stats.bartlett``."""
+    return _wrap(df, _pl().Stats.bartlett(
+        df._jdf, _seq(keys), group_col, value_col))
 
 
 def moods_median(df, keys, group_col, value_col, max_groups=1000):
-    """Mood's median test per key -- Python mirror of the Scala
-    ``Stats.moodsMedian``: pooled lower median over the per-key
-    distinct-value histogram, then the k x 2 chi-square with exact
-    per-cell nano terms. Fails loud past max_groups group levels."""
+    """Mood's median test per key: pooled lower median over the per-key
+    distinct-value histogram, then the k x 2 chi-square with exact per-cell
+    nano terms. Fails loud past max_groups group levels. Scala
+    ``Stats.moodsMedian``."""
     if not (2 <= max_groups <= 100000):
         raise ValueError("max_groups must be in [2, 100000], got %d"
                          % max_groups)
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    base = (df.where(F.col(value_col).isNotNull() &
-                     F.col(group_col).isNotNull())
-            .select(*kc, F.col(group_col).cast("string").alias("__g"),
-                    F.col(value_col).cast("long").alias("__v")))
-    wc = Window.partitionBy(*kc).orderBy(F.col("__v"))
-    wk = Window.partitionBy(*kc)
-    med = (base.groupBy(*kc, F.col("__v"))
-           .agg(F.count(F.lit(1)).alias("__c"))
-           .withColumn("__cum", F.sum("__c").over(wc))
-           .withColumn("__N", F.sum("__c").over(wk))
-           .where(F.lit(2) * F.col("__cum") >= F.col("__N"))
-           .groupBy(*kc).agg(F.min("__v").alias("med")))
-    flagged = (base.join(med, keys)
-               .withColumn("__ab", (F.col("__v") > F.col("med"))
-                           .cast("string")))
-    cells = (flagged.groupBy(*kc, F.col("__g"), F.col("__ab"))
-             .agg(F.count(F.lit(1)).alias("__o")))
-    rg = (flagged.groupBy(*kc, F.col("__g"))
-          .agg(F.count(F.lit(1)).alias("__r"))
-          .withColumn("__lv", F.count(F.lit(1)).over(wk))
-          .withColumn("__r", F.when(F.col("__lv") <= max_groups,
-                                    F.col("__r"))
-                      .otherwise(F.raise_error(F.concat(
-                          F.lit("moods_median: group column has "),
-                          F.col("__lv").cast("string"),
-                          F.lit(" levels, exceeds max_groups=%d"
-                                % max_groups)))))
-          .drop("__lv"))
-    cc = (flagged.groupBy(*kc, F.col("__ab"))
-          .agg(F.count(F.lit(1)).alias("__cc")))
-    tot = flagged.groupBy(*kc).agg(F.count(F.lit(1)).alias("__N"),
-                                   F.max("med").alias("med"))
-    grid = (rg.join(cc, keys)
-            .join(cells, list(keys) + ["__g", "__ab"], "left")
-            .na.fill(0, ["__o"]).join(tot, keys))
-    num = F.col("__o").cast(dec) * F.col("__N") - \
-        F.col("__r").cast(dec) * F.col("__cc")
-    summed = (grid.withColumn("__num2", num * num)
-              .withColumn("__t", F.expr(
-                  "cast(round(1e9 * cast(__num2 as double) / "
-                  "cast(cast(__N as decimal(38,0)) * __r * __cc as double))"
-                  " as bigint)"))
-              .groupBy(*kc)
-              .agg(F.max("__N").alias("n"), F.max("med").alias("med"),
-                   F.countDistinct("__g").alias("k_groups"),
-                   F.countDistinct("__ab").alias("__ml"),
-                   F.sum("__t").alias("__chi2n")))
-    return summed.select(*kc, "n", "med", "k_groups",
-                         (F.col("k_groups") - 1).alias("dof"),
-                         F.when((F.col("k_groups") < 2) |
-                                (F.col("__ml") < 2),
-                                F.lit(None).cast("long"))
-                         .otherwise(F.round(
-                             F.col("__chi2n").cast("double") / F.lit(1e3))
-                             .cast("long")).alias("chi2_micro"))
+    return _wrap(df, _pl().Stats.moodsMedian(
+        df._jdf, _seq(keys), group_col, value_col, int(max_groups)))
 
 
 def rmst(df, keys, duration_col, event_col, tau):
-    """Restricted mean survival time per key -- Python mirror of the
-    Scala ``Stats.rmst``: area under the ``kaplan_meier`` step curve
-    to tau, composing its published quantized km_log_unats by
-    contract; per-step micro terms round once and sum
+    """Restricted mean survival time per key: area under the
+    ``kaplan_meier`` step curve to tau, composing its published quantized
+    km_log_unats by contract; per-step micro terms round once and sum
     order-independently. The tau filter applies AFTER the KM windows
-    (n_risk must keep counting beyond-tau subjects)."""
+    (n_risk must keep counting beyond-tau subjects). Scala ``Stats.rmst``."""
     if tau <= 0:
         raise ValueError("tau must be positive, got %d" % tau)
-    kc = [F.col(k) for k in keys]
-    km = (kaplan_meier(df, keys, duration_col, event_col)
-          .where((F.col("t") <= tau) & (F.col("t") >= 0)))
-    w = Window.partitionBy(*kc).orderBy(F.col("t"))
-    wk = Window.partitionBy(*kc)
-    stepped = (km
-               .withColumn("__prevT", F.coalesce(
-                   F.lag("t", 1).over(w), F.lit(0)))
-               .withColumn("__prevLog", F.coalesce(
-                   F.lag("km_log_unats", 1).over(w), F.lit(0)))
-               .withColumn("__s", F.when(
-                   F.col("km_log_unats").isNull(), F.lit(0.0))
-                   .otherwise(F.exp(
-                       F.col("km_log_unats").cast("double") / F.lit(1e6))))
-               .withColumn("__contrib", F.round(
-                   F.lit(1e6) *
-                   F.exp(F.col("__prevLog").cast("double") / F.lit(1e6)) *
-                   (F.col("t") - F.col("__prevT")).cast("double"))
-                   .cast("long"))
-               .withColumn("__maxT", F.max("t").over(wk))
-               .withColumn("__tail", F.when(
-                   (F.col("t") == F.col("__maxT")) & (F.col("t") < tau),
-                   F.round(F.lit(1e6) * F.col("__s") *
-                           (F.lit(tau) - F.col("t")).cast("double"))
-                   .cast("long")).otherwise(F.lit(0))))
-    return (stepped.groupBy(*kc)
-            .agg(F.count(F.lit(1)).alias("n_times"),
-                 (F.sum("__contrib") + F.sum("__tail")).alias("rmst_micro"))
-            .select(*kc, F.lit(tau).cast("long").alias("tau"),
-                    "n_times", "rmst_micro"))
+    return _wrap(df, _pl().Stats.rmst(
+        df._jdf, _seq(keys), duration_col, event_col, int(tau)))
 
 
 def gehan_wilcoxon(df, keys, group_col, duration_col, event_col):
-    """Gehan-Breslow-Wilcoxon early-difference weighted log-rank per
-    key -- Python mirror of the Scala ``Stats.gehanWilcoxon``: the
-    at-risk-count weight cancels the rational denominators, so the
-    n*(O-E) terms are EXACT micro integers (no division) and n^2*V
-    has one division point; terms sum in DECIMAL(38,0)."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    per_t = (df.where(F.col(duration_col).isNotNull() &
-                      F.col(event_col).isNotNull() &
-                      F.col(group_col).isNotNull())
-             .select(*kc, F.col(duration_col).cast("long").alias("__t"),
-                     F.col(event_col).cast("boolean").alias("__e"),
-                     F.col(group_col).cast("boolean").alias("__g"))
-             .groupBy(*kc, F.col("__t"))
-             .agg(F.count(F.lit(1)).alias("__m"),
-                  F.count(F.when(F.col("__g"), 1)).alias("__ma"),
-                  F.count(F.when(F.col("__e"), 1)).alias("__d"),
-                  F.count(F.when(F.col("__e") & F.col("__g"), 1))
-                  .alias("__da")))
-    w_desc = (Window.partitionBy(*kc).orderBy(F.col("__t").desc())
-              .rowsBetween(Window.unboundedPreceding, 0))
-    risky = (per_t
-             .withColumn("__n", F.sum("__m").over(w_desc))
-             .withColumn("__na", F.sum("__ma").over(w_desc))
-             .where(F.col("__d") > 0))
-
-    def D(c):
-        return c.cast(dec)
-
-    oe_t = (D(F.col("__da")) * F.col("__n") -
-            D(F.col("__d")) * F.col("__na")) * F.lit(1000000).cast(dec)
-    v_t = F.when(F.col("__n") == 1, F.lit(0).cast(dec)).otherwise(
-        F.round(F.lit(1e6) *
-                (D(F.col("__d")) * F.col("__na") *
-                 (F.col("__n") - F.col("__na")) *
-                 (F.col("__n") - F.col("__d"))).cast("double") /
-                (F.col("__n") - F.lit(1)).cast("double")).cast(dec))
-    return (risky
-            .withColumn("__oe", oe_t).withColumn("__v", v_t)
-            .groupBy(*kc)
-            .agg(F.count(F.lit(1)).alias("n_times"),
-                 F.sum("__oe").alias("__oes"), F.sum("__v").alias("__vs"))
-            .select(*kc, "n_times",
-                    F.col("__oes").cast("long").alias("oe_w_sum_micro"),
-                    F.col("__vs").cast("long").alias("var_w_sum_micro"),
-                    F.when(F.col("__vs") <= 0, F.lit(None).cast("long"))
-                    .otherwise(F.round(
-                        F.lit(1e3) * F.col("__oes").cast("double") /
-                        F.sqrt(F.col("__vs").cast("double"))).cast("long"))
-                    .alias("z_micro")))
+    """Gehan-Breslow-Wilcoxon early-difference weighted log-rank per key:
+    the at-risk-count weight cancels the rational denominators, so the
+    n*(O-E) terms are EXACT micro integers (no division) and n^2*V has one
+    division point; terms sum in DECIMAL(38,0). Scala
+    ``Stats.gehanWilcoxon``."""
+    return _wrap(df, _pl().Stats.gehanWilcoxon(
+        df._jdf, _seq(keys), group_col, duration_col, event_col))
 
 
 def theil_inequality(df, keys, value_col):
-    """Theil T + Atkinson(eps=1) inequality per key -- Python mirror
-    of the Scala ``Stats.theilInequality``: per-distinct-value nano
-    terms c*v*ln(v) and c*ln(v) round once and sum order-independently;
-    exact DECIMAL n and sum. Values must be POSITIVE (fails loud)."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    hist = (df.where(F.col(value_col).isNotNull())
-            .select(*kc, F.col(value_col).cast("long").alias("__v"))
-            .groupBy(*kc, F.col("__v"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .withColumn("__c", F.when(F.col("__v") > 0, F.col("__c"))
-                        .otherwise(F.raise_error(F.concat(
-                            F.lit("theil_inequality: value "),
-                            F.col("__v").cast("string"),
-                            F.lit(" is not positive -- filter or shift"
-                                  " upstream DELIBERATELY"))))))
-    cd, vd = F.col("__c").cast(dec), F.col("__v").cast(dec)
-    m = (hist
-         .withColumn("__t", F.round(
-             F.lit(1e9) * (cd * vd).cast("double") *
-             F.log(F.col("__v").cast("double"))).cast(dec))
-         .withColumn("__g", F.round(
-             F.lit(1e9) * cd.cast("double") *
-             F.log(F.col("__v").cast("double"))).cast(dec))
-         .groupBy(*kc)
-         .agg(F.sum(cd).alias("__n"), F.sum(cd * vd).alias("__s"),
-              F.sum("__t").alias("__L"), F.sum("__g").alias("__G")))
-    nd, sd = F.col("__n").cast("double"), F.col("__s").cast("double")
-    ln_mu = F.log(sd / nd)
-    return m.select(
-        *kc, F.col("__n").cast("long").alias("n"),
-        F.round(F.lit(1e6) * (F.col("__L").cast("double") / F.lit(1e9) /
-                              sd - ln_mu)).cast("long").alias("theil_micro"),
-        F.round(F.lit(1e6) * (F.lit(1.0) - F.exp(
-            F.col("__G").cast("double") / F.lit(1e9) / nd - ln_mu)))
-        .cast("long").alias("atkinson_micro"))
+    """Theil T + Atkinson(eps=1) inequality per key: per-distinct-value
+    nano terms c*v*ln(v) and c*ln(v) round once and sum order-
+    independently; exact DECIMAL n and sum. Values must be POSITIVE (fails
+    loud). Scala ``Stats.theilInequality``."""
+    return _wrap(df, _pl().Stats.theilInequality(
+        df._jdf, _seq(keys), value_col))
 
 
 def trimmed_mean(df, keys, value_col, trim_ppm=100000):
-    """Exact alpha-trimmed mean per key -- Python mirror of the Scala
-    ``Stats.trimmedMean``: drop the lowest/highest g = floor(n*trim)
-    observations EXACTLY via the per-key distinct-value histogram and
-    one cumulative window (no row sort); one round-once division.
-    NULL when over-trimmed."""
+    """Exact alpha-trimmed mean per key: drop the lowest/highest g =
+    floor(n*trim) observations EXACTLY via the per-key distinct-value
+    histogram and one cumulative window (no row sort); one round-once
+    division. NULL when over-trimmed. Scala ``Stats.trimmedMean``."""
     if not (0 <= trim_ppm < 500000):
         raise ValueError("trim_ppm must be in [0, 500000), got %d"
                          % trim_ppm)
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    wc = (Window.partitionBy(*kc).orderBy(F.col("__v"))
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wk = Window.partitionBy(*kc)
-    hist = (df.where(F.col(value_col).isNotNull())
-            .select(*kc, F.col(value_col).cast("long").alias("__v"))
-            .groupBy(*kc, F.col("__v"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .withColumn("__cum", F.sum("__c").over(wc))
-            .withColumn("__n", F.sum("__c").over(wk))
-            .withColumn("__g", F.expr(
-                "(__n * %d) div 1000000" % trim_ppm)))
-    kept = F.greatest(
-        F.least(F.col("__cum"), F.col("__n") - F.col("__g")) -
-        F.greatest(F.col("__cum") - F.col("__c"), F.col("__g")),
-        F.lit(0))
-    return (hist.withColumn("__kept", kept)
-            .groupBy(*kc)
-            .agg(F.max("__n").alias("n"), F.max("__g").alias("__gm"),
-                 F.sum(F.col("__kept").cast(dec) * F.col("__v").cast(dec))
-                 .alias("__ks"))
-            .select(*kc, "n",
-                    (F.col("n") - F.lit(2) * F.col("__gm"))
-                    .alias("trimmed_n"),
-                    F.when(F.col("n") - F.lit(2) * F.col("__gm") <= 0,
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(
-                        F.lit(1e6) * F.col("__ks").cast("double") /
-                        (F.col("n") - F.lit(2) * F.col("__gm"))
-                        .cast("double")).cast("long"))
-                    .alias("trimmed_mean_micro")))
+    return _wrap(df, _pl().Stats.trimmedMean(
+        df._jdf, _seq(keys), value_col, int(trim_ppm)))
 
 
 def page_hinkley(df, keys, order_col, value_col, delta_micro=0,
                  lambda_micro=1000000):
-    """Page-Hinkley mean-shift detector per key -- Python mirror of
-    the Scala ``Stats.pageHinkley``: per-row micro terms against the
-    RUNNING mean round once (HALF_UP both engines), cumulative m and
-    its prefix min are exact integer window sums; returns the final
-    row per key. order_col must be unique per key by contract."""
+    """Page-Hinkley mean-shift detector per key: per-row micro terms
+    against the RUNNING mean round once (HALF_UP both engines), cumulative
+    m and its prefix min are exact integer window sums; returns the final
+    row per key. order_col must be unique per key by contract. Scala
+    ``Stats.pageHinkley``."""
     if lambda_micro <= 0:
         raise ValueError("lambda_micro must be positive")
-    kc = [F.col(k) for k in keys]
-    w = (Window.partitionBy(*kc).orderBy(F.col("__t"))
-         .rowsBetween(Window.unboundedPreceding, 0))
-    base = (df.where(F.col(value_col).isNotNull() &
-                     F.col(order_col).isNotNull())
-            .select(*kc, F.col(order_col).cast("long").alias("__t"),
-                    F.col(value_col).cast("long").alias("__x"))
-            .withColumn("__cs", F.sum("__x").over(w))
-            .withColumn("__cn", F.count(F.lit(1)).over(w))
-            .withColumn("__term", F.round(F.lit(1e6) * (
-                F.col("__x").cast("double") -
-                F.col("__cs").cast("double") /
-                F.col("__cn").cast("double"))).cast("long") -
-                F.lit(int(delta_micro)))
-            .withColumn("__m", F.sum("__term").over(w))
-            .withColumn("__minm", F.min("__m").over(w)))
-    return (base.groupBy(*kc)
-            .agg(F.max(F.struct("__t", "__cn", "__m", "__minm"))
-                 .alias("__last"))
-            .select(*kc, F.col("__last.__cn").alias("n"),
-                    F.col("__last.__m").alias("m_micro"),
-                    (F.col("__last.__m") - F.col("__last.__minm"))
-                    .alias("ph_micro"),
-                    (F.col("__last.__m") - F.col("__last.__minm") >
-                     int(lambda_micro)).alias("alarm")))
+    return _wrap(df, _pl().Stats.pageHinkley(
+        df._jdf, _seq(keys), order_col, value_col, int(delta_micro),
+        int(lambda_micro)))
 
 
 def cronbach_alpha(df, keys, subject_col, item_col, score_col):
-    """Cronbach's alpha per key -- Python mirror of the Scala
-    ``Stats.cronbachAlpha``: exact DECIMAL variance numerators whose
-    shared n(n-1) denominators cancel in the ratio; complete blocks
-    fail loud. NULL when k < 2 or var(total) = 0."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    base = (df.where(F.col(subject_col).isNotNull() &
-                     F.col(item_col).isNotNull() &
-                     F.col(score_col).isNotNull())
-            .select(*kc, F.col(subject_col).alias("__s"),
-                    F.col(item_col).alias("__i"),
-                    F.col(score_col).cast("long").alias("__x")))
-    k = base.groupBy(*kc).agg(F.countDistinct("__i").alias("__k"))
-    xd = F.col("__x").cast(dec)
-    items = (base.groupBy(*kc, F.col("__i"))
-             .agg(F.count(F.lit(1)).cast(dec).alias("__n"),
-                  F.sum(xd).alias("__si"), F.sum(xd * xd).alias("__qi"))
-             .withColumn("__ssn", F.col("__n") * F.col("__qi") -
-                         F.col("__si") * F.col("__si"))
-             .groupBy(*kc).agg(F.sum("__ssn").alias("__ssi")))
-    subj = (base.groupBy(*kc, F.col("__s"))
-            .agg(F.count(F.lit(1)).alias("__ks"),
-                 F.sum("__x").alias("__T")))
-    td = F.col("__T").cast(dec)
-    totals = (subj.join(F.broadcast(k), keys)
-              .withColumn("__T", F.when(
-                  F.col("__ks") == F.col("__k"), F.col("__T"))
-                  .otherwise(F.raise_error(F.concat(
-                      F.lit("cronbach_alpha: subject "),
-                      F.col("__s").cast("string"), F.lit(" has "),
-                      F.col("__ks").cast("string"),
-                      F.lit(" items, expected "),
-                      F.col("__k").cast("string"),
-                      F.lit(" -- blocks must be complete")))))
-              .groupBy(*kc)
-              .agg(F.count(F.lit(1)).cast(dec).alias("__ns"),
-                   F.sum(td).alias("__st"), F.sum(td * td).alias("__qt"))
-              .withColumn("__sst", F.col("__ns") * F.col("__qt") -
-                          F.col("__st") * F.col("__st")))
-    kd = F.col("__k").cast("double")
-    return (items.join(totals, keys).join(F.broadcast(k), keys)
-            .select(*kc, F.col("__ns").cast("long").alias("n_subjects"),
-                    F.col("__k").alias("k_items"),
-                    F.when((F.col("__k") < 2) | (F.col("__sst") <= 0),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(
-                        F.lit(1e6) * kd / (kd - F.lit(1.0)) *
-                        (F.lit(1.0) - F.col("__ssi").cast("double") /
-                         F.col("__sst").cast("double"))).cast("long"))
-                    .alias("alpha_micro")))
+    """Cronbach's alpha per key: exact DECIMAL variance numerators whose
+    shared n(n-1) denominators cancel in the ratio; complete blocks fail
+    loud. NULL when k < 2 or var(total) = 0. Scala ``Stats.cronbachAlpha``."""
+    return _wrap(df, _pl().Stats.cronbachAlpha(
+        df._jdf, _seq(keys), subject_col, item_col, score_col))
 
 
 def two_proportion_z(df, keys, group_col, success_col):
-    """Two-proportion z test + Wilson 95% intervals per key -- Python
-    mirror of the Scala ``Stats.twoProportionZ``: exact counts, one
-    round-once ppm expression per published number (z = 1.96)."""
-    kc = [F.col(k) for k in keys]
-    g = F.col(group_col).cast("boolean")
-    s = F.col(success_col).cast("boolean")
-    m = (df.where(g.isNotNull() & s.isNotNull())
-         .groupBy(*kc)
-         .agg(F.count(F.when(g, 1)).alias("n_a"),
-              F.count(F.when(g & s, 1)).alias("s_a"),
-              F.count(F.when(~g, 1)).alias("n_b"),
-              F.count(F.when(~g & s, 1)).alias("s_b")))
-    nad, sad = F.col("n_a").cast("double"), F.col("s_a").cast("double")
-    nbd, sbd = F.col("n_b").cast("double"), F.col("s_b").cast("double")
-    pp = (sad + sbd) / (nad + nbd)
-    z = (sad / nad - sbd / nbd) / F.sqrt(
-        pp * (F.lit(1.0) - pp) * (F.lit(1.0) / nad + F.lit(1.0) / nbd))
-
-    def wilson(s_d, n_d, hi):
-        z2 = F.lit(1.96 * 1.96)
-        p = s_d / n_d
-        center = p + z2 / (F.lit(2.0) * n_d)
-        half = F.lit(1.96) * F.sqrt(
-            p * (F.lit(1.0) - p) / n_d + z2 / (F.lit(4.0) * n_d * n_d))
-        return F.round(F.lit(1e6) *
-                       ((center + half) if hi else (center - half)) /
-                       (F.lit(1.0) + z2 / n_d)).cast("long")
-
-    null_long = F.lit(None).cast("long")
-    return m.select(
-        *kc, "n_a", "s_a", "n_b", "s_b",
-        F.when((F.col("n_a") == 0) | (F.col("n_b") == 0) |
-               (F.col("s_a") + F.col("s_b") == 0) |
-               (F.col("s_a") + F.col("s_b") ==
-                F.col("n_a") + F.col("n_b")), null_long)
-        .otherwise(F.round(F.lit(1e6) * z).cast("long")).alias("z_micro"),
-        F.when(F.col("n_a") == 0, null_long)
-        .otherwise(wilson(sad, nad, False)).alias("a_lo_ppm"),
-        F.when(F.col("n_a") == 0, null_long)
-        .otherwise(wilson(sad, nad, True)).alias("a_hi_ppm"),
-        F.when(F.col("n_b") == 0, null_long)
-        .otherwise(wilson(sbd, nbd, False)).alias("b_lo_ppm"),
-        F.when(F.col("n_b") == 0, null_long)
-        .otherwise(wilson(sbd, nbd, True)).alias("b_hi_ppm"))
+    """Two-proportion z test + Wilson 95% intervals per key: exact counts,
+    one round-once ppm expression per published number (z = 1.96). Scala
+    ``Stats.twoProportionZ``."""
+    return _wrap(df, _pl().Stats.twoProportionZ(
+        df._jdf, _seq(keys), group_col, success_col))
 
 
 def hellinger_distance(ref, cur, value_col):
-    """Hellinger + Bhattacharyya two-sample distances -- Python mirror
-    of the Scala ``Stats.hellingerDistance``: per-shared-value nano
-    sqrt(ca*cb) terms round once (side totals factor out of the root);
-    inner join of distinct-value tables, no windows. D_B NULL on
-    disjoint supports."""
-    dec = "decimal(38,0)"
-
-    def side(df, n):
-        return (df.select(F.col(value_col).cast("long").alias("__v"))
-                .where(F.col("__v").isNotNull())
-                .groupBy("__v").agg(F.count(F.lit(1)).alias(n)))
-
-    a, b = side(ref, "__ca"), side(cur, "__cb")
-    shared = (a.join(b, ["__v"])
-              .withColumn("__t", F.round(F.lit(1e9) * F.sqrt(
-                  (F.col("__ca").cast(dec) * F.col("__cb").cast(dec))
-                  .cast("double"))).cast(dec))
-              .agg(F.coalesce(F.sum("__t"), F.lit(0).cast(dec))
-                   .alias("__T")))
-    tot = (a.agg(F.sum("__ca").alias("__na"))
-           .crossJoin(b.agg(F.sum("__cb").alias("__nb"))))
-    return (shared.crossJoin(F.broadcast(tot))
-            .withColumn("__bc", F.col("__T").cast("double") / F.lit(1e9) /
-                        F.sqrt(F.col("__na").cast("double") *
-                               F.col("__nb").cast("double")))
-            .select(F.col("__na").alias("n_ref"),
-                    F.col("__nb").alias("n_cur"),
-                    F.round(F.lit(1e6) * F.col("__bc")).cast("long")
-                    .alias("bc_ppm"),
-                    F.round(F.lit(1e6) * F.sqrt(F.greatest(
-                        F.lit(0.0), F.lit(1.0) - F.col("__bc"))))
-                    .cast("long").alias("hellinger_micro"),
-                    F.when(F.col("__bc") <= 0.0, F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(-1e6) * F.log(F.col("__bc")))
-                               .cast("long"))
-                    .alias("bhattacharyya_micro")))
+    """Hellinger + Bhattacharyya two-sample distances: per-shared-value
+    nano sqrt(ca*cb) terms round once (side totals factor out of the root);
+    inner join of distinct-value tables, no windows. D_B NULL on disjoint
+    supports. Scala ``Stats.hellingerDistance``."""
+    return _wrap(ref, _pl().Stats.hellingerDistance(
+        ref._jdf, cur._jdf, value_col))
 
 
 def weighted_kappa(df, a_col, b_col, quadratic=True, max_levels=1000):
-    """Weighted Cohen's kappa for ordinal raters -- Python mirror of
-    the Scala ``Stats.weightedKappa``: exact integers end to end,
-    observed cells only for disagreement, dense label-sized margin
-    grid for expectation, fail-loud max_levels."""
+    """Weighted Cohen's kappa for ordinal raters: exact integers end to
+    end, observed cells only for disagreement, dense label-sized margin
+    grid for expectation, fail-loud max_levels. Scala
+    ``Stats.weightedKappa``."""
     if not (2 <= max_levels <= 100000):
         raise ValueError("max_levels must be in [2, 100000]")
-    dec = "decimal(38,0)"
-    base = (df.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-            .select(F.col(a_col).cast("long").alias("__a"),
-                    F.col(b_col).cast("long").alias("__b")))
-
-    def wgt(i, j):
-        d = F.abs(i - j).cast(dec)
-        return d * d if quadratic else d
-
-    cells = base.groupBy("__a", "__b").agg(F.count(F.lit(1)).alias("__o"))
-
-    def margin(c, n):
-        w_all = Window.partitionBy()
-        return (base.groupBy(c).agg(F.count(F.lit(1)).alias(n))
-                .withColumn("__lv", F.count(F.lit(1)).over(w_all))
-                .withColumn(n, F.when(F.col("__lv") <= max_levels,
-                                      F.col(n))
-                            .otherwise(F.raise_error(F.concat(
-                                F.lit("weighted_kappa: %s has " % c),
-                                F.col("__lv").cast("string"),
-                                F.lit(" levels, exceeds max_levels=%d"
-                                      % max_levels)))))
-                .drop("__lv"))
-
-    num = cells.agg(
-        F.coalesce(F.sum(wgt(F.col("__a"), F.col("__b")) * F.col("__o")),
-                   F.lit(0).cast(dec)).alias("__num"),
-        F.sum("__o").cast(dec).alias("__N"),
-        F.countDistinct("__a").alias("k_a"),
-        F.countDistinct("__b").alias("k_b"))
-    den = (margin("__a", "__ra")
-           .crossJoin(F.broadcast(margin("__b", "__cb")))
-           .agg(F.coalesce(F.sum(wgt(F.col("__a"), F.col("__b")) *
-                                 F.col("__ra").cast(dec) *
-                                 F.col("__cb").cast(dec)),
-                           F.lit(0).cast(dec)).alias("__den")))
-    return (F.broadcast(num).crossJoin(F.broadcast(den))
-            .select(F.col("__N").cast("long").alias("n"), "k_a", "k_b",
-                    F.when(F.col("__den") <= 0, F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * (F.lit(1.0) - (
-                        F.col("__N") * F.col("__num")).cast("double") /
-                        F.col("__den").cast("double"))).cast("long"))
-                    .alias("kappa_w_micro")))
+    return _wrap(df, _pl().Stats.weightedKappa(
+        df._jdf, a_col, b_col, bool(quadratic), int(max_levels)))
 
 
 def heaps_law(df, id_col, text_col, max_docs=1000000):
-    """Heaps'-law vocabulary-growth fit -- Python mirror of the Scala
-    ``Stats.heapsLaw``: growth checkpoints at doc boundaries (terms
-    count at their FIRST doc), exact integer OLS on micro-rounded
-    (ln N, ln V) points; fail-loud max_docs on the doc-level global
-    window."""
+    """Heaps'-law vocabulary-growth fit: growth checkpoints at doc
+    boundaries (terms count at their FIRST doc), exact integer OLS on
+    micro-rounded (ln N, ln V) points; fail-loud max_docs on the doc-level
+    global window. Scala ``Stats.heapsLaw``."""
     if not (2 <= max_docs <= (1 << 30)):
         raise ValueError("max_docs must be in [2, 2^30]")
-    dec = "decimal(38,0)"
-    toks = (df.where(F.col(id_col).isNotNull() &
-                     F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("__d"),
-                    F.explode(F.split(F.col(text_col), " ")).alias("__t"))
-            .where(F.col("__t") != ""))
-    per_doc = toks.groupBy("__d").agg(F.count(F.lit(1)).alias("__nt"))
-    first_doc = (toks.groupBy("__t").agg(F.min("__d").alias("__d"))
-                 .groupBy("__d").agg(F.count(F.lit(1)).alias("__nv")))
-    w_asc = (Window.orderBy(F.col("__d"))
-             .rowsBetween(Window.unboundedPreceding, 0))
-    w_all = Window.partitionBy()
-    docs = (per_doc.join(first_doc, ["__d"], "left")
-            .na.fill(0, ["__nv"])
-            .withColumn("__ndocs", F.count(F.lit(1)).over(w_all))
-            .withColumn("__nt", F.when(F.col("__ndocs") <= max_docs,
-                                       F.col("__nt"))
-                        .otherwise(F.raise_error(F.concat(
-                            F.lit("heaps_law: "),
-                            F.col("__ndocs").cast("string"),
-                            F.lit(" docs exceed max_docs=%d" % max_docs)))))
-            .withColumn("__N", F.sum("__nt").over(w_asc))
-            .withColumn("__V", F.sum("__nv").over(w_asc))
-            .where((F.col("__N") > 0) & (F.col("__V") > 0)))
-    return (docs.select(
-        F.round(F.lit(1e6) * F.log(F.col("__N").cast("double")))
-        .cast("long").alias("__x"),
-        F.round(F.lit(1e6) * F.log(F.col("__V").cast("double")))
-        .cast("long").alias("__y"), "__N", "__V")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.max("__N").alias("n_tokens"), F.max("__V").alias("vocab"),
-             F.sum(F.col("__x").cast(dec)).alias("__sx"),
-             F.sum(F.col("__y").cast(dec)).alias("__sy"),
-             F.sum(F.col("__x").cast(dec) * F.col("__y")).alias("__sxy"),
-             F.sum(F.col("__x").cast(dec) * F.col("__x")).alias("__sxx"))
-        .withColumn("__den", F.expr("n_docs * __sxx - __sx * __sx"))
-        .withColumn("beta_micro", F.expr(
-            "cast(if(__den = 0, null, (n_docs * __sxy - __sx * __sy)"
-            " * 1000000 div __den) as long)"))
-        .withColumn("ln_k_micro", F.expr(
-            "cast(if(__den = 0, null, (__sy * 1000000 - beta_micro *"
-            " __sx) div (n_docs * 1000000)) as long)"))
-        .select("n_docs", "n_tokens", "vocab", "beta_micro",
-                "ln_k_micro"))
+    return _wrap(df, _pl().Stats.heapsLaw(
+        df._jdf, id_col, text_col, int(max_docs)))
 
 
 def diff_in_diff(df, keys, treated_col, post_col, value_col):
-    """Difference-in-differences per key -- Python mirror of the Scala
-    ``Stats.diffInDiff``: twelve exact DECIMAL cell moments in ONE
-    conditional groupBy row; DID, SE and t are round-once expressions.
-    NULL when any cell has n < 2."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    g = F.col(treated_col).cast("boolean")
-    t = F.col(post_col).cast("boolean")
-    v = F.col(value_col).cast("long")
-
-    def cell(name, cond):
-        return [F.count(F.when(cond, 1)).cast(dec).alias("__n" + name),
-                F.sum(F.when(cond, v.cast(dec))
-                      .otherwise(F.lit(0).cast(dec))).alias("__s" + name),
-                F.sum(F.when(cond, v.cast(dec) * v.cast(dec))
-                      .otherwise(F.lit(0).cast(dec))).alias("__q" + name)]
-
-    aggs = (cell("tp", g & t) + cell("tr", g & ~t) +
-            cell("cp", ~g & t) + cell("cr", ~g & ~t))
-    m = (df.where(g.isNotNull() & t.isNotNull() & v.isNotNull())
-         .groupBy(*kc).agg(*aggs))
-
-    def mean(n):
-        return F.col("__s" + n).cast("double") / \
-            F.col("__n" + n).cast("double")
-
-    def var_over_n(n):
-        return (F.col("__n" + n) * F.col("__q" + n) -
-                F.col("__s" + n) * F.col("__s" + n)).cast("double") / \
-            (F.col("__n" + n) * F.col("__n" + n) *
-             (F.col("__n" + n) - F.lit(1))).cast("double")
-
-    did = (mean("tp") - mean("tr")) - (mean("cp") - mean("cr"))
-    se = F.sqrt(var_over_n("tp") + var_over_n("tr") + var_over_n("cp") +
-                var_over_n("cr"))
-    bad = ((F.col("__ntp") < 2) | (F.col("__ntr") < 2) |
-           (F.col("__ncp") < 2) | (F.col("__ncr") < 2))
-    null_long = F.lit(None).cast("long")
-    return m.select(
-        *kc, F.col("__ntr").cast("long").alias("n_tpre"),
-        F.col("__ntp").cast("long").alias("n_tpost"),
-        F.col("__ncr").cast("long").alias("n_cpre"),
-        F.col("__ncp").cast("long").alias("n_cpost"),
-        F.when(bad, null_long).otherwise(
-            F.round(F.lit(1e6) * did).cast("long")).alias("did_micro"),
-        F.when(bad, null_long).otherwise(
-            F.round(F.lit(1e6) * se).cast("long")).alias("se_micro"),
-        F.when(bad | (se == 0.0), null_long).otherwise(
-            F.round(F.lit(1e6) * did / se).cast("long")).alias("t_micro"))
+    """Difference-in-differences per key: twelve exact DECIMAL cell moments
+    in ONE conditional groupBy row; DID, SE and t are round-once
+    expressions. NULL when any cell has n < 2. Scala ``Stats.diffInDiff``."""
+    return _wrap(df, _pl().Stats.diffInDiff(
+        df._jdf, _seq(keys), treated_col, post_col, value_col))
 
 
 def poisson_rate_test(df, keys, group_col, events_col, exposure_col):
-    """Two-sample Poisson rate-ratio test per key -- Python mirror of
-    the Scala ``Stats.poissonRateTest``: exact DECIMAL event/exposure
-    totals in ONE conditional groupBy; RR and the log-rate Wald z are
-    round-once expressions. NULL on a zero-event or non-positive
-    exposure side."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    g = F.col(group_col).cast("boolean")
-    zero = F.lit(0).cast(dec)
-    m = (df.where(g.isNotNull() & F.col(events_col).isNotNull() &
-                  F.col(exposure_col).isNotNull())
-         .groupBy(*kc)
-         .agg(F.sum(F.when(g, F.col(events_col).cast(dec))
-                    .otherwise(zero)).alias("__a"),
-              F.sum(F.when(g, F.col(exposure_col).cast(dec))
-                    .otherwise(zero)).alias("__ta"),
-              F.sum(F.when(~g, F.col(events_col).cast(dec))
-                    .otherwise(zero)).alias("__b"),
-              F.sum(F.when(~g, F.col(exposure_col).cast(dec))
-                    .otherwise(zero)).alias("__tb")))
-    a_d, b_d = F.col("__a").cast("double"), F.col("__b").cast("double")
-    ta_d = F.col("__ta").cast("double")
-    tb_d = F.col("__tb").cast("double")
-    rr = (a_d / ta_d) / (b_d / tb_d)
-    z = F.log(rr) / F.sqrt(F.lit(1.0) / a_d + F.lit(1.0) / b_d)
-    bad = ((F.col("__a") <= 0) | (F.col("__b") <= 0) |
-           (F.col("__ta") <= 0) | (F.col("__tb") <= 0))
-    null_long = F.lit(None).cast("long")
-    return m.select(
-        *kc, F.col("__a").cast("long").alias("events_a"),
-        F.col("__ta").cast("long").alias("exposure_a"),
-        F.col("__b").cast("long").alias("events_b"),
-        F.col("__tb").cast("long").alias("exposure_b"),
-        F.when(bad, null_long).otherwise(
-            F.round(F.lit(1e6) * rr).cast("long")).alias("rate_ratio_ppm"),
-        F.when(bad, null_long).otherwise(
-            F.round(F.lit(1e6) * z).cast("long")).alias("z_micro"))
+    """Two-sample Poisson rate-ratio test per key: exact DECIMAL
+    event/exposure totals in ONE conditional groupBy; RR and the log-rate
+    Wald z are round-once expressions. NULL on a zero-event or non-positive
+    exposure side. Scala ``Stats.poissonRateTest``."""
+    return _wrap(df, _pl().Stats.poissonRateTest(
+        df._jdf, _seq(keys), group_col, events_col, exposure_col))
 
 
 def icc(df, keys, subject_col, score_col):
-    """ICC(1,1) per key -- Python mirror of the Scala ``Stats.icc``:
-    one-way ANOVA mean squares over subjects as groups with the anovaF
-    per-subject nano-term discipline; balanced panels fail loud."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    base = (df.where(F.col(subject_col).isNotNull() &
-                     F.col(score_col).isNotNull())
-            .select(*kc, F.col(subject_col).alias("__s"),
-                    F.col(score_col).cast("long").alias("__x")))
-    k = (base.groupBy(*kc, F.col("__s"))
-         .agg(F.count(F.lit(1)).alias("__ks"))
-         .groupBy(*kc)
-         .agg(F.max("__ks").alias("__k"), F.min("__ks").alias("__kmin"))
-         .withColumn("__k", F.when(F.col("__k") == F.col("__kmin"),
-                                   F.col("__k"))
-                     .otherwise(F.raise_error(F.concat(
-                         F.lit("icc: unbalanced panel -- subject rating"
-                               " counts range "),
-                         F.col("__kmin").cast("string"), F.lit(".."),
-                         F.col("__k").cast("string")))))
-         .drop("__kmin"))
-    xd = F.col("__x").cast(dec)
-    subj = (base.groupBy(*kc, F.col("__s"))
-            .agg(F.count(F.lit(1)).alias("__ks"),
-                 F.sum(xd).alias("__ss"), F.sum(xd * xd).alias("__qs"))
-            .withColumn("__t", F.round(F.lit(1e9) * (
-                F.col("__ss") * F.col("__ss")).cast("double") /
-                F.col("__ks").cast("double")).cast(dec)))
-    m = (subj.groupBy(*kc)
-         .agg(F.count(F.lit(1)).alias("__n"),
-              F.sum("__ss").alias("__sum"), F.sum("__qs").alias("__qsum"),
-              F.sum("__t").alias("__tsum"))
-         .join(F.broadcast(k), keys))
-    n_d = F.col("__n").cast("double")
-    k_d = F.col("__k").cast("double")
-    big_n = F.col("__n").cast(dec) * F.col("__k").cast(dec)
-    grand = F.round(F.lit(1e9) * (F.col("__sum") * F.col("__sum"))
-                    .cast("double") / big_n.cast("double")).cast(dec)
-    ssw = F.lit(1000000000).cast(dec) * F.col("__qsum") - F.col("__tsum")
-    ssb = F.col("__tsum") - grand
-    msb = ssb.cast("double") / F.lit(1e9) / (n_d - F.lit(1.0))
-    msw = ssw.cast("double") / F.lit(1e9) / (big_n.cast("double") - n_d)
-    den = msb + (k_d - F.lit(1.0)) * msw
-    return m.select(*kc, F.col("__n").alias("n_subjects"),
-                    F.col("__k").alias("k_ratings"),
-                    F.when((F.col("__n") < 2) | (F.col("__k") < 2) |
-                           (den <= 0.0), F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * (msb - msw) / den)
-                               .cast("long")).alias("icc_micro"))
+    """ICC(1,1) per key: one-way ANOVA mean squares over subjects as groups
+    with the anovaF per-subject nano-term discipline; balanced panels fail
+    loud. Scala ``Stats.icc``."""
+    return _wrap(df, _pl().Stats.icc(
+        df._jdf, _seq(keys), subject_col, score_col))
 
 
 def holm_bonferroni(df, key_cols, p_micro_col, alpha_micro=50000,
                     max_tests=1000000):
-    """Holm-Bonferroni step-down rejection -- Python mirror of the
-    Scala ``Stats.holmBonferroni``: pure long arithmetic over the
-    metadata-sized per-test table; reject the largest prefix where
-    every p_(i)*(m-i+1) <= alpha."""
+    """Holm-Bonferroni step-down rejection: pure long arithmetic over the
+    metadata-sized per-test table; reject the largest prefix where every
+    p_(i)*(m-i+1) <= alpha. Scala ``Stats.holmBonferroni``."""
     if not (1 <= alpha_micro <= 1000000):
         raise ValueError("alpha_micro must be in [1, 1000000]")
-    kc = [F.col(k) for k in key_cols]
-    ordered = Window.orderBy(F.col("p_micro"), *kc)
-    w_all = Window.partitionBy()
-    ranked = (df.select(*kc, F.col(p_micro_col).cast("long")
-                        .alias("p_micro"))
-              .withColumn("rank", F.row_number().over(ordered)
-                          .cast("long"))
-              .withColumn("__m", F.count(F.lit(1)).over(w_all))
-              .withColumn("__m", F.when(F.col("__m") <= max_tests,
-                                        F.col("__m"))
-                          .otherwise(F.raise_error(F.concat(
-                              F.lit("holm_bonferroni: per-test table "
-                                    "has "),
-                              F.col("__m").cast("string"),
-                              F.lit(" rows, exceeds max_tests=%d"
-                                    % max_tests))))))
-    first_fail = ranked.agg(
-        F.max("__m").alias("m_tests"),
-        F.min(F.when(F.col("p_micro") *
-                     (F.col("__m") - F.col("rank") + 1) > alpha_micro,
-                     F.col("rank"))).alias("__ff"))
-    return (ranked.crossJoin(F.broadcast(first_fail))
-            .withColumn("reject", F.col("__ff").isNull() |
-                        (F.col("rank") < F.col("__ff")))
-            .select(*kc, "p_micro", "rank", "m_tests", "reject"))
+    return _wrap(df, _pl().Stats.holmBonferroni(
+        df._jdf, _seq(key_cols), p_micro_col, int(alpha_micro),
+        int(max_tests)))
 
 
 def pairwise_welch(df, keys, group_col, value_col, max_groups=100):
-    """Pairwise Welch t over all group pairs per key -- Python mirror
-    of the Scala ``Stats.pairwiseWelch``: one (key, group) DECIMAL
-    moment rollup, then a label-sized self-equi-join (g_a < g_b) under
-    a fail-loud max_groups guard; welch_t's exact factoring per pair."""
+    """Pairwise Welch t over all group pairs per key: one (key, group)
+    DECIMAL moment rollup, then a label-sized self-equi-join (g_a < g_b)
+    under a fail-loud max_groups guard; welch_t's exact factoring per pair.
+    Scala ``Stats.pairwiseWelch``."""
     if not (2 <= max_groups <= 10000):
         raise ValueError("max_groups must be in [2, 10000]")
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    vd = F.col("__v").cast(dec)
-    m = (df.where(F.col(value_col).isNotNull() &
-                  F.col(group_col).isNotNull())
-         .select(*kc, F.col(group_col).cast("string").alias("__g"),
-                 F.col(value_col).cast("long").alias("__v"))
-         .groupBy(*kc, F.col("__g"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("__n"),
-              F.sum(vd).alias("__s"), F.sum(vd * vd).alias("__q"))
-         .withColumn("__lv", F.count(F.lit(1)).over(
-             Window.partitionBy(*kc)))
-         .withColumn("__n", F.when(F.col("__lv") <= max_groups,
-                                   F.col("__n"))
-                     .otherwise(F.raise_error(F.concat(
-                         F.lit("pairwise_welch: "),
-                         F.col("__lv").cast("string"),
-                         F.lit(" groups exceed max_groups=%d"
-                               % max_groups)))))
-         .drop("__lv"))
-    a = m.select(*kc, F.col("__g").alias("g_a"),
-                 F.col("__n").alias("__na"), F.col("__s").alias("__sa"),
-                 F.col("__q").alias("__qa"))
-    b = m.select(*kc, F.col("__g").alias("g_b"),
-                 F.col("__n").alias("__nb"), F.col("__s").alias("__sb"),
-                 F.col("__q").alias("__qb"))
-    pairs = a.join(b, keys).where(F.col("g_a") < F.col("g_b"))
-    na, nb = F.col("__na"), F.col("__nb")
-    va = (na * F.col("__qa") - F.col("__sa") * F.col("__sa")) \
-        .cast("double") / (na * na * (na - F.lit(1))).cast("double")
-    vb = (nb * F.col("__qb") - F.col("__sb") * F.col("__sb")) \
-        .cast("double") / (nb * nb * (nb - F.lit(1))).cast("double")
-    ma = F.col("__sa").cast("double") / na.cast("double")
-    mb = F.col("__sb").cast("double") / nb.cast("double")
-    bad = (na < 2) | (nb < 2)
-    null_long = F.lit(None).cast("long")
-    return pairs.select(
-        *kc, "g_a", "g_b", na.cast("long").alias("n_a"),
-        nb.cast("long").alias("n_b"),
-        F.when(bad, null_long).otherwise(
-            F.when(va + vb == 0.0, null_long).otherwise(
-                F.round(F.lit(1e6) * (ma - mb) / F.sqrt(va + vb))
-                .cast("long"))).alias("t_micro"),
-        F.when(bad, null_long).otherwise(
-            F.when(va * va / (na.cast("double") - 1.0) +
-                   vb * vb / (nb.cast("double") - 1.0) == 0.0, null_long)
-            .otherwise(F.round(F.lit(1e3) * (va + vb) * (va + vb) / (
-                va * va / (na.cast("double") - 1.0) +
-                vb * vb / (nb.cast("double") - 1.0))).cast("long")))
-        .alias("df_milli"))
+    return _wrap(df, _pl().Stats.pairwiseWelch(
+        df._jdf, _seq(keys), group_col, value_col, int(max_groups)))
 
 
 def brier_score(df, keys, p_micro_col, label_col):
-    """Brier score per key -- Python mirror of the Scala
-    ``Stats.brierScore``: exact integer squared gaps in one groupBy,
-    round-once division; the base rate and BS_ref = r(1-r) ship for
-    the skill score downstream. p outside [0, 1e6] fails loud."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    p = F.col(p_micro_col).cast("long")
-    guarded = F.when((p < 0) | (p > 1000000), F.raise_error(F.concat(
-        F.lit("brier_score: p_micro="), p.cast("string"),
-        F.lit(" outside [0, 1000000] -- probabilities must be "
-              "micro-unit scaled")))).otherwise(p)
-    m = (df.where(p.isNotNull() & F.col(label_col).isNotNull())
-         .select(*kc, guarded.alias("__p"),
-                 F.col(label_col).cast("boolean").alias("__y"))
-         .withColumn("__d", F.col("__p") - F.when(
-             F.col("__y"), F.lit(1000000)).otherwise(F.lit(0)))
-         .groupBy(*kc)
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.count(F.when(F.col("__y"), 1)).alias("__pos"),
-              F.sum(F.col("__d").cast(dec) * F.col("__d").cast(dec))
-              .alias("__ss")))
-    n_d = F.col("n").cast("double")
-    rate = F.col("__pos").cast("double") / n_d
-    return m.select(
-        *kc, "n",
-        F.round(F.lit(1e6) * rate).cast("long").alias("base_rate_ppm"),
-        F.round(F.col("__ss").cast("double") / n_d / F.lit(1e6))
-        .cast("long").alias("brier_micro"),
-        F.round(F.lit(1e6) * rate * (F.lit(1.0) - rate)).cast("long")
-        .alias("brier_ref_micro"))
+    """Brier score per key: exact integer squared gaps in one groupBy,
+    round-once division; the base rate and BS_ref = r(1-r) ship for the
+    skill score downstream. p outside [0, 1e6] fails loud. Scala
+    ``Stats.brierScore``."""
+    return _wrap(df, _pl().Stats.brierScore(
+        df._jdf, _seq(keys), p_micro_col, label_col))
 
 
 def cohens_h(df, keys, group_col, success_col):
-    """Cohen's h arcsine effect size for two proportions -- Python
-    mirror of the Scala ``Stats.cohensH``."""
-    kc = [F.col(k) for k in keys]
-    g = F.col(group_col).cast("boolean")
-    s = F.col(success_col).cast("boolean")
-    m = (df.where(g.isNotNull() & s.isNotNull())
-         .groupBy(*kc)
-         .agg(F.count(F.when(g, 1)).alias("n_a"),
-              F.count(F.when(g & s, 1)).alias("s_a"),
-              F.count(F.when(~g, 1)).alias("n_b"),
-              F.count(F.when(~g & s, 1)).alias("s_b")))
-    phi_a = F.lit(2.0) * F.asin(F.sqrt(
-        F.col("s_a").cast("double") / F.col("n_a").cast("double")))
-    phi_b = F.lit(2.0) * F.asin(F.sqrt(
-        F.col("s_b").cast("double") / F.col("n_b").cast("double")))
-    return m.select(*kc, "n_a", "s_a", "n_b", "s_b",
-                    F.when((F.col("n_a") == 0) | (F.col("n_b") == 0),
-                           F.lit(None).cast("long"))
-                    .otherwise(F.round(F.lit(1e6) * (phi_a - phi_b))
-                               .cast("long")).alias("h_micro"))
+    """Cohen's h arcsine effect size for two proportions. Scala
+    ``Stats.cohensH``."""
+    return _wrap(df, _pl().Stats.cohensH(
+        df._jdf, _seq(keys), group_col, success_col))
 
 
 def by_fdr(df, key_cols, p_micro_col, q_micro=50000, max_tests=1000000):
-    """Benjamini-Yekutieli FDR under arbitrary dependence -- Python
-    mirror of the Scala ``Stats.byFdr``: bh_fdr with the harmonic
-    number accumulated as exact per-rank nano integers."""
+    """Benjamini-Yekutieli FDR under arbitrary dependence: bh_fdr with the
+    harmonic number accumulated as exact per-rank nano integers. Scala
+    ``Stats.byFdr``."""
     if not (1 <= q_micro <= 1000000):
         raise ValueError("q_micro must be in [1, 1000000]")
-    kc = [F.col(k) for k in key_cols]
-    dec = "decimal(38,0)"
-    ordered = Window.orderBy(F.col("p_micro"), *kc)
-    w_all = Window.partitionBy()
-    ranked = (df.select(*kc, F.col(p_micro_col).cast("long")
-                        .alias("p_micro"))
-              .withColumn("rank", F.row_number().over(ordered)
-                          .cast("long"))
-              .withColumn("__m", F.count(F.lit(1)).over(w_all))
-              .withColumn("__m", F.when(F.col("__m") <= max_tests,
-                                        F.col("__m"))
-                          .otherwise(F.raise_error(F.concat(
-                              F.lit("by_fdr: per-test table has "),
-                              F.col("__m").cast("string"),
-                              F.lit(" rows, exceeds max_tests=%d"
-                                    % max_tests)))))
-              .withColumn("__hterm", F.round(
-                  F.lit(1e9) / F.col("rank").cast("double"))
-                  .cast("long")))
-    kstar = (ranked
-             .withColumn("__H", F.sum("__hterm").over(w_all))
-             .agg(F.max("__m").alias("m_tests"),
-                  F.max(F.when(
-                      F.col("p_micro").cast(dec) * F.col("__m") *
-                      F.col("__H") <=
-                      F.col("rank").cast(dec) * q_micro *
-                      F.lit(1000000000),
-                      F.col("rank"))).alias("k_star")))
-    return (ranked.crossJoin(F.broadcast(kstar))
-            .withColumn("reject", F.col("k_star").isNotNull() &
-                        (F.col("rank") <= F.col("k_star")))
-            .select(*kc, "p_micro", "rank", "m_tests", "k_star",
-                    "reject"))
+    return _wrap(df, _pl().Stats.byFdr(
+        df._jdf, _seq(key_cols), p_micro_col, int(q_micro), int(max_tests)))
 
 
 def g_test(df, a_col, b_col, max_levels=1000):
-    """G-test of independence -- Python mirror of the Scala
-    ``Stats.gTest``: per-OBSERVED-cell nano-nat terms (zero cells
-    contribute 0 — no dense grid), fail-loud max_levels margins."""
+    """G-test of independence: per-OBSERVED-cell nano-nat terms (zero cells
+    contribute 0 — no dense grid), fail-loud max_levels margins. Scala
+    ``Stats.gTest``."""
     if not (2 <= max_levels <= 100000):
         raise ValueError("max_levels must be in [2, 100000]")
-    dec = "decimal(38,0)"
-    w_all = Window.partitionBy()
-    base = (df.where(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
-            .select(F.col(a_col).cast("string").alias("__a"),
-                    F.col(b_col).cast("string").alias("__b")))
-    cells = base.groupBy("__a", "__b").agg(F.count(F.lit(1)).alias("__o"))
-
-    def margin(c, n):
-        return (base.groupBy(c).agg(F.count(F.lit(1)).alias(n))
-                .withColumn("__lv", F.count(F.lit(1)).over(w_all))
-                .withColumn(n, F.when(F.col("__lv") <= max_levels,
-                                      F.col(n))
-                            .otherwise(F.raise_error(F.concat(
-                                F.lit("g_test: %s has " % c),
-                                F.col("__lv").cast("string"),
-                                F.lit(" levels, exceeds max_levels=%d"
-                                      % max_levels)))))
-                .drop("__lv"))
-
-    tot = base.agg(F.count(F.lit(1)).alias("__N"))
-    g = (cells.join(margin("__a", "__ra"), ["__a"])
-         .join(margin("__b", "__cb"), ["__b"])
-         .crossJoin(F.broadcast(tot))
-         .withColumn("__t", F.round(
-             F.lit(2e9) * F.col("__o").cast("double") *
-             F.log((F.col("__o").cast(dec) * F.col("__N"))
-                   .cast("double") /
-                   (F.col("__ra").cast(dec) * F.col("__cb"))
-                   .cast("double"))).cast("long"))
-         .agg(F.max("__N").alias("n"),
-              F.countDistinct("__a").alias("k_levels"),
-              F.countDistinct("__b").alias("m_levels"),
-              F.sum("__t").alias("g_nano")))
-    dof = (F.col("k_levels") - 1) * (F.col("m_levels") - 1)
-    return g.select("n", "k_levels", "m_levels", dof.alias("dof"),
-                    "g_nano",
-                    F.when(dof != 1, F.lit(None).cast("boolean"))
-                    .otherwise(F.col("g_nano") > 3841458821)
-                    .alias("significant_95"))
+    return _wrap(df, _pl().Stats.gTest(df._jdf, a_col, b_col, int(max_levels)))
 
 
 def corr_compare(df, keys, seg_col, x_col, y_col):
-    """Two-segment Pearson correlation comparison via Fisher's z --
-    Python mirror of the Scala ``Stats.corrCompare``: ten exact
-    DECIMAL side moments in one conditional groupBy, factored
-    denominators, atanh written as the half-log. NULL z when either r
-    rounds to +-1 in micro units."""
-    kc = [F.col(k) for k in keys]
-    dec = "decimal(38,0)"
-    g = F.col(seg_col).cast("boolean")
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    zero = F.lit(0).cast(dec)
-
-    def side(name, cond):
-        return [
-            F.count(F.when(cond, 1)).cast(dec).alias("__n" + name),
-            F.sum(F.when(cond, x.cast(dec)).otherwise(zero))
-            .alias("__sx" + name),
-            F.sum(F.when(cond, y.cast(dec)).otherwise(zero))
-            .alias("__sy" + name),
-            F.sum(F.when(cond, x.cast(dec) * y.cast(dec))
-                  .otherwise(zero)).alias("__sxy" + name),
-            F.sum(F.when(cond, x.cast(dec) * x.cast(dec))
-                  .otherwise(zero)).alias("__sxx" + name),
-            F.sum(F.when(cond, y.cast(dec) * y.cast(dec))
-                  .otherwise(zero)).alias("__syy" + name)]
-
-    m = (df.where(g.isNotNull() & x.isNotNull() & y.isNotNull())
-         .groupBy(*kc).agg(*(side("a", g) + side("b", ~g))))
-
-    def r(n):
-        nn = F.col("__n" + n)
-        num = nn * F.col("__sxy" + n) - \
-            F.col("__sx" + n) * F.col("__sy" + n)
-        dx = nn * F.col("__sxx" + n) - \
-            F.col("__sx" + n) * F.col("__sx" + n)
-        dy = nn * F.col("__syy" + n) - \
-            F.col("__sy" + n) * F.col("__sy" + n)
-        return num.cast("double") / (F.sqrt(dx.cast("double")) *
-                                     F.sqrt(dy.cast("double")))
-
-    def var_ok(n):
-        nn = F.col("__n" + n)
-        return ((nn * F.col("__sxx" + n) -
-                 F.col("__sx" + n) * F.col("__sx" + n) > 0) &
-                (nn * F.col("__syy" + n) -
-                 F.col("__sy" + n) * F.col("__sy" + n) > 0))
-
-    ra, rb = r("a"), r("b")
-
-    def zf(rr):
-        return F.lit(0.5) * F.log((F.lit(1.0) + rr) / (F.lit(1.0) - rr))
-
-    na_d = F.col("__na").cast("double")
-    nb_d = F.col("__nb").cast("double")
-    z = (zf(ra) - zf(rb)) / F.sqrt(
-        F.lit(1.0) / (na_d - F.lit(3.0)) +
-        F.lit(1.0) / (nb_d - F.lit(3.0)))
-    bad = ((F.col("__na") <= 3) | (F.col("__nb") <= 3) |
-           ~var_ok("a") | ~var_ok("b"))
-    null_long = F.lit(None).cast("long")
-    return m.select(
-        *kc, F.col("__na").cast("long").alias("n_a"),
-        F.col("__nb").cast("long").alias("n_b"),
-        F.when(bad, null_long).otherwise(
-            F.round(F.lit(1e6) * ra).cast("long")).alias("r_a_micro"),
-        F.when(bad, null_long).otherwise(
-            F.round(F.lit(1e6) * rb).cast("long")).alias("r_b_micro"),
-        F.when(bad | (F.abs(ra) >= 0.9999995) | (F.abs(rb) >= 0.9999995),
-               null_long)
-        .otherwise(F.round(F.lit(1e6) * z).cast("long"))
-        .alias("z_micro"))
+    """Two-segment Pearson correlation comparison via Fisher's z: ten exact
+    DECIMAL side moments in one conditional groupBy, factored denominators,
+    atanh written as the half-log. NULL z when either r rounds to +-1 in
+    micro units. Scala ``Stats.corrCompare``."""
+    return _wrap(df, _pl().Stats.corrCompare(
+        df._jdf, _seq(keys), seg_col, x_col, y_col))

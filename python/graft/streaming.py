@@ -3,30 +3,15 @@
 Thin py4j wrappers over ``graft.streaming.StreamingBridge`` — every
 operator is the compiled Scala ``flatMapGroupsWithState`` /
 session-window state machine; nothing here leaves the JVM on the hot
-path (the ``rasterfunctions`` delegation style). Each wrapper accepts
-a batch OR streaming DataFrame, like its Scala counterpart: on a
-streaming frame the state accumulates across micro-batches; on a batch
-frame the call degenerates to a single-batch run (handy for parity
-tests against the batch operators in ``graft.pipeline``).
+path (the ``rasterfunctions`` delegation style). Argument conversion
+lives in ``graft._bridge``. Each wrapper accepts a batch OR streaming
+DataFrame, like its Scala counterpart: on a streaming frame the state
+accumulates across micro-batches; on a batch frame the call degenerates
+to a single-batch run, so parity tests against the batch operators in
+``graft.pipeline`` compare two Scala implementations.
 """
 
-from pyspark.sql import DataFrame
-
-
-def _bridge(df):
-    return df.sparkSession._jvm.graft.streaming.StreamingBridge
-
-
-def _wrap(df, jdf):
-    return DataFrame(jdf, df.sparkSession)
-
-
-def _long_array(df, values):
-    gw = df.sparkSession.sparkContext._gateway
-    arr = gw.new_array(gw.jvm.long, len(values))
-    for i, v in enumerate(values):
-        arr[i] = int(v)
-    return arr
+from graft._bridge import _jvm, _long_array, _wrap
 
 
 def drift_stream(df, key, value_col, ref_hist, max_bins=4096):
@@ -39,9 +24,9 @@ def drift_stream(df, key, value_col, ref_hist, max_bins=4096):
     ``graft.pipeline.quantize_step``, never by hand."""
     vals = [int(v) for v, _ in ref_hist]
     cnts = [int(c) for _, c in ref_hist]
-    return _wrap(df, _bridge(df).driftStream(
-        df._jdf, key, value_col, _long_array(df, vals),
-        _long_array(df, cnts), int(max_bins)))
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.driftStream(
+        df._jdf, key, value_col, _long_array(vals),
+        _long_array(cnts), int(max_bins)))
 
 
 def sprt_stream(df, key, order_col, success_col, p0_permille=500,
@@ -49,7 +34,7 @@ def sprt_stream(df, key, order_col, success_col, p0_permille=500,
     """Sequential probability ratio test per key — exact micro-nat LLR
     walk with latched accept_h0/accept_h1 verdicts, recovered across
     restarts from the checkpoint."""
-    return _wrap(df, _bridge(df).sprtStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.sprtStream(
         df._jdf, key, order_col, success_col, int(p0_permille),
         int(p1_permille), int(alpha_permille), int(beta_permille)))
 
@@ -59,7 +44,7 @@ def ngram_novelty_stream(df, id_col, text_col, event_time_col, n=3,
     """Per-gram novelty: the first document to emit an n-gram marks it
     seen (state TTL-evicted by event time); later sightings emit
     novel=false."""
-    return _wrap(df, _bridge(df).ngramNoveltyStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.ngramNoveltyStream(
         df._jdf, id_col, text_col, event_time_col, int(n),
         int(ttl_micros), watermark_delay))
 
@@ -69,7 +54,7 @@ def trending_topk_stream(df, event_time_col, text_col, window_micros, k,
     """Per-window top-k trending terms off a bounded space-saving
     summary per window (state is ``capacity`` counters, not the
     vocabulary)."""
-    return _wrap(df, _bridge(df).trendingTopKStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.trendingTopKStream(
         df._jdf, event_time_col, text_col, int(window_micros), int(k),
         int(capacity), watermark_delay))
 
@@ -77,7 +62,7 @@ def trending_topk_stream(df, event_time_col, text_col, window_micros, k,
 def cusum_stream(df, key, order_col, value_col, ref, slack, threshold):
     """Streaming one-sided CUSUM change detector per key — exact long
     arithmetic, state is two accumulators per key."""
-    return _wrap(df, _bridge(df).cusumStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.cusumStream(
         df._jdf, key, order_col, value_col, int(ref), int(slack),
         int(threshold)))
 
@@ -87,7 +72,7 @@ def page_hinkley_stream(df, key, order_col, value_col, delta_micro=0,
     """Streaming Page-Hinkley mean-shift detector per key — deviation
     from the RUNNING mean (no calibrated baseline); state is exactly
     4 longs per key."""
-    return _wrap(df, _bridge(df).pageHinkleyStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.pageHinkleyStream(
         df._jdf, key, order_col, value_col, int(delta_micro),
         int(lambda_micro)))
 
@@ -96,42 +81,43 @@ def reservoir_stream(df, key, id_col, k):
     """Streaming bounded k-sample per key — bit-identical to the batch
     priority_sample_per_key over any stream prefix; state is <= k
     (priority, id) pairs per key."""
-    return _wrap(df, _bridge(df).reservoirStream(df._jdf, key, id_col,
-                                                 int(k)))
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.reservoirStream(
+        df._jdf, key, id_col, int(k)))
 
 
 def quantile_stream(df, key, value_col, max_bins=4096):
     """Streaming exact-quantile monitor — the live face of
     percentile_report; cumulative distinct-value histogram per key,
     fail-loud past max_bins, exact p50/p90/p99 per batch."""
-    return _wrap(df, _bridge(df).quantileStream(df._jdf, key, value_col,
-                                                int(max_bins)))
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.quantileStream(
+        df._jdf, key, value_col, int(max_bins)))
 
 
 def debounce_stream(df, key, ts_col, id_col, min_gap):
     """Suppress per-key events arriving within ``min_gap`` of the last
     emitted one — state is one long per key."""
-    return _wrap(df, _bridge(df).debounceStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.debounceStream(
         df._jdf, key, ts_col, id_col, int(min_gap)))
 
 
 def first_seen_stream(df, id_col, bucket_col):
     """Emit each id exactly once (its first sighting), latched across
     micro-batches and restarts."""
-    return _wrap(df, _bridge(df).firstSeenStream(df._jdf, id_col, bucket_col))
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.firstSeenStream(
+        df._jdf, id_col, bucket_col))
 
 
 def anomaly_stream(df, key, order_col, value_col, k_num=2, k_den=1):
     """Streaming z-ish outlier flags per key off running exact moments:
     |x - mean| > (k_num/k_den) * stddev."""
-    return _wrap(df, _bridge(df).anomalyStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.anomalyStream(
         df._jdf, key, order_col, value_col, int(k_num), int(k_den)))
 
 
 def ewma_stream(df, key, order_col, value_col, lags=8):
     """Exponentially weighted moving average per key as exact integer
     lag sums (alpha = 1/2, ``lags`` terms)."""
-    return _wrap(df, _bridge(df).ewmaStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.ewmaStream(
         df._jdf, key, order_col, value_col, int(lags)))
 
 
@@ -139,7 +125,8 @@ def gap_regularity_stream(df, key, ts_col, divisor=1000000, k_num=1,
                           k_den=10, min_gaps=5):
     """Bot-cadence screen: per-key inter-arrival regularity off four
     longs of state (machine-regular keys have tiny gap variance)."""
-    return _wrap(df, _bridge(df).gapRegularityStream(
+    bridge = _jvm().graft.streaming.StreamingBridge
+    return _wrap(df, bridge.gapRegularityStream(
         df._jdf, key, ts_col, int(divisor), int(k_num), int(k_den),
         int(min_gaps)))
 
@@ -147,7 +134,7 @@ def gap_regularity_stream(df, key, ts_col, divisor=1000000, k_num=1,
 def session_stats(df, key_col, event_time_col, value_col, gap):
     """Session-window aggregates per key (``session_window`` native
     operator): event count and value min/max per session."""
-    return _wrap(df, _bridge(df).sessionStats(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.sessionStats(
         df._jdf, key_col, event_time_col, value_col, gap))
 
 
@@ -155,10 +142,10 @@ def psi_windowed(df, event_time_col, value_col, ref_bounds, ref_counts,
                  window_duration, watermark_delay="0 seconds"):
     """Windowed population-stability-index against fixed reference
     bucket bounds/counts."""
-    return _wrap(df, _bridge(df).psiWindowed(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.psiWindowed(
         df._jdf, event_time_col, value_col,
-        _long_array(df, [int(b) for b in ref_bounds]),
-        _long_array(df, [int(c) for c in ref_counts]),
+        _long_array([int(b) for b in ref_bounds]),
+        _long_array([int(c) for c in ref_counts]),
         window_duration, watermark_delay))
 
 
@@ -167,7 +154,7 @@ def calibration_stream(df, key, p_micro_col, label_col, bins=10):
     (count, positives, confidence-sum) state re-scored after every
     micro-batch with the exact batch ECE arithmetic; emits the worst
     bin and its per-row gap. State is exactly 3*bins longs per key."""
-    return _wrap(df, _bridge(df).calibrationStream(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.calibrationStream(
         df._jdf, key, p_micro_col, label_col, int(bins)))
 
 
@@ -175,6 +162,6 @@ def distinct_windowed(df, event_time_col, id_col, window_duration, m=64,
                       watermark_delay="0 seconds"):
     """HLL distinct ids per event-time window — state is the m-register
     sketch, never the id set."""
-    return _wrap(df, _bridge(df).distinctWindowed(
+    return _wrap(df, _jvm().graft.streaming.StreamingBridge.distinctWindowed(
         df._jdf, event_time_col, id_col, window_duration, int(m),
         watermark_delay))

@@ -1,53 +1,30 @@
-"""Temporal joins — Python mirror of ``graft.pipeline.Temporal``.
+"""Temporal operators: thin py4j wrappers over the Scala
+``graft.pipeline.Temporal`` object (see ``pipeline/Temporal.scala`` for
+the design notes: the one-shuffle as-of join, bucketed interval joins,
+rolling windows, funnels, sessions).
 
-Pure-PySpark DataFrame implementations of the same two algorithms the
-Scala side ships (see ``pipeline/Temporal.scala`` for the full design
-notes):
+Each wrapper calls its Scala operator directly, so Python and Scala run
+the same plan. Argument conversion lives in ``graft._bridge``.
 
-- ``asof_join``: ONE shuffle — union the tagged inputs and take
-  ``last(payload, ignoreNulls)`` over a per-key ``(ts, side)`` window —
-  instead of the broadcast-nested-loop plan a ``l.ts >= r.ts`` theta
-  join produces.
-- ``interval_join``: map each point to exactly one time bucket and each
-  span to the buckets it overlaps, equi-join on ``(key, bucket)``, then
-  refine with the exact half-open containment predicate. Linear shuffle
-  volume, no dedup pass.
-
-Both are plain DataFrame compositions, so results are identical to the
-Scala operators row-for-row (asserted by ``test_temporal.py`` against
-the same fixtures as TemporalSpec).
+Python-only, because no Scala operator exists: ``seasonality_profile``
+and ``seasonal_anomaly`` are the q_seasonality and q_seasonal_anomaly
+compositions that ``SparkEntry`` builds inline.
 """
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from graft._bridge import (_jc, _jvm, _option, _option_long, _pl, _seq,
+                           _wrap)
 
 
 def epoch_micros(df, c):
-    """``c`` as epoch micros (long), schema-adaptively — the Python twin
-    of ``Temporal.epochMicros``: TIMESTAMP via ``unix_micros``,
-    TIMESTAMP_NTZ cast in the session timezone (graft pins UTC) first,
-    numeric passes through as the caller's own epoch algebra."""
-    dt = df.schema[c].dataType
-    if isinstance(dt, T.TimestampType):
-        return F.unix_micros(F.col(c))
-    if isinstance(dt, T.TimestampNTZType):
-        return F.unix_micros(F.col(c).cast("timestamp"))
-    if isinstance(dt, T.NumericType):
-        return F.col(c).cast("long")
-    raise ValueError(
-        f"column {c}: expected TIMESTAMP, TIMESTAMP_NTZ or numeric epoch, got {dt}")
-
-
-def _int_bucket_width(bucket_width):
-    """Coerce to a positive int — the value is interpolated into SQL as
-    an ``L`` literal, so a float like 3600.0 would otherwise produce an
-    unparseable ``3600.0L`` (the Scala API enforces Long by type)."""
-    w = int(bucket_width)
-    if w != bucket_width or w <= 0:
-        raise ValueError(
-            f"bucket_width must be a positive integer, got {bucket_width!r}")
-    return w
+    """``c`` as epoch micros (long), schema-adaptively: TIMESTAMP via
+    ``unix_micros``, TIMESTAMP_NTZ cast in the session timezone (graft pins
+    UTC) first, numeric passes through as the caller's own epoch algebra.
+    Scala ``Temporal.epochMicros``."""
+    return Column(_pl().Temporal.epochMicros(df._jdf, c))
 
 
 def asof_join(left, right, key, left_ts, right_ts, right_prefix="right_",
@@ -56,192 +33,54 @@ def asof_join(left, right, key, left_ts, right_ts, right_prefix="right_",
     """For every left row, attach the right row of the same ``key`` with
     the greatest ``right_ts <= left_ts`` (pandas ``merge_asof``,
     direction="backward"). ``direction="forward"`` matches the smallest
-    ``right_ts >= left_ts`` (the same single-shuffle window read in
-    reverse time order); ``"nearest"`` picks whichever sits closer,
-    ties backward. ``allow_exact_matches=False`` makes both comparisons
-    strict. Left-outer: unmatched rows keep null right columns.
-
-    Timestamp columns may be TIMESTAMP/TIMESTAMP_NTZ or numeric epochs,
-    mixed freely — both sides normalize through :func:`epoch_micros`.
-
-    ``tolerance``: optional Column literal bounding ``left_ts -
-    right_ts`` in the NORMALIZED domain — micros for TIMESTAMP inputs
-    (``F.lit(600000000)`` = 10 min), the columns' own units for numeric.
-
-    Ties on the matched ``(key, ts)`` resolve to the greatest payload
-    struct — a total order, so engines and plans agree.
-    """
+    ``right_ts >= left_ts`` (the same single-shuffle window read in reverse
+    time order); ``"nearest"`` picks whichever sits closer, ties backward.
+    ``allow_exact_matches=False`` makes both comparisons strict. Left-
+    outer: unmatched rows keep null right columns. Scala
+    ``Temporal.asofJoin``."""
     payload_cols = [c for c in right.columns if c != key]
     if right_ts not in payload_cols:
         raise ValueError(f"right is missing ts column {right_ts}")
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
-            f"direction must be 'backward', 'forward' or 'nearest', got {direction!r}")
-    r = right.select(
-        F.col(key).alias("__graft_k"),
-        epoch_micros(right, right_ts).alias("__graft_ts"),
-        F.lit(0).alias("__graft_side"),
-        F.lit(0 if allow_exact_matches else 2).alias("__graft_ord"),
-        F.struct(*([F.col(c) for c in payload_cols]
-                   + [epoch_micros(right, right_ts).alias("__graft_ots")])
-                 ).alias("__graft_r"),
-    )
-    l = (
-        left.withColumn("__graft_k", F.col(key))
-        .withColumn("__graft_ts", epoch_micros(left, left_ts))
-        .withColumn("__graft_side", F.lit(1))
-        .withColumn("__graft_ord", F.lit(1))
-    )
-    u = l.unionByName(r, allowMissingColumns=True)
-
-    def win(desc_ts):
-        return (
-            Window.partitionBy("__graft_k")
-            .orderBy(F.col("__graft_ts").desc() if desc_ts else F.col("__graft_ts"),
-                     F.col("__graft_ord"), F.col("__graft_r"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-
-    m_b = F.last(F.col("__graft_r"), ignorenulls=True).over(win(False))
-    m_f = F.last(F.col("__graft_r"), ignorenulls=True).over(win(True))
-    if direction == "backward":
-        matched = m_b
-    elif direction == "forward":
-        matched = m_f
-    else:
-        bg = F.col("__graft_ts") - m_b["__graft_ots"]
-        fg = m_f["__graft_ots"] - F.col("__graft_ts")
-        matched = (F.when(m_b.isNull(), m_f).when(m_f.isNull(), m_b)
-                   .when(bg <= fg, m_b).otherwise(m_f))
-    if tolerance is not None:
-        gap = F.abs(F.col("__graft_ts") - matched["__graft_ots"])
-        matched = F.when(matched.isNotNull() & (gap <= tolerance), matched)
-    u = u.withColumn("__graft_m", matched).where(F.col("__graft_side") == 1)
-    return u.select(
-        *[F.col(c) for c in left.columns],
-        *[F.col("__graft_m")[c].alias(right_prefix + c) for c in payload_cols],
-    )
+            "direction must be 'backward', 'forward' or 'nearest', "
+            f"got {direction!r}")
+    return _wrap(left, _pl().Temporal.asofJoin(
+        left._jdf, right._jdf, key, left_ts, right_ts, right_prefix,
+        _option(None if tolerance is None else _jc(tolerance)), direction,
+        bool(allow_exact_matches)))
 
 
 def asof_join_bucketed(left, right, key, left_ts, right_ts, bucket_width,
                        right_prefix="right_", tolerance=None):
     """Hot-key-safe :func:`asof_join`: identical semantics for any
-    ``bucket_width``, with the per-key window split into
-    ``(key, ts div bucket_width)`` time buckets so one hot key
-    parallelizes across its time range. The carry-in (latest right row
-    before each bucket start) comes from a bounded per-(key, bucket)
-    max-struct summary; carry rows inject at side -1 so real rows win
-    boundary ties. Timestamps may be TIMESTAMP/TIMESTAMP_NTZ
-    (``bucket_width``/``tolerance`` then in MICROS) or numeric
-    non-negative epochs, like :func:`interval_join`.
-    """
-    bucket_width = _int_bucket_width(bucket_width)
-    payload_cols = [c for c in right.columns if c != key]
-    if right_ts not in payload_cols:
+    ``bucket_width``, with the per-key window split into ``(key, ts div
+    bucket_width)`` time buckets so one hot key parallelizes across its
+    time range. The carry-in (latest right row before each bucket start)
+    comes from a bounded per-(key, bucket) max-struct summary; carry rows
+    inject at side -1 so real rows win boundary ties. Timestamps may be
+    TIMESTAMP/TIMESTAMP_NTZ (``bucket_width``/``tolerance`` then in MICROS)
+    or numeric non-negative epochs, like :func:`interval_join`. Scala
+    ``Temporal.asofJoinBucketed``."""
+    if right_ts not in right.columns or right_ts == key:
         raise ValueError(f"right is missing ts column {right_ts}")
-    r = right.select(
-        F.col(key).alias("__graft_k"),
-        epoch_micros(right, right_ts).alias("__graft_ts"),
-        F.lit(0).alias("__graft_side"),
-        F.struct(*([F.col(c) for c in payload_cols]
-                   + [epoch_micros(right, right_ts).alias("__graft_ots")])
-                 ).alias("__graft_r"),
-    ).withColumn("__graft_b", F.expr(f"__graft_ts div {bucket_width}L"))
-    l = (
-        left.withColumn("__graft_k", F.col(key))
-        .withColumn("__graft_ts", epoch_micros(left, left_ts))
-        .withColumn("__graft_side", F.lit(1))
-        .withColumn("__graft_b", F.expr(f"__graft_ts div {bucket_width}L"))
-    )
-    summary = r.groupBy("__graft_k", "__graft_b").agg(
-        F.max(F.struct(F.col("__graft_ts"), F.col("__graft_r"))).alias("__graft_last"))
-    universe = (
-        l.select("__graft_k", "__graft_b").distinct()
-        .unionByName(summary.select("__graft_k", "__graft_b")).distinct()
-    )
-    w_carry = (
-        Window.partitionBy("__graft_k").orderBy("__graft_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        universe.join(summary, ["__graft_k", "__graft_b"], "left")
-        .withColumn("__graft_carry", F.max(F.col("__graft_last")).over(w_carry))
-        .where(F.col("__graft_carry").isNotNull())
-        .select(
-            F.col("__graft_k"),
-            (F.col("__graft_b") * bucket_width).alias("__graft_ts"),
-            F.lit(-1).alias("__graft_side"),
-            F.col("__graft_carry.__graft_r").alias("__graft_r"),
-            F.col("__graft_b"),
-        )
-    )
-    u = l.unionByName(r.unionByName(carry), allowMissingColumns=True)
-    w = (
-        Window.partitionBy("__graft_k", "__graft_b")
-        .orderBy(F.col("__graft_ts"), F.col("__graft_side"), F.col("__graft_r"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = F.last(F.col("__graft_r"), ignorenulls=True).over(w)
-    if tolerance is not None:
-        matched = F.when(
-            matched.isNotNull()
-            & (F.col("__graft_ts") - matched["__graft_ots"] <= tolerance),
-            matched,
-        )
-    u = u.withColumn("__graft_m", matched).where(F.col("__graft_side") == 1)
-    return u.select(
-        *[F.col(c) for c in left.columns],
-        *[F.col("__graft_m")[c].alias(right_prefix + c) for c in payload_cols],
-    )
+    return _wrap(left, _pl().Temporal.asofJoinBucketed(
+        left._jdf, right._jdf, key, left_ts, right_ts, int(bucket_width),
+        right_prefix, _option(None if tolerance is None else _jc(tolerance))))
 
 
 def interval_join(points, spans, key, ts_col, start_col, end_col,
                   bucket_width, span_prefix="span_"):
-    """Every (point, span) pair of the same ``key`` with
-    ``start <= ts < end`` (half-open). Span columns come back prefixed
-    with ``span_prefix``. Timestamps may be TIMESTAMP/TIMESTAMP_NTZ
-    (``bucket_width`` then in MICROS) or numeric epochs — bucketing and
-    the exact refine both run in the :func:`epoch_micros`-normalized
-    domain, so the two sides may even mix typed and numeric columns.
-
-    ``bucket_width`` ~ typical span length: each span explodes to
-    ``ceil(span/width)`` bucket rows; any width gives identical results.
-    """
-    bucket_width = _int_bucket_width(bucket_width)
-    span_cols = list(spans.columns)
-    p = (
-        points.withColumn("__graft_k", F.col(key))
-        .withColumn("__graft_t", epoch_micros(points, ts_col))
-        .withColumn("__graft_b", F.expr(f"__graft_t div {bucket_width}L"))
-    )
-    sp = (
-        spans.withColumn("__graft_lo", epoch_micros(spans, start_col))
-        .withColumn("__graft_hi", epoch_micros(spans, end_col))
-        .where(F.col("__graft_hi") > F.col("__graft_lo"))
-        .select(
-            F.col(key).alias("__graft_k"),
-            F.col("__graft_lo"),
-            F.col("__graft_hi"),
-            F.explode(
-                F.sequence(
-                    F.expr(f"__graft_lo div {bucket_width}L"),
-                    F.expr(f"(__graft_hi - 1) div {bucket_width}L"),
-                )
-            ).alias("__graft_b"),
-            F.struct(*[F.col(c) for c in span_cols]).alias("__graft_s"),
-        )
-    )
-    return (
-        p.join(sp, ["__graft_k", "__graft_b"])
-        .where(
-            (F.col("__graft_t") >= F.col("__graft_lo"))
-            & (F.col("__graft_t") < F.col("__graft_hi"))
-        )
-        .select(
-            *[F.col(c) for c in points.columns],
-            *[F.col("__graft_s")[c].alias(span_prefix + c) for c in span_cols],
-        )
-    )
+    """Every (point, span) pair of the same ``key`` with ``start <= ts <
+    end`` (half-open). Span columns come back prefixed with
+    ``span_prefix``. Timestamps may be TIMESTAMP/TIMESTAMP_NTZ
+    (``bucket_width`` then in MICROS) or numeric epochs — bucketing and the
+    exact refine both run in the :func:`epoch_micros`-normalized domain, so
+    the two sides may even mix typed and numeric columns. Scala
+    ``Temporal.intervalJoin``."""
+    return _wrap(points, _pl().Temporal.intervalJoin(
+        points._jdf, spans._jdf, key, ts_col, start_col, end_col,
+        int(bucket_width), span_prefix))
 
 
 def resample(df, key, ts_col, value_col, bucket_width):
@@ -250,243 +89,114 @@ def resample(df, key, ts_col, value_col, bucket_width):
     count and the sum. ONE shuffle with map-side partial aggregation;
     equal-ts ties take the smallest value as open, greatest as close (a
     total order). ``ts_col`` may be TIMESTAMP/TIMESTAMP_NTZ (then
-    ``bucket_width`` is MICROS) or a numeric epoch."""
-    bucket_width = _int_bucket_width(bucket_width)
-    return (
-        df.select(F.col(key), epoch_micros(df, ts_col).alias("__graft_t"),
-                  F.col(value_col).alias("__graft_v"))
-        .groupBy(F.col(key),
-                 F.expr(f"__graft_t div {bucket_width}L").alias("__graft_b"))
-        .agg(
-            F.min(F.struct(F.col("__graft_t"), F.col("__graft_v"))).alias("__graft_o"),
-            F.max(F.struct(F.col("__graft_t"), F.col("__graft_v"))).alias("__graft_c"),
-            F.min("__graft_v").alias("low"), F.max("__graft_v").alias("high"),
-            F.count(F.lit(1)).alias("n"), F.sum("__graft_v").alias("total"))
-        .select(F.col(key), (F.col("__graft_b") * bucket_width).alias("bucket_start"),
-                F.col("__graft_o.__graft_v").alias("open"), F.col("high"),
-                F.col("low"), F.col("__graft_c.__graft_v").alias("close"),
-                F.col("n"), F.col("total"))
-    )
+    ``bucket_width`` is MICROS) or a numeric epoch. Scala
+    ``Temporal.resample``."""
+    return _wrap(df, _pl().Temporal.resample(
+        df._jdf, key, ts_col, value_col, int(bucket_width)))
 
 
 def rolling(df, key, ts_col, value_col, window, prefix="roll_"):
     """Trailing rolling-window aggregates: per row, the count/sum/min/max
     of ``value_col`` over the same key's rows with ts in the inclusive
     range ``[ts - window, ts]``. One shuffle; a single hot key serializes
-    through one task — use :func:`rolling_bucketed` for that shape."""
-    w = (Window.partitionBy(F.col(key)).orderBy(F.col("__graft_t"))
-         .rangeBetween(-int(window), 0))
-    return (
-        df.withColumn("__graft_t", epoch_micros(df, ts_col))
-        .withColumn(prefix + "n", F.count(F.col(value_col)).over(w))
-        .withColumn(prefix + "sum", F.sum(F.col(value_col)).over(w))
-        .withColumn(prefix + "min", F.min(F.col(value_col)).over(w))
-        .withColumn(prefix + "max", F.max(F.col(value_col)).over(w))
-        .drop("__graft_t")
-    )
+    through one task — use :func:`rolling_bucketed` for that shape. Scala
+    ``Temporal.rolling``."""
+    return _wrap(df, _pl().Temporal.rolling(
+        df._jdf, key, ts_col, value_col, int(window), prefix))
 
 
 def rolling_bucketed(df, key, ts_col, value_col, window, bucket_width,
                      prefix="roll_"):
     """Hot-key-safe twin of :func:`rolling`: identical output for any
-    ``bucket_width >= window``, the per-key range window split across
-    (key, ts div bucket_width) partitions; rows within ``window`` of a
-    bucket's end are replicated as ghosts into the next bucket and
-    dropped from the output."""
-    window = int(window)
-    bucket_width = _int_bucket_width(bucket_width)
-    if bucket_width < window:
-        raise ValueError(
-            f"bucket_width ({bucket_width}) must be >= window ({window})")
-    base = (
-        df.withColumn("__graft_t", epoch_micros(df, ts_col))
-        .withColumn("__graft_b", F.expr(f"__graft_t div {bucket_width}L"))
-        .withColumn("__graft_ghost", F.lit(False))
-    )
-    ghosts = (
-        base.where(F.col("__graft_t")
-                   >= (F.col("__graft_b") + 1) * bucket_width - window)
-        .withColumn("__graft_b", F.col("__graft_b") + 1)
-        .withColumn("__graft_ghost", F.lit(True))
-    )
-    w = (Window.partitionBy(F.col(key), F.col("__graft_b"))
-         .orderBy(F.col("__graft_t")).rangeBetween(-window, 0))
-    return (
-        base.unionByName(ghosts)
-        .withColumn(prefix + "n", F.count(F.col(value_col)).over(w))
-        .withColumn(prefix + "sum", F.sum(F.col(value_col)).over(w))
-        .withColumn(prefix + "min", F.min(F.col(value_col)).over(w))
-        .withColumn(prefix + "max", F.max(F.col(value_col)).over(w))
-        .where(~F.col("__graft_ghost"))
-        .drop("__graft_t", "__graft_b", "__graft_ghost")
-    )
+    ``bucket_width >= window``, the per-key range window split across (key,
+    ts div bucket_width) partitions; rows within ``window`` of a bucket's
+    end are replicated as ghosts into the next bucket and dropped from the
+    output. Scala ``Temporal.rollingBucketed``."""
+    return _wrap(df, _pl().Temporal.rollingBucketed(
+        df._jdf, key, ts_col, value_col, int(window), int(bucket_width),
+        prefix))
 
 
 def funnel(df, key, ts_col, step_col, steps, within=None):
-    """Funnel analysis: one row per key with the time each ordered step
-    was first reached — step i's time is the earliest step-i event
-    at-or-after step i-1's time (equal timestamps DO progress), with
-    ``within`` bounding later steps relative to the FIRST step. ONE
-    shuffle: per-step first-reach times are prefix minima over a single
-    (ts, step-rank) window, then a plain aggregation."""
+    """Funnel analysis: one row per key with the time each ordered step was
+    first reached — step i's time is the earliest step-i event at-or-after
+    step i-1's time (equal timestamps DO progress), with ``within``
+    bounding later steps relative to the FIRST step. ONE shuffle: per-step
+    first-reach times are prefix minima over a single (ts, step-rank)
+    window, then a plain aggregation. Scala ``Temporal.funnel``."""
     if not steps:
         raise ValueError("steps must be non-empty")
-    rank = F.lit(len(steps))
-    for i, s in enumerate(steps):
-        rank = F.when(F.col("__graft_s") == s, F.lit(i)).otherwise(rank)
-    w = (Window.partitionBy("__graft_k")
-         .orderBy(F.col("__graft_t"), F.col("__graft_rk"))
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cur = (df.select(F.col(key).alias("__graft_k"),
-                     epoch_micros(df, ts_col).alias("__graft_t"),
-                     F.col(step_col).alias("__graft_s"))
-           .withColumn("__graft_rk", rank))
-    for i, s in enumerate(steps):
-        if i == 0:
-            cond = F.col("__graft_s") == s
-        else:
-            cond = ((F.col("__graft_s") == s)
-                    & (F.col("__graft_t") >= F.col(f"__graft_r{i - 1}")))
-            if within is not None:
-                cond = cond & (F.col("__graft_t")
-                               <= F.col("__graft_r0") + int(within))
-        cur = cur.withColumn(f"__graft_c{i}", F.when(cond, F.col("__graft_t")))
-        if i < len(steps) - 1:
-            cur = cur.withColumn(f"__graft_r{i}",
-                                 F.min(F.col(f"__graft_c{i}")).over(w))
-    out = cur.groupBy(F.col("__graft_k").alias(key)).agg(
-        *[F.min(F.col(f"__graft_c{i}")).alias(f"t_{i + 1}")
-          for i in range(len(steps))])
-    completed = F.lit(0)
-    for i in range(len(steps)):
-        completed = completed + F.when(F.col(f"t_{i + 1}").isNotNull(),
-                                       1).otherwise(0)
-    return out.withColumn("steps_completed", completed)
+    return _wrap(df, _pl().Temporal.funnel(
+        df._jdf, key, ts_col, step_col, _seq(steps), _option_long(within)))
 
 
 def cohort_retention(df, key, ts_col):
-    """Cohort retention triangle — Python mirror of the Scala
-    ``Temporal.cohortRetention``: every key joins the cohort of its first
-    active UTC day; exact distinct keys per (cohort_day, day_offset).
-    Two keyed aggregations + one equi-join, no time self-joins."""
-    day = F.to_date(F.timestamp_micros(epoch_micros(df, ts_col)))
-    act = (df.select(F.col(key).alias("__graft_k"), day.alias("__graft_day"))
-           .distinct())
-    first = act.groupBy("__graft_k").agg(
-        F.min("__graft_day").alias("cohort_day"))
-    return (act.join(first, ["__graft_k"])
-            .groupBy(F.col("cohort_day"),
-                     F.datediff(F.col("__graft_day"),
-                                F.col("cohort_day")).alias("day_offset"))
-            .agg(F.countDistinct("__graft_k").alias("n_active")))
+    """Cohort retention triangle: every key joins the cohort of its first
+    active UTC day; exact distinct keys per (cohort_day, day_offset). Two
+    keyed aggregations + one equi-join, no time self-joins. Scala
+    ``Temporal.cohortRetention``."""
+    return _wrap(df, _pl().Temporal.cohortRetention(df._jdf, key, ts_col))
 
 
 def interval_union_length(df, key, start_col, end_col):
-    """Merged-interval coverage — Python mirror of the Scala
-    ``Temporal.intervalUnionLength``: total length of the union of
-    half-open [start, end) spans per key via one running-max window
-    (each span contributes only its uncovered tail). Returns
-    (key, n_spans, span_sum, covered)."""
-    w = (Window.partitionBy(key).orderBy(start_col, end_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    return (df.withColumn("__graft_pm", F.max(end_col).over(w))
-            .withColumn("__graft_c", F.greatest(
-                F.lit(0), F.col(end_col) - F.greatest(
-                    F.col(start_col),
-                    F.coalesce(F.col("__graft_pm"), F.col(start_col)))))
-            .groupBy(F.col(key))
-            .agg(F.count(F.lit(1)).alias("n_spans"),
-                 F.sum(F.col(end_col) - F.col(start_col)).alias("span_sum"),
-                 F.sum("__graft_c").alias("covered")))
+    """Merged-interval coverage: total length of the union of half-open
+    [start, end) spans per key via one running-max window (each span
+    contributes only its uncovered tail). Returns (key, n_spans, span_sum,
+    covered). Scala ``Temporal.intervalUnionLength``."""
+    return _wrap(df, _pl().Temporal.intervalUnionLength(
+        df._jdf, key, start_col, end_col))
 
 
 def gap_fill(df, key, bucket_col, value_col):
-    """Forward-fill over a dense time spine — Python mirror of the Scala
-    ``Temporal.gapFill``: one row per key per bucket from the key's
-    first to last observation, ``<value>_filled`` = the most recent
-    observation at or before that bucket."""
-    spine = (df.groupBy(F.col(key))
-             .agg(F.min(bucket_col).alias("__graft_lo"),
-                  F.max(bucket_col).alias("__graft_hi"))
-             .select(F.col(key), F.explode(F.sequence(
-                 "__graft_lo", "__graft_hi")).alias(bucket_col)))
-    w = (Window.partitionBy(key).orderBy(bucket_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (spine.join(df.select(key, bucket_col, value_col),
-                       [key, bucket_col], "left")
-            .withColumn(f"{value_col}_filled",
-                        F.last(value_col, ignorenulls=True).over(w)))
+    """Forward-fill over a dense time spine: one row per key per bucket
+    from the key's first to last observation, ``<value>_filled`` = the most
+    recent observation at or before that bucket. Scala
+    ``Temporal.gapFill``."""
+    return _wrap(df, _pl().Temporal.gapFill(
+        df._jdf, key, bucket_col, value_col))
 
 
 def scd2(df, keys, ts_col, tie_cols=()):
-    """SCD Type-2 history build — Python mirror of the Scala
-    ``Temporal.scd2``: each changelog row gains ``valid_from_us`` (its
-    change instant, epoch micros) and ``valid_to_us`` (the next change
+    """SCD Type-2 history build: each changelog row gains ``valid_from_us``
+    (its change instant, epoch micros) and ``valid_to_us`` (the next change
     for the same ``keys``, null while current) from ONE lead window.
-    ``tie_cols`` must make the sort total within a key (end with a
-    unique id). ``ts_col`` is schema-adaptive via ``epoch_micros``."""
+    ``tie_cols`` must make the sort total within a key (end with a unique
+    id). ``ts_col`` is schema-adaptive via ``epoch_micros``. Scala
+    ``Temporal.scd2``."""
     if not keys:
         raise ValueError("keys required")
-    frm = epoch_micros(df, ts_col)
-    w = (Window.partitionBy(*[F.col(k) for k in keys])
-         .orderBy(*([frm.asc()] + [F.col(c).asc() for c in tie_cols])))
-    return (df.withColumn("valid_from_us", frm)
-            .withColumn("valid_to_us", F.lead("valid_from_us", 1).over(w)))
+    return _wrap(df, _pl().Temporal.scd2(
+        df._jdf, _seq(keys), ts_col, _seq(tie_cols)))
 
 
 def attribution(df, key, id_col, ts_col, type_col, conversion_type,
                 touch_types, lookback_micros):
-    """Multi-touch attribution — Python mirror of the Scala
-    ``Temporal.attribution``: for each ``conversion_type`` event, the
-    first- and last-touch ``touch_types`` event of the same ``key``
-    within a trailing ``lookback_micros`` window. One shuffle (by key)
-    and two range-frame window aggregates of a lexicographic
-    ``(ts, id, type)`` struct — never a conversions×touches self-join.
-    """
+    """Multi-touch attribution: for each ``conversion_type`` event, the
+    first- and last-touch ``touch_types`` event of the same ``key`` within
+    a trailing ``lookback_micros`` window. One shuffle (by key) and two
+    range-frame window aggregates of a lexicographic ``(ts, id, type)``
+    struct — never a conversions×touches self-join. Scala
+    ``Temporal.attribution``."""
     if conversion_type in touch_types:
         raise ValueError("conversion_type cannot also be a touch type")
-    base = df.withColumn("__graft_t", epoch_micros(df, ts_col))
-    w = (Window.partitionBy(F.col(key)).orderBy(F.col("__graft_t"))
-         .rangeBetween(-lookback_micros, -1))
-    touch = F.when(
-        F.col(type_col).isin(list(touch_types)),
-        F.struct(F.col("__graft_t").alias("t"), F.col(id_col).alias("id"),
-                 F.col(type_col).alias("tp")))
-    return (base
-            .withColumn("__graft_first", F.min(touch).over(w))
-            .withColumn("__graft_last", F.max(touch).over(w))
-            .where(F.col(type_col) == conversion_type)
-            .select(F.col(id_col).alias("conversion_id"), F.col(key),
-                    F.col("__graft_t").alias("conv_ts"),
-                    F.col("__graft_first.id").alias("first_touch_id"),
-                    F.col("__graft_first.tp").alias("first_touch_type"),
-                    F.col("__graft_first.t").alias("first_touch_ts"),
-                    F.col("__graft_last.id").alias("last_touch_id"),
-                    F.col("__graft_last.tp").alias("last_touch_type"),
-                    F.col("__graft_last.t").alias("last_touch_ts")))
+    return _wrap(df, _pl().Temporal.attribution(
+        df._jdf, key, id_col, ts_col, type_col, conversion_type,
+        _seq(touch_types), int(lookback_micros)))
 
 
 def clamped_cum_sum(df, keys, order_cols, delta_col, floor=0):
-    """Floor-clamped running balance — Python mirror of the Scala
-    ``Temporal.clampedCumSum``: bal_t = max(floor, bal_{t-1} + delta)
-    in closed window form (prefix sum minus its clamped running min),
-    one shuffle by keys. ``(keys, order_cols)`` must totally order
-    rows within a key.
-    """
-    w = (Window.partitionBy(*[F.col(k) for k in keys])
-         .orderBy(*[F.col(c) for c in order_cols])
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (df.withColumn("__p", F.sum(F.col(delta_col).cast("long")).over(w))
-            .withColumn("balance",
-                        F.lit(floor) + F.col("__p")
-                        - F.least(F.lit(0), F.min("__p").over(w)))
-            .drop("__p"))
+    """Floor-clamped running balance: bal_t = max(floor, bal_{t-1} + delta)
+    in closed window form (prefix sum minus its clamped running min), one
+    shuffle by keys. ``(keys, order_cols)`` must totally order rows within
+    a key. Scala ``Temporal.clampedCumSum``."""
+    return _wrap(df, _pl().Temporal.clampedCumSum(
+        df._jdf, _seq(keys), _seq(order_cols), delta_col, int(floor)))
 
 
 def seasonality_profile(df, type_col, tus_col):
     """Day-of-week x hour seasonality profile per type with an integer
-    permille lift vs the type's uniform cell mean — Python mirror of
-    the q_seasonality composition. dow/hour come from pure epoch
+    permille lift vs the type's uniform cell mean, the q_seasonality
+    composition (no Scala operator). dow/hour come from pure epoch
     arithmetic on micros (0 = Sunday), so any engine agrees; the lift
     is the division-free ``n * 168 * 1000 div type_total``.
     """
@@ -502,8 +212,8 @@ def seasonality_profile(df, type_col, tus_col):
 
 
 def seasonal_anomaly(df, type_col, tus_col, num=1, den=4):
-    """Seasonally-adjusted anomaly days — Python mirror of the
-    q_seasonal_anomaly composition: each (type, day) count against the
+    """Seasonally-adjusted anomaly days, the q_seasonal_anomaly
+    composition (no Scala operator): each (type, day) count against the
     type's same-day-of-week mean, flagged when the residual exceeds
     ``num/den`` of it. Cross-multiplied (``|n*days - total| * den >
     total * num``), so the gate is all-integer and division-free.
@@ -523,55 +233,31 @@ def seasonal_anomaly(df, type_col, tus_col, num=1, den=4):
 
 
 def growth_curve(df, keys, id_col, bucket_col):
-    """First-seen growth curve — Python mirror of the Scala
-    ``Temporal.growthCurve``: per (keys, bucket) the ids appearing for
-    the first time in that bucket plus the running cumulative
-    (= exact distinct-to-date), from one min-bucket-per-id groupBy and
-    a cume window over bucket rows. ``keys`` may be empty for one
-    global curve.
-    """
-    kcols = [F.col(k) for k in keys]
-    first = (df.groupBy(*(kcols + [F.col(id_col)]))
-             .agg(F.min(F.col(bucket_col)).alias("__fb")))
-    curve = (first.groupBy(*(kcols + [F.col("__fb").alias(bucket_col)]))
-             .agg(F.count(F.lit(1)).alias("new_ids")))
-    w = ((Window.partitionBy(*kcols) if keys else Window.partitionBy())
-         .orderBy(bucket_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return curve.withColumn("cum_ids", F.sum("new_ids").over(w))
+    """First-seen growth curve: per (keys, bucket) the ids appearing for
+    the first time in that bucket plus the running cumulative (= exact
+    distinct-to-date), from one min-bucket-per-id groupBy and a cume window
+    over bucket rows. ``keys`` may be empty for one global curve. Scala
+    ``Temporal.growthCurve``."""
+    return _wrap(df, _pl().Temporal.growthCurve(
+        df._jdf, _seq(keys), id_col, bucket_col))
 
 
 def m4_downsample(df, keys, ts_col, value_col, bucket_width):
-    """M4 chart downsampling — Python mirror of the Scala
-    ``Temporal.m4Downsample``: per (keys, bucket) exactly first, last,
-    min and max (first/last via lexicographic struct min/max), one
-    map-side-combinable groupBy — visually lossless line rendering
-    from 4 rows per pixel column (Jugel et al., VLDB 2014).
-    """
-    ts = F.col(ts_col).cast("long")
-    v = F.col(value_col).cast("long")
-    bucket = F.expr(f"cast(`{ts_col}` as long) div {int(bucket_width)}L")
-    return (df.groupBy(*([F.col(k) for k in keys] + [bucket.alias("bucket")]))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.min(v).alias("v_min"), F.max(v).alias("v_max"),
-                 F.min(F.struct(ts.alias("t"), v.alias("v"))).alias("__f"),
-                 F.max(F.struct(ts.alias("t"), v.alias("v"))).alias("__l"))
-            .select(*([F.col(k) for k in keys]
-                      + [F.col("bucket"), F.col("n"),
-                         F.col("v_min"), F.col("v_max"),
-                         F.col("__f.t").alias("ts_first"),
-                         F.col("__f.v").alias("v_first"),
-                         F.col("__l.t").alias("ts_last"),
-                         F.col("__l.v").alias("v_last")])))
+    """M4 chart downsampling: per (keys, bucket) exactly first, last, min
+    and max (first/last via lexicographic struct min/max), one map-side-
+    combinable groupBy — visually lossless line rendering from 4 rows per
+    pixel column (Jugel et al., VLDB 2014). Scala
+    ``Temporal.m4Downsample``."""
+    return _wrap(df, _pl().Temporal.m4Downsample(
+        df._jdf, _seq(keys), ts_col, value_col, int(bucket_width)))
 
 
 def debounce(df, keys, ts_col, id_col, min_gap):
-    """Debounce / tolerance dedup — Python mirror of the Scala
-    ``Temporal.debounce``: LAG-based suppression of events within
-    ``min_gap`` of the PREVIOUS event on the same key, (ts, id) total
-    order for deterministic ties; adds ``prev_gap`` and ``is_kept``
-    (reserved names — fails fast if the input already has them).
-    """
+    """Debounce / tolerance dedup: LAG-based suppression of events within
+    ``min_gap`` of the PREVIOUS event on the same key, (ts, id) total order
+    for deterministic ties; adds ``prev_gap`` and ``is_kept`` (reserved
+    names — fails fast if the input already has them). Scala
+    ``Temporal.debounce``."""
     if not keys:
         raise ValueError("keys required")
     if min_gap <= 0:
@@ -580,122 +266,52 @@ def debounce(df, keys, ts_col, id_col, min_gap):
         if r in df.columns:
             raise ValueError(
                 f"debounce writes a '{r}' column; input already has one")
-    w = Window.partitionBy(*keys).orderBy(ts_col, id_col)
-    return (df.withColumn("prev_gap",
-                          F.col(ts_col).cast("long")
-                          - F.lag(F.col(ts_col).cast("long"), 1).over(w))
-            .withColumn("is_kept", F.col("prev_gap").isNull()
-                        | (F.col("prev_gap") >= min_gap)))
+    return _wrap(df, _pl().Temporal.debounce(
+        df._jdf, _seq(keys), ts_col, id_col, int(min_gap)))
 
 
 def autocorr(df, key_col, order_col, id_col, value_col, k):
-    """Exact lag-k autocorrelation — Python mirror of the Scala
-    ``Temporal.autocorr``: one lead(k) window per key over the
+    """Exact lag-k autocorrelation: one lead(k) window per key over the
     (order, id) total order, one six-moment aggregate, DECIMAL(38,0)
     n^2-cleared num/den, sign-handled truncating permille (NULL for
     constant or too-short series). ``value_col`` must be pre-scaled
-    integral.
-    """
+    integral. Scala ``Temporal.autocorr``."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    w = Window.partitionBy(key_col).orderBy(order_col, id_col)
-    x = F.col(value_col).cast("decimal(38,0)")
-    lagged = df.select(F.col(key_col).alias("key"), x.alias("__x"),
-                       F.lead(x, k).over(w).alias("__y"))
-    return (lagged.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum("__x").alias("__s"),
-                 F.sum(F.col("__x") * F.col("__x")).alias("__ssq"),
-                 F.sum(F.when(F.col("__y").isNotNull(),
-                              F.col("__x") * F.col("__y"))).alias("__sxy"),
-                 F.sum(F.when(F.col("__y").isNotNull(),
-                              F.col("__x"))).alias("__head"),
-                 F.sum(F.when(F.col("__y").isNotNull(),
-                              F.col("__y"))).alias("__tail"))
-            .withColumn("__n", F.col("n").cast("decimal(38,0)"))
-            .withColumn("__num",
-                        F.col("__n") * F.col("__n") * F.col("__sxy")
-                        - F.col("__n") * F.col("__s")
-                        * (F.col("__head") + F.col("__tail"))
-                        + (F.col("__n") - F.lit(k)) * F.col("__s")
-                        * F.col("__s"))
-            .withColumn("__den",
-                        F.col("__n") * F.col("__n") * F.col("__ssq")
-                        - F.col("__n") * F.col("__s") * F.col("__s"))
-            .select(F.col("key"), F.col("n"),
-                    F.col("__num").cast("long").alias("acf_num"),
-                    F.col("__den").cast("long").alias("acf_den"),
-                    F.expr("cast(case when __den is null or __den = 0 "
-                           "or __num is null then null "
-                           "when __num >= 0 then __num * 1000 div __den "
-                           "else -((-__num) * 1000 div __den) end as long)")
-                    .alias("acf_permille")))
+    return _wrap(df, _pl().Temporal.autocorr(
+        df._jdf, key_col, order_col, id_col, value_col, int(k)))
 
 
 def journeys(df, key_col, ts_col, id_col, type_col, gap_micros, n=3,
              min_count=2):
-    """Session journey mining — Python mirror of the Scala
-    ``Temporal.journeys``: gap sessionization (one key shuffle),
-    per-session ordered type path via in-group sort_array, strict
-    pl_ngrams path windows, one journey count pruned at ``min_count``.
-    """
+    """Session journey mining: gap sessionization (one key shuffle), per-
+    session ordered type path via in-group sort_array, strict pl_ngrams
+    path windows, one journey count pruned at ``min_count``. Scala
+    ``Temporal.journeys``."""
     if gap_micros <= 0 or n < 1:
         raise ValueError("gap_micros must be positive and n >= 1")
-    w = Window.partitionBy(key_col).orderBy(ts_col, id_col)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = (df
-            .withColumn("__prev", F.lag(F.col(ts_col).cast("long"), 1).over(w))
-            .withColumn("__brk", F.when(
-                F.col("__prev").isNull()
-                | (F.col(ts_col).cast("long") - F.col("__prev") > gap_micros),
-                F.lit(1)).otherwise(F.lit(0)))
-            .withColumn("__sid", F.sum("__brk").over(run)))
-    paths = (sess.groupBy(F.col(key_col), F.col("__sid"))
-             .agg(F.expr(f"transform(sort_array(collect_list("
-                         f"struct({ts_col}, {id_col}, {type_col}))), "
-                         f"s -> s.{type_col})").alias("__path")))
-    return (paths
-            .select(F.explode(F.expr(f"pl_ngrams(__path, {n})"))
-                    .alias("journey"))
-            .groupBy("journey").agg(F.count(F.lit(1)).alias("cnt"))
-            .where(F.col("cnt") >= min_count))
+    return _wrap(df, _pl().Temporal.journeys(
+        df._jdf, key_col, ts_col, id_col, type_col, int(gap_micros), int(n),
+        int(min_count)))
 
 
 def term_counts_windowed(df, event_time_col, text_col, window_duration,
                          watermark_delay="0 seconds"):
-    """Windowed term counts — Python mirror of the Scala
-    ``StreamingPipeline.termCountsWindowed``: one API for the batch and
-    streaming faces (watermarked tumbling-window token count); top-k is
-    the consumer's cut.
-    """
-    return (df.withWatermark(event_time_col, watermark_delay)
-            .select(F.col(event_time_col),
-                    F.explode(F.split(F.col(text_col), " ")).alias("term"))
-            .where(F.col("term") != "")
-            .groupBy(F.window(F.col(event_time_col), window_duration),
-                     F.col("term"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("window.start").alias("window_start"),
-                    "term", "cnt"))
+    """Windowed term counts: one API for the batch and streaming faces
+    (watermarked tumbling-window token count); top-k is the consumer's cut.
+    Scala ``StreamingPipeline.termCountsWindowed``."""
+    ops = _jvm().graft.streaming.StreamingPipeline
+    return _wrap(df, ops.termCountsWindowed(
+        df._jdf, event_time_col, text_col, window_duration, watermark_delay))
 
 
 def burst_segments(df, key_col, bucket_col, cnt_col, threshold, min_len=2):
-    """Burst segment detection — Python mirror of the Scala
-    ``Temporal.burstSegments``: maximal runs of CONSECUTIVE buckets with
-    count >= threshold via the gaps-and-islands key
-    (bucket - row_number), reported as (key, seg_start, n_buckets,
-    total_cnt) and pruned at min_len. Two keyed windows + one groupBy
-    over the already-aggregated (key, bucket) count table.
-    """
+    """Burst segment detection: maximal runs of CONSECUTIVE buckets with
+    count >= threshold via the gaps-and-islands key (bucket - row_number),
+    reported as (key, seg_start, n_buckets, total_cnt) and pruned at
+    min_len. Two keyed windows + one groupBy over the already-aggregated
+    (key, bucket) count table. Scala ``Temporal.burstSegments``."""
     if min_len < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
-    w = Window.partitionBy(key_col).orderBy(bucket_col)
-    return (df.where(F.col(cnt_col) >= threshold)
-            .withColumn("__grp", F.col(bucket_col).cast("long")
-                        - F.row_number().over(w))
-            .groupBy(F.col(key_col), F.col("__grp"))
-            .agg(F.min(F.col(bucket_col).cast("long")).alias("seg_start"),
-                 F.count(F.lit(1)).alias("n_buckets"),
-                 F.sum(F.col(cnt_col).cast("long")).alias("total_cnt"))
-            .where(F.col("n_buckets") >= min_len)
-            .drop("__grp"))
+    return _wrap(df, _pl().Temporal.burstSegments(
+        df._jdf, key_col, bucket_col, cnt_col, int(threshold), int(min_len)))
