@@ -64,6 +64,12 @@ final case class RasterExtent(extent: Extent, cols: Int, rows: Int) {
     * resample kernels sample in. */
   def xToColFrac(x: Double): Double = (x - extent.xmin) / cellWidth - 0.5
   def yToRowFrac(y: Double): Double = (extent.ymax - y) / cellHeight - 0.5
+  /** World extent of the cells of `gb`. */
+  def extentOf(gb: GridBounds): Extent = Extent(
+    extent.xmin + gb.colMin * cellWidth,
+    extent.ymax - (gb.rowMax + 1) * cellHeight,
+    extent.xmin + (gb.colMax + 1) * cellWidth,
+    extent.ymax - gb.rowMin * cellHeight)
   /** Grid bounds (clamped) covering a sub-extent. */
   def gridBoundsFor(sub: Extent): GridBounds = {
     val cMin = math.max(0, xToCol(sub.xmin + cellWidth / 100))

@@ -227,7 +227,6 @@ class GeoTiffReaderFactory(required: StructType) extends PartitionReaderFactory 
       override def get(): InternalRow = {
         val kc = idx % keysAcross
         val kr = idx / keysAcross
-        val re = info.rasterExtent
         val win = GridBounds(
           math.max(0, kc * part.tileCols - part.buffer),
           math.max(0, kr * part.tileRows - part.buffer),
@@ -236,11 +235,7 @@ class GeoTiffReaderFactory(required: StructType) extends PartitionReaderFactory 
         if (readsCells && (span == null || span.bounds.rowMin != win.rowMin))
           span = GeoTiff.readSpan(reader, info,
             GridBounds(0, win.rowMin, info.cols - 1, win.rowMax))
-        val extent = Extent(
-          info.extent.xmin + win.colMin * re.cellWidth,
-          info.extent.ymax - (win.rowMax + 1) * re.cellHeight,
-          info.extent.xmin + (win.colMax + 1) * re.cellWidth,
-          info.extent.ymax - win.rowMin * re.cellHeight)
+        val extent = info.rasterExtent.extentOf(win)
         // column pruning: decode cells only if the tile column is required
         val values = Array.tabulate[Any](required.fields.length) { f =>
           if (bands(f) < 0) required.fields(f).name match {

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.core._
 import graft.core.crs.CRS
+import graft.expressions.{Png, SpatialSupport}
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
 import org.apache.spark.sql.types.StructType
@@ -44,44 +45,22 @@ class SlippyDataSource extends CreatableRelationProvider with DataSourceRegister
     rows.rdd.foreachPartition { it =>
       it.foreach { row =>
         val t = row.getAs[Tile](0)
-        val e = row.getStruct(1)
-        val extent = Extent(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3))
+        val extent = SpatialSupport.extentOf(row.getStruct(1))
         val crs = CRS(row.getString(2))
         val (lon0, lat0) = CRS.toLonLat(extent.xmin, extent.ymin, crs)
         val (lon1, lat1) = CRS.toLonLat(extent.xmax, extent.ymax, crs)
         val (tx0, ty1) = lonLatToTile(lon0, lat0)
         val (tx1, ty0) = lonLatToTile(lon1, lat1)
         val srcRE = RasterExtent(Extent(lon0, lat0, lon1, lat1), t.cols, t.rows)
-        val (_, _, mn, mx, _, _) = t.statsAccum
-        val range = if (mx > mn) mx - mn else 1.0
+        val grey = Png.grey(t)
         for (tx <- tx0 to tx1; ty <- ty0 to ty1) {
-          val tb = tileBounds(tx, ty)
-          val img = new java.awt.image.BufferedImage(256, 256,
-            java.awt.image.BufferedImage.TYPE_INT_ARGB)
-          val re = RasterExtent(tb, 256, 256)
-          var any = false
-          var r = 0
-          while (r < 256) {
-            var c = 0
-            while (c < 256) {
-              val x = re.colToX(c); val y = re.rowToY(r)
-              val sc = srcRE.xToCol(x); val sr = srcRE.yToRow(y)
-              if (sc >= 0 && sc < t.cols && sr >= 0 && sr < t.rows) {
-                val v = t.getDouble(sr * t.cols + sc)
-                if (NoData.isData(v)) {
-                  val g = ((v - mn) / range * 255).toInt & 0xff
-                  img.setRGB(c, r, 0xff000000 | (g << 16) | (g << 8) | g)
-                  any = true
-                }
-              }
-              c += 1
-            }
-            r += 1
-          }
-          if (any) {
+          val re = RasterExtent(tileBounds(tx, ty), 256, 256)
+          val grid = Warp.grid(re)
+          if (Warp.paint(grid, re, CRS.wgs84, GridBounds(0, 0, 255, 255),
+              t, srcRE, CRS.wgs84, "nearest") > 0) {
             val p = Paths.get(dir, zoom.toString, tx.toString)
             Files.createDirectories(p)
-            javax.imageio.ImageIO.write(img, "png", p.resolve(s"$ty.png").toFile)
+            Files.write(p.resolve(s"$ty.png"), Png.write(grid)(grey))
           }
         }
       }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import graft.core._
 import graft.core.crs.CRS
 import graft.core.geotiff.GeoTiff
+import graft.expressions.SpatialSupport
 import graft.udt.TileUDT
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
@@ -41,8 +42,7 @@ class TilesDataSource extends CreatableRelationProvider with DataSourceRegister 
     val entries = data.rdd.mapPartitionsWithIndex { (pid, rows) =>
       rows.zipWithIndex.map { case (row, i) =>
         val tile = row.getAs[Tile](tileIdx)
-        val e = row.getStruct(extIdx)
-        val extent = Extent(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3))
+        val extent = SpatialSupport.extentOf(row.getStruct(extIdx))
         val crs = CRS(row.getString(crsIdx))
         val name = f"tile-$pid%05d-$i%05d.tif"
         GeoTiff.write(s"$dir/$name", tile, extent, crs)
@@ -69,37 +69,18 @@ trait GeoTiffWriteSupport extends CreatableRelationProvider {
       throw new IllegalArgumentException("geotiff writer requires a 'path'"))
     val rows = data.select("tile", "extent", "crs").collect()
     require(rows.nonEmpty, "geotiff writer: empty input")
-    val parts = rows.map { r =>
-      val t = r.getAs[Tile](0)
-      val e = r.getStruct(1)
-      (t, Extent(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3)), CRS(r.getString(2)))
-    }
-    val crs = parts.head._3
+    val parts = rows.map(r => (r.getAs[Tile](0), SpatialSupport.extentOf(r.getStruct(1))))
+    val crs = CRS(rows.head.getString(2))
     val union = parts.map(_._2).reduce(_ combine _)
     val cw = parts.head._2.width / parts.head._1.cols
     val ch = parts.head._2.height / parts.head._1.rows
-    val cols = math.max(1, math.round(union.width / cw).toInt)
-    val rows2 = math.max(1, math.round(union.height / ch).toInt)
-    val re = RasterExtent(union, cols, rows2)
-    val out = Tile.empty(parts.head._1.cellType.withDefaultNoData, cols, rows2)
-    for ((t, e, _) <- parts) {
-      val gb = re.gridBoundsFor(e)
-      val sub = RasterExtent(e, t.cols, t.rows)
-      var r = gb.rowMin
-      while (r <= gb.rowMax) {
-        var c = gb.colMin
-        while (c <= gb.colMax) {
-          val x = re.colToX(c); val y = re.rowToY(r)
-          val sc = sub.xToCol(x); val sr = sub.yToRow(y)
-          if (sc >= 0 && sc < t.cols && sr >= 0 && sr < t.rows) {
-            val v = t.getDouble(sr * t.cols + sc)
-            if (NoData.isData(v)) out.setDouble(r * cols + c, v)
-          }
-          c += 1
-        }
-        r += 1
-      }
-    }
+    val re = RasterExtent(union,
+      math.max(1, math.round(union.width / cw).toInt), math.max(1, math.round(union.height / ch).toInt))
+    // the last part wins a cell: paint in reverse, first data value wins
+    val grid = Warp.grid(re)
+    for ((t, e) <- parts.reverseIterator)
+      Warp.paint(grid, re, crs, re.gridBoundsFor(e), t, RasterExtent(e, t.cols, t.rows), crs, "nearest")
+    val out = Tile.fromDoubles(grid.array, parts.head._1.cellType.withDefaultNoData, re.cols, re.rows)
     GeoTiff.write(path, out, union, crs)
     val outerCtx = sqlContext
     new BaseRelation {

@@ -32,6 +32,8 @@ case class OverviewRasterAggregate(
   @transient private lazy val destCrs = CRS(destCrsName)
   @transient private lazy val destRE = RasterExtent(destExtent, destCols, destRows)
 
+  private def asTile(buf: Array[Double]) = new DoubleArrayTile(buf, destCols, destRows, CellType.float64)
+
   override def createAggregationBuffer(): Array[Double] =
     Array.fill(destCols * destRows)(Double.NaN)
 
@@ -42,38 +44,17 @@ case class OverviewRasterAggregate(
       val srcExtent = ProjRaster.extentOf(row)
       val srcCrs = ProjRaster.crsOf(row)
       val t = ProjRaster.tileOf(row)
-      val srcRE = RasterExtent(srcExtent, t.cols, t.rows)
-      val same = srcCrs.normalized == destCrs.normalized
       // only the destination cells covered by this tile's footprint
       val footprint =
-        if (same) srcExtent
+        if (srcCrs.normalized == destCrs.normalized) srcExtent
         else {
           val (x0, y0) = CRS.transform(srcExtent.xmin, srcExtent.ymin, srcCrs, destCrs)
           val (x1, y1) = CRS.transform(srcExtent.xmax, srcExtent.ymax, srcCrs, destCrs)
           Extent(math.min(x0, x1), math.min(y0, y1), math.max(x0, x1), math.max(y0, y1))
         }
       destExtent.intersection(footprint).foreach { inter =>
-        val gb = destRE.gridBoundsFor(inter)
-        var r = gb.rowMin
-        while (r <= gb.rowMax) {
-          var c = gb.colMin
-          while (c <= gb.colMax) {
-            val i = r * destCols + c
-            if (NoData.isNoData(buf(i))) {
-              val dx = destRE.colToX(c); val dy = destRE.rowToY(r)
-              val (sx, sy) = if (same) (dx, dy) else CRS.transform(dx, dy, destCrs, srcCrs)
-              if (srcExtent.contains(sx, sy)) {
-                val sc = srcRE.xToCol(sx); val sr = srcRE.yToRow(sy)
-                if (sc >= 0 && sc < t.cols && sr >= 0 && sr < t.rows) {
-                  val cellV = t.getDouble(sr * t.cols + sc)
-                  if (NoData.isData(cellV)) buf(i) = cellV
-                }
-              }
-            }
-            c += 1
-          }
-          r += 1
-        }
+        Warp.paint(asTile(buf), destRE, destCrs, destRE.gridBoundsFor(inter),
+          t, RasterExtent(srcExtent, t.cols, t.rows), srcCrs, "nearest")
       }
     }
     buf
@@ -83,12 +64,7 @@ case class OverviewRasterAggregate(
     while (i < a.length) { if (NoData.isNoData(a(i)) && NoData.isData(b(i))) a(i) = b(i); i += 1 }
     a
   }
-  override def eval(buf: Array[Double]): Any = {
-    val t = Tile.empty(CellType.float64, destCols, destRows)
-    var i = 0
-    while (i < buf.length) { t.setDouble(i, buf(i)); i += 1 }
-    tileResult(t)
-  }
+  override def eval(buf: Array[Double]): Any = tileResult(asTile(buf))
   override def serialize(buf: Array[Double]): Array[Byte] = {
     val bb = ByteBuffer.allocate(buf.length * 8).order(ByteOrder.LITTLE_ENDIAN)
     bb.asDoubleBuffer().put(buf); bb.array()

@@ -30,10 +30,7 @@ object ProjRaster {
     case _ => false
   }
 
-  def extentOf(r: InternalRow): Extent = {
-    val e = r.getStruct(0, 2).getStruct(0, 4)
-    Extent(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3))
-  }
+  def extentOf(r: InternalRow): Extent = SpatialSupport.extentOf(r.getStruct(0, 2).getStruct(0, 4))
   def crsOf(r: InternalRow): CRS = CRS(r.getStruct(0, 2).getUTF8String(1).toString)
   def tileOf(r: InternalRow): Tile = TileUDT.decode(r.getStruct(1, 4))
 }
@@ -155,57 +152,22 @@ case class ReprojectAndMerge(children: Seq[Expression]) extends Expression with 
   override def eval(input: InternalRow): Any = {
     val vs = children.map(_.eval(input))
     val method = if (vs.size == 8 && vs(7) != null) vs(7).toString else "nearest"
-    val isNearest = method.toLowerCase.trim.replaceAll("_", "") match {
-      case "nearest" | "nearestneighbor" => true
-      case _ => false
-    }
     if (vs(3) == null || vs(4) == null) return null
     val tiles = vs(0).asInstanceOf[ArrayData]
     val extents = vs(1).asInstanceOf[ArrayData]
     val crss = vs(2).asInstanceOf[ArrayData]
-    val de = vs(3).asInstanceOf[InternalRow]
-    val destExtent = Extent(de.getDouble(0), de.getDouble(1), de.getDouble(2), de.getDouble(3))
     val destCrs = CRS(vs(4).toString)
-    val cols = vs(5).asInstanceOf[Number].intValue()
-    val rows = vs(6).asInstanceOf[Number].intValue()
-    val destRE = RasterExtent(destExtent, cols, rows)
-    val out = Tile.empty(CellType.float64, cols, rows)
-    if (tiles == null || tiles.numElements() == 0) return tileResult(out)
+    val destRE = RasterExtent(SpatialSupport.extentOf(vs(3).asInstanceOf[InternalRow]),
+      vs(5).asInstanceOf[Number].intValue(), vs(6).asInstanceOf[Number].intValue())
+    val out = Warp.grid(destRE)
+    if (tiles == null) return tileResult(out)
+    val all = GridBounds(0, 0, destRE.cols - 1, destRE.rows - 1)
     var k = 0
     while (k < tiles.numElements()) {
       if (!tiles.isNullAt(k)) {
         val t = TileUDT.decode(tiles.getStruct(k, 4))
-        val er = extents.getStruct(k, 4)
-        val srcExtent = Extent(er.getDouble(0), er.getDouble(1), er.getDouble(2), er.getDouble(3))
-        val srcCrs = CRS(crss.getUTF8String(k).toString)
-        val srcRE = RasterExtent(srcExtent, t.cols, t.rows)
-        val same = srcCrs.normalized == destCrs.normalized
-        var r = 0
-        while (r < rows) {
-          var c = 0
-          while (c < cols) {
-            val i = r * cols + c
-            if (NoData.isNoData(out.getDouble(i))) {
-              val dx = destRE.colToX(c); val dy = destRE.rowToY(r)
-              val (sx, sy) = if (same) (dx, dy) else CRS.transform(dx, dy, destCrs, srcCrs)
-              if (srcExtent.contains(sx, sy)) {
-                if (isNearest) {
-                  val sc = srcRE.xToCol(sx); val sr = srcRE.yToRow(sy)
-                  if (sc >= 0 && sc < t.cols && sr >= 0 && sr < t.rows) {
-                    val v = t.getDouble(sr * t.cols + sc)
-                    if (NoData.isData(v)) out.setDouble(i, v)
-                  }
-                } else {
-                  val v = Resample.sampleAt(t,
-                    srcRE.xToColFrac(sx), srcRE.yToRowFrac(sy), method)
-                  if (NoData.isData(v)) out.setDouble(i, v)
-                }
-              }
-            }
-            c += 1
-          }
-          r += 1
-        }
+        val srcRE = RasterExtent(SpatialSupport.extentOf(extents.getStruct(k, 4)), t.cols, t.rows)
+        Warp.paint(out, destRE, destCrs, all, t, srcRE, CRS(crss.getUTF8String(k).toString), method)
       }
       k += 1
     }

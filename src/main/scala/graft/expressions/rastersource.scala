@@ -78,11 +78,7 @@ case class RasterSourceToTiles(
         while (kc < keysAcross) {
           val win = GridBounds(kc * tileCols, kr * tileRows,
             math.min(info.cols - 1, (kc + 1) * tileCols - 1), rowMax)
-          val extent = Extent(
-            info.extent.xmin + win.colMin * re.cellWidth,
-            info.extent.ymax - (win.rowMax + 1) * re.cellHeight,
-            info.extent.xmin + (win.colMax + 1) * re.cellWidth,
-            info.extent.ymax - win.rowMin * re.cellHeight)
+          val extent = re.extentOf(win)
           val bands: Seq[Any] = paths.indices.map { b =>
             if (paths(b) == null) null
             else if (lazyTiles)

@@ -65,15 +65,10 @@ case class RenderMatrix(child: Expression) extends UnaryExpression with CodegenF
   override protected def withNewChildInternal(c: Expression) = copy(c)
 }
 
-/** Single-band grayscale PNG (min-max stretched) as binary. */
-case class RenderPNG(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def prettyName: String = "rf_render_png"
-  override def dataType: DataType = BinaryType
-  @transient private lazy val ext = tileExtractor(child.dataType)
-  override def nullSafeEval(input: Any): Any = {
-    val t = ext(input)
-    val (_, _, mn, mx, _, _) = t.statsAccum
-    val range = if (mx > mn) mx - mn else 1.0
+/** The one tile→PNG writer of the render expressions and the slippy
+  * writer: cell (c, r) becomes pixel (c, r), NoData stays transparent. */
+private[graft] object Png {
+  def write(t: Tile)(argb: Double => Int): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
       t.cols, t.rows, java.awt.image.BufferedImage.TYPE_INT_ARGB)
     var r = 0
@@ -81,13 +76,7 @@ case class RenderPNG(child: Expression) extends UnaryExpression with CodegenFall
       var c = 0
       while (c < t.cols) {
         val v = t.getDouble(r * t.cols + c)
-        val argb =
-          if (NoData.isNoData(v)) 0
-          else {
-            val g = ((v - mn) / range * 255).toInt & 0xff
-            0xff000000 | (g << 16) | (g << 8) | g
-          }
-        img.setRGB(c, r, argb)
+        img.setRGB(c, r, if (NoData.isNoData(v)) 0 else argb(v))
         c += 1
       }
       r += 1
@@ -95,6 +84,33 @@ case class RenderPNG(child: Expression) extends UnaryExpression with CodegenFall
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
+  }
+
+  /** `t`'s min-max stretch onto [0, 1] (a constant tile maps to 0). */
+  def stretch(t: Tile): Double => Double = {
+    val (_, _, mn, mx, _, _) = t.statsAccum
+    val range = if (mx > mn) mx - mn else 1.0
+    v => (v - mn) / range
+  }
+
+  /** Opaque grey of `t`'s min-max stretch. */
+  def grey(t: Tile): Double => Int = {
+    val s = stretch(t)
+    v => {
+      val g = (s(v) * 255).toInt & 0xff
+      0xff000000 | (g << 16) | (g << 8) | g
+    }
+  }
+}
+
+/** Single-band grayscale PNG (min-max stretched) as binary. */
+case class RenderPNG(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def prettyName: String = "rf_render_png"
+  override def dataType: DataType = BinaryType
+  @transient private lazy val ext = tileExtractor(child.dataType)
+  override def nullSafeEval(input: Any): Any = {
+    val t = ext(input)
+    Png.write(t)(Png.grey(t))
   }
   override protected def withNewChildInternal(c: Expression) = copy(c)
 }
@@ -185,25 +201,8 @@ case class RenderRampPNG(child: Expression, ramp: Expression)
   @transient private lazy val rampName = ramp.eval(null).asInstanceOf[UTF8String].toString
   override def nullSafeEval(input: Any, unused: Any): Any = {
     val t = ext(input)
-    val (_, _, mn, mx, _, _) = t.statsAccum
-    val range = if (mx > mn) mx - mn else 1.0
-    val img = new java.awt.image.BufferedImage(
-      t.cols, t.rows, java.awt.image.BufferedImage.TYPE_INT_ARGB)
-    var r = 0
-    while (r < t.rows) {
-      var c = 0
-      while (c < t.cols) {
-        val v = t.getDouble(r * t.cols + c)
-        img.setRGB(c, r,
-          if (NoData.isNoData(v)) 0
-          else ColorRampNames.color(rampName, (v - mn) / range))
-        c += 1
-      }
-      r += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    val s = Png.stretch(t)
+    Png.write(t)(v => ColorRampNames.color(rampName, s(v)))
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(child = l, ramp = r)
@@ -217,25 +216,8 @@ case class RenderRGBPNG(child: Expression) extends UnaryExpression with CodegenF
   override def prettyName: String = "rf_render_png"
   override def dataType: DataType = BinaryType
   @transient private lazy val ext = tileExtractor(child.dataType)
-  override def nullSafeEval(input: Any): Any = {
-    val t = ext(input)
-    val img = new java.awt.image.BufferedImage(
-      t.cols, t.rows, java.awt.image.BufferedImage.TYPE_INT_ARGB)
-    var r = 0
-    while (r < t.rows) {
-      var c = 0
-      while (c < t.cols) {
-        val v = t.getDouble(r * t.cols + c)
-        img.setRGB(c, r,
-          if (NoData.isNoData(v)) 0 else 0xff000000 | (v.toInt & 0xffffff))
-        c += 1
-      }
-      r += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
+  override def nullSafeEval(input: Any): Any =
+    Png.write(ext(input))(v => 0xff000000 | (v.toInt & 0xffffff))
   override protected def withNewChildInternal(c: Expression) = copy(c)
 }
 

@@ -3,6 +3,7 @@ package graft.expressions
 import graft.core.{CellType, Extent, NoData, Tile}
 import graft.core.crs.CRS
 import graft.udt.{GeometryUDT, TileUDT}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -29,6 +30,12 @@ object SpatialSupport {
 
   val geomFactory = new GeometryFactory()
 
+  /** An extent struct (xmin, ymin, xmax, ymax), as Catalyst or as an external row. */
+  def extentOf(e: InternalRow): Extent =
+    Extent(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3))
+  def extentOf(e: Row): Extent =
+    Extent(e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3))
+
   def isExtentType(dt: DataType): Boolean = dt match {
     case st: StructType =>
       st.fieldNames.length == 4 && st.fieldNames.sameElements(extentSchema.fieldNames)
@@ -40,9 +47,7 @@ object SpatialSupport {
   def geomExtractor(dt: DataType): Any => Geometry = dt match {
     case _: GeometryUDT => { case b: Array[Byte] => GeometryUDT.read(b) }
     case BinaryType => { case b: Array[Byte] => GeometryUDT.read(b) }
-    case st: StructType if isExtentType(st) => { case r: InternalRow =>
-      Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)).toJts
-    }
+    case st: StructType if isExtentType(st) => { case r: InternalRow => extentOf(r).toJts }
     case other => throw new IllegalArgumentException(
       s"Expected geometry or extent argument, got ${other.simpleString(10)}")
   }
