@@ -152,25 +152,36 @@ object Resample {
     else vsum / wsum
   }
 
-  /** Point-sample `t` at continuous cell-center coordinates (x, y)
-    * with any of the five point-interpolation methods — the sampling
-    * primitive the rasterJoin merge threads its resampleMethod through
-    * (aggregate methods have no point-sample meaning and are
-    * rejected). */
-  def sampleAt(t: Tile, x: Double, y: Double, method: String): Double =
-    method.toLowerCase.trim.replaceAll("_", "") match {
-      case "nearest" | "nearestneighbor" =>
-        val sc = math.max(0, math.min(t.cols - 1, math.round(x).toInt))
-        val sr = math.max(0, math.min(t.rows - 1, math.round(y).toInt))
-        t.getDouble(sr * t.cols + sc)
-      case "bilinear" => bilinearAt(t, x, y)
-      case "cubicconvolution" => kernelAt(t, x, y, keysKernel, 2)
-      case "cubicspline" => kernelAt(t, x, y, bsplineKernel, 2)
-      case "lanczos" | "lanzos" => kernelAt(t, x, y, lanczosKernel, 3)
-      case m => throw new IllegalArgumentException(
-        s"Unsupported point-sample method: $m (nearest, bilinear, " +
-          "cubic_convolution, cubic_spline, lanczos)")
+  /** A point sample of a tile at continuous cell-center coordinates (x, y). */
+  trait PointSampler { def apply(t: Tile, x: Double, y: Double): Double }
+
+  /** The reference normalizer: lowercase, strip underscores
+    * (util/package.scala:242), so both spellings are accepted. */
+  private def normalize(method: String): String = method.toLowerCase.trim.replaceAll("_", "")
+
+  def isNearest(method: String): Boolean = normalize(method) match {
+    case "nearest" | "nearestneighbor" => true
+    case _ => false
+  }
+
+  /** The point sampler for any of the five point-interpolation methods,
+    * resolved from its name once — the sampling primitive the rasterJoin
+    * merge threads its resampleMethod through (aggregate methods have no
+    * point-sample meaning and are rejected). */
+  def sampler(method: String): PointSampler = normalize(method) match {
+    case "nearest" | "nearestneighbor" => (t, x, y) => {
+      val sc = math.max(0, math.min(t.cols - 1, math.round(x).toInt))
+      val sr = math.max(0, math.min(t.rows - 1, math.round(y).toInt))
+      t.getDouble(sr * t.cols + sc)
     }
+    case "bilinear" => bilinearAt
+    case "cubicconvolution" => kernelAt(_, _, _, keysKernel, 2)
+    case "cubicspline" => kernelAt(_, _, _, bsplineKernel, 2)
+    case "lanczos" | "lanzos" => kernelAt(_, _, _, lanczosKernel, 3)
+    case m => throw new IllegalArgumentException(
+      s"Unsupported point-sample method: $m (nearest, bilinear, " +
+        "cubic_convolution, cubic_spline, lanczos)")
+  }
 
   private def interpolate(t: Tile, dstCols: Int, dstRows: Int,
       kernel: Double => Double, radius: Int): Tile = {
@@ -265,9 +276,7 @@ object Resample {
   }
 
   def apply(t: Tile, dstCols: Int, dstRows: Int, method: String): Tile =
-    // the reference normalizer lowercases and strips underscores
-    // (util/package.scala:242) — accept both spellings
-    method.toLowerCase.trim.replaceAll("_", "") match {
+    normalize(method) match {
       case "nearest" | "nearestneighbor" => nearest(t, dstCols, dstRows)
       case "bilinear" => bilinear(t, dstCols, dstRows)
       case "cubicconvolution" => interpolate(t, dstCols, dstRows, keysKernel, 2)

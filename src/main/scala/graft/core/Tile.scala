@@ -1,14 +1,16 @@
 package graft.core
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 /**
  * A 2-D single-band grid of cells with a fixed [[CellType]].
  *
  * Independent re-implementation of the tile abstraction the reference
  * delegates to GeoTrellis (reference behavior observed at
  * /root/reference/core/src/main/scala/org/apache/spark/sql/rf/TileUDT.scala:49-124).
- * Cells are stored row-major in a primitive array of the storage type.
+ * A tile is a view over its TileUDT `cells` payload: one little-endian
+ * `Array[Byte]`, row-major, read and written through [[Cells]]. Decoding
+ * a row wraps its payload and encoding hands the payload out, so neither
+ * copies cells; a [[MutableTile]] whose payload is shared copies it on
+ * its next write (copy-on-write).
  *
  * Two views of every cell:
  *  - integer view: `get` (NoData → Int.MinValue)
@@ -32,14 +34,17 @@ trait Tile extends Serializable {
   /** Raw storage-domain value (no NoData translation), as double. */
   def getRawDouble(i: Int): Double
 
-  /** Cell payload in native layout, little-endian. */
+  /** The cell payload, little-endian: the tile's own array, not a copy,
+    * so callers must not write to it. A later write to the tile copies
+    * it first, so the returned bytes never change. */
   def toBytes: Array[Byte]
 
-  def mutableCopy: MutableTile
+  /** A writable tile with these cells; copies them on its first write. */
+  def mutableCopy: MutableTile = Tile.fromBytes(toBytes, cellType, cols, rows)
 
   /** Numeric conversion to another cell type (values preserved, clamped to range; NoData maps to NoData). */
   def convert(ct: CellType): Tile = {
-    val out = Tile.empty(ct, cols, rows)
+    val out = Tile.blank(ct, cols, rows)
     var i = 0
     val n = size
     if (ct.isFloating) {
@@ -67,7 +72,7 @@ trait Tile extends Serializable {
 
   /** Map over data cells (NoData stays NoData), result keeps this cell type. */
   def mapDouble(f: Double => Double): Tile = {
-    val out = Tile.empty(cellType, cols, rows)
+    val out = Tile.blank(cellType, cols, rows)
     var i = 0
     val n = size
     while (i < n) {
@@ -82,7 +87,7 @@ trait Tile extends Serializable {
   def combineDouble(other: Tile)(f: (Double, Double) => Double): Tile = {
     require(cols == other.cols && rows == other.rows,
       s"Tile dimension mismatch: ${cols}x$rows vs ${other.cols}x${other.rows}")
-    val out = Tile.empty(cellType.union(other.cellType), cols, rows)
+    val out = Tile.blank(cellType.union(other.cellType), cols, rows)
     var i = 0
     val n = size
     while (i < n) {
@@ -187,28 +192,39 @@ trait MutableTile extends Tile {
 }
 
 object Tile {
+  /** Length in bytes of the payload of a `cols`×`rows` tile of `ct`. */
+  def payloadBytes(ct: CellType, cols: Int, rows: Int): Int = {
+    val n = cols.toLong * rows
+    val len = if (ct.base == CellBase.Bit) (n + 7) / 8 else n * ct.bytes
+    require(cols >= 0 && rows >= 0 && len <= Int.MaxValue, s"Invalid tile shape: a ${cols}x$rows $ct tile")
+    len.toInt
+  }
+
+  /** A tile over `payload`, which must be exactly [[payloadBytes]] long.
+    * `shared` marks a payload that someone else also holds: the tile
+    * then copies it before its first write. */
+  private[core] def wrap(payload: Array[Byte], ct: CellType, cols: Int, rows: Int,
+      shared: Boolean): PayloadTile = ct.base match {
+    case CellBase.Bit => new BitTile(payload, shared, cols, rows, ct)
+    case CellBase.Int8 | CellBase.UInt8 => new ByteTile(payload, shared, cols, rows, ct)
+    case CellBase.Int16 | CellBase.UInt16 => new ShortTile(payload, shared, cols, rows, ct)
+    case CellBase.Int32 => new IntTile(payload, shared, cols, rows, ct)
+    case CellBase.Float32 => new FloatTile(payload, shared, cols, rows, ct)
+    case CellBase.Float64 => new DoubleTile(payload, shared, cols, rows, ct)
+  }
+
+  private def alloc(ct: CellType, cols: Int, rows: Int): PayloadTile =
+    wrap(new Array[Byte](payloadBytes(ct, cols, rows)), ct, cols, rows, shared = false)
+
+  /** A tile whose payload is all zero bits, for a caller that writes every cell. */
+  def blank(ct: CellType, cols: Int, rows: Int): MutableTile = alloc(ct, cols, rows)
+
   /** Allocate a tile of the given type filled with NoData (or zero for raw types). */
   def empty(ct: CellType, cols: Int, rows: Int): MutableTile = {
-    val n = cols * rows
-    ct.base match {
-      case CellBase.Bit => new BitArrayTile(new Array[Byte]((n + 7) / 8), cols, rows, ct)
-      case CellBase.Int8 | CellBase.UInt8 =>
-        val t = new ByteArrayTile(new Array[Byte](n), cols, rows, ct); fill(t); t
-      case CellBase.Int16 | CellBase.UInt16 =>
-        val t = new ShortArrayTile(new Array[Short](n), cols, rows, ct); fill(t); t
-      case CellBase.Int32 =>
-        val t = new IntArrayTile(new Array[Int](n), cols, rows, ct); fill(t); t
-      case CellBase.Float32 =>
-        val t = new FloatArrayTile(new Array[Float](n), cols, rows, ct); fill(t); t
-      case CellBase.Float64 =>
-        val t = new DoubleArrayTile(new Array[Double](n), cols, rows, ct); fill(t); t
-    }
+    val t = alloc(ct, cols, rows)
+    if (ct.hasNoData && t.size > 0) { t.setDouble(0, Double.NaN); t.fillFromCell0() }
+    t
   }
-  private def fill(t: MutableTile): Unit =
-    if (t.cellType.hasNoData) {
-      var i = 0; val n = t.size
-      while (i < n) { t.setDouble(i, Double.NaN); i += 1 }
-    }
 
   def fromDoubles(values: Array[Double], ct: CellType, cols: Int, rows: Int): MutableTile = {
     val t = empty(ct, cols, rows)
@@ -219,135 +235,133 @@ object Tile {
   }
 
   def constant(value: Double, ct: CellType, cols: Int, rows: Int): Tile = {
-    val t = empty(ct, cols, rows)
+    val t = blank(ct, cols, rows)
     var i = 0; val n = t.size
     while (i < n) { t.setDouble(i, value); i += 1 }
     t
   }
 
-  /** Deserialize from the native little-endian payload. */
+  /** View the little-endian payload `bytes` as a tile, without copying it
+    * when its length is exact; a longer payload is trimmed into a copy,
+    * a shorter one fails. Later writes to the tile copy first, so they
+    * never reach `bytes`. */
   def fromBytes(bytes: Array[Byte], ct: CellType, cols: Int, rows: Int): MutableTile = {
-    val n = cols * rows
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    ct.base match {
-      case CellBase.Bit =>
-        new BitArrayTile(java.util.Arrays.copyOf(bytes, (n + 7) / 8), cols, rows, ct)
-      case CellBase.Int8 | CellBase.UInt8 =>
-        new ByteArrayTile(java.util.Arrays.copyOf(bytes, n), cols, rows, ct)
-      case CellBase.Int16 | CellBase.UInt16 =>
-        val a = new Array[Short](n); bb.asShortBuffer().get(a); new ShortArrayTile(a, cols, rows, ct)
-      case CellBase.Int32 =>
-        val a = new Array[Int](n); bb.asIntBuffer().get(a); new IntArrayTile(a, cols, rows, ct)
-      case CellBase.Float32 =>
-        val a = new Array[Float](n); bb.asFloatBuffer().get(a); new FloatArrayTile(a, cols, rows, ct)
-      case CellBase.Float64 =>
-        val a = new Array[Double](n); bb.asDoubleBuffer().get(a); new DoubleArrayTile(a, cols, rows, ct)
+    val len = payloadBytes(ct, cols, rows)
+    if (bytes.length < len)
+      throw new IllegalArgumentException(s"Truncated tile payload: a ${cols}x$rows $ct tile " +
+        s"needs $len bytes, got ${bytes.length}")
+    if (bytes.length == len) wrap(bytes, ct, cols, rows, shared = true)
+    else wrap(java.util.Arrays.copyOf(bytes, len), ct, cols, rows, shared = false)
+  }
+}
+
+// ---------------- concrete tiles: one per storage type, all over a payload ----------------
+
+/** The payload and its copy-on-write state, shared by every concrete tile. */
+sealed abstract class PayloadTile(private[this] var payload: Array[Byte], private[this] var shared: Boolean)
+    extends MutableTile {
+  /** The payload, for reading. */
+  protected final def cells: Array[Byte] = payload
+  /** The payload, for writing: first copied if anyone else holds it. */
+  protected final def writable: Array[Byte] = {
+    if (shared) { payload = payload.clone(); shared = false }
+    payload
+  }
+  final def toBytes: Array[Byte] = { shared = true; payload }
+
+  /** Copy cell 0's bytes over every other cell, doubling the filled prefix. */
+  private[core] final def fillFromCell0(): Unit = {
+    val a = writable
+    var filled = cellType.bytes
+    while (filled < a.length) {
+      val n = math.min(filled, a.length - filled)
+      System.arraycopy(a, 0, a, filled, n)
+      filled += n
     }
   }
 }
 
-// ---------------- concrete array tiles ----------------
-
-final class BitArrayTile(val array: Array[Byte], val cols: Int, val rows: Int, val cellType: CellType)
-    extends MutableTile {
-  @inline private def bit(i: Int): Int = (array(i >> 3) >> (i & 7)) & 1
+final class BitTile(payload: Array[Byte], shared: Boolean, val cols: Int, val rows: Int,
+    val cellType: CellType) extends PayloadTile(payload, shared) {
+  @inline private def bit(i: Int): Int = (cells(i >> 3) >> (i & 7)) & 1
   def get(i: Int): Int = bit(i)
   def getDouble(i: Int): Double = bit(i).toDouble
   def getRawDouble(i: Int): Double = bit(i).toDouble
   def setDouble(i: Int, v: Double): Unit = {
-    val b = if (NoData.isData(v) && v != 0.0) 1 else 0
+    val a = writable
     val idx = i >> 3; val m = 1 << (i & 7)
-    array(idx) = (if (b == 1) array(idx) | m else array(idx) & ~m).toByte
+    a(idx) = (if (NoData.isData(v) && v != 0.0) a(idx) | m else a(idx) & ~m).toByte
   }
-  def toBytes: Array[Byte] = array.clone()
-  def mutableCopy: MutableTile = new BitArrayTile(array.clone(), cols, rows, cellType)
 }
 
-final class ByteArrayTile(val array: Array[Byte], val cols: Int, val rows: Int, val cellType: CellType)
-    extends MutableTile {
+final class ByteTile(payload: Array[Byte], shared: Boolean, val cols: Int, val rows: Int,
+    val cellType: CellType) extends PayloadTile(payload, shared) {
   private val unsigned = cellType.base == CellBase.UInt8
   private val hasND = cellType.hasNoData
   private val nd: Int = if (hasND) cellType.noDataValue.toInt else 0
-  @inline private def raw(i: Int): Int = if (unsigned) array(i) & 0xff else array(i).toInt
+  @inline private def raw(i: Int): Int = if (unsigned) cells(i) & 0xff else cells(i).toInt
   def get(i: Int): Int = { val v = raw(i); if (hasND && v == nd) Int.MinValue else v }
   def getDouble(i: Int): Double = { val v = raw(i); if (hasND && v == nd) Double.NaN else v.toDouble }
   def getRawDouble(i: Int): Double = raw(i).toDouble
   def setDouble(i: Int, v: Double): Unit =
-    array(i) = if (NoData.isNoData(v)) (if (hasND) nd.toByte else 0) else v.toLong.toByte
-  def toBytes: Array[Byte] = array.clone()
-  def mutableCopy: MutableTile = new ByteArrayTile(array.clone(), cols, rows, cellType)
+    writable(i) = if (NoData.isNoData(v)) (if (hasND) nd.toByte else 0) else v.toLong.toByte
 }
 
-final class ShortArrayTile(val array: Array[Short], val cols: Int, val rows: Int, val cellType: CellType)
-    extends MutableTile {
+final class ShortTile(payload: Array[Byte], shared: Boolean, val cols: Int, val rows: Int,
+    val cellType: CellType) extends PayloadTile(payload, shared) {
   private val unsigned = cellType.base == CellBase.UInt16
   private val hasND = cellType.hasNoData
   private val nd: Int = if (hasND) cellType.noDataValue.toInt else 0
-  @inline private def raw(i: Int): Int = if (unsigned) array(i) & 0xffff else array(i).toInt
+  @inline private def raw(i: Int): Int = {
+    val v = Cells.getShort(cells, i)
+    if (unsigned) v & 0xffff else v.toInt
+  }
   def get(i: Int): Int = { val v = raw(i); if (hasND && v == nd) Int.MinValue else v }
   def getDouble(i: Int): Double = { val v = raw(i); if (hasND && v == nd) Double.NaN else v.toDouble }
   def getRawDouble(i: Int): Double = raw(i).toDouble
   def setDouble(i: Int, v: Double): Unit =
-    array(i) = if (NoData.isNoData(v)) (if (hasND) nd.toShort else 0) else v.toLong.toShort
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(array.length * 2).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asShortBuffer().put(array); bb.array()
-  }
-  def mutableCopy: MutableTile = new ShortArrayTile(array.clone(), cols, rows, cellType)
+    Cells.putShort(writable, i, if (NoData.isNoData(v)) (if (hasND) nd.toShort else 0) else v.toLong.toShort)
 }
 
-final class IntArrayTile(val array: Array[Int], val cols: Int, val rows: Int, val cellType: CellType)
-    extends MutableTile {
+final class IntTile(payload: Array[Byte], shared: Boolean, val cols: Int, val rows: Int,
+    val cellType: CellType) extends PayloadTile(payload, shared) {
   private val hasND = cellType.hasNoData
   private val nd: Int = if (hasND) cellType.noDataValue.toInt else 0
-  def get(i: Int): Int = { val v = array(i); if (hasND && v == nd) Int.MinValue else v }
-  def getDouble(i: Int): Double = { val v = array(i); if (hasND && v == nd) Double.NaN else v.toDouble }
-  def getRawDouble(i: Int): Double = array(i).toDouble
-  def setDouble(i: Int, v: Double): Unit =
-    array(i) = if (NoData.isNoData(v)) (if (hasND) nd else 0) else v.toLong.toInt
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(array.length * 4).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asIntBuffer().put(array); bb.array()
+  def get(i: Int): Int = { val v = Cells.getInt(cells, i); if (hasND && v == nd) Int.MinValue else v }
+  def getDouble(i: Int): Double = {
+    val v = Cells.getInt(cells, i); if (hasND && v == nd) Double.NaN else v.toDouble
   }
-  def mutableCopy: MutableTile = new IntArrayTile(array.clone(), cols, rows, cellType)
+  def getRawDouble(i: Int): Double = Cells.getInt(cells, i).toDouble
+  def setDouble(i: Int, v: Double): Unit =
+    Cells.putInt(writable, i, if (NoData.isNoData(v)) (if (hasND) nd else 0) else v.toLong.toInt)
 }
 
-final class FloatArrayTile(val array: Array[Float], val cols: Int, val rows: Int, val cellType: CellType)
-    extends MutableTile {
+final class FloatTile(payload: Array[Byte], shared: Boolean, val cols: Int, val rows: Int,
+    val cellType: CellType) extends PayloadTile(payload, shared) {
   private val hasND = cellType.hasNoData
   private val ndIsNaN = hasND && cellType.noDataValue != cellType.noDataValue
   private val nd: Float = if (hasND && !ndIsNaN) cellType.noDataValue.toFloat else Float.NaN
   def get(i: Int): Int = { val d = getDouble(i); if (NoData.isData(d)) d.toInt else Int.MinValue }
   def getDouble(i: Int): Double = {
-    val v = array(i)
+    val v = Cells.getFloat(cells, i)
     if (hasND && (if (ndIsNaN) v != v else v == nd)) Double.NaN else v.toDouble
   }
-  def getRawDouble(i: Int): Double = array(i).toDouble
+  def getRawDouble(i: Int): Double = Cells.getFloat(cells, i).toDouble
   def setDouble(i: Int, v: Double): Unit =
-    array(i) = if (NoData.isNoData(v)) (if (hasND) nd else Float.NaN) else v.toFloat
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(array.length * 4).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asFloatBuffer().put(array); bb.array()
-  }
-  def mutableCopy: MutableTile = new FloatArrayTile(array.clone(), cols, rows, cellType)
+    Cells.putFloat(writable, i, if (NoData.isNoData(v)) (if (hasND) nd else Float.NaN) else v.toFloat)
 }
 
-final class DoubleArrayTile(val array: Array[Double], val cols: Int, val rows: Int, val cellType: CellType)
-    extends MutableTile {
+final class DoubleTile(payload: Array[Byte], shared: Boolean, val cols: Int, val rows: Int,
+    val cellType: CellType) extends PayloadTile(payload, shared) {
   private val hasND = cellType.hasNoData
   private val ndIsNaN = hasND && cellType.noDataValue != cellType.noDataValue
   private val nd: Double = cellType.noDataValue
   def get(i: Int): Int = { val d = getDouble(i); if (NoData.isData(d)) d.toInt else Int.MinValue }
   def getDouble(i: Int): Double = {
-    val v = array(i)
+    val v = Cells.getDouble(cells, i)
     if (hasND && (if (ndIsNaN) v != v else v == nd)) Double.NaN else v
   }
-  def getRawDouble(i: Int): Double = array(i)
+  def getRawDouble(i: Int): Double = Cells.getDouble(cells, i)
   def setDouble(i: Int, v: Double): Unit =
-    array(i) = if (NoData.isNoData(v)) (if (hasND) nd else Double.NaN) else v
-  def toBytes: Array[Byte] = {
-    val bb = ByteBuffer.allocate(array.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asDoubleBuffer().put(array); bb.array()
-  }
-  def mutableCopy: MutableTile = new DoubleArrayTile(array.clone(), cols, rows, cellType)
+    Cells.putDouble(writable, i, if (NoData.isNoData(v)) (if (hasND) nd else Double.NaN) else v)
 }

@@ -15,29 +15,28 @@ import graft.core.crs.CRS
 object Warp {
 
   /** A float64 grid shaped like `re` with every cell NoData. */
-  def grid(re: RasterExtent): DoubleArrayTile =
-    new DoubleArrayTile(Array.fill(re.cols * re.rows)(Double.NaN), re.cols, re.rows, CellType.float64)
+  def grid(re: RasterExtent): MutableTile = Tile.empty(CellType.float64, re.cols, re.rows)
 
   /**
    * Paint `src` (laid out on `srcRE` in `srcCrs`) onto the float64 grid
-   * `dst` (laid out on `dstRE` in `dstCrs`), visiting only the cells of
+   * `dst` (a [[grid]], laid out on `dstRE` in `dstCrs`), visiting only the cells of
    * the inclusive window `cells`. A cell that already holds data is left
    * alone, so across calls the first data value wins. Any other cell's
    * center is mapped into the source (through [[CRS.transform]] only when
    * the normalized CRSs differ); when it lies inside the source extent and
    * the sample there is data, the sample is written. `nearest` (or
    * `nearest_neighbor`) takes the source cell holding the point; every
-   * other method interpolates through [[Resample.sampleAt]].
+   * other method interpolates through its [[Resample.sampler]], resolved
+   * once, so an unknown method fails before the first cell.
    *
    * @return the number of cells written
    */
-  def paint(dst: DoubleArrayTile, dstRE: RasterExtent, dstCrs: CRS, cells: GridBounds,
+  def paint(dst: MutableTile, dstRE: RasterExtent, dstCrs: CRS, cells: GridBounds,
       src: Tile, srcRE: RasterExtent, srcCrs: CRS, method: String): Int = {
+    require(dst.cellType == CellType.float64, s"Warp.paint paints onto a float64 grid, not ${dst.cellType}")
     val same = srcCrs.normalized == dstCrs.normalized
-    val nearest = method.toLowerCase.trim.replaceAll("_", "") match {
-      case "nearest" | "nearestneighbor" => true
-      case _ => false
-    }
+    val nearest = Resample.isNearest(method)
+    val sample = Resample.sampler(method)
     var painted = 0
     var r = cells.rowMin
     while (r <= cells.rowMax) {
@@ -54,7 +53,7 @@ object Warp {
                 if (sc >= 0 && sc < src.cols && sr >= 0 && sr < src.rows)
                   src.getDouble(sr * src.cols + sc)
                 else Double.NaN
-              } else Resample.sampleAt(src, srcRE.xToColFrac(sx), srcRE.yToRowFrac(sy), method)
+              } else sample(src, srcRE.xToColFrac(sx), srcRE.yToRowFrac(sy))
             if (NoData.isData(v)) { dst.setDouble(i, v); painted += 1 }
           }
         }

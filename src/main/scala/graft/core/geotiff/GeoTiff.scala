@@ -508,21 +508,22 @@ object GeoTiff {
   /**
    * The cell decoder: copies `n` samples, `stride` bytes apart from
    * `pos` in `src`, into cells `dst until dst + n` of a new tile's
-   * storage array. One subclass per storage type. Integer samples keep
-   * their bits; a float sample that is NaN or equals the NoData value
-   * is stored as the cell type's canonical NoData (NaN for raw and
-   * default float types).
+   * payload. One subclass per storage type. Integer samples keep their
+   * bits; a run of adjacent little-endian integer samples (one band) is
+   * one `System.arraycopy`. A float sample that is NaN or equals the
+   * NoData value is stored as the cell type's canonical NoData (NaN for
+   * raw and default float types).
    */
-  private sealed abstract class CellDecoder {
+  private sealed abstract class CellDecoder(ct: CellType, cols: Int, rows: Int) {
+    protected val a = new Array[Byte](Tile.payloadBytes(ct, cols, rows))
     def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit
-    def tile: Tile
+    def tile: Tile = Tile.wrap(a, ct, cols, rows, shared = false)
   }
 
   private object CellDecoder {
     def apply(ct: CellType, cols: Int, rows: Int): CellDecoder = ct.base match {
-      case CellBase.Int8 | CellBase.UInt8 => new Bytes(ct, cols, rows)
-      case CellBase.Int16 | CellBase.UInt16 => new Shorts(ct, cols, rows)
-      case CellBase.Int32 => new Ints(ct, cols, rows)
+      case CellBase.Int8 | CellBase.UInt8 | CellBase.Int16 | CellBase.UInt16 | CellBase.Int32 =>
+        new Ints(ct, cols, rows)
       case CellBase.Float32 => new Floats(ct, cols, rows)
       case CellBase.Float64 => new Doubles(ct, cols, rows)
       case b => throw new IllegalArgumentException(s"No TIFF sample decoder for $b cells")
@@ -532,62 +533,47 @@ object GeoTiff {
     private def sentinel(ct: CellType): Double =
       if (ct.hasNoData) ct.noDataValue else Double.NaN
 
-    final class Bytes(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
-      private val a = new Array[Byte](cols * rows)
+    final class Ints(ct: CellType, cols: Int, rows: Int) extends CellDecoder(ct, cols, rows) {
+      private val width = ct.bytes
       def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit =
-        if (stride == 1) System.arraycopy(src.array(), pos, a, dst, n)
-        else {
-          var i = 0
-          while (i < n) { a(dst + i) = src.get(pos + i * stride); i += 1 }
+        if (stride == width && (width == 1 || src.order() == ByteOrder.LITTLE_ENDIAN))
+          System.arraycopy(src.array(), pos, a, dst * width, n * width)
+        else width match {
+          case 1 =>
+            var i = 0
+            while (i < n) { a(dst + i) = src.get(pos + i * stride); i += 1 }
+          case 2 =>
+            var i = 0
+            while (i < n) { Cells.putShort(a, dst + i, src.getShort(pos + i * stride)); i += 1 }
+          case _ =>
+            var i = 0
+            while (i < n) { Cells.putInt(a, dst + i, src.getInt(pos + i * stride)); i += 1 }
         }
-      def tile: Tile = new ByteArrayTile(a, cols, rows, ct)
     }
 
-    final class Shorts(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
-      private val a = new Array[Short](cols * rows)
-      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
-        var i = 0
-        while (i < n) { a(dst + i) = src.getShort(pos + i * stride); i += 1 }
-      }
-      def tile: Tile = new ShortArrayTile(a, cols, rows, ct)
-    }
-
-    final class Ints(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
-      private val a = new Array[Int](cols * rows)
-      def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
-        var i = 0
-        while (i < n) { a(dst + i) = src.getInt(pos + i * stride); i += 1 }
-      }
-      def tile: Tile = new IntArrayTile(a, cols, rows, ct)
-    }
-
-    final class Floats(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
-      private val a = new Array[Float](cols * rows)
+    final class Floats(ct: CellType, cols: Int, rows: Int) extends CellDecoder(ct, cols, rows) {
       private val nd = sentinel(ct)
       private val ndOut = nd.toFloat
       def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
         var i = 0
         while (i < n) {
           val v = src.getFloat(pos + i * stride)
-          a(dst + i) = if (v != v || v.toDouble == nd) ndOut else v
+          Cells.putFloat(a, dst + i, if (v != v || v.toDouble == nd) ndOut else v)
           i += 1
         }
       }
-      def tile: Tile = new FloatArrayTile(a, cols, rows, ct)
     }
 
-    final class Doubles(ct: CellType, cols: Int, rows: Int) extends CellDecoder {
-      private val a = new Array[Double](cols * rows)
+    final class Doubles(ct: CellType, cols: Int, rows: Int) extends CellDecoder(ct, cols, rows) {
       private val nd = sentinel(ct)
       def copy(src: ByteBuffer, pos: Int, stride: Int, n: Int, dst: Int): Unit = {
         var i = 0
         while (i < n) {
           val v = src.getDouble(pos + i * stride)
-          a(dst + i) = if (v != v || v == nd) nd else v
+          Cells.putDouble(a, dst + i, if (v != v || v == nd) nd else v)
           i += 1
         }
       }
-      def tile: Tile = new DoubleArrayTile(a, cols, rows, ct)
     }
   }
 }

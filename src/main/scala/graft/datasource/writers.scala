@@ -70,7 +70,11 @@ trait GeoTiffWriteSupport extends CreatableRelationProvider {
     val rows = data.select("tile", "extent", "crs").collect()
     require(rows.nonEmpty, "geotiff writer: empty input")
     val parts = rows.map(r => (r.getAs[Tile](0), SpatialSupport.extentOf(r.getStruct(1))))
-    val crs = CRS(rows.head.getString(2))
+    val crss = rows.map(_.getString(2)).distinctBy(CRS(_).normalized)
+    if (crss.length > 1)
+      throw new IllegalArgumentException("geotiff writer: mixed CRSs " +
+        crss.mkString("(", ", ", ")") + "; a mosaic needs one CRS, reproject the rows first")
+    val crs = CRS(crss.head)
     val union = parts.map(_._2).reduce(_ combine _)
     val cw = parts.head._2.width / parts.head._1.cols
     val ch = parts.head._2.height / parts.head._1.rows
@@ -80,7 +84,7 @@ trait GeoTiffWriteSupport extends CreatableRelationProvider {
     val grid = Warp.grid(re)
     for ((t, e) <- parts.reverseIterator)
       Warp.paint(grid, re, crs, re.gridBoundsFor(e), t, RasterExtent(e, t.cols, t.rows), crs, "nearest")
-    val out = Tile.fromDoubles(grid.array, parts.head._1.cellType.withDefaultNoData, re.cols, re.rows)
+    val out = Tile.fromDoubles(grid.toArrayDouble, parts.head._1.cellType.withDefaultNoData, re.cols, re.rows)
     GeoTiff.write(path, out, union, crs)
     val outerCtx = sqlContext
     new BaseRelation {

@@ -56,7 +56,7 @@ abstract class BinaryLocalOp extends BinaryExpression with CodegenFallback with 
         val a = leftTile(l); val b = rightTile(r)
         require(a.cols == b.cols && a.rows == b.rows,
           s"$prettyName: mismatched tile dimensions ${a.cols}x${a.rows} vs ${b.cols}x${b.rows}")
-        val res = Tile.empty(resultCellType(a.cellType, b.cellType), a.cols, a.rows)
+        val res = Tile.blank(resultCellType(a.cellType, b.cellType), a.cols, a.rows)
         var i = 0; val n = res.size
         while (i < n) {
           val x = a.getDouble(i); val y = b.getDouble(i)
@@ -66,7 +66,7 @@ abstract class BinaryLocalOp extends BinaryExpression with CodegenFallback with 
         res
       } else if (leftIsTile) {
         val a = leftTile(l); val s = rightNum(r)
-        val res = Tile.empty(resultCellType(a.cellType, a.cellType), a.cols, a.rows)
+        val res = Tile.blank(resultCellType(a.cellType, a.cellType), a.cols, a.rows)
         var i = 0; val n = res.size
         while (i < n) {
           val x = a.getDouble(i)
@@ -76,7 +76,7 @@ abstract class BinaryLocalOp extends BinaryExpression with CodegenFallback with 
         res
       } else {
         val b = rightTile(r); val s = leftNum(l)
-        val res = Tile.empty(resultCellType(b.cellType, b.cellType), b.cols, b.rows)
+        val res = Tile.blank(resultCellType(b.cellType, b.cellType), b.cols, b.rows)
         var i = 0; val n = res.size
         while (i < n) {
           val y = b.getDouble(i)

@@ -1,7 +1,5 @@
 package graft.expressions
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import graft.core._
 import graft.core.crs.CRS
 import graft.udt.TileUDT
@@ -14,7 +12,8 @@ import org.apache.spark.sql.types._
  * rf_agg_overview_raster: mosaic every row's proj_raster onto one fixed
  * target grid (reference: TileRasterizerAggregate,
  * /root/reference/core/src/main/scala/org/locationtech/rasterframes/expressions/aggregates/TileRasterizerAggregate.scala:44-96).
- * Buffer = the destination double grid; merge is cell-wise first-wins,
+ * Buffer = the destination float64 grid tile, serialized as its own
+ * payload; merge is cell-wise first-wins,
  * so partial aggregation works and the shuffle carries one grid per
  * partition regardless of input size.
  */
@@ -24,7 +23,7 @@ case class OverviewRasterAggregate(
     destExtent: Extent, destCrsName: String,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Double]]
+    extends TypedImperativeAggregate[MutableTile]
     with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
   override def prettyName: String = "rf_agg_overview_raster"
   override def dataType: DataType = TileUDT.instance
@@ -32,12 +31,9 @@ case class OverviewRasterAggregate(
   @transient private lazy val destCrs = CRS(destCrsName)
   @transient private lazy val destRE = RasterExtent(destExtent, destCols, destRows)
 
-  private def asTile(buf: Array[Double]) = new DoubleArrayTile(buf, destCols, destRows, CellType.float64)
+  override def createAggregationBuffer(): MutableTile = Warp.grid(destRE)
 
-  override def createAggregationBuffer(): Array[Double] =
-    Array.fill(destCols * destRows)(Double.NaN)
-
-  override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
+  override def update(buf: MutableTile, input: InternalRow): MutableTile = {
     val v = child.eval(input)
     if (v != null) {
       val row = v.asInstanceOf[InternalRow]
@@ -53,27 +49,24 @@ case class OverviewRasterAggregate(
           Extent(math.min(x0, x1), math.min(y0, y1), math.max(x0, x1), math.max(y0, y1))
         }
       destExtent.intersection(footprint).foreach { inter =>
-        Warp.paint(asTile(buf), destRE, destCrs, destRE.gridBoundsFor(inter),
+        Warp.paint(buf, destRE, destCrs, destRE.gridBoundsFor(inter),
           t, RasterExtent(srcExtent, t.cols, t.rows), srcCrs, "nearest")
       }
     }
     buf
   }
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+  override def merge(a: MutableTile, b: MutableTile): MutableTile = {
     var i = 0
-    while (i < a.length) { if (NoData.isNoData(a(i)) && NoData.isData(b(i))) a(i) = b(i); i += 1 }
+    while (i < a.size) {
+      if (NoData.isNoData(a.getDouble(i))) { val v = b.getDouble(i); if (NoData.isData(v)) a.setDouble(i, v) }
+      i += 1
+    }
     a
   }
-  override def eval(buf: Array[Double]): Any = tileResult(asTile(buf))
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8).order(ByteOrder.LITTLE_ENDIAN)
-    bb.asDoubleBuffer().put(buf); bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val out = new Array[Double](bytes.length / 8)
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(out)
-    out
-  }
+  override def eval(buf: MutableTile): Any = tileResult(buf)
+  override def serialize(buf: MutableTile): Array[Byte] = buf.toBytes
+  override def deserialize(bytes: Array[Byte]): MutableTile =
+    Tile.fromBytes(bytes, CellType.float64, destCols, destRows)
   override def withNewMutableAggBufferOffset(o: Int) = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int) = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)

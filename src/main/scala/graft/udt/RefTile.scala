@@ -32,7 +32,6 @@ final class RefTile(
   override def getDouble(i: Int): Double = tile.getDouble(i)
   override def getRawDouble(i: Int): Double = tile.getRawDouble(i)
   override def toBytes: Array[Byte] = tile.toBytes
-  override def mutableCopy: MutableTile = tile.mutableCopy
 }
 
 object RefTile {

@@ -118,6 +118,17 @@ class WarpSpec extends AnyFunSuite {
     assertCells(t, "b3180f26d65bcbe7a766ef0cf037aaa0da689da122a5b21c39f07d8b7e33dfa8")
   }
 
+  test("the geotiff mosaic writer rejects rows in different CRSs, naming them") {
+    val df = parts(Seq((Extent(0, 0, 1, 1), cells(4, 4, 1, 1, 9))), 4, 4, "epsg:4326")
+      .union(parts(Seq((Extent(0, 0, 1, 1), cells(4, 4, 1, 1, 9))), 4, 4, "EPSG:3857"))
+    val path = Files.createTempDirectory("warp-mixed").resolve("m.tif").toString
+    val e = intercept[IllegalArgumentException](
+      df.write.format("geotiff").option("path", path).mode("overwrite").save())
+    assert(e.getMessage == "geotiff writer: mixed CRSs (epsg:4326, EPSG:3857); " +
+      "a mosaic needs one CRS, reproject the rows first")
+    assert(!Files.exists(Paths.get(path)))
+  }
+
   test("golden: slippy tiles a source covers only in part") {
     val dir = Files.createTempDirectory("warp-slippy")
     Seq(1).toDF("id").select(
@@ -137,7 +148,7 @@ class WarpSpec extends AnyFunSuite {
   // kernel: one 2×1 grid over (0, 0)–(2, 1), painted by 2×1 sources on the same layout
   private val re2 = RasterExtent(Extent(0, 0, 2, 1), 2, 1)
   private def src2(a: Double, b: Double): Tile = Tile.fromDoubles(Array(a, b), CellType.float64, 2, 1)
-  private def paint2(dst: DoubleArrayTile, src: Tile): Int =
+  private def paint2(dst: MutableTile, src: Tile): Int =
     Warp.paint(dst, re2, CRS.wgs84, GridBounds(0, 0, 1, 0), src, re2, CRS.wgs84, "nearest")
 
   test("kernel: a NoData sample leaves the cell alone, so a later source can fill it") {
@@ -145,7 +156,7 @@ class WarpSpec extends AnyFunSuite {
     assert(paint2(dst, src2(Double.NaN, 5)) == 1)
     assert(dst.getDouble(0).isNaN && dst.getDouble(1) == 5)
     assert(paint2(dst, src2(7, Double.NaN)) == 1)
-    assert(dst.array.toSeq == Seq(7.0, 5.0))
+    assert(dst.toArrayDouble.toSeq == Seq(7.0, 5.0))
   }
 
   test("kernel: the first data value wins, for nearest and interpolating methods") {
@@ -155,8 +166,18 @@ class WarpSpec extends AnyFunSuite {
         src2(1, 2), re2, CRS.wgs84, method) == 2)
       assert(Warp.paint(dst, re2, CRS.wgs84, GridBounds(0, 0, 1, 0),
         src2(8, 9), re2, CRS.wgs84, method) == 0)
-      assert(dst.array.toSeq == Seq(1.0, 2.0), method)
+      assert(dst.toArrayDouble.toSeq == Seq(1.0, 2.0), method)
     }
+  }
+
+  test("kernel: an unknown method fails before the first cell") {
+    val dst = Warp.grid(re2)
+    assert(paint2(dst, src2(1, 2)) == 2)
+    // every cell already holds data, so no cell would ever be sampled
+    val e = intercept[IllegalArgumentException](
+      Warp.paint(dst, re2, CRS.wgs84, GridBounds(0, 0, 1, 0), src2(8, 9), re2, CRS.wgs84, "Cubic_Blur"))
+    assert(e.getMessage == "Unsupported point-sample method: cubicblur (nearest, bilinear, " +
+      "cubic_convolution, cubic_spline, lanczos)")
   }
 
   test("kernel: nothing outside the scan window changes") {
