@@ -90,7 +90,7 @@ object GeoTiff {
       case CellBase.Float64 => (64, 3)
     }
     // cell payload, one strip per row block of 64 rows, bands interleaved
-    val payload = cellBytes(tiles, bits, fmt)
+    val payload = cellBytes(tiles, bits)
     val rowsPerStrip = math.min(64, tile.rows)
     val nStrips = (tile.rows + rowsPerStrip - 1) / rowsPerStrip
     val bytesPerRow = tile.cols * nBands * (bits / 8)
@@ -204,26 +204,31 @@ object GeoTiff {
     out.array()
   }
 
-  private def cellBytes(tiles: Seq[Tile], bits: Int, fmt: Int): Array[Byte] = {
-    val n = tiles.head.size
-    val nBands = tiles.size
-    val bb = ByteBuffer.allocate(n * nBands * (bits / 8)).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < n) {
-      var b = 0
-      while (b < nBands) {
-        val raw = tiles(b).getRawDouble(i)
-        bits match {
-          case 8 => bb.put(raw.toLong.toByte)
-          case 16 => bb.putShort(raw.toLong.toShort)
-          case 32 => if (fmt == 3) bb.putFloat(raw.toFloat) else bb.putInt(raw.toLong.toInt)
-          case 64 => bb.putDouble(raw)
-        }
-        b += 1
+  /** The chunky-interleaved samples: each band's little-endian payload
+    * (a bit band as uint8 0/1 bytes), sample by sample; a single band's
+    * payload is used as is. */
+  private def cellBytes(tiles: Seq[Tile], bits: Int): Array[Byte] = {
+    val payloads = tiles.map(t =>
+      if (t.cellType.base == CellBase.Bit) Array.tabulate(t.size)(t.get(_).toByte)
+      else t.toBytes).toArray
+    if (payloads.length == 1) return payloads(0)
+    val w = bits / 8
+    val stride = w * payloads.length
+    val out = new Array[Byte](payloads(0).length * payloads.length)
+    var b = 0
+    while (b < payloads.length) {
+      val src = payloads(b)
+      var i = 0
+      var o = b * w
+      while (i < src.length) {
+        var k = 0
+        while (k < w) { out(o + k) = src(i + k); k += 1 }
+        i += w
+        o += stride
       }
-      i += 1
+      b += 1
     }
-    bb.array()
+    out
   }
 
   // ---------------- reader ----------------

@@ -246,18 +246,29 @@ object Dedup {
           .as("bigram_ttr"))
   }
 
+  /**
+   * One-row dataset card. Each distinct count is its own branch, a
+   * distinct of the one column then a count of its non-NULL values (the
+   * [[Profile.profile]] shape): one aggregate with several distinct
+   * counts would be rewritten into an Expand of every row.
+   */
   def corpusReport(df: DataFrame, idCol: String, textCol: String,
       langCol: String, sourceCol: String): DataFrame = {
     val gopher = GopherRules.metrics(df, idCol, textCol)
       .agg(sum(col("gopher_pass").cast("long")).as("gopher_pass_docs"))
+    def nDistinct(c: Column, name: String): DataFrame =
+      broadcast(df.select(c.as("__v")).distinct()
+        .agg(count(col("__v")).as(name)))
     df.agg(
       count(lit(1)).as("n_docs"),
       sum(length(col(textCol)).cast("long")).as("total_chars"),
       sum(size(split(col(textCol), " ")).cast("long")).as("total_tokens"),
-      countDistinct(col(langCol)).as("n_langs"),
-      countDistinct(col(sourceCol)).as("n_sources"),
-      countDistinct(md5(col(textCol))).as("distinct_texts"),
       sum((PII.piiCount(col(textCol)) > 0).cast("long")).as("pii_docs"))
+      .crossJoin(nDistinct(col(langCol), "n_langs"))
+      .crossJoin(nDistinct(col(sourceCol), "n_sources"))
+      .crossJoin(nDistinct(md5(col(textCol)), "distinct_texts"))
+      .select("n_docs", "total_chars", "total_tokens", "n_langs",
+        "n_sources", "distinct_texts", "pii_docs")
       .withColumn("dup_rate",
         (col("n_docs") - col("distinct_texts")).cast("double") / col("n_docs"))
       .crossJoin(broadcast(gopher))

@@ -359,8 +359,9 @@ object Stats {
    *
    * Cost/scale shape: ONE distinct on the value column (the same
    * distinct-value table every downstream histogram materializes
-   * anyway) + one 19-way count-distinct rollup over it (Spark expands
-   * ×19 over DISTINCT VALUES, never corpus rows). Use it once per
+   * anyway), one `explode` of the 19 steps over it (×19 DISTINCT
+   * VALUES, never corpus rows), one distinct of (step, v div step) and
+   * one per-step count — no distinct aggregate. Use it once per
    * pipeline and quantize with `col div step`.
    *
    * Recipe: `val s = quantizeStep(df, "v"); df.withColumn("vq",
@@ -369,14 +370,26 @@ object Stats {
   def quantizeStep(df: DataFrame, valueCol: String,
       maxBins: Int = 4096): Long = {
     require(maxBins >= 32, s"maxBins must be >= 32, got $maxBins")
-    val steps = Iterator.iterate(1L)(_ * 10L).take(19).toSeq
-    val dv = df.where(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v")).distinct()
-    val aggs = steps.map(s => countDistinct(expr(s"__v div ${s}L")).as(s"c$s"))
-    val row = dv.agg(aggs.head, aggs.tail: _*).head()
-    val i = steps.indices.find(i => row.getLong(i) <= maxBins)
-    // 10^18 collapses any long range to <= 19 bins, so `find` always hits
-    steps(i.get)
+    finestStep(df.where(col(valueCol).isNotNull)
+      .select(col(valueCol).cast("long").as("__v")).distinct(), Nil, maxBins)
+  }
+
+  /** The finest of the 19 power-of-10 steps at which no `keys` group of
+    * the distinct values `__v` in `dv` has more than `maxBins` bins
+    * `__v div step`; 1 when `dv` is empty. */
+  private def finestStep(dv: DataFrame, keys: Seq[String],
+      maxBins: Int): Long = {
+    val k = keys.map(col)
+    val steps = typedLit(Iterator.iterate(1L)(_ * 10L).take(19).toSeq)
+    val row = dv.select(k :+ explode(steps).as("__s") :+ col("__v"): _*)
+      .select(k :+ col("__s") :+ expr("__v div __s").as("__q"): _*)
+      .distinct()
+      .groupBy(k :+ col("__s"): _*).agg(count(lit(1)).as("__n"))
+      .groupBy("__s").agg(max("__n").as("__n"))
+      .where(col("__n") <= maxBins).agg(min("__s")).head()
+    // 10^18 collapses any long range to <= 19 bins, so only an empty
+    // input finds no step
+    if (row.isNullAt(0)) 1L else row.getLong(0)
   }
 
   /**
@@ -389,8 +402,9 @@ object Stats {
    * metric with 40k distinct values split evenly over 16 keys fits the
    * per-key cap at step 1 while the global probe would force step 10.
    * Same determinism/replayability contract as [[quantizeStep]]: a
-   * distinct (keys, value) lattice + one 19-way count-distinct rollup
-   * per key + one max, all exact, trunc division like Spark's `div`.
+   * distinct (keys, value) lattice, the same exploded (keys, step,
+   * v div step) distinct counted per (key, step), then one max per
+   * step, all exact, trunc division like Spark's `div`.
    * Rows with a NULL key or value are excluded, matching the monitors'
    * NULL exclusion.
    */
@@ -398,24 +412,12 @@ object Stats {
       maxBins: Int = 4096): Long = {
     require(keys.nonEmpty, "quantizeStepPerKey: at least one key column")
     require(maxBins >= 32, s"maxBins must be >= 32, got $maxBins")
-    val steps = Iterator.iterate(1L)(_ * 10L).take(19).toSeq
     val nn = (keys.map(k => col(k).isNotNull) :+ col(valueCol).isNotNull)
       .reduce(_ && _)
-    val dv = df.where(nn)
+    // empty / all-NULL input has no groups: step 1, as in quantizeStep
+    finestStep(df.where(nn)
       .select(keys.map(col) :+ col(valueCol).cast("long").as("__v"): _*)
-      .distinct()
-    val aggs = steps.map(s => countDistinct(expr(s"__v div ${s}L")).as(s"c$s"))
-    val perKey = dv.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val maxes = steps.map(s => max(col(s"c$s")).as(s"m$s"))
-    val row = perKey.agg(maxes.head, maxes.tail: _*).head()
-    // Empty / all-NULL input: perKey has zero groups, so every max is
-    // NULL — step 1 trivially satisfies any cap, matching the global
-    // quantizeStep's contract for the same case (r19 advice: the
-    // unguarded getLong threw an opaque NPE here).
-    if (row.isNullAt(0)) return 1L
-    val i = steps.indices.find(i => row.getLong(i) <= maxBins)
-    // 10^18 collapses any long range to <= 19 bins, so `find` always hits
-    steps(i.get)
+      .distinct(), keys, maxBins)
   }
 
   def psiReport(ref: DataFrame, cur: DataFrame, valueCol: String,
@@ -1553,6 +1555,30 @@ object Stats {
             col("sum_w") / col("sum_w2"))).cast("long")).as("ess_milli"))
   }
 
+  /** The integer DOUBLE mid-rank of each distinct value `__v` within
+    * its `keys` group, from the per-value row count column `cnt`:
+    * 2·cum_before(v) + cnt(v) + 1 (= 2 · mid-rank), so ties never touch
+    * floats. One cumulative window over the distinct values. */
+  private def doubleRank(keys: Seq[String], cnt: String): Column = {
+    val W = org.apache.spark.sql.expressions.Window
+    val w = W.partitionBy(keys.map(col): _*).orderBy(col("__v"))
+      .rowsBetween(W.unboundedPreceding, -1)
+    lit(2L) * coalesce(sum(cnt).over(w), lit(0L)) + col(cnt) + lit(1L)
+  }
+
+  /** The per-key distinct-value histogram that [[mannWhitneyU]] and
+    * [[rocAuc]] rank: `__c` rows and `__ca` group-A rows (`groupCol`
+    * true) per value `__v`, with the value's pooled [[doubleRank]]
+    * `__dr`. NULL value/group rows are excluded. */
+  private def rankHistogram(df: DataFrame, keys: Seq[String],
+      groupCol: String, valueCol: String): DataFrame =
+    df.where(col(valueCol).isNotNull && col(groupCol).isNotNull)
+      .select(keys.map(col) :+ col(valueCol).cast("long").as("__v") :+
+        col(groupCol).cast("boolean").as("__g"): _*)
+      .groupBy(keys.map(col) :+ col("__v"): _*)
+      .agg(count(lit(1)).as("__c"), count(when(col("__g"), 1)).as("__ca"))
+      .withColumn("__dr", doubleRank(keys, "__c"))
+
   /**
    * Spearman rank correlation between two integral metrics — the
    * monotone-association audit ("does quality score track length?")
@@ -1584,15 +1610,10 @@ object Stats {
   def spearmanCorr(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val complete = df
       .where(col(xCol).isNotNull && col(yCol).isNotNull)
-    def ranks(c: String, out: String): DataFrame = {
-      val W = org.apache.spark.sql.expressions.Window
-      val w = W.orderBy(col("__v")).rowsBetween(W.unboundedPreceding, -1)
+    def ranks(c: String, out: String): DataFrame =
       complete.select(col(c).cast("long").as("__v"))
         .groupBy("__v").agg(count(lit(1)).as("__c"))
-        .withColumn("__before", coalesce(sum("__c").over(w), lit(0L)))
-        .select(col("__v").as(s"__$out"),
-          (lit(2L) * col("__before") + col("__c") + lit(1L)).as(out))
-    }
+        .select(col("__v").as(s"__$out"), doubleRank(Nil, "__c").as(out))
     val joined = complete.select(col(xCol).cast("long").as("__xv"),
         col(yCol).cast("long").as("__yv"))
       .join(ranks(xCol, "drx"), col("__xv") === col("__drx"))
@@ -1653,19 +1674,9 @@ object Stats {
   def mannWhitneyU(df: DataFrame, keys: Seq[String], groupCol: String,
       valueCol: String): DataFrame = {
     require(keys.nonEmpty, "keys required")
-    val W = org.apache.spark.sql.expressions.Window
-    val complete = df
-      .where(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(keys.map(col) :+ col(valueCol).cast("long").as("__v") :+
-        col(groupCol).cast("boolean").as("__g"): _*)
-    val w = W.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val hist = complete.groupBy(keys.map(col) :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"), count(when(col("__g"), 1)).as("__ca"))
-      .withColumn("__dr",
-        lit(2L) * coalesce(sum("__c").over(w), lit(0L)) + col("__c") + lit(1L))
     val dec = "decimal(38,0)"
-    val m = hist.groupBy(keys.map(col): _*)
+    val m = rankHistogram(df, keys, groupCol, valueCol)
+      .groupBy(keys.map(col): _*)
       .agg(sum("__c").cast(dec).as("__n"), sum("__ca").cast(dec).as("__na"),
         sum(col("__ca").cast(dec) * col("__dr")).as("__r2a"),
         sum(col("__c").cast(dec) * col("__c") * col("__c") - col("__c"))
@@ -2236,19 +2247,9 @@ object Stats {
   def rocAuc(df: DataFrame, keys: Seq[String], labelCol: String,
       scoreCol: String): DataFrame = {
     require(keys.nonEmpty, "keys required")
-    val W = org.apache.spark.sql.expressions.Window
-    val complete = df
-      .where(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .select(keys.map(col) :+ col(scoreCol).cast("long").as("__v") :+
-        col(labelCol).cast("boolean").as("__g"): _*)
-    val w = W.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val hist = complete.groupBy(keys.map(col) :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"), count(when(col("__g"), 1)).as("__ca"))
-      .withColumn("__dr",
-        lit(2L) * coalesce(sum("__c").over(w), lit(0L)) + col("__c") + lit(1L))
     val dec = "decimal(38,0)"
-    val m = hist.groupBy(keys.map(col): _*)
+    val m = rankHistogram(df, keys, labelCol, scoreCol)
+      .groupBy(keys.map(col): _*)
       .agg(sum("__c").cast(dec).as("__n"), sum("__ca").cast(dec).as("__na"),
         sum(col("__ca").cast(dec) * col("__dr")).as("__r2a"))
     val na = col("__na"); val nb = col("__n") - col("__na")
@@ -2558,6 +2559,56 @@ object Stats {
         .as("df_milli"): _*)
   }
 
+  /** The contingency table of `__a` × `__b` within each key group:
+    * observed cells `__o`, the margins `__ra` (per `__a`) and `__cb` (per
+    * `__b`), each with its level count (`__ka`, `__kb`), and the total
+    * `__N`. */
+  private final case class Contingency(cells: DataFrame, ra: DataFrame,
+      cb: DataFrame, tot: DataFrame)
+
+  /**
+   * The [[Contingency]] of `base`'s projected `__a`, `__b` columns within
+   * each `keys` group. Each margin counts its levels in a window over
+   * its own rollup (label-sized, no separate job) and fails the job
+   * loudly past `maxLevels`, naming `op` and the user's column from
+   * `names`; the guard is woven into the margin count itself, so column
+   * pruning cannot drop it. Level counts are read as `max` of `__ka`/
+   * `__kb`, never as a distinct aggregate (whose Expand rewrite plans
+   * differently on every run).
+   */
+  private def contingency(base: DataFrame, keys: Seq[String], op: String,
+      names: (String, String), cap: String, maxLevels: Int): Contingency = {
+    require(maxLevels >= 2 && maxLevels <= 100000,
+      s"$cap must be in [2, 100000], got $maxLevels")
+    val k = keys.map(col)
+    val wk = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
+    def margin(c: String, n: String, lv: String, name: String): DataFrame =
+      base.groupBy(k :+ col(c): _*).agg(count(lit(1)).as(n))
+        .withColumn(lv, count(lit(1)).over(wk))
+        .withColumn(n, when(col(lv) <= maxLevels, col(n))
+          .otherwise(raise_error(concat(lit(s"$op: $name has "), col(lv),
+            lit(s" levels, exceeds $cap=$maxLevels — coarsen the column " +
+              "or raise the cap deliberately")))))
+    Contingency(
+      base.groupBy(k :+ col("__a") :+ col("__b"): _*)
+        .agg(count(lit(1)).as("__o")),
+      margin("__a", "__ra", "__ka", names._1),
+      margin("__b", "__cb", "__kb", names._2),
+      base.groupBy(k: _*).agg(count(lit(1)).as("__N")))
+  }
+
+  /** The non-NULL (`aCol`, `bCol`) pairs of `df` as `__a`, `__b`, cast
+    * to `t`. */
+  private def pairs(df: DataFrame, aCol: String, bCol: String,
+      t: String): DataFrame =
+    df.where(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(col(aCol).cast(t).as("__a"), col(bCol).cast(t).as("__b"))
+
+  /** The two margins' level counts, named `a` and `b`, over rows that
+    * carry a [[Contingency]]'s `__ka` and `__kb` (0 over no rows). */
+  private def levelCounts(a: String, b: String): Seq[Column] =
+    Seq(coalesce(max("__ka"), lit(0L)).as(a), coalesce(max("__kb"), lit(0L)).as(b))
+
   /**
    * General k×m chi-square independence test + Cramér's V — "are these
    * two categorical columns independent" beyond [[chiSquare2x2]]'s
@@ -2580,32 +2631,13 @@ object Stats {
    */
   def chiSquareKxM(df: DataFrame, aCol: String, bCol: String,
       maxLevels: Int = 1000): DataFrame = {
-    require(maxLevels >= 2 && maxLevels <= 100000,
-      s"maxLevels must be in [2, 100000], got $maxLevels")
-    val W = org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    val base = df
-      .where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).cast("string").as("__a"),
-        col(bCol).cast("string").as("__b"))
-    val cells = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-    def margin(c: String, n: String, guard: String): DataFrame =
-      base.groupBy(c).agg(count(lit(1)).as(n))
-        .withColumn("__lv", count(lit(1)).over(W.partitionBy()))
-        .withColumn(n, when(col("__lv") <= maxLevels, col(n))
-          .otherwise(raise_error(concat(
-            lit(s"chi_square_kxm: $guard has "), col("__lv"),
-            lit(s" levels, exceeds maxLevels=$maxLevels; margins must be " +
-              "label-sized (the dense grid is k x m) — coarsen the " +
-              "column or raise the cap deliberately")))))
-        .drop("__lv")
-    val ra = margin("__a", "__ra", "column A")
-    val cb = margin("__b", "__cb", "column B")
-    val tot = base.agg(count(lit(1)).as("__N"))
-    val grid = ra.crossJoin(broadcast(cb))
-      .join(cells, Seq("__a", "__b"), "left")
+    val t = contingency(pairs(df, aCol, bCol, "string"), Nil, "chi_square_kxm",
+      (aCol, bCol), "maxLevels", maxLevels)
+    val grid = t.ra.crossJoin(broadcast(t.cb))
+      .join(t.cells, Seq("__a", "__b"), "left")
       .na.fill(0L, Seq("__o"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(t.tot))
     val num = (col("__o").cast(dec) * col("__N") -
       col("__ra").cast(dec) * col("__cb"))
     val term = expr("cast(round(1e9 * cast(__num2 as double) / " +
@@ -2613,10 +2645,8 @@ object Stats {
     val summed = grid
       .withColumn("__num2", num * num)
       .withColumn("__t", term)
-      .agg(max("__N").as("n"),
-        countDistinct("__a").as("k_levels"),
-        countDistinct("__b").as("m_levels"),
-        sum("__t").as("chi2_nano"))
+      .agg(max("__N").as("n"), levelCounts("k_levels", "m_levels") :+
+        sum("__t").as("chi2_nano"): _*)
     summed.select(col("n"), col("k_levels"), col("m_levels"),
       ((col("k_levels") - 1L) * (col("m_levels") - 1L)).as("dof"),
       col("chi2_nano"),
@@ -2984,7 +3014,6 @@ object Stats {
   def kruskalWallis(df: DataFrame, keys: Seq[String], groupCol: String,
       valueCol: String): DataFrame = {
     require(keys.nonEmpty, "keys required")
-    val W = org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
     val cells = df
       .where(col(valueCol).isNotNull && col(groupCol).isNotNull)
@@ -2994,10 +3023,7 @@ object Stats {
       .agg(count(lit(1)).as("__cgv"))
     val pooled = cells.groupBy(keys.map(col) :+ col("__v"): _*)
       .agg(sum("__cgv").as("__cv"))
-    val w = W.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val dr = pooled.withColumn("__dr",
-      lit(2L) * coalesce(sum("__cv").over(w), lit(0L)) + col("__cv") + lit(1L))
+    val dr = pooled.withColumn("__dr", doubleRank(keys, "__cv"))
     val perG = cells.join(dr.select(keys.map(col) :+ col("__v") :+
         col("__dr"): _*), keys :+ "__v")
       .groupBy(keys.map(col) :+ col("__g"): _*)
@@ -3249,37 +3275,19 @@ object Stats {
    */
   def mutualInformation(df: DataFrame, aCol: String, bCol: String,
       maxLevels: Int = 1000): DataFrame = {
-    require(maxLevels >= 2 && maxLevels <= 100000,
-      s"maxLevels must be in [2, 100000], got $maxLevels")
-    val W = org.apache.spark.sql.expressions.Window
-    val base = df
-      .where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).cast("string").as("__a"),
-        col(bCol).cast("string").as("__b"))
-    val cells = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-    def margin(c: String, n: String, guard: String): DataFrame =
-      base.groupBy(c).agg(count(lit(1)).as(n))
-        .withColumn("__lv", count(lit(1)).over(W.partitionBy()))
-        .withColumn(n, when(col("__lv") <= maxLevels, col(n))
-          .otherwise(raise_error(concat(
-            lit(s"mutual_information: $guard has "), col("__lv"),
-            lit(s" levels, exceeds maxLevels=$maxLevels — coarsen the " +
-              "column or raise the cap deliberately")))))
-        .drop("__lv")
-    val ra = margin("__a", "__ra", "column A")
-    val cb = margin("__b", "__cb", "column B")
-    val tot = base.agg(count(lit(1)).as("__N"))
-    val g = cells.join(broadcast(ra), "__a").join(broadcast(cb), "__b")
-      .crossJoin(broadcast(tot))
+    val t = contingency(pairs(df, aCol, bCol, "string"), Nil,
+      "mutual_information", (aCol, bCol), "maxLevels", maxLevels)
+    val g = t.cells.join(broadcast(t.ra), "__a").join(broadcast(t.cb), "__b")
+      .crossJoin(broadcast(t.tot))
     val dec = "decimal(38,0)"
     val miTerm = round(lit(1e9) * col("__o").cast("double") /
       col("__N").cast("double") *
       log((col("__o").cast(dec) * col("__N")).cast("double") /
         (col("__ra").cast(dec) * col("__cb")).cast("double"))).cast("long")
     val mi = g.withColumn("__t", miTerm)
-      .agg(max("__N").as("n"), countDistinct("__a").as("k_levels"),
-        countDistinct("__b").as("m_levels"), sum("__t").as("mi_nano_nats"))
-    val ha = ra.crossJoin(broadcast(tot))
+      .agg(max("__N").as("n"), levelCounts("k_levels", "m_levels") :+
+        sum("__t").as("mi_nano_nats"): _*)
+    val ha = t.ra.crossJoin(broadcast(t.tot))
       .withColumn("__h", round(lit(-1e9) * col("__ra").cast("double") /
         col("__N").cast("double") *
         log(col("__ra").cast("double") / col("__N").cast("double")))
@@ -3649,13 +3657,11 @@ object Stats {
   def moodsMedian(df: DataFrame, keys: Seq[String], groupCol: String,
       valueCol: String, maxGroups: Int = 1000): DataFrame = {
     require(keys.nonEmpty, "keys required")
-    require(maxGroups >= 2 && maxGroups <= 100000,
-      s"maxGroups must be in [2, 100000], got $maxGroups")
     val W = org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
     val base = df
       .where(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(keys.map(col) :+ col(groupCol).cast("string").as("__g") :+
+      .select(keys.map(col) :+ col(groupCol).cast("string").as("__a") :+
         col(valueCol).cast("long").as("__v"): _*)
     val wc = W.partitionBy(keys.map(col): _*).orderBy(col("__v"))
     val wk = W.partitionBy(keys.map(col): _*)
@@ -3665,38 +3671,26 @@ object Stats {
       .withColumn("__N", sum("__c").over(wk))
       .where(lit(2L) * col("__cum") >= col("__N"))
       .groupBy(keys.map(col): _*).agg(min("__v").as("med"))
-    val flagged = base.join(med, keys)
-      .withColumn("__ab", (col("__v") > col("med")).cast("string"))
-    val cells = flagged.groupBy(keys.map(col) :+ col("__g") :+
-      col("__ab"): _*).agg(count(lit(1)).as("__o"))
-    val rg = flagged.groupBy(keys.map(col) :+ col("__g"): _*)
-      .agg(count(lit(1)).as("__r"))
-      .withColumn("__lv", count(lit(1)).over(wk))
-      .withColumn("__r", when(col("__lv") <= maxGroups, col("__r"))
-        .otherwise(raise_error(concat(
-          lit("moods_median: group column has "), col("__lv"),
-          lit(s" levels, exceeds maxGroups=$maxGroups — coarsen or " +
-            "raise deliberately")))))
-      .drop("__lv")
-    val cc = flagged.groupBy(keys.map(col) :+ col("__ab"): _*)
-      .agg(count(lit(1)).as("__cc"))
-    val tot = flagged.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__N"), max("med").as("med"))
-    val grid = rg.join(cc, keys)
-      .join(cells, keys.toSeq ++ Seq("__g", "__ab"), "left")
+    // the (group, above-median) table within each (key, med): med is
+    // one value per key, so it rides along as a key column
+    val km = keys :+ "med"
+    val t = contingency(base.join(med, keys)
+        .withColumn("__b", (col("__v") > col("med")).cast("string")),
+      km, "moods_median", (groupCol, "the above-median flag"), "maxGroups",
+      maxGroups)
+    val grid = t.ra.join(t.cb, km)
+      .join(t.cells, km ++ Seq("__a", "__b"), "left")
       .na.fill(0L, Seq("__o"))
-      .join(tot, keys)
+      .join(t.tot, km)
     val num = col("__o").cast(dec) * col("__N") -
-      col("__r").cast(dec) * col("__cc")
+      col("__ra").cast(dec) * col("__cb")
     val summed = grid
       .withColumn("__num2", num * num)
       .withColumn("__t", expr("cast(round(1e9 * cast(__num2 as double) / " +
-        "cast(cast(__N as decimal(38,0)) * __r * __cc as double)) as bigint)"))
-      .groupBy(keys.map(col): _*)
-      .agg(max("__N").as("n"), max("med").as("med"),
-        countDistinct("__g").as("k_groups"),
-        countDistinct("__ab").as("__ml"),
-        sum("__t").as("__chi2n"))
+        "cast(cast(__N as decimal(38,0)) * __ra * __cb as double)) as bigint)"))
+      .groupBy(km.map(col): _*)
+      .agg(max("__N").as("n"), levelCounts("k_groups", "__ml") :+
+        sum("__t").as("__chi2n"): _*)
     summed.select(keys.map(col) :+ col("n") :+ col("med") :+
       col("k_groups") :+ (col("k_groups") - 1L).as("dof") :+
       when(col("k_groups") < 2L || col("__ml") < 2L,
@@ -4185,37 +4179,21 @@ object Stats {
    */
   def weightedKappa(df: DataFrame, aCol: String, bCol: String,
       quadratic: Boolean = true, maxLevels: Int = 1000): DataFrame = {
-    require(maxLevels >= 2 && maxLevels <= 100000,
-      s"maxLevels must be in [2, 100000], got $maxLevels")
-    val W = org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    val base = df
-      .where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).cast("long").as("__a"),
-        col(bCol).cast("long").as("__b"))
     def wgt(i: Column, j: Column): Column = {
       val d = abs(i - j).cast(dec)
       if (quadratic) d * d else d
     }
-    val cells = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-    def margin(c: String, n: String): DataFrame =
-      base.groupBy(c).agg(count(lit(1)).as(n))
-        .withColumn("__lv", count(lit(1)).over(W.partitionBy()))
-        .withColumn(n, when(col("__lv") <= maxLevels, col(n))
-          .otherwise(raise_error(concat(
-            lit(s"weighted_kappa: $c has "), col("__lv"),
-            lit(s" levels, exceeds maxLevels=$maxLevels — ordinal " +
-              "labels must be label-sized")))))
-        .drop("__lv")
-    val num = cells
+    val t = contingency(pairs(df, aCol, bCol, "long"), Nil, "weighted_kappa",
+      (aCol, bCol), "maxLevels", maxLevels)
+    val num = t.cells
       .agg(coalesce(sum(wgt(col("__a"), col("__b")) * col("__o")),
         lit(0).cast(dec)).as("__num"),
-        sum("__o").cast(dec).as("__N"),
-        countDistinct("__a").as("k_a"), countDistinct("__b").as("k_b"))
-    val den = margin("__a", "__ra").crossJoin(broadcast(margin("__b", "__cb")))
+        sum("__o").cast(dec).as("__N"))
+    val den = t.ra.crossJoin(broadcast(t.cb))
       .agg(coalesce(sum(wgt(col("__a"), col("__b")) *
         col("__ra").cast(dec) * col("__cb").cast(dec)),
-        lit(0).cast(dec)).as("__den"))
+        lit(0).cast(dec)).as("__den"), levelCounts("k_a", "k_b"): _*)
     broadcast(num).crossJoin(broadcast(den))
       .select(col("__N").cast("long").as("n"), col("k_a"), col("k_b"),
         when(col("__den") <= lit(0).cast(dec), lit(null).cast("long"))
@@ -4695,35 +4673,19 @@ object Stats {
    */
   def gTest(df: DataFrame, aCol: String, bCol: String,
       maxLevels: Int = 1000): DataFrame = {
-    require(maxLevels >= 2 && maxLevels <= 100000,
-      s"maxLevels must be in [2, 100000], got $maxLevels")
-    val W = org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    val base = df
-      .where(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).cast("string").as("__a"),
-        col(bCol).cast("string").as("__b"))
-    val cells = base.groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-    def margin(c: String, n: String): DataFrame =
-      base.groupBy(c).agg(count(lit(1)).as(n))
-        .withColumn("__lv", count(lit(1)).over(W.partitionBy()))
-        .withColumn(n, when(col("__lv") <= maxLevels, col(n))
-          .otherwise(raise_error(concat(
-            lit(s"g_test: $c has "), col("__lv"),
-            lit(s" levels, exceeds maxLevels=$maxLevels — coarsen or " +
-              "raise deliberately")))))
-        .drop("__lv")
-    val tot = base.agg(count(lit(1)).as("__N"))
-    val g = cells
-      .join(margin("__a", "__ra"), Seq("__a"))
-      .join(margin("__b", "__cb"), Seq("__b"))
-      .crossJoin(broadcast(tot))
+    val t = contingency(pairs(df, aCol, bCol, "string"), Nil, "g_test",
+      (aCol, bCol), "maxLevels", maxLevels)
+    val g = t.cells
+      .join(t.ra, Seq("__a"))
+      .join(t.cb, Seq("__b"))
+      .crossJoin(broadcast(t.tot))
       .withColumn("__t", round(lit(2e9) * col("__o").cast("double") *
         log((col("__o").cast(dec) * col("__N")).cast("double") /
           (col("__ra").cast(dec) * col("__cb")).cast("double")))
         .cast("long"))
-      .agg(max("__N").as("n"), countDistinct("__a").as("k_levels"),
-        countDistinct("__b").as("m_levels"), sum("__t").as("g_nano"))
+      .agg(max("__N").as("n"), levelCounts("k_levels", "m_levels") :+
+        sum("__t").as("g_nano"): _*)
     g.select(col("n"), col("k_levels"), col("m_levels"),
       ((col("k_levels") - 1L) * (col("m_levels") - 1L)).as("dof"),
       col("g_nano"),

@@ -244,6 +244,66 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("wanted"))
   }
 
+  test("writer bytes match goldens for every cell type with one and two bands") {
+    // SHA-256 of writeBytesMultiband output: 7x130 cells (three strips),
+    // every 13th cell NoData, band b offset by 11·b
+    val golden = Map(
+      "bool/1" -> "052bed1440de15ec076483913924982a90bfdff14dc325f6bc0587c915d00099",
+      "bool/2" -> "d92f7781f81769750b179ede4ed866c81fa64638c30a6eabd8cdef14b923738b",
+      "int8raw/1" -> "2293419c610bf36f036b523bcf6c7548a6ec2ffd747fe2bc1c636778a1e691fe",
+      "int8raw/2" -> "4e8356ea73efd782d7649c4812765f25f049f86db5b7250a50663cdf0d91165a",
+      "int8/1" -> "a362b583aace21a962b71ef1ee9665320ed277e10cdb22cd5014b3cfcb434808",
+      "int8/2" -> "32f8dac8fd337a1dd2960660163b053537bc8743e5180023beb73401588695d8",
+      "uint8raw/1" -> "8ef23deb78975458e40c723f7a8608712fbcdf01e9fdd8b72a9fa23f5e938921",
+      "uint8raw/2" -> "bb3e82e9ae62f15cf17dc987ac23a74ef1f2d1bae870f3f1469813d640e12c20",
+      "uint8/1" -> "fd17966cd088a295653e8c813effc808b43d48b614737d49f5b976ed7128f1c6",
+      "uint8/2" -> "4212b3c730a6b557debd1efd9ed0271fadb34289b175524f5a02f31ac169d5c9",
+      "int16raw/1" -> "7a860be6b7199d927a8d3e44349417299e6cf5f1750accbade72c78f79cb23e1",
+      "int16raw/2" -> "a90b4e44469b47f76ef26365503098d6cbb0c0ad5955030b171e3437cb5aba41",
+      "int16/1" -> "8a59df9fce8745d79fbc0e00aa8ec2beab9f12801838b7251c6a59effc6694c9",
+      "int16/2" -> "a96f2570f4997162cd19bf084388d7881f878b56d2b74926c870207c22d813d8",
+      "uint16raw/1" -> "257331ccf71ae77a702014ebdeec5a036d399eb3cedc57cf377a90b81ecae4ee",
+      "uint16raw/2" -> "d8bf7a8307e4a84683f9616ea07e1e746e8786e7ab68c0de7b1ef78323377bc1",
+      "uint16/1" -> "cdc44ab88b2c1d864b57ab75e82b8227d70632297bda8acbc71962ab2c1842d3",
+      "uint16/2" -> "29573602d6dc878909b1c74bf2943afadef521f3d420c38f24b322251394c27a",
+      "int32raw/1" -> "18720de3e152cdec489465c7b995b825414c0d2c59dccef7219e820a3981f904",
+      "int32raw/2" -> "62e2621f6e78be2d339a65cd1a645f3edf8e5c465ff417837daf4e5034d67fce",
+      "int32/1" -> "bc401028c6bff9cbf092fce739657a157fafa790acdbec55e6852d03fc742cc5",
+      "int32/2" -> "9085d761e5c0da70d8b8f2c816adf4dc1deca2593b50e867fdc003b41bcac9f4",
+      "float32raw/1" -> "c06bc7b2f0330bd3231ae74e453afa05922be90325c49d6a491c3f49aa9f9d74",
+      "float32raw/2" -> "8d3b8ea02b6a32ec93c0b3bbc5f872791c06ffc6afec323a1341e852839cbbd0",
+      "float32/1" -> "86262c1efeffc50edf7d50ae6f8c5c7670afe6131fb674ca9f1f94b41b740b5f",
+      "float32/2" -> "2d9b3221cea84bf621563268b5d875b682ca910e6725f84674403df0018dc071",
+      "float64raw/1" -> "c7848b5e13409f72566af785b984901bdabaddfda4b781916d77a3d393cbb251",
+      "float64raw/2" -> "a548cbe05f06222fe2f90dfe91e406f8547d47681f90699193bfd163fbe73157",
+      "float64/1" -> "4b3a98e4f1b90847e0eb2c84ad1be935bc6fc469375cc0e06fba48fdf16b5fd2",
+      "float64/2" -> "992357607f30b18686db29fdd75542ec76774c2b4d7d6b5a0bb9fa42cb5faa17",
+      "int16ud-5/1" -> "74fb1f0fdecfabba8cc76ecd11d9b221cc3b36ef0a7ec37c8218f8e2649a53be",
+      "int16ud-5/2" -> "cf4ee2177c94d04e47f003ee5048615410b21f6692074e1e5721443816ec6718",
+      "float32ud-9999/1" -> "c9c998cfc82a892429d55611c783562d9eaba1f4b15a49ccb08d7aab91c561be",
+      "float32ud-9999/2" -> "3062111312b5a8ebaaa7db20dd36d5a8b05d8581d34a223fff83aa7550a137af",
+      "uint8ud7/1" -> "d6fbfa27657e17082ea7b33dcfaeaf79992f31d9686b48989cf2dd48b1f5147c",
+      "uint8ud7/2" -> "235147d78c5d6efc518c331b19fefa2a0aab610885975877f87614a4c30c8833")
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val ext = Extent(10.0, 20.0, 11.0, 21.0)
+    val names = CellType.allNames :+ "int16ud-5" :+ "float32ud-9999" :+ "uint8ud7"
+    for (name <- names; nb <- Seq(1, 2)) {
+      val ct = CellType.fromName(name)
+      val bands = (0 until nb).map { b =>
+        val t = Tile.blank(ct, 7, 130)
+        for (i <- 0 until t.size) {
+          val v = ((i * 37 + b * 11) % 300) - 40
+          t.setDouble(i, if (i % 13 == 5) Double.NaN
+            else if (ct.isFloating) v * 0.37 else v.toDouble)
+        }
+        t
+      }
+      val hash = md.digest(GeoTiff.writeBytesMultiband(bands, ext, CRS("EPSG:4326")))
+        .map("%02x".format(_)).mkString
+      assert(hash == golden(s"$name/$nb"), s"$name with $nb band(s)")
+    }
+  }
+
   test("windows outside the raster are rejected") {
     val bytes = GeoTiff.writeBytes(band(CellType.int32, 30, 20, 0), Extent(0, 0, 30, 20), CRS.wgs84)
     val info = GeoTiff.parseInfo(bytes)

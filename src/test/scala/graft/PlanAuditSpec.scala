@@ -190,6 +190,42 @@ class PlanAuditSpec extends AnyFunSuite {
         "partition the window or justify it in globalWindowAllowed")
   }
 
+  test("no query or builder pre-job plans a distinct-aggregate Expand") {
+    // Spark rewrites an Aggregate with more than one distinct group into
+    // an Expand over a `gid` column, whose projection order can change
+    // between runs (new generated classes every run); a grouping-set
+    // Expand (cube, rollup) carries `spark_grouping_id` instead.
+    import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def distinctExpand(p: LogicalPlan): Boolean = p.collectWithSubqueries {
+      case e: Expand if e.output.exists(_.name == "gid") => e
+    }.nonEmpty
+    // the plans a builder runs before returning (`.head()` probes)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    spark.listenerManager.register(listener)
+    try for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+      org.apache.spark.sql.graft.shims.waitForListenerBus(spark.sparkContext)
+      ran.clear()
+      val plan =
+        try fn(spark, sfDir).queryExecution.optimizedPlan
+        catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
+      org.apache.spark.sql.graft.shims.waitForListenerBus(spark.sparkContext)
+      if (distinctExpand(plan)) offenders += name
+      if (ran.toArray(Array.empty[LogicalPlan]).exists(distinctExpand))
+        offenders += s"$name (builder pre-job)"
+    } finally spark.listenerManager.unregister(listener)
+    assert(offenders.isEmpty,
+      s"distinct-aggregate Expand in: ${offenders.mkString(", ")} — count " +
+        "each distinct column in its own groupBy branch")
+  }
+
   test("document-table scans prune to the referenced columns") {
     // q_chunk reads only (doc_id, text) of documents: the scan must not
     // drag lang/source/n_chars through the generator

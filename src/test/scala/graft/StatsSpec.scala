@@ -1961,4 +1961,66 @@ class StatsSpec extends AnyFunSuite {
     assert(Stats.corrCompare(thin.toDF("kk", "seg", "x", "y"),
       Seq("kk"), "seg", "x", "y").collect()(0).isNullAt(3))
   }
+
+  test("contingency and lattice operators keep their empty and all-NULL rows") {
+    val empty = Seq.empty[(Option[String], Option[Long], Option[Long])]
+      .toDF("k", "a", "b")
+    val nulls = Seq.fill(3)((Option.empty[String], Option.empty[Long],
+      Option.empty[Long])).toDF("k", "a", "b")
+    val keyOnly = Seq(("x", Option.empty[Long], Option.empty[Long]))
+      .toDF("k", "a", "b")
+    def rows(df: org.apache.spark.sql.DataFrame): String =
+      df.collect().map(_.toString).mkString(";")
+    for (in <- Seq(empty, nulls)) {
+      // level counts are 0, not NULL, where nothing is left to count
+      assert(rows(Stats.chiSquareKxM(in, "a", "b")) == "[null,0,0,1,null,null]")
+      assert(rows(Stats.mutualInformation(in, "a", "b")) ==
+        "[null,0,0,null,null,null]")
+      assert(rows(Stats.gTest(in, "a", "b")) == "[null,0,0,1,null,null]")
+      assert(rows(Stats.weightedKappa(in, "a", "b")) == "[null,0,0,null]")
+      assert(rows(Stats.weightedKappa(in, "a", "b", quadratic = false)) ==
+        "[null,0,0,null]")
+      assert(rows(Stats.moodsMedian(in, Seq("k"), "a", "b")) == "")
+      assert(Stats.quantizeStep(in, "a") == 1L)
+      assert(Stats.quantizeStepPerKey(in, Seq("k"), "a") == 1L)
+    }
+    assert(rows(Stats.moodsMedian(keyOnly, Seq("k"), "a", "b")) == "")
+    assert(Stats.quantizeStepPerKey(keyOnly, Seq("k"), "a") == 1L)
+    // corpusReport: all-NULL documents count as rows with no text; an
+    // empty table divides its duplicate rate by zero documents
+    val docs = Seq.fill(3)((Option.empty[Long], Option.empty[String],
+      Option.empty[String], Option.empty[String]))
+      .toDF("id", "text", "lang", "source")
+    assert(rows(graft.pipeline.Dedup.corpusReport(docs, "id", "text", "lang",
+      "source")) == "[3,null,null,0,0,0,null,1.0,null]")
+    val ex = intercept[Exception] {
+      graft.pipeline.Dedup.corpusReport(docs.limit(0), "id", "text", "lang",
+        "source").collect()
+    }
+    assert(messages(ex).exists(_.contains("DIVIDE_BY_ZERO")))
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++
+      messages(e.getCause))
+
+  test("gTest, weightedKappa and moodsMedian level guards name the column") {
+    val wide = Seq((1L, 1L), (2L, 1L), (3L, 2L)).toDF("rater_a", "rater_b")
+    val g = intercept[Exception] {
+      Stats.gTest(wide, "rater_a", "rater_b", maxLevels = 2).collect()
+    }
+    assert(messages(g).exists(_.contains("g_test: rater_a has 3 levels")))
+    val w = intercept[Exception] {
+      Stats.weightedKappa(wide.select(col("rater_b").as("rater_a"),
+        col("rater_a").as("rater_b")), "rater_a", "rater_b",
+        maxLevels = 2).collect()
+    }
+    assert(messages(w).exists(_.contains("weighted_kappa: rater_b has 3 levels")))
+    val groups = Seq(("k", "x", 1L), ("k", "y", 2L), ("k", "z", 3L))
+      .toDF("k", "arm", "v")
+    val m = intercept[Exception] {
+      Stats.moodsMedian(groups, Seq("k"), "arm", "v", maxGroups = 2).collect()
+    }
+    assert(messages(m).exists(_.contains("moods_median: arm has 3 levels")))
+  }
 }
